@@ -155,38 +155,33 @@ def run_pipeline(
         meta = part.agg(
             F.count(F.lit(1)).alias("rows_in"), F.max(ts).alias("watermark")
         ).collect()[0]
-        # each tier is written, then the NEXT tier cascades from the
-        # written parquet (storage-backed lineage — no recomputation of
-        # the finer tier inside the coarser tier's job, and the
-        # manifest's lineage is literally the bytes on disk)
+        # every tier is built from the bucket's gap frame by the one
+        # tier builder (no sketches here: a direct fused rollup per
+        # tier, nothing read back from the written finer tier); rows and
+        # bytes come from the written parquet's footers — no Spark job
         from gmql_spark.operators.rollup import (
-            rollup,
-            rollup_tier_from,
+            DEFAULT_ROLES,
+            _build_tier,
             with_gap_seconds,
         )
 
-        spark = part.sparkSession
         raw_g = with_gap_seconds(part, key=key, ts=ts)
         tier_stats = {}
-        prev_df = None
         for tier in tiers:
             path = f"{out_dir}/rollup_{tier}/bucket={b}"
-            if prev_df is None:
-                df = rollup(raw_g, tier, key=key, ts=ts, with_gaps=False)
-            else:
-                df = rollup_tier_from(prev_df, raw_g, tier, key=key, ts=ts, with_gaps=False)
+            df = _build_tier(
+                raw_g, None, tier, key=key, ts=ts, role_values=DEFAULT_ROLES,
+                tool_values=None, with_sketches=False,
+            )
             df.write.mode("overwrite").parquet(path)
-            prev_df = spark.read.parquet(path)
             rows, nbytes = _parquet_stats(path)
             tier_stats[tier] = {"rows_out": rows, "bytes": nbytes}
             if compress:
-                from pyspark.sql import functions as SF
-
                 from gmql_spark.compression.gorilla import compress_series
 
                 gpath = f"{out_dir}/gorilla_{tier}/bucket={b}"
-                series = prev_df.select(
-                    key, "window_start", SF.col("turn_count").cast("double").alias("val")
+                series = part.sparkSession.read.parquet(path).select(
+                    key, "window_start", F.col("turn_count").cast("double").alias("val")
                 )
                 compress_series(series, keys=[key], ts_col="window_start", value_col="val").write.mode(
                     "overwrite"

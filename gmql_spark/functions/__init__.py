@@ -1,4 +1,4 @@
-from gmql_spark.functions.aggregates import counts_map, exact_percentiles, merge_counts_maps  # noqa: F401
+from gmql_spark.functions.aggregates import counts_map  # noqa: F401
 from gmql_spark.functions.sketches import (  # noqa: F401
     hist_cascade,
     hist_percentile,

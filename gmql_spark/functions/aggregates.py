@@ -5,8 +5,8 @@ These replace GMQL's aggregate-function factory objects
 SUM, MIN, MAX, AVG, MEDIAN, BAG, BAGD as (merge fun, finalize funOut)
 closures over JVM heap objects). Here every aggregate is a Catalyst
 expression that gets partial/final (map-side combine) planning for free,
-plus two transcript-specific additions: value-count histogram maps and
-exact latency percentiles.
+plus a transcript-specific addition: value-count histogram maps. Exact
+percentiles live in ``operators.rollup.exact_percentiles``.
 
 GMQL null semantics preserved: aggregates skip nulls
 (``DefaultRegionsToRegionFactory.scala:58-126`` counts nonNull separately);
@@ -50,24 +50,6 @@ def counts_map(col: Column | str, values: Sequence[str] | None = None) -> Column
     )
 
 
-def merge_counts_maps(col: Column | str) -> Column:
-    """Aggregate: merge ``map<string,bigint>`` histograms by summing
-    per-key values (tier-cascade re-aggregation, e.g. 60×1m → 1h).
-    Folds collected maps with higher-order functions, JVM-side; per-group
-    list size is the cascade fan-in (≤60 for 1m→1h), so bounded."""
-    c = F.col(col) if isinstance(col, str) else col
-    empty = F.expr("cast(map() as map<string,bigint>)")
-
-    def _merge(acc, x):
-        keep = F.map_filter(acc, lambda k, _: ~F.map_contains_key(x, k))
-        add = F.transform_values(
-            x, lambda k, v: v + F.coalesce(F.element_at(acc, k), F.lit(0).cast("long"))
-        )
-        return F.map_concat(keep, add)
-
-    return F.aggregate(F.collect_list(c), empty, _merge)
-
-
 def bag(col: Column | str, sep: str = ",") -> Column:
     """Aggregate: GMQL's BAG — all non-null values, sorted, joined into
     one string (``DefaultRegionsToRegionFactory.scala:127-148``
@@ -86,10 +68,3 @@ def bagd(col: Column | str, sep: str = ",") -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.array_join(F.array_sort(F.collect_set(c.cast("string"))), sep)
 
-
-def exact_percentiles(col: Column | str, ps: Sequence[float]) -> list[Column]:
-    """Exact percentiles with linear interpolation — same definition as
-    numpy ``percentile(method='linear')`` and DuckDB ``quantile_cont``.
-    Spark's ``percentile`` is the exact (non-approx) aggregate; JVM-side."""
-    c = F.col(col) if isinstance(col, str) else col
-    return [F.percentile(c, F.lit(p)) for p in ps]

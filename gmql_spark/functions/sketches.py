@@ -2,7 +2,7 @@
 
 Percentiles and distinct counts are the two rollup stats that do NOT
 re-aggregate tier→tier (the engine's exact percentiles are recomputed
-from raw per tier, ``operators.rollup.percentiles_for_tier``). At 100 TB
+from raw per tier, ``operators.rollup.exact_percentiles``). At 100 TB
 that raw re-scan per tier is the single most expensive part of a tier
 build, so the tiers can optionally carry *mergeable sketches* instead:
 

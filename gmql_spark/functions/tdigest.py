@@ -7,7 +7,7 @@ alternative: a pure-numpy t-digest (Dunning's merging digest with the
 arcsine scale function — public algorithm) carried as plain columns
 ``(means array<double>, weights array<double>, vmin, vmax)``, so tiers
 can serve p50/p95/p99 without the exact path's raw re-scan
-(``operators.rollup.percentiles_for_tier``) while holding a stated,
+(``operators.rollup.exact_percentiles``) while holding a stated,
 test-enforced error contract (see ``tests/test_tdigest.py``:
 cascaded p50/p95/p99 within a few percent of exact-from-raw at every
 tier, vs 2× for the histogram).

@@ -358,8 +358,12 @@ def refresh_tiers(
     sketch-less partitions (mixed parquet schemas read back
     nondeterministically); an EXPLICIT value that contradicts the
     existing tables raises instead."""
-    from gmql_spark.operators.rollup import rollup, rollup_tier_from
-
+    from gmql_spark.checkpoint import _parquet_stats
+    from gmql_spark.operators.rollup import (
+        DEFAULT_ROLES,
+        _build_tier,
+        with_gap_seconds,
+    )
     from gmql_spark.realtime import record_refresh_watermark
 
     existing_modes = {}
@@ -402,30 +406,31 @@ def refresh_tiers(
     )
     old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    # raw carries the stored gap_us, so with_gap_seconds only derives
+    # gap_s — no raw-scale window shuffle
+    raw_g = with_gap_seconds(raw, key=key, ts=ts)
     stats = {}
     try:
         prev_df = None
-        for tier in tiers:
+        for i, tier in enumerate(tiers):
             path = f"{out_dir}/rollup_{tier}"
-            # with_gaps=True is the idempotent path here: raw carries the
-            # stored gap_us, so with_gap_seconds only derives gap_s — no
-            # raw-scale window shuffle
-            if prev_df is None:
-                df = rollup(
-                    raw, tier, key=key, ts=ts, with_gaps=True,
-                    with_sketches=with_sketches,
-                )
-            else:
-                # sketch columns ride the cascade from the finer tier
-                df = rollup_tier_from(prev_df, raw, tier, key=key, ts=ts, with_gaps=True)
+            df = _build_tier(
+                raw_g, prev_df, tier, key=key, ts=ts, role_values=DEFAULT_ROLES,
+                tool_values=None, with_sketches=with_sketches,
+            )
             out = df.withColumn("window_date", F.to_date("window_start"))
             out.write.mode("overwrite").partitionBy("window_date").parquet(path)
-            prev_df = (
-                spark.read.parquet(path)
-                .filter(F.col("window_date").isin(dates))
-                .drop("window_date")
+            # rows of the refreshed dates from the parquet footers — no job
+            stats[tier] = sum(
+                _parquet_stats(f"{path}/window_date={d}")[0] for d in dates
             )
-            stats[tier] = prev_df.count()
+            if with_sketches and i + 1 < len(tiers):
+                # the next tier cascades its sketch columns from this one
+                prev_df = (
+                    spark.read.parquet(path)
+                    .filter(F.col("window_date").isin(dates))
+                    .drop("window_date")
+                )
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
     # realtime watermark: the refreshed dates now reflect every raw row

@@ -11,18 +11,26 @@ binning, and Catalyst's hash aggregate *is* the two-level
 partial/final combine.
 
 Scale notes:
-- one shuffle for the lag window (by conv_id), one for the aggregate
-  (by conv_id+window). When the input table is written bucketed by
-  conv_id (catalog.write_transcripts), the first shuffle reads
-  co-located data.
-- percentiles are exact, computed per tier from the raw gap column via
-  a rank + hash-agg plan (NOT the built-in ``percentile`` aggregate,
+- one tier builder (``_build_tier``) decides how every tier is built,
+  for ``rollup_all_tiers``, ``checkpoint.run_pipeline`` and
+  ``incremental.refresh_tiers`` alike. Without sketches each tier is a
+  direct fused ``rollup`` of the gap frame: one exchange + sort +
+  aggregate by (key, window), no joins. The exact-percentile contract
+  forces one raw-scale sort per tier anyway, and the fused pass computes
+  every mergeable stat inside it.
+- percentiles are exact, from one rank + hash-agg + lerp kernel
+  (``_ranked_percentiles``, shared by ``rollup`` and
+  ``exact_percentiles``) — NOT the built-in ``percentile`` aggregate,
   whose ObjectHashAggregate falls back to sort-based object aggregation
-  past 128 groups/partition — see ``percentiles_for_tier``); all other
-  stats cascade tier→tier (see ``cascade_rollup``) so the 1h/1d jobs
-  read the much smaller 1m tier for mergeable stats. At 100 TB raw /
-  ~1 TB of 1m points this is the difference between re-scanning raw
-  three times and once.
+  past 128 groups/partition.
+- with sketches, a coarser tier cascades from the finer tier
+  (``cascade_rollup``: mergeable stats + sketch merges over tier-sized
+  rows) joined to ``exact_percentiles`` at (key, window_start): sketches
+  are mergeable carriers, and rebuilding them from raw per tier would
+  re-scan raw through Arrow.
+- the lag window for ``gap_s`` is one shuffle by key; a table written
+  with ingest-time gaps (``catalog.write_transcripts(precompute_gaps=
+  True)``) skips it.
 """
 
 from __future__ import annotations
@@ -36,8 +44,6 @@ from pyspark.sql.window import Window
 from gmql_spark.functions.aggregates import counts_map
 
 TIER_DURATION = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
-# fan-in of each tier from the previous one (for cascade)
-TIER_PARENT = {"1h": "1m", "1d": "1h"}
 
 PCTS = (0.50, 0.95, 0.99)
 PCT_NAMES = ("latency_p50", "latency_p95", "latency_p99")
@@ -113,33 +119,14 @@ def rollup(
     """
     if with_gaps:
         df = with_gap_seconds(df, key=key, ts=ts)
-    win = F.window(ts, TIER_DURATION[tier])
     # r8: the exact-percentile rank pass is FUSED into the main
-    # aggregate instead of a separate percentiles_for_tier + join. The
-    # rank window and the groupBy share the same (key, window) hash
-    # partitioning, so the plan is ONE exchange + sort + aggregate —
-    # the former shape paid a second raw-scale exchange for the rank
-    # pass plus a tier-sized join per tier. Nulls-last ordering keeps
-    # the rank arithmetic identical to the filtered pre-r8 pass: the
-    # k non-null gaps rank 0..k−1 (null gaps sort after and can never
-    # equal a lo/hi index, which are ≤ k−1), and n counts non-nulls.
-    w_rank = Window.partitionBy(key, win).orderBy(F.col("gap_s").asc_nulls_last())
-    w_part = Window.partitionBy(key, win)
-    d = df.withColumn("_rn", F.row_number().over(w_rank) - 1).withColumn(
-        "_ng", F.count("gap_s").over(w_part)
-    )
-    pct_aggs = []
-    for i, p in enumerate(PCTS):
-        pos = F.lit(p) * (F.col("_ng") - 1)
-        lo = F.floor(pos).cast("long")
-        hi = F.ceil(pos).cast("long")
-        pct_aggs += [
-            F.max(F.when(F.col("_rn") == lo, F.col("gap_s"))).alias(f"_lov{i}"),
-            F.max(F.when(F.col("_rn") == hi, F.col("gap_s"))).alias(f"_hiv{i}"),
-            F.max(pos).alias(f"_p{i}"),
-            F.max(lo).alias(f"_l{i}"),
-            F.max(hi).alias(f"_h{i}"),
-        ]
+    # aggregate: the rank window and the groupBy share the same
+    # (key, window) hash partitioning, so the plan is ONE exchange +
+    # sort + aggregate, with no second raw-scale exchange and no join.
+    # Null gaps stay in (they count as turns); the kernel's nulls-last
+    # rank keeps the percentile arithmetic identical to a null-filtered
+    # pass (see ``_ranked_percentiles``).
+    d = df.withColumn("_w", F.window(ts, TIER_DURATION[tier]))
     aggs = [
         F.count(F.lit(1)).alias("turn_count"),
         *(
@@ -158,29 +145,13 @@ def rollup(
         F.sum("gap_us").alias("latency_sum_us"),
         F.min(ts).alias("first_ts"),
         F.max(ts).alias("last_ts"),
-        *pct_aggs,
     ]
-    agged = d.groupBy(key, win.alias("w")).agg(*aggs)
-    pct_cols = []
-    for i, name in enumerate(PCT_NAMES):
-        lo_v, hi_v = F.col(f"_lov{i}"), F.col(f"_hiv{i}")
-        pos, lo, hi = F.col(f"_p{i}"), F.col(f"_l{i}"), F.col(f"_h{i}")
-        pct_cols.append(
-            F.when(lo == hi, lo_v)
-            .otherwise(lo_v * (hi - pos) + hi_v * (pos - lo))
-            .alias(name)
-        )
-    keep = [
-        c
-        for c in agged.columns
-        if c not in (key, "w") and not c.startswith(("_lov", "_hiv", "_p", "_l", "_h"))
-    ]
+    agged = _ranked_percentiles(d, [key, "_w"], "gap_s", PCTS, PCT_NAMES, aggs)
     main = agged.select(
         key,
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        *keep,
-        *pct_cols,
+        F.col("_w.start").alias("window_start"),
+        F.col("_w.end").alias("window_end"),
+        *[c for c in agged.columns if c not in (key, "_w")],
     )
     empty_map = F.expr("cast(map() as map<string,bigint>)")
     if role_values is None:
@@ -305,7 +276,8 @@ def cascade_rollup(
     """Re-aggregate a finer tier to a coarser one for all *mergeable*
     stats (counts, histogram maps, min/max, sums). Percentiles are not
     mergeable and are absent from the result — join in
-    ``percentiles_for_tier`` (exact-from-raw) or accept sketches.
+    ``exact_percentiles`` (exact-from-raw, see ``_build_tier``) or
+    accept sketches.
 
     ``role_values``/``tool_values`` (r8): when the category domains are
     known (the same closed-domain contract as ``rollup``), the map
@@ -418,10 +390,17 @@ def cascade_rollup(
     )
 
 
-def percentiles_for_tier(
-    raw: DataFrame, tier: str, key: str = "conv_id", ts: str = "ts", with_gaps: bool = True
+def _ranked_percentiles(
+    df: DataFrame,
+    keys: Sequence[str],
+    value: str,
+    pcts: Sequence[float],
+    names: Sequence[str],
+    aggs: Sequence[Column] = (),
 ) -> DataFrame:
-    """Exact latency percentiles at a tier's grain, from raw gaps.
+    """The one exact-percentile kernel: ``aggs`` plus exact percentiles
+    of ``value`` per ``keys`` group, in one hash aggregate. Output
+    columns: ``keys``, ``names``, then the ``aggs`` columns.
 
     Implemented as sort + rank + plain hash aggregate, NOT Spark's
     ``percentile`` aggregate: the built-in is a TypedImperativeAggregate
@@ -429,55 +408,44 @@ def percentiles_for_tier(
     aggregation beyond 128 groups per partition — catastrophic at
     millions of (conv, window) groups. Here:
 
-      rank gaps within (key, window) [one Tungsten sort shuffle] →
-      per-row lo/hi/pos from the group count →
-      max(when(rn == lo/hi)) in a codegen hash agg →
-      lo_v*(hi-pos) + hi_v*(pos-lo)
+      rank values within the group [one Tungsten sort, on the group's
+      own hash partitioning — no extra exchange] →
+      max(when(rn == lo/hi)) per percentile in the codegen hash agg →
+      lo_v*(hi-pos) + hi_v*(pos-lo), pos = p*(n-1)
 
-    — the exact interpolation Spark's own percentile uses, so results
-    stay bit-identical to the oracles while the plan stays whole-stage
-    codegen end to end. ~4x faster and scales with cores."""
-    if with_gaps:
-        raw = with_gap_seconds(raw, key=key, ts=ts)
-    win = F.window(ts, TIER_DURATION[tier])
-    g = raw.filter(F.col("gap_s").isNotNull()).select(key, F.col(ts).alias("_ts"), "gap_s")
-    gwin = F.window("_ts", TIER_DURATION[tier])
-    w_rank = Window.partitionBy(key, gwin).orderBy("gap_s")
-    w_part = Window.partitionBy(key, gwin)
-    d = g.select(
-        key,
-        gwin.alias("w"),
-        "gap_s",
-        (F.row_number().over(w_rank) - 1).alias("rn"),
-        F.count(F.lit(1)).over(w_part).alias("n"),
-    )
-    for i, p in enumerate(PCTS):
-        pos = F.lit(p) * (F.col("n") - 1)
-        d = (
-            d.withColumn(f"_pos{i}", pos)
-            .withColumn(f"_lo{i}", F.floor(pos).cast("long"))
-            .withColumn(f"_hi{i}", F.ceil(pos).cast("long"))
-        )
-    aggs = []
-    for i in range(len(PCTS)):
-        aggs += [
-            F.max(F.when(F.col("rn") == F.col(f"_lo{i}"), F.col("gap_s"))).alias(f"_lov{i}"),
-            F.max(F.when(F.col("rn") == F.col(f"_hi{i}"), F.col("gap_s"))).alias(f"_hiv{i}"),
-            F.max(f"_pos{i}").alias(f"_p{i}"),
-            F.max(f"_lo{i}").alias(f"_l{i}"),
-            F.max(f"_hi{i}").alias(f"_h{i}"),
+    — the weighted interpolation that is bit-identical to the
+    pandas/DuckDB oracles. Null values rank last and are not counted in
+    n: the k non-null values rank 0..k−1 and lo/hi are ≤ k−1, so rows
+    with a null ``value`` may ride along (and feed ``aggs``) without
+    changing any percentile."""
+    w = Window.partitionBy(*keys)
+    d = df.withColumn(
+        "_rn", F.row_number().over(w.orderBy(F.col(value).asc_nulls_last())) - 1
+    ).withColumn("_n", F.count(value).over(w))
+
+    def bounds(p: float, n: Column) -> tuple[Column, Column, Column]:
+        pos = F.lit(p) * (n - 1)
+        return pos, F.floor(pos).cast("long"), F.ceil(pos).cast("long")
+
+    pct_aggs = [F.max("_n").alias("_n")]
+    for i, p in enumerate(pcts):
+        _pos, lo, hi = bounds(p, F.col("_n"))
+        pct_aggs += [
+            F.max(F.when(F.col("_rn") == lo, F.col(value))).alias(f"_lov{i}"),
+            F.max(F.when(F.col("_rn") == hi, F.col(value))).alias(f"_hiv{i}"),
         ]
-    agged = d.groupBy(key, "w").agg(*aggs)
+    agged = d.groupBy(*keys).agg(*aggs, *pct_aggs)
     pct_cols = []
-    for i, name in enumerate(PCT_NAMES):
+    for i, (p, name) in enumerate(zip(pcts, names)):
+        pos, lo, hi = bounds(p, F.col("_n"))
         lo_v, hi_v = F.col(f"_lov{i}"), F.col(f"_hiv{i}")
-        pos, lo, hi = F.col(f"_p{i}"), F.col(f"_l{i}"), F.col(f"_h{i}")
         pct_cols.append(
             F.when(lo == hi, lo_v)
             .otherwise(lo_v * (hi - pos) + hi_v * (pos - lo))
             .alias(name)
         )
-    return agged.select(key, F.col("w.start").alias("window_start"), *pct_cols)
+    extra = agged.columns[len(keys) : len(keys) + len(aggs)]
+    return agged.select(*keys, *pct_cols, *extra)
 
 
 def exact_percentiles(
@@ -489,11 +457,12 @@ def exact_percentiles(
     extra_aggs: Sequence[Column] = (),
     extra_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Exact percentiles of ``value`` per key group — the same rank +
-    hash-agg + lerp plan as :func:`percentiles_for_tier`, for arbitrary
-    (non-windowed) groupings (EXTEND/AggregateRD recast,
+    """Exact percentiles of ``value`` per key group, through the same
+    rank + hash-agg + lerp kernel as ``rollup`` (``_ranked_percentiles``),
+    for arbitrary groupings (EXTEND/AggregateRD recast,
     ``AggregateRD.scala:17-53``; Q1/Q2/Q3 builtins
-    ``DefaultRegionsToMetaFactory.scala:12-290``).
+    ``DefaultRegionsToMetaFactory.scala:12-290``). A tier's percentiles
+    are ``exact_percentiles`` over ``(key, window(ts).start)``.
 
     Interpolation is ``lo_v*(hi-pos) + hi_v*(pos-lo)`` — bit-identical to
     the DuckDB/pandas oracles, unlike the built-in ``F.percentile`` whose
@@ -508,69 +477,48 @@ def exact_percentiles(
     they reference."""
     keys = list(keys)
     g = df.filter(F.col(value).isNotNull()).select(*keys, value, *extra_cols)
-    w_rank = Window.partitionBy(*keys).orderBy(value)
-    w_part = Window.partitionBy(*keys)
-    d = g.select(
-        *keys,
-        value,
-        *extra_cols,
-        (F.row_number().over(w_rank) - 1).alias("rn"),
-        F.count(F.lit(1)).over(w_part).alias("n"),
-    )
-    for i, p in enumerate(pcts):
-        pos = F.lit(p) * (F.col("n") - 1)
-        d = (
-            d.withColumn(f"_pos{i}", pos)
-            .withColumn(f"_lo{i}", F.floor(pos).cast("long"))
-            .withColumn(f"_hi{i}", F.ceil(pos).cast("long"))
-        )
-    aggs = []
-    for i in range(len(pcts)):
-        aggs += [
-            F.max(F.when(F.col("rn") == F.col(f"_lo{i}"), F.col(value))).alias(f"_lov{i}"),
-            F.max(F.when(F.col("rn") == F.col(f"_hi{i}"), F.col(value))).alias(f"_hiv{i}"),
-            F.max(f"_pos{i}").alias(f"_p{i}"),
-            F.max(f"_lo{i}").alias(f"_l{i}"),
-            F.max(f"_hi{i}").alias(f"_h{i}"),
-        ]
-    agged = d.groupBy(*keys).agg(*aggs, *extra_aggs)
-    pct_cols = []
-    for i, name in enumerate(names):
-        lo_v, hi_v = F.col(f"_lov{i}"), F.col(f"_hiv{i}")
-        pos, lo, hi = F.col(f"_p{i}"), F.col(f"_l{i}"), F.col(f"_h{i}")
-        pct_cols.append(
-            F.when(lo == hi, lo_v)
-            .otherwise(lo_v * (hi - pos) + hi_v * (pos - lo))
-            .alias(name)
-        )
-    extra_names = agged.columns[len(keys) + 5 * len(pcts):]
-    return agged.select(*keys, *pct_cols, *extra_names)
+    return _ranked_percentiles(g, keys, value, pcts, names, extra_aggs)
 
 
-def rollup_tier_from(
-    finer: DataFrame,
-    raw: DataFrame,
+def _build_tier(
+    raw_g: DataFrame,
+    finer: DataFrame | None,
     tier: str,
-    key: str = "conv_id",
-    ts: str = "ts",
-    with_gaps: bool = True,
-    role_values: Sequence[str] | None = None,
-    tool_values: Sequence[str] | None = None,
+    key: str,
+    ts: str,
+    role_values: Sequence[str] | None,
+    tool_values: Sequence[str] | None,
+    with_sketches: bool | str,
 ) -> DataFrame:
-    """Full coarser-tier rollup = cascade(mergeables from finer tier)
-    ⨝ exact percentiles from raw. The join keys are (key, window_start)
-    at identical grain, both sides already hash-partitioned by the
-    aggregate — Catalyst plans a shuffle-free sort-merge or reuses the
-    exchange under AQE. Known category domains
-    (``role_values``/``tool_values``) fuse the map merges into the
-    cascade aggregate (see ``cascade_rollup``)."""
+    """How tier ``tier`` is built — the one place that decides, for
+    every tier path (``rollup_all_tiers``, ``checkpoint.run_pipeline``,
+    ``incremental.refresh_tiers``). ``raw_g`` is the raw frame with its
+    gap columns (``with_gap_seconds``); ``finer`` is the next-finer
+    tier's frame, or None for the finest tier.
+
+    The finest tier, and every tier without sketches, is the fused
+    ``rollup`` of ``raw_g`` (one exchange + sort + aggregate, no joins).
+    A coarser tier with sketches cascades its mergeable stats and
+    sketch columns from ``finer`` and joins exact percentiles from raw
+    at (key, window_start) grain: cascaded digests are not the digests
+    a rebuild from raw would give, and a rebuild per tier would re-scan
+    raw through Arrow."""
+    if finer is None or not with_sketches:
+        return rollup(
+            raw_g, tier, key=key, ts=ts, with_gaps=False,
+            role_values=role_values, tool_values=tool_values,
+            with_sketches=with_sketches,
+        )
     merged = cascade_rollup(
         finer, tier, key=key, role_values=role_values, tool_values=tool_values
     )
-    pct = percentiles_for_tier(raw, tier, key=key, ts=ts, with_gaps=with_gaps)
-    out = merged.join(pct, on=[key, "window_start"], how="left")
+    pct = exact_percentiles(
+        raw_g.withColumn("window_start", F.window(ts, TIER_DURATION[tier]).start),
+        [key, "window_start"],
+        "gap_s",
+    )
     sketch_cols = [c for c in (*SKETCH_COLS, "lat_digest") if c in merged.columns]
-    return out.select(
+    return merged.join(pct, on=[key, "window_start"], how="left").select(
         key,
         "window_start",
         "window_end",
@@ -598,22 +546,14 @@ def rollup_all_tiers(
     return_gaps: bool = False,
     with_sketches: bool | str = False,
 ):
-    """The retention cascade raw → 1m → 1h → 1d. Gap column is computed
-    once; the raw-with-gaps frame feeds the 1m rollup and each tier's
-    exact-percentile pass (``cache_gaps=True`` persists it across those
-    consumers — the common-subplan reuse the reference does with
-    ``intermediateResult`` memoization, ``IROperator.scala:11``).
-
-    Tier shape (r8): without sketches, every tier is a DIRECT fused
-    rollup of the gap frame — the exact-percentile contract forces one
-    raw-scale exchange+sort per tier regardless, and the fused rollup
-    computes all mergeables inside that same pass, so the coarser tier
-    costs exchange+sort+agg with ZERO joins, strictly less than
-    cascade(finer) ⨝ percentiles(raw) (which still paid the raw pass
-    PLUS cascade aggregates plus joins). With sketches the cascade path
-    stays: sketch columns are the mergeable-by-construction carriers
-    (cascaded digests ≠ rebuilt-from-raw digests, and rebuilding them
-    per tier would re-scan raw through Arrow)."""
+    """The retention cascade raw → 1m → 1h → 1d. The gap column is
+    computed once; every tier is then built from that gap frame by the
+    one tier builder (``_build_tier``): without sketches a direct fused
+    rollup per tier, with sketches a cascade from the finer tier joined
+    to exact percentiles. ``cache_gaps=True`` persists the gap frame
+    across the tiers that read it — the common-subplan reuse the
+    reference does with ``intermediateResult`` memoization,
+    ``IROperator.scala:11``."""
     raw_g = with_gap_seconds(raw, key=key, ts=ts).select(
         key, ts, "role", "tool", "gap_us", "gap_s"
     )
@@ -622,24 +562,17 @@ def rollup_all_tiers(
     out: dict[str, DataFrame] = {}
     prev = None
     for t in tiers:
-        if prev is None or not with_sketches:
-            out[t] = rollup(
-                raw_g, t, key=key, ts=ts, with_gaps=False,
-                role_values=role_values, tool_values=tool_values,
-                with_sketches=with_sketches,
-            )
-        else:
-            out[t] = rollup_tier_from(
-                out[prev], raw_g, t, key=key, ts=ts, with_gaps=False,
-                role_values=role_values, tool_values=tool_values,
-            )
+        out[t] = _build_tier(
+            raw_g, prev, t, key=key, ts=ts, role_values=role_values,
+            tool_values=tool_values, with_sketches=with_sketches,
+        )
         if persist_tiers:
             # tiers are tiny relative to raw; persisting stops the lazy
             # cascade from recomputing the whole finer tier inside every
             # coarser tier's job (without this, 1d recomputes 1h which
             # recomputes 1m — quadratic re-aggregation)
             out[t] = out[t].persist()
-        prev = t
+        prev = out[t]
     if return_gaps:
         # hand the (possibly persisted) gap frame to the caller so it
         # can unpersist between benchmark reps — otherwise the cache

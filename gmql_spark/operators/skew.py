@@ -53,7 +53,7 @@ def salted_conv_stats(
     """EXTEND-style per-conversation stats, skew-proof: turn_count,
     first/last ts, exact latency_sum_us — mergeable aggregates via
     salted two phases. (Exact percentiles are not salt-mergeable; for
-    those use percentiles_for_tier, whose rank plan spreads a hot key
+    those use exact_percentiles, whose rank plan spreads a hot key
     across the sort anyway.)"""
     phase1 = [
         F.count(F.lit(1)).alias("turn_count"),

@@ -3,7 +3,7 @@
 The engine's performance contract is expressed as plan properties, not
 vibes: scans must show pushed filters / pruned columns, aggregates must
 be hash-based (never ObjectHashAggregate fallback — see
-operators.rollup.percentiles_for_tier for why), joins over small dims
+operators.rollup.exact_percentiles for why), joins over small dims
 must broadcast. These helpers make those properties assertable in tests
 and reportable in benchmarks.
 """
@@ -71,6 +71,7 @@ def plan_report(df: DataFrame) -> dict:
     return {
         "exchanges": plan.count("Exchange"),
         "broadcasts": plan.count("BroadcastExchange"),
+        "joins": len(re.findall(r"\b[A-Z]\w*Join\b", plan)),
         "sorts": plan.count("Sort "),
         "object_agg": plan.count("ObjectHashAggregate"),
         "hash_agg": plan.count("HashAggregate"),

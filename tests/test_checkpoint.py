@@ -113,3 +113,26 @@ def test_bucketed_layout_prunes_and_roundtrips(spark, tmp_path):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(r1, r2[r1.columns], check_dtype=False)
+
+
+def test_pipeline_tiers_match_oracle_over_precomputed_gaps(spark, tmp_path):
+    """run_pipeline(raw_path=...) over a table written with ingest-time
+    gaps: every tier (1m/1h/1d) equals the pandas oracle bit for bit."""
+    from gmql_spark.operators.rollup import PCT_NAMES
+    from gmql_spark.oracle.rollup import oracle_rollup
+    from tests.conftest import assert_pdf_equal
+
+    pdf = datagen.gen_transcripts(n_conv=80)
+    fact = str(tmp_path / "fact")
+    write_transcripts(
+        datagen.transcripts_spark(spark, n_conv=80), fact, n_buckets=4,
+        precompute_gaps=True,
+    )
+    out = str(tmp_path / "tiers")
+    stats = run_pipeline(spark, None, out, n_buckets=4, raw_path=fact)
+    assert stats == {"ran": 4, "skipped": 0, "buckets": 4}
+    for tier in ("1m", "1h", "1d"):
+        assert_pdf_equal(
+            _read_all(spark, out, tier), oracle_rollup(pdf, tier),
+            ["conv_id", "window_start"], float_cols=(*PCT_NAMES, "latency_sum_us"),
+        )

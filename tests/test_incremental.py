@@ -53,7 +53,17 @@ def test_incremental_equals_oneshot(spark, tmp_path, split_data):
     d1 = append_transcripts(spark, b1, fact, n_buckets=4)
     refresh_tiers(spark, fact, out, dates=d1)
     d2 = append_transcripts(spark, b2, fact, n_buckets=4)
-    refresh_tiers(spark, fact, out, dates=d2)
+    res = refresh_tiers(spark, fact, out, dates=d2)
+
+    # "rows" (read from the parquet footers) counts each tier's rows of
+    # the refreshed dates
+    for tier in ("1m", "1h", "1d"):
+        n = (
+            spark.read.parquet(f"{out}/rollup_{tier}")
+            .filter(F.col("window_date").isin([str(d) for d in d2]))
+            .count()
+        )
+        assert res["rows"][tier] == n > 0, (tier, res["rows"])
 
     # the refresh's raw read partition-prunes to the affected dates
     pruned = spark.read.parquet(fact).filter(
@@ -297,7 +307,16 @@ def test_incremental_sketch_tiers_equal_oneshot(spark, tmp_path, split_data):
     d1 = append_transcripts(spark, b1, fact, n_buckets=4)
     refresh_tiers(spark, fact, out, dates=d1, tiers=("1m", "1h"), with_sketches=True)
     d2 = append_transcripts(spark, b2, fact, n_buckets=4)
-    refresh_tiers(spark, fact, out, dates=d2, tiers=("1m", "1h"), with_sketches=True)
+    res = refresh_tiers(
+        spark, fact, out, dates=d2, tiers=("1m", "1h"), with_sketches=True
+    )
+    for tier in ("1m", "1h"):
+        n = (
+            spark.read.parquet(f"{out}/rollup_{tier}")
+            .filter(F.col("window_date").isin([str(d) for d in d2]))
+            .count()
+        )
+        assert res["rows"][tier] == n > 0, (tier, res["rows"])
 
     for tier in ("1m", "1h"):
         got = (

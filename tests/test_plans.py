@@ -23,14 +23,42 @@ def raw(spark):
 def test_rollup_plan_is_pure_codegen_agg(raw):
     """With closed category domains the whole rollup is hash-agg codegen
     (the built-in exact percentile would introduce an ObjectHashAggregate
-    with its 128-group sort fallback; our rank plan must not)."""
+    with its 128-group sort fallback; our rank plan must not). Checked
+    on the tier builder's 1h frame for both tier shapes. The sketch path
+    carries HLL sketches and log₂ histogram maps, whose aggregates are
+    object aggregates by construction over tier-sized rows; every other
+    aggregate of its plan — the cascade and the exact percentiles —
+    must be a hash aggregate."""
     from gmql_spark.datagen import TOOL_NAMES
-    from gmql_spark.operators.rollup import percentiles_for_tier
+    from gmql_spark.operators.rollup import TIER_DURATION, exact_percentiles, with_gap_seconds
 
-    df = rollup(raw, "1m", tool_values=list(TOOL_NAMES))
+    tools = list(TOOL_NAMES)
+    df = rollup(raw, "1m", tool_values=tools)
     assert_no_object_agg(df)
-    assert_no_object_agg(percentiles_for_tier(raw, "1h"))
     assert plan_report(df)["hash_agg"] > 0
+    assert_no_object_agg(rollup_all_tiers(raw, tool_values=tools)["1h"])
+
+    sk = rollup_all_tiers(raw, tool_values=tools, with_sketches=True)["1h"]
+    sketch_aggs = ("hll_sketch_agg(", "hll_union_agg(", "collect_list(struct(_b,")
+    obj = [ln for ln in physical_plan(sk).splitlines() if "ObjectHashAggregate" in ln]
+    assert obj and all(any(a in ln for a in sketch_aggs) for ln in obj), obj
+    # the sketch path's percentile side, exactly as the builder forms it
+    g = with_gap_seconds(raw).withColumn(
+        "window_start", F.window("ts", TIER_DURATION["1h"]).start
+    )
+    assert_no_object_agg(exact_percentiles(g, ["conv_id", "window_start"], "gap_s"))
+
+
+def test_tier_builder_coarse_tiers_are_join_free(raw):
+    """Without sketches the builder's 1h and 1d frames have the 1m
+    frame's shape: the same exchanges and joins (none at all with closed
+    category domains) — no cascade ⨝ percentiles join per coarser tier."""
+    for kw in ({}, {"tool_values": list(datagen.TOOL_NAMES)}):
+        reps = {t: plan_report(df) for t, df in rollup_all_tiers(raw, **kw).items()}
+        for t in ("1h", "1d"):
+            for k in ("exchanges", "joins"):
+                assert reps[t][k] == reps["1m"][k], (kw, t, reps)
+    assert reps["1m"]["joins"] == 0, reps
 
 
 def test_generic_path_object_agg_only_on_counted_rows(raw):

@@ -86,19 +86,19 @@ def test_generic_counts_map_path(data):
 
 
 def test_fused_rollup_equals_join_formulation(spark):
+    """Fusion: the single-aggregate rollup (rank window over every
+    turn, nulls last + mergeables + percentile interpolation in one
+    pass) must equal the two-pass formulation (main agg ⨝
+    exact_percentiles over the null-filtered gaps at (conv_id,
+    window_start) grain) bit-for-bit, including windows with 0 non-null
+    gaps (only the conversation's null first gap), with 1 gap, and with
+    a null gap next to non-null ones."""
+    import numpy as np
     from pyspark.sql import functions as F
 
-    """r8 fusion: the single-aggregate rollup (rank window + mergeables
-    + percentile interpolation in one pass) must equal the pre-r8
-    two-pass formulation (main agg ⨝ percentiles_for_tier) bit-for-bit,
-    including windows with 0/1 gaps and all-null-gap windows."""
     from gmql_spark.datagen import ROLES, transcripts_spark
-    from gmql_spark.operators.rollup import (
-        PCT_NAMES,
-        percentiles_for_tier,
-        rollup,
-        with_gap_seconds,
-    )
+    from gmql_spark.functions.aggregates import counts_map
+    from gmql_spark.operators.rollup import exact_percentiles, with_gap_seconds
 
     raw = transcripts_spark(spark, n_conv=40)
     raw_g = with_gap_seconds(raw).select(
@@ -107,8 +107,6 @@ def test_fused_rollup_equals_join_formulation(spark):
     fused = rollup(raw_g, "1h", with_gaps=False, role_values=list(ROLES)).toPandas()
 
     win = F.window("ts", "1 hour")
-    from gmql_spark.functions.aggregates import counts_map
-
     agged = raw_g.groupBy("conv_id", win.alias("w")).agg(
         F.count(F.lit(1)).alias("turn_count"),
         counts_map(F.col("role"), list(ROLES)).alias("role_counts"),
@@ -124,7 +122,11 @@ def test_fused_rollup_equals_join_formulation(spark):
         F.col("w.end").alias("window_end"),
         *[c for c in agged.columns if c not in ("conv_id", "w")],
     )
-    pct = percentiles_for_tier(raw_g, "1h", with_gaps=False)
+    pct = exact_percentiles(
+        raw_g.withColumn("window_start", win.start),
+        ["conv_id", "window_start"],
+        "gap_s",
+    )
     old = main.join(pct, on=["conv_id", "window_start"], how="left").select(
         *[c for c in fused.columns]
     ).toPandas()
@@ -132,11 +134,14 @@ def test_fused_rollup_equals_join_formulation(spark):
     fused = fused.sort_values(["conv_id", "window_start"]).reset_index(drop=True)
     old = old.sort_values(["conv_id", "window_start"]).reset_index(drop=True)
     assert len(fused) == len(old) > 0
+    cnt, turns = fused["latency_cnt"], fused["turn_count"]
+    assert (cnt == 0).any(), "no window whose only gap is null"
+    assert fused.loc[cnt == 0, "latency_p50"].isna().all()
+    assert (cnt == 1).any(), "no window with exactly one gap"
+    assert ((cnt > 0) & (turns > cnt)).any(), "no window mixing null and non-null gaps"
     for c in fused.columns:
         if c in PCT_NAMES:
             a, b = fused[c].to_numpy(), old[c].to_numpy()
-            import numpy as np
-
             same = (a == b) | (np.isnan(a.astype(float)) & np.isnan(b.astype(float)))
             assert same.all(), c
         elif c in ("role_counts", "tool_counts"):
