@@ -53,7 +53,7 @@ def q_rollup_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_rollup_1h_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1h tier built by re-aggregating the 1m tier (continuous-aggregate
     cascade); oracle computes 1h directly — results must coincide."""
-    from gmql_spark.operators.window_agg import cascade, window_rollup
+    from gmql_spark.operators.window_agg import window_rollup
 
     ev = _read(spark, sf_dir, "events")
     dec = F.col("value").cast("decimal(18,2)")
@@ -68,7 +68,7 @@ def q_rollup_1h_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         keys=["user_id"],
     )
-    h1 = cascade(
+    h1 = window_rollup(
         m1,
         "1 hour",
         aggs=[
@@ -78,6 +78,7 @@ def q_rollup_1h_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("val_max").alias("val_max"),
         ],
         keys=["user_id"],
+        ts="window_start",
     )
     return h1.select("user_id", "window_start", "window_end", "n", "val_sum", "val_min", "val_max")
 
@@ -1048,7 +1049,7 @@ def q_realtime_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     coincide exactly."""
     import datetime as dt
 
-    from gmql_spark.operators.window_agg import cascade, window_rollup
+    from gmql_spark.operators.window_agg import window_rollup
     from gmql_spark.realtime import serve_realtime
 
     ev = _read(spark, sf_dir, "events")
@@ -1079,7 +1080,7 @@ def q_realtime_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         keys=["user_id"],
     )
-    tier_1h = cascade(
+    tier_1h = window_rollup(
         m1,
         "1 hour",
         aggs=[
@@ -1089,6 +1090,7 @@ def q_realtime_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("val_max").alias("val_max"),
         ],
         keys=["user_id"],
+        ts="window_start",
     ).select(*cols)
     frozen = dt.datetime(2024, 1, 21, 0, 30)
     return serve_realtime(tier_1h, ev, frozen, "1h", hourly)

@@ -28,10 +28,11 @@ by a ulp at bucket boundaries. ``gap_us = 0`` gets its own bucket −1
 
 Scale shape: both sketches follow the module's two-level rule — a
 codegen hash aggregate over raw-scale rows first (per-bucket counts /
-the HLL partial), then the tiny per-window assembly; no
-ObjectHashAggregate ever sees raw-scale data (the HLL partial is an
-imperative aggregate, but its state is one fixed-size sketch per group,
-merged map-side like any partial agg).
+the HLL partial), then the tiny per-window assembly (the window
+group-bys are ``operators.window_agg``'s ``window_counts_map`` and
+``window_rollup``); no ObjectHashAggregate ever sees raw-scale data
+(the HLL partial is an imperative aggregate, but its state is one
+fixed-size sketch per group, merged map-side like any partial agg).
 """
 
 from __future__ import annotations
@@ -41,9 +42,11 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# kept in sync with operators.rollup.TIER_DURATION (not imported: rollup
-# imports gmql_spark.functions, so importing it back here would cycle)
-TIER_DURATION = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
+from gmql_spark.operators.window_agg import (
+    TIER_DURATION,
+    window_counts_map,
+    window_rollup,
+)
 
 
 def log2_bucket(col: Column) -> Column:
@@ -67,27 +70,13 @@ def hist_rollup(
 ) -> DataFrame:
     """Per-window log₂ histogram map of ``value_col``.
 
-    Two-level: hash-count per (keys, window, bucket) in pure codegen,
-    then assemble the (small) map rows."""
+    Two-level (``window_counts_map``): hash-count per (keys, window,
+    bucket) in pure codegen, then assemble the (small) map rows."""
     keys = list(keys)
-    win = F.window(ts, TIER_DURATION[tier])
-    counted = (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(*keys, win.alias("w"), log2_bucket(F.col(value_col)).alias("_b"))
-        .agg(F.count(F.lit(1)).alias("_n"))
+    buckets = df.filter(F.col(value_col).isNotNull()).select(
+        *keys, ts, log2_bucket(F.col(value_col)).alias("_b")
     )
-    return (
-        counted.groupBy(
-            *keys,
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-        )
-        .agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct("_b", "_n")))
-            ).alias(out)
-        )
-    )
+    return window_counts_map(buckets, TIER_DURATION[tier], "_b", out, keys=keys, ts=ts)
 
 
 def hist_cascade(
@@ -100,21 +89,10 @@ def hist_cascade(
     (bucket-wise count addition). Explode → codegen hash sum →
     reassemble; never a map-fold object aggregate over the whole tier."""
     keys = list(keys)
-    win = F.window("window_start", TIER_DURATION[tier])
-    return (
-        finer.select(*keys, win.alias("w"), F.explode(col).alias("_b", "_n"))
-        .groupBy(*keys, "w", "_b")
-        .agg(F.sum("_n").alias("_n"))
-        .groupBy(
-            *keys,
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-        )
-        .agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct("_b", "_n")))
-            ).alias(col)
-        )
+    exploded = finer.select(*keys, "window_start", F.explode(col).alias("_b", "_n"))
+    return window_counts_map(
+        exploded, TIER_DURATION[tier], "_b", col, keys=keys, ts="window_start",
+        weight="_n",
     )
 
 
@@ -162,16 +140,12 @@ def hll_rollup(
 ) -> DataFrame:
     """Per-window DataSketches HLL sketch of ``col`` (binary column) —
     the mergeable form of count_distinct for the tiers."""
-    keys = list(keys)
-    win = F.window(ts, TIER_DURATION[tier])
-    agged = df.filter(F.col(col).isNotNull()).groupBy(*keys, win.alias("w")).agg(
-        F.hll_sketch_agg(F.col(col), F.lit(lgk)).alias(out)
-    )
-    return agged.select(
-        *keys,
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        out,
+    return window_rollup(
+        df.filter(F.col(col).isNotNull()),
+        TIER_DURATION[tier],
+        [F.hll_sketch_agg(F.col(col), F.lit(lgk)).alias(out)],
+        keys=list(keys),
+        ts=ts,
     )
 
 
@@ -185,16 +159,12 @@ def hll_cascade(
     sketches over a row-partition equals the one-pass sketch (register
     max is associative/commutative), so estimates match the direct
     build exactly."""
-    keys = list(keys)
-    win = F.window("window_start", TIER_DURATION[tier])
-    agged = finer.groupBy(*keys, win.alias("w")).agg(
-        F.hll_union_agg(F.col(col)).alias(col)
-    )
-    return agged.select(
-        *keys,
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        col,
+    return window_rollup(
+        finer,
+        TIER_DURATION[tier],
+        [F.hll_union_agg(F.col(col)).alias(col)],
+        keys=list(keys),
+        ts="window_start",
     )
 
 

@@ -51,9 +51,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-# kept in sync with operators.rollup.TIER_DURATION (same no-cycle rule
-# as functions.sketches)
-TIER_DURATION = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
+from gmql_spark.operators.window_agg import TIER_DURATION
 
 DIGEST_FIELDS = "means array<double>, weights array<double>, vmin double, vmax double"
 
@@ -109,6 +107,13 @@ def _compress(means: np.ndarray, weights: np.ndarray, delta: float):
     # ~20× on the 300–4000-centroid merges the tier cascade does.
     # Same greedy semantics, deterministic; segment means are the exact
     # weighted means via ordered reduceat sums.
+    # Compatibility: equal to the old per-element loop only in exact
+    # arithmetic. The boundary test (K[j] <= K_excl[i] + 1), the cumsum
+    # prefix weights and the reduceat means round differently, so an
+    # ulp-edge merge can move a centroid boundary: digests built here
+    # are deterministic but NOT bit-compatible with digests persisted
+    # before r8. Both stay inside the error contract; never compare
+    # digest bytes across that boundary.
     n = float(weights.sum())
     S = np.cumsum(weights)
     K = _k(S / n, delta)

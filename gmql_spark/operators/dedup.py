@@ -172,7 +172,11 @@ def minhash_lsh_pairs(
     create oversized buckets, and those pairs are already known
     duplicates — losing them here costs nothing). Uncapped (None, the
     default and the oracle-gate mode) is exact."""
-    assert num_perm % bands == 0
+    if num_perm % bands:
+        raise ValueError(
+            f"num_perm ({num_perm}) must be a multiple of bands ({bands}): "
+            "otherwise the bands cover only part of the signature"
+        )
     rows = num_perm // bands
     sig = minhash_signatures(df, num_perm, id_col, text_col, n, hash_fn).cache()
     mh_cols = [f"mh_{i}" for i in range(num_perm)]

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from gmql_spark.operators.rollup import TIER_DURATION
+from gmql_spark.operators.window_agg import TIER_DURATION
 
 TIER_STEP = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
 _TIER_STEP_S = {"1m": 60, "1h": 3600, "1d": 86400}

@@ -28,6 +28,11 @@ Scale notes:
   rows) joined to ``exact_percentiles`` at (key, window_start): sketches
   are mergeable carriers, and rebuilding them from raw per tier would
   re-scan raw through Arrow.
+- the window group-bys of the open-domain category maps, the sketches
+  and ``cascade_rollup`` go through the engine's one window-aggregate
+  core (``operators.window_agg``). Only ``rollup``'s fused pass keeps
+  its own window column (``_w``), so the rank window and the aggregate
+  share one (key, window) partitioning.
 - the lag window for ``gap_s`` is one shuffle by key; a table written
   with ingest-time gaps (``catalog.write_transcripts(precompute_gaps=
   True)``) skips it.
@@ -42,8 +47,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from gmql_spark.functions.aggregates import counts_map
-
-TIER_DURATION = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
+from gmql_spark.operators.window_agg import (
+    TIER_DURATION,
+    window_counts_map,
+    window_rollup,
+)
 
 PCTS = (0.50, 0.95, 0.99)
 PCT_NAMES = ("latency_p50", "latency_p95", "latency_p99")
@@ -153,17 +161,11 @@ def rollup(
         F.col("_w.end").alias("window_end"),
         *[c for c in agged.columns if c not in (key, "_w")],
     )
-    empty_map = F.expr("cast(map() as map<string,bigint>)")
-    if role_values is None:
-        rc = two_level_counts(df, "role", tier, key=key, ts=ts, out="role_counts")
-        main = main.join(rc, on=[key, "window_start"], how="left").withColumn(
-            "role_counts", F.coalesce(F.col("role_counts"), empty_map)
-        )
-    if tool_values is None:
-        tc = two_level_counts(df, "tool", tier, key=key, ts=ts, out="tool_counts")
-        main = main.join(tc, on=[key, "window_start"], how="left").withColumn(
-            "tool_counts", F.coalesce(F.col("tool_counts"), empty_map)
-        )
+    for col, vals in (("role", role_values), ("tool", tool_values)):
+        if vals is None:
+            main = _join_counts_map(
+                main, df, col, f"{col}_counts", TIER_DURATION[tier], key, ts
+            )
     sketch_cols: list[str] = []
     if with_sketches:
         with_digest = with_sketches == "digest"
@@ -224,26 +226,26 @@ def _join_sketches(
     return out
 
 
-def two_level_counts(
-    df: DataFrame, col: str, tier: str, key: str = "conv_id", ts: str = "ts",
-    out: str = "counts",
+def _join_counts_map(
+    main: DataFrame,
+    src: DataFrame,
+    cat: str,
+    out: str,
+    duration: str,
+    key: str,
+    ts: str,
+    weight: str | None = None,
 ) -> DataFrame:
-    """Histogram map for an unbounded category column without object
-    aggregation over raw data: hash-count per (key, window, category)
-    first, then assemble the map from the (small) counted rows."""
-    win = F.window(ts, TIER_DURATION[tier])
-    counted = (
-        df.filter(F.col(col).isNotNull())
-        .groupBy(key, win.alias("w"), F.col(col).alias("_cat"))
-        .agg(F.count(F.lit(1)).alias("_n"))
-    )
-    return (
-        counted.groupBy(key, F.col("w.start").alias("window_start"))
-        .agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct("_cat", "_n")))
-            ).alias(out)
-        )
+    """Left-join ``window_counts_map`` of ``src`` onto ``main`` at
+    (key, window_start) grain as column ``out``; null categories are
+    skipped, and windows with no category rows get the empty map."""
+    counts = window_counts_map(
+        src.filter(F.col(cat).isNotNull()), duration, cat, out, keys=[key],
+        ts=ts, weight=weight,
+    ).drop("window_end")
+    empty_map = F.expr("cast(map() as map<string,bigint>)")
+    return main.join(counts, on=[key, "window_start"], how="left").withColumn(
+        out, F.coalesce(F.col(out), empty_map)
     )
 
 
@@ -288,64 +290,39 @@ def cascade_rollup(
     Composition laws verified by tests: sum∘count = count, map-merge of
     value-counts = value-counts of union, min∘min, max∘max.
     """
-    win = F.window("window_start", TIER_DURATION[tier])
+    duration = TIER_DURATION[tier]
     fused = [
         _merged_counts_col(col, vals).alias(col)
         for col, vals in (("role_counts", role_values), ("tool_counts", tool_values))
         if vals is not None
     ]
-    scalars = (
-        finer.groupBy(key, win.alias("w"))
-        .agg(
+    out = window_rollup(
+        finer,
+        duration,
+        [
             F.sum("turn_count").alias("turn_count"),
             F.sum("latency_cnt").alias("latency_cnt"),
             F.sum("latency_sum_us").alias("latency_sum_us"),
             F.min("first_ts").alias("first_ts"),
             F.max("last_ts").alias("last_ts"),
             *fused,
-        )
-        .select(
-            key,
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "turn_count",
-            "latency_cnt",
-            "latency_sum_us",
-            "first_ts",
-            "last_ts",
-            *[
-                col
-                for col, vals in (("role_counts", role_values), ("tool_counts", tool_values))
-                if vals is not None
-            ],
-        )
+        ],
+        keys=[key],
+        ts="window_start",
     )
     # histogram-map merge via explode -> codegen hash sum -> map assembly
     # over the (small) per-category rows. A direct HOF fold over
     # collect_list(map) would be an ObjectHashAggregate on the whole
     # finer tier — the 128-group sort fallback again.
-    empty_map = F.expr("cast(map() as map<string,bigint>)")
-    out = scalars
-    generic_cols = [
-        col
-        for col, vals in (("role_counts", role_values), ("tool_counts", tool_values))
-        if vals is None
-    ]
-    for col in generic_cols:
-        cat = (
-            finer.select(key, win.alias("w"), F.explode(col).alias("_cat", "_v"))
-            .groupBy(key, F.col("w.start").alias("window_start"), "_cat")
-            .agg(F.sum("_v").alias("_n"))
-            .groupBy(key, "window_start")
-            .agg(
-                F.map_from_entries(
-                    F.array_sort(F.collect_list(F.struct("_cat", "_n")))
-                ).alias(col)
+    for col, vals in (("role_counts", role_values), ("tool_counts", tool_values)):
+        if vals is None:
+            exploded = finer.select(
+                key, "window_start", F.explode(col).alias("_cat", "_n")
             )
-        )
-        out = out.join(cat, on=[key, "window_start"], how="left").withColumn(
-            col, F.coalesce(F.col(col), empty_map)
-        )
+            out = _join_counts_map(
+                out, exploded, "_cat", col, duration, key, "window_start",
+                weight="_n",
+            )
     sketch_cols: list[str] = []
     if "lat_hist" in finer.columns:
         from gmql_spark.functions.sketches import hist_cascade, hll_cascade

@@ -866,16 +866,20 @@ def _op_window(dfs, st):
 
 def _op_rewindow(dfs, st):
     """REWINDOW — cascade a WINDOW result to a coarser grain with caller
-    merge aggregates (window_agg.cascade; continuous-aggregate step):
+    merge aggregates (``window_agg.window_rollup`` over the finer
+    result's ``window_start``; continuous-aggregate step):
     ``H = REWINDOW(size: '1 hour', key: ['user_id'], n: 'sum(n)') M``."""
-    from gmql_spark.operators.window_agg import cascade
+    from gmql_spark.operators.window_agg import window_rollup
 
     keys = st.params.get("key", [])
     keys = keys if isinstance(keys, list) else [keys]
     aggs = _agg_exprs(st, _WINDOW_RESERVED)
     if not aggs:
         raise GSLError(f"line {st.pos}: REWINDOW needs aggregate expressions")
-    return cascade(dfs[0], st.params.get("size", "1 hour"), aggs=aggs, keys=keys)
+    return window_rollup(
+        dfs[0], st.params.get("size", "1 hour"), aggs=aggs, keys=keys,
+        ts="window_start",
+    )
 
 
 _SERVE_RESERVED = ("frozen", "tier", "key", "ts")
@@ -900,8 +904,7 @@ def _op_serve(dfs, st):
     REALTIME statement."""
     import datetime as _dt
 
-    from gmql_spark.operators.rollup import TIER_DURATION
-    from gmql_spark.operators.window_agg import window_rollup
+    from gmql_spark.operators.window_agg import TIER_DURATION, window_rollup
     from gmql_spark.realtime import serve_realtime
 
     tier_df, raw = dfs

@@ -220,7 +220,7 @@ def derive_tier_frames(
     pass both straight to ``stitch_range``. The checkpointed blocks are
     freed by Spark's ContextCleaner when the frames go out of scope.
     """
-    from gmql_spark.operators.window_agg import cascade, window_rollup
+    from gmql_spark.operators.window_agg import window_rollup
 
     raw_rng = raw.filter(
         (F.col(ts) >= F.lit(start.replace(tzinfo=None)))
@@ -232,8 +232,10 @@ def derive_tier_frames(
     # same sharing as eager — without paying two serial driver jobs at
     # construction time
     m1 = m1.localCheckpoint(eager=False)
-    h1 = cascade(m1, "1 hour", aggs=merge_aggs, keys=keys).localCheckpoint(eager=False)
-    d1 = cascade(h1, "1 day", aggs=merge_aggs, keys=keys)
+    h1 = window_rollup(
+        m1, "1 hour", aggs=merge_aggs, keys=keys, ts="window_start"
+    ).localCheckpoint(eager=False)
+    d1 = window_rollup(h1, "1 day", aggs=merge_aggs, keys=keys, ts="window_start")
     return raw_rng, {"1m": m1, "1h": h1, "1d": d1}
 
 

@@ -3,7 +3,6 @@ from gmql_spark.streaming.materialize import (  # noqa: F401
     run_rollup_multi_batch,
     run_rollup_to_table,
     stage_files_ordered,
-    stream_window_rollup,
     watermark_trail,
 )
 from gmql_spark.streaming.rollup_stream import (  # noqa: F401

@@ -2,9 +2,11 @@
 
 The streaming twins in ``rollup_stream`` are *builders* (stream in,
 stream out); this module is the harness that actually RUNS one: stage
-the source to a parquet ingest dir, ``readStream`` it back, apply an
-event-time windowed aggregate, and ``foreachBatch``-append the emitted
-(watermark-closed) windows to a parquet table — the
+the source to a parquet ingest dir, ``readStream`` it back, apply
+``operators.window_agg.window_rollup`` under an event-time watermark
+(``rollup_stream._watermarked_rollup``: null-``ts`` rows dropped, the
+same wrapper as the streaming twins), and ``foreachBatch``-append the
+emitted (watermark-closed) windows to a parquet table — the
 ``Trigger.AvailableNow`` drain-and-stop pattern, with every emitted row
 having genuinely flowed through the streaming engine's stateful
 aggregation and sink.
@@ -46,37 +48,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def stream_window_rollup(
-    stream: DataFrame,
-    duration: str,
-    aggs: Sequence[Column],
-    keys: Sequence[str] = (),
-    ts: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming twin of ``operators.window_agg.window_rollup``:
-    tumbling event-time window aggregate, append-mode safe (single
-    stateful aggregation; null-``ts`` rows dropped — a null event time
-    never passes the watermark, so its group would sit in state
-    forever).
-
-    Output schema matches the batch twin exactly: keys + window_start +
-    window_end + the aliased aggregates.
-    """
-    win = F.window(ts, duration)
-    out = (
-        stream.filter(F.col(ts).isNotNull())
-        .withWatermark(ts, watermark)
-        .groupBy(*keys, win.alias("w"))
-        .agg(*aggs)
-    )
-    return out.select(
-        *keys,
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        *[c for c in out.columns if c not in (*keys, "w")],
-    )
+from gmql_spark.streaming.rollup_stream import _watermarked_rollup
 
 
 def _run_drain(
@@ -93,9 +65,7 @@ def _run_drain(
 ):
     """Shared drain core: availableNow stateful agg → foreachBatch
     parquet sink → (emitted frame, boundary, finished query)."""
-    agg = stream_window_rollup(
-        stream, duration, aggs=aggs, keys=keys, ts=ts, watermark=watermark
-    )
+    agg = _watermarked_rollup(stream, duration, aggs, keys, ts, watermark)
     out_schema = agg.schema
     q = (
         agg.writeStream.outputMode("append")
@@ -185,7 +155,7 @@ def run_rollup_to_table(
     watermark: str = "10 minutes",
     timeout_s: float = 600.0,
 ) -> tuple[DataFrame, object]:
-    """Run ``stream_window_rollup`` over ``source`` for real
+    """Run a streaming ``window_rollup`` over ``source`` for real
     (availableNow) and materialize the emitted windows.
 
     ``work_dir`` is wiped and reused (staged ingest files + checkpoint +

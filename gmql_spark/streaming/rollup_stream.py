@@ -3,8 +3,13 @@
 The reference has no streaming at all (spark-streaming is a declared but
 unused dependency — GMQL-Spark/pom.xml; no streaming operator exists).
 This module gives the engine an incremental-ingest path: the same
-tumbling-window aggregate as operators.rollup, expressed over
-``readStream`` with an event-time watermark for late turns.
+tumbling-window aggregate as the batch tiers, expressed over
+``readStream`` with an event-time watermark for late turns. Every
+streaming window aggregate — the three twins here and the
+``streaming.materialize`` drain — is the batch core
+``operators.window_agg.window_rollup`` behind one wrapper,
+``_watermarked_rollup``, which drops null-``ts`` rows and adds the
+watermark.
 
 Semantics differences vs batch (documented, by construction):
 - only mergeable aggregates (counts, histogram maps via the count_if
@@ -22,11 +27,33 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gmql_spark.functions.aggregates import counts_map
-from gmql_spark.operators.rollup import TIER_DURATION
+from gmql_spark.operators.window_agg import TIER_DURATION, window_rollup
+
+
+def _watermarked_rollup(
+    stream: DataFrame,
+    duration: str,
+    aggs: Sequence[Column],
+    keys: Sequence[str],
+    ts: str,
+    watermark: str,
+) -> DataFrame:
+    """``window_rollup`` over a stream: null-``ts`` rows dropped, then
+    the event-time watermark. A null event time can never pass the
+    watermark, so its window group would sit in state forever
+    unemitted. One stateful aggregation, append-mode safe; the output
+    schema is the batch ``window_rollup``'s."""
+    return window_rollup(
+        stream.filter(F.col(ts).isNotNull()).withWatermark(ts, watermark),
+        duration,
+        aggs,
+        keys=keys,
+        ts=ts,
+    )
 
 
 def stream_rollup(
@@ -41,31 +68,21 @@ def stream_rollup(
     """Event-time tumbling rollup over a streaming DataFrame.
 
     Output mode should be "append" (finalized windows only) or "update".
-    Null-``ts`` rows are dropped: a null event time can never pass the
-    watermark, so its window group would sit in state forever unemitted.
+    Null-``ts`` rows are dropped (``_watermarked_rollup``).
     """
-    win = F.window(ts, TIER_DURATION[tier])
-    return (
-        stream.filter(F.col(ts).isNotNull())
-        .withWatermark(ts, watermark)
-        .groupBy(key, win.alias("w"))
-        .agg(
+    return _watermarked_rollup(
+        stream,
+        TIER_DURATION[tier],
+        [
             F.count(F.lit(1)).alias("turn_count"),
             counts_map(F.col("role"), role_values).alias("role_counts"),
             counts_map(F.col("tool"), tool_values).alias("tool_counts"),
             F.min(ts).alias("first_ts"),
             F.max(ts).alias("last_ts"),
-        )
-        .select(
-            key,
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "turn_count",
-            "role_counts",
-            "tool_counts",
-            "first_ts",
-            "last_ts",
-        )
+        ],
+        keys=[key],
+        ts=ts,
+        watermark=watermark,
     )
 
 
@@ -96,26 +113,26 @@ def stream_hist_rollup(
     same reason the module header scopes latency stats to batch unless
     gaps are precomputed.
 
-    Rows with a null ``ts`` are dropped: a null event time can never
-    pass a watermark, so its window group would sit in state forever
-    unemitted (batch hist_rollup emits such rows under a null window —
-    a documented, deliberate divergence).
+    Rows with a null ``ts`` are dropped (``_watermarked_rollup``;
+    batch hist_rollup emits such rows under a null window — a
+    documented, deliberate divergence).
     """
     from gmql_spark.functions.sketches import log2_bucket
 
     keys = list(keys)
-    win = F.window(ts, TIER_DURATION[tier])
-    aggs = [
-        F.count(F.when(F.col("_bkt") == i, 1)).alias(f"_b{i}") for i in range(-1, 64)
-    ]
-    counted = (
-        stream.filter(F.col(value_col).isNotNull() & F.col(ts).isNotNull())
+    counted = _watermarked_rollup(
+        stream.filter(F.col(value_col).isNotNull())
         # bucket projected ONCE per row; 65 comparisons against the
         # column beat 65 copies of the conv() expression in the agg
-        .withColumn("_bkt", log2_bucket(F.col(value_col)))
-        .withWatermark(ts, watermark)
-        .groupBy(*keys, win.alias("w"))
-        .agg(*aggs)
+        .withColumn("_bkt", log2_bucket(F.col(value_col))),
+        TIER_DURATION[tier],
+        [
+            F.count(F.when(F.col("_bkt") == i, 1)).alias(f"_b{i}")
+            for i in range(-1, 64)
+        ],
+        keys=keys,
+        ts=ts,
+        watermark=watermark,
     )
     entries = F.array(
         *[
@@ -128,8 +145,8 @@ def stream_hist_rollup(
     )
     return counted.select(
         *keys,
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
+        "window_start",
+        "window_end",
         F.map_from_entries(
             F.filter(entries, lambda e: e["value"] > 0)
         ).alias(out),
@@ -152,18 +169,12 @@ def stream_hll_rollup(
     under a watermark; the sketch buffer lives in the state store and
     the emitted binary unions downstream exactly like a batch-built
     one (register max is associative/commutative). Null-``ts`` rows
-    are dropped for the same state-leak reason as
-    ``stream_hist_rollup``."""
-    win = F.window(ts, TIER_DURATION[tier])
-    agged = (
-        stream.filter(F.col(col).isNotNull() & F.col(ts).isNotNull())
-        .withWatermark(ts, watermark)
-        .groupBy(*list(keys), win.alias("w"))
-        .agg(F.hll_sketch_agg(F.col(col), F.lit(lgk)).alias(out))
-    )
-    return agged.select(
-        *list(keys),
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        out,
+    are dropped (``_watermarked_rollup``)."""
+    return _watermarked_rollup(
+        stream.filter(F.col(col).isNotNull()),
+        TIER_DURATION[tier],
+        [F.hll_sketch_agg(F.col(col), F.lit(lgk)).alias(out)],
+        keys=list(keys),
+        ts=ts,
+        watermark=watermark,
     )

@@ -85,6 +85,12 @@ def test_minhash_hot_bucket_cap(spark, docs):
     assert key(nocap_equiv) == key(base)
 
 
+def test_minhash_lsh_rejects_uneven_bands(docs):
+    # 64 perms / 10 bands would band only 60 of the 64 signature columns
+    with pytest.raises(ValueError, match=r"num_perm \(64\).*bands \(10\)"):
+        minhash_lsh_pairs(docs, num_perm=64, bands=10)
+
+
 def test_simhash_near_pairs(docs):
     pairs = simhash_near_pairs(docs, max_hamming=10).toPandas()
     got = {(r.id_a, r.id_b) for r in pairs.itertuples()}

@@ -30,7 +30,8 @@ def test_rollup_plan_is_pure_codegen_agg(raw):
     aggregate of its plan — the cascade and the exact percentiles —
     must be a hash aggregate."""
     from gmql_spark.datagen import TOOL_NAMES
-    from gmql_spark.operators.rollup import TIER_DURATION, exact_percentiles, with_gap_seconds
+    from gmql_spark.operators.rollup import exact_percentiles, with_gap_seconds
+    from gmql_spark.operators.window_agg import TIER_DURATION
 
     tools = list(TOOL_NAMES)
     df = rollup(raw, "1m", tool_values=tools)

@@ -212,7 +212,7 @@ def test_ceil_to_tier():
 def test_stitch_range_equals_direct(spark, split_data, start, end):
     """Stitched tier aggregate over a misaligned range == direct raw
     aggregate over the same range, for every decomposition shape."""
-    from gmql_spark.operators.window_agg import cascade, window_rollup
+    from gmql_spark.operators.window_agg import window_rollup
 
     raw, _, _ = split_data
     # shift the synthetic span onto the requested window: datagen spans
@@ -227,8 +227,9 @@ def test_stitch_range_equals_direct(spark, split_data, start, end):
 
     n = [F.count(F.lit(1)).alias("n")]
     m1 = window_rollup(shifted, "1 minute", aggs=n, keys=["conv_id"])
-    h1 = cascade(m1, "1 hour", aggs=[F.sum("n").alias("n")], keys=["conv_id"])
-    d1 = cascade(h1, "1 day", aggs=[F.sum("n").alias("n")], keys=["conv_id"])
+    merge = [F.sum("n").alias("n")]
+    h1 = window_rollup(m1, "1 hour", aggs=merge, keys=["conv_id"], ts="window_start")
+    d1 = window_rollup(h1, "1 day", aggs=merge, keys=["conv_id"], ts="window_start")
     got = stitch_range(
         {"1m": m1, "1h": h1, "1d": d1},
         shifted,

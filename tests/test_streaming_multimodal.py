@@ -14,6 +14,18 @@ from gmql_spark.operators.rollup import rollup
 from gmql_spark.streaming.rollup_stream import stream_rollup
 
 
+def _stage_with_null_ts(raw, src, not_null=None):
+    """Write ``raw`` plus five of its rows with ``ts`` nulled to ``src``
+    (rows where ``not_null`` is set, so they would feed the aggregate).
+    The stream twins drop null-``ts`` rows, so their output must equal
+    the batch twin over ``raw`` alone."""
+    pick = raw if not_null is None else raw.filter(F.col(not_null).isNotNull())
+    nulls = pick.limit(5).withColumn("ts", F.lit(None).cast("timestamp"))
+    raw.unionByName(nulls).write.parquet(src)
+    staged = raw.sparkSession.read.parquet(src)
+    assert staged.filter(F.col("ts").isNull()).count() == 5
+
+
 def test_stateful_sessionizer_matches_batch(spark, tmp_path):
     """applyInPandasWithState sessionizer == batch sessionize for every
     CLOSED session: a session closes when a newer same-key event breaks
@@ -74,7 +86,7 @@ def test_stateful_sessionizer_matches_batch(spark, tmp_path):
 def test_stream_rollup_matches_batch(spark, tmp_path):
     raw = datagen.transcripts_spark(spark, n_conv=40)
     src = str(tmp_path / "src")
-    raw.write.parquet(src)
+    _stage_with_null_ts(raw, src)
 
     stream = spark.readStream.schema(raw.schema).parquet(src)
     agg = stream_rollup(stream, "1h", watermark="0 seconds")
@@ -319,7 +331,7 @@ def test_stream_hist_rollup_matches_batch(spark, tmp_path):
         datagen.transcripts_spark(spark, n_conv=30), key="conv_id", ts="ts"
     ).select("conv_id", "ts", "gap_us")
     src = str(tmp_path / "hist_src")
-    raw.write.parquet(src)
+    _stage_with_null_ts(raw, src, not_null="gap_us")
 
     stream = spark.readStream.schema(raw.schema).parquet(src)
     out = stream_hist_rollup(stream, tier="1m", watermark="0 seconds")
@@ -363,7 +375,7 @@ def test_stream_hll_rollup_matches_batch(spark, tmp_path):
 
     raw = datagen.transcripts_spark(spark, n_conv=25).select("conv_id", "ts", "tool")
     src = str(tmp_path / "hll_src")
-    raw.write.parquet(src)
+    _stage_with_null_ts(raw, src, not_null="tool")
 
     stream = spark.readStream.schema(raw.schema).parquet(src)
     out = stream_hll_rollup(stream, tier="1h", watermark="0 seconds")

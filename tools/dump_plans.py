@@ -1,11 +1,13 @@
 """Dump .explain('formatted') for selected declared queries into
-plans/<tag_dir>/<name>_<tag>.txt (the judge-facing before/after plan
-artifacts). Also dumps the transcript 1m tier rollup plan under the
-pseudo-name ``transcript_rollup_1m`` (bench-only surface, not a declared
-query).
+<out_dir>/<name>_<tag>.txt (the before/after plan artifacts, kept under
+``plans/<round>/``). Also dumps the transcript 1m tier rollup plan under
+the pseudo-name ``transcript_rollup_1m`` (bench-only surface, not a
+declared query).
 
-Usage: python tools/dump_plans.py <tag> [sf_dir] [query ...]
-  tag: e.g. "before" / "after" (suffix of the artifact files)
+Usage: python tools/dump_plans.py <out_dir> <tag> [sf_dir] [query ...]
+  out_dir: e.g. plans/r09 (created if missing; a relative path is taken
+           from the repository root)
+  tag:     e.g. "before" / "after" (suffix of the artifact files)
 """
 
 from __future__ import annotations
@@ -27,10 +29,16 @@ DEFAULT_QUERIES = [
     "cover_accumulation",
     "cover_jaccard",
     "stream_rollup",
+    "rollup_1h_cascade",
+    "latency_histogram",
 ]
 
 
 def main() -> int:
+    if len(sys.argv) < 3:
+        print(__doc__, file=sys.stderr)
+        return 2
+    out_dir = os.path.join(REPO, sys.argv.pop(1))
     tag = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001"
     names = sys.argv[3:] or DEFAULT_QUERIES
@@ -39,7 +47,6 @@ def main() -> int:
     from gmql_spark.session import get_spark
 
     spark = get_spark(8, app_name=f"dump-plans-{tag}", shuffle_partitions=16)
-    out_dir = os.path.join(REPO, "plans", "r08")
     os.makedirs(out_dir, exist_ok=True)
     qs = entrymod.queries()
     for name in names:
