@@ -12,16 +12,33 @@ Driver-side work is O(#buckets) JSON bookkeeping; all data work stays in
 Spark jobs. At scale each bucket job prunes to its partition via the
 storage layout (`bucket=` dirs / Iceberg bucket transform) instead of
 scanning the full input.
+
+One plan and one write per bucket: every tier of the bucket is one
+frame from the tier builder (``rollup._build_tiers``), written once,
+partitioned by tier, into ``<out_dir>/_staging``; its Gorilla streams
+are one more write from that staging. Each ``tier=<t>`` leaf is then
+renamed into ``rollup_<t>/bucket=<b>`` (``gorilla_<t>/bucket=<b>``),
+and only after the last rename is the manifest line appended. A crash
+before that line — after the staging write, or between renames — leaves
+the bucket unfinished: the next run clears the stale staging directory
+and redoes the bucket, replacing whatever leaves it had already moved.
+rows_in and the watermark are observed on the bucket's raw rows during
+the write (``DataFrame.observe``); rows and bytes out come from the
+parquet footers. With ``compress=True`` and a table written with
+ingest-time gaps a bucket runs 7 Spark jobs, plus one raw schema
+inference per run.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -38,6 +55,40 @@ def _parquet_stats(path: str) -> tuple[int, int]:
                 rows += pq.ParquetFile(fp).metadata.num_rows
                 size += os.path.getsize(fp)
     return rows, size
+
+
+def _observed(obs: Observation) -> dict:
+    """The metrics ``obs`` collected, or {} when Spark pruned the
+    observed rows away as statically empty and so collected none."""
+    try:
+        return obs.get
+    except Py4JJavaError:  # the JVM holds an empty, schema-less row
+        return {}
+
+
+def _write_by_tier(df: DataFrame, path: str, tiers: Sequence[str]) -> None:
+    """Write ``df`` partitioned by its ``tier`` column. A tier without
+    rows still gets a schema-only leaf, as a plain write of an empty
+    frame would: a partitioned write creates no leaf for it."""
+    df.write.mode("overwrite").partitionBy("tier").parquet(path)
+    for tier in tiers:
+        leaf = f"{path}/tier={tier}"
+        if not os.path.exists(leaf):
+            empty = df.sparkSession.createDataFrame([], df.drop("tier").schema)
+            empty.write.parquet(leaf)
+
+
+def _footer_columns(path: str) -> list[str] | None:
+    """Column names in the first parquet footer under ``path`` — no
+    Spark job — or None when it holds no parquet file."""
+    import pyarrow.parquet as pq
+
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for fn in sorted(files):
+            if fn.endswith(".parquet") and not fn.startswith(("_", ".")):
+                return pq.read_schema(os.path.join(root, fn)).names
+    return None
 
 
 class Manifest:
@@ -111,6 +162,11 @@ def run_pipeline(
     ``compress=True`` additionally writes Gorilla-packed streams of each
     tier's turn_count series (``gorilla_<tier>/bucket=<b>``: delta-of-
     delta timestamps + XOR values, north-rule storage codec).
+
+    Each bucket is written once to ``<out_dir>/_staging`` and renamed
+    into place; the manifest line follows the last rename, so a crash
+    anywhere before it redoes the bucket on resume (module docstring).
+    A bucket without rows still gets a schema-only parquet per tier.
     """
     if raw is None and raw_path is None:
         raise ValueError("provide raw (DataFrame) or raw_path (bucketed table)")
@@ -134,8 +190,16 @@ def run_pipeline(
                 "written with"
             )
 
+    from gmql_spark.operators.rollup import (
+        DEFAULT_ROLES,
+        _build_tiers,
+        with_gap_seconds,
+    )
+
     manifest = Manifest(f"{out_dir}/_manifest.jsonl")
     done = manifest.done_buckets(n_buckets=n_buckets)
+    stage = f"{out_dir}/_staging"
+    table = None
     ran = skipped = 0
     for b in range(n_buckets):
         if b in done:
@@ -144,57 +208,72 @@ def run_pipeline(
         if fail_after is not None and ran >= fail_after:
             raise RuntimeError(f"injected failure after {ran} buckets")
         t0 = time.time()
+        # staging left behind by a crash belongs to an unfinished bucket
+        shutil.rmtree(stage, ignore_errors=True)
         if raw_path is not None:
+            if table is None:  # the raw schema is inferred once per run
+                table = spark.read.parquet(raw_path)
             # partition-pruned scan: only the conv_bucket=<b> dirs are
-            # read (PartitionFilters in the plan — asserted by tests)
-            from gmql_spark.sources.catalog import read_transcripts
-
-            part = read_transcripts(spark, raw_path, buckets=[b])
+            # read (PartitionFilters in the plan)
+            part = table.filter(F.col("conv_bucket") == b).drop(
+                "conv_bucket", "event_date"
+            )
         else:
             part = raw.filter(F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)) == b)
-        meta = part.agg(
-            F.count(F.lit(1)).alias("rows_in"), F.max(ts).alias("watermark")
-        ).collect()[0]
-        # every tier is built from the bucket's gap frame by the one
-        # tier builder (no sketches here: a direct fused rollup per
-        # tier, nothing read back from the written finer tier); rows and
-        # bytes come from the written parquet's footers — no Spark job
-        from gmql_spark.operators.rollup import (
-            DEFAULT_ROLES,
-            _build_tier,
-            with_gap_seconds,
+        # rows_in/watermark ride the bucket's write: observed on the raw
+        # rows (null-ts rows included), not a separate job
+        meta = Observation()
+        part = part.observe(
+            meta, F.count(F.lit(1)).alias("rows_in"), F.max(ts).alias("watermark")
         )
+        # every tier of the bucket in one plan and one write; rows and
+        # bytes come from the written parquet's footers — no Spark job
+        tiers_df = _build_tiers(
+            with_gap_seconds(part, key=key, ts=ts), None, tiers, key=key, ts=ts,
+            role_values=DEFAULT_ROLES, tool_values=None, with_sketches=False,
+        )
+        _write_by_tier(tiers_df, f"{stage}/rollup", tiers)
+        tables = ["rollup"]
+        if compress:
+            from gmql_spark.compression.gorilla import compress_series
 
-        raw_g = with_gap_seconds(part, key=key, ts=ts)
+            # read back with the known schema: no schema-inference job
+            series = (
+                spark.read.schema(tiers_df.schema)
+                .parquet(f"{stage}/rollup")
+                .select(
+                    "tier", key, "window_start",
+                    F.col("turn_count").cast("double").alias("val"),
+                )
+            )
+            packed = compress_series(
+                series, keys=["tier", key], ts_col="window_start", value_col="val"
+            )
+            _write_by_tier(packed, f"{stage}/gorilla", tiers)
+            tables.append("gorilla")
+        for name in tables:
+            for tier in tiers:
+                dest = f"{out_dir}/{name}_{tier}/bucket={b}"
+                shutil.rmtree(dest, ignore_errors=True)
+                os.makedirs(os.path.dirname(dest), exist_ok=True)
+                os.rename(f"{stage}/{name}/tier={tier}", dest)
+        shutil.rmtree(stage)
         tier_stats = {}
         for tier in tiers:
-            path = f"{out_dir}/rollup_{tier}/bucket={b}"
-            df = _build_tier(
-                raw_g, None, tier, key=key, ts=ts, role_values=DEFAULT_ROLES,
-                tool_values=None, with_sketches=False,
-            )
-            df.write.mode("overwrite").parquet(path)
-            rows, nbytes = _parquet_stats(path)
+            rows, nbytes = _parquet_stats(f"{out_dir}/rollup_{tier}/bucket={b}")
             tier_stats[tier] = {"rows_out": rows, "bytes": nbytes}
             if compress:
-                from gmql_spark.compression.gorilla import compress_series
-
-                gpath = f"{out_dir}/gorilla_{tier}/bucket={b}"
-                series = part.sparkSession.read.parquet(path).select(
-                    key, "window_start", F.col("turn_count").cast("double").alias("val")
-                )
-                compress_series(series, keys=[key], ts_col="window_start", value_col="val").write.mode(
-                    "overwrite"
-                ).parquet(gpath)
-                _g_rows, g_bytes = _parquet_stats(gpath)
-                tier_stats[tier]["gorilla_bytes"] = g_bytes
+                tier_stats[tier]["gorilla_bytes"] = _parquet_stats(
+                    f"{out_dir}/gorilla_{tier}/bucket={b}"
+                )[1]
+        observed = _observed(meta)
         entry = {
             "bucket": b,
             "n_buckets": n_buckets,
             "status": "done",
             "source": raw_path or "<dataframe>",
-            "rows_in": meta.rows_in,
-            "watermark": meta.watermark,
+            "rows_in": observed.get("rows_in", 0),
+            "watermark": observed.get("watermark"),
             "tiers": tier_stats,
             "lineage": lineage,
             "wall_s": round(time.time() - t0, 3),

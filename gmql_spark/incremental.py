@@ -49,7 +49,7 @@ import os
 import shutil
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -203,7 +203,8 @@ def append_transcripts(
     order: Sequence[str] = ("turn_idx",),
 ) -> list:
     """Append a batch with cross-batch-exact ``gap_us``; returns the
-    list of event dates the batch touched (the refresh targets).
+    sorted list of event dates the batch touched (the refresh targets),
+    with a trailing None when a batch row has a null ``ts``.
 
     The intra-batch gap is the usual per-conv lag; each conv's FIRST
     batch row takes its gap from the state table's last_us (null if the
@@ -246,14 +247,23 @@ def append_transcripts(
             )
 
     bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+    us = F.unix_micros(F.col(ts))
+    # the batch's bookkeeping values in one aggregate: touched
+    # buckets (state pruning; O(n_buckets) values, same class as
+    # checkpoint), event-time range and touched dates (append-log line).
+    # collect_set drops nulls, so a null ts is flagged on its own.
+    meta = new_df.agg(
+        F.collect_set(bucket).alias("buckets"),
+        F.min(us).alias("lo"),
+        F.max(us).alias("hi"),
+        F.collect_set(F.to_date(ts)).alias("dates"),
+        F.bool_or(F.col(ts).isNull()).alias("null_ts"),
+    ).collect()[0]
+    touched_dates = sorted(meta.dates) + ([None] if meta.null_ts else [])
     if state is not None:
         # prune the state read to the buckets this batch touches
-        # (O(n_buckets) driver values, same bookkeeping class as checkpoint)
-        touched = [
-            r.b for r in new_df.select(bucket.alias("b")).distinct().collect()
-        ]
-        if len(touched) < n_buckets:
-            state = state.filter(F.col("conv_bucket").isin(touched))
+        if len(meta.buckets) < n_buckets:
+            state = state.filter(F.col("conv_bucket").isin(meta.buckets))
         # enforce the ordered-append contract LOUDLY: a batch row at or
         # before a conversation's recorded last_us would get a wrong
         # (negative/garbage) cross-batch gap — the one-shot equivalence
@@ -278,8 +288,6 @@ def append_transcripts(
     batch = _with_cross_batch_gaps(new_df, state, key, ts, order)
 
     # 2. new immutable state version (conv_id -> max last_us), bucketed
-    us = F.unix_micros(F.col(ts))
-    lo_hi = new_df.agg(F.min(us).alias("lo"), F.max(us).alias("hi")).collect()[0]
     batch_state = new_df.groupBy(key).agg(F.max(us).alias("last_us"))
     merged = (
         read_conv_state(spark, fact_path)  # unpruned
@@ -294,10 +302,6 @@ def append_transcripts(
     merged.withColumn("conv_bucket", bucket).write.mode("overwrite").partitionBy(
         "conv_bucket"
     ).parquet(f"{root}/{next_v}")
-
-    touched_dates = [
-        r.d for r in batch.select(F.to_date(ts).alias("d")).distinct().collect()
-    ]
 
     # 3-6. INTENT-bracketed fact append + atomic pointer swap
     with open(_intent_file(root), "w") as f:
@@ -315,8 +319,8 @@ def append_transcripts(
             json.dumps(
                 {
                     "version": next_v,
-                    "min_us": int(lo_hi.lo) if lo_hi.lo is not None else None,
-                    "max_us": int(lo_hi.hi) if lo_hi.hi is not None else None,
+                    "min_us": int(meta.lo) if meta.lo is not None else None,
+                    "max_us": int(meta.hi) if meta.hi is not None else None,
                     "dates": sorted(str(d) for d in touched_dates),
                 }
             )
@@ -358,25 +362,24 @@ def refresh_tiers(
     sketch-less partitions (mixed parquet schemas read back
     nondeterministically); an EXPLICIT value that contradicts the
     existing tables raises instead."""
-    from gmql_spark.checkpoint import _parquet_stats
+    from gmql_spark.checkpoint import _footer_columns, _observed, _parquet_stats
     from gmql_spark.operators.rollup import (
         DEFAULT_ROLES,
-        _build_tier,
+        _build_tiers,
         with_gap_seconds,
     )
     from gmql_spark.realtime import record_refresh_watermark
 
     existing_modes = {}
     for tier in tiers:
-        path = f"{out_dir}/rollup_{tier}"
-        if os.path.exists(path):
-            try:
-                cols = spark.read.parquet(path).columns
-                existing_modes[tier] = (
-                    "digest" if "lat_digest" in cols else "lat_hist" in cols
-                )
-            except Exception:
-                pass  # unreadable/empty dir: treat as absent
+        try:
+            cols = _footer_columns(f"{out_dir}/rollup_{tier}")
+        except Exception:
+            cols = None  # unreadable footer: treat as absent
+        if cols is not None:
+            existing_modes[tier] = (
+                "digest" if "lat_digest" in cols else "lat_hist" in cols
+            )
     if len(set(existing_modes.values())) > 1:
         raise ValueError(
             f"tier tables under {out_dir} disagree on sketch columns "
@@ -410,14 +413,20 @@ def refresh_tiers(
     # gap_s — no raw-scale window shuffle
     raw_g = with_gap_seconds(raw, key=key, ts=ts)
     stats = {}
+    # the watermark rides the finest tier's write: max(last_ts) over its
+    # rows is max(ts) over the refreshed raw rows
+    wm = Observation()
     try:
         prev_df = None
         for i, tier in enumerate(tiers):
             path = f"{out_dir}/rollup_{tier}"
-            df = _build_tier(
-                raw_g, prev_df, tier, key=key, ts=ts, role_values=DEFAULT_ROLES,
-                tool_values=None, with_sketches=with_sketches,
-            )
+            df = _build_tiers(
+                raw_g, prev_df, (tier,), key=key, ts=ts,
+                role_values=DEFAULT_ROLES, tool_values=None,
+                with_sketches=with_sketches,
+            ).drop("tier")
+            if i == 0:
+                df = df.observe(wm, F.max(F.unix_micros("last_ts")).alias("wm"))
             out = df.withColumn("window_date", F.to_date("window_start"))
             out.write.mode("overwrite").partitionBy("window_date").parquet(path)
             # rows of the refreshed dates from the parquet footers — no job
@@ -439,12 +448,12 @@ def refresh_tiers(
     # that's why the covered state version is recorded alongside it and
     # realtime_rollup clamps the serving watermark by the min event ts of
     # any append past ``covered`` (pending_append_min_us).
-    wm_row = raw.agg(F.max(F.unix_micros(F.col(ts))).alias("wm")).collect()[0]
+    wm_us = _observed(wm).get("wm")
     watermark_us = None
-    if wm_row.wm is not None:
+    if wm_us is not None:
         watermark_us = record_refresh_watermark(
             out_dir,
-            int(wm_row.wm),
+            int(wm_us),
             covered_version=covered,
             # per-DATE coverage: these dates now reflect every fact row
             # up to state version `covered`; an append is only fully

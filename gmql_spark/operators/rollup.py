@@ -11,13 +11,18 @@ binning, and Catalyst's hash aggregate *is* the two-level
 partial/final combine.
 
 Scale notes:
-- one tier builder (``_build_tier``) decides how every tier is built,
-  for ``rollup_all_tiers``, ``checkpoint.run_pipeline`` and
-  ``incremental.refresh_tiers`` alike. Without sketches each tier is a
-  direct fused ``rollup`` of the gap frame: one exchange + sort +
-  aggregate by (key, window), no joins. The exact-percentile contract
-  forces one raw-scale sort per tier anyway, and the fused pass computes
-  every mergeable stat inside it.
+- one tier builder (``_build_tiers``) decides how every tier is built,
+  for ``rollup``, ``rollup_all_tiers``, ``checkpoint.run_pipeline`` and
+  ``incremental.refresh_tiers`` alike, and returns its tiers as one
+  frame with a ``tier`` column. Without sketches the tiers are one
+  fused pass over the gap frame: per-tier windowed projections are
+  unioned and grouped by (key, tier, window) — one exchange + sort +
+  aggregate for all of them, no joins with closed category domains.
+  The exact-percentile contract forces a raw-scale sort anyway, and the
+  fused pass computes every mergeable stat inside it. ``run_pipeline``
+  builds all tiers of a bucket in one call (one plan, one write);
+  the other callers pass one tier at a time (Catalyst does not prune
+  the other tiers' branches of an all-tier frame filtered to one tier).
 - percentiles are exact, from one rank + hash-agg + lerp kernel
   (``_ranked_percentiles``, shared by ``rollup`` and
   ``exact_percentiles``) — NOT the built-in ``percentile`` aggregate,
@@ -30,9 +35,10 @@ Scale notes:
   re-scan raw through Arrow.
 - the window group-bys of the open-domain category maps, the sketches
   and ``cascade_rollup`` go through the engine's one window-aggregate
-  core (``operators.window_agg``). Only ``rollup``'s fused pass keeps
+  core (``operators.window_agg``). Only the builder's fused pass keeps
   its own window column (``_w``), so the rank window and the aggregate
-  share one (key, window) partitioning.
+  share one (key, tier, window) partitioning; its open-domain maps
+  take that precomputed ``_w`` into ``window_counts_map``.
 - the lag window for ``gap_s`` is one shuffle by key; a table written
   with ingest-time gaps (``catalog.write_transcripts(precompute_gaps=
   True)``) skips it.
@@ -41,6 +47,7 @@ Scale notes:
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -124,67 +131,17 @@ def rollup(
     (whole-stage codegen); None -> two-level plan (hash count per
     category, then a map assembly agg over tier-sized rows) so no
     object aggregate ever runs over raw-scale data.
+
+    This is the tier builder (``_build_tiers``) for one tier: one
+    exchange + sort + aggregate by (key, window), no joins with closed
+    category domains.
     """
     if with_gaps:
         df = with_gap_seconds(df, key=key, ts=ts)
-    # r8: the exact-percentile rank pass is FUSED into the main
-    # aggregate: the rank window and the groupBy share the same
-    # (key, window) hash partitioning, so the plan is ONE exchange +
-    # sort + aggregate, with no second raw-scale exchange and no join.
-    # Null gaps stay in (they count as turns); the kernel's nulls-last
-    # rank keeps the percentile arithmetic identical to a null-filtered
-    # pass (see ``_ranked_percentiles``).
-    d = df.withColumn("_w", F.window(ts, TIER_DURATION[tier]))
-    aggs = [
-        F.count(F.lit(1)).alias("turn_count"),
-        *(
-            [counts_map(F.col("role"), role_values).alias("role_counts")]
-            if role_values is not None
-            else []
-        ),
-        *(
-            [counts_map(F.col("tool"), tool_values).alias("tool_counts")]
-            if tool_values is not None
-            else []
-        ),
-        F.count("gap_s").alias("latency_cnt"),
-        # exact integer-µs sum: order-independent across partial aggs AND
-        # across tier cascades (long addition is associative; double is not)
-        F.sum("gap_us").alias("latency_sum_us"),
-        F.min(ts).alias("first_ts"),
-        F.max(ts).alias("last_ts"),
-    ]
-    agged = _ranked_percentiles(d, [key, "_w"], "gap_s", PCTS, PCT_NAMES, aggs)
-    main = agged.select(
-        key,
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
-        *[c for c in agged.columns if c not in (key, "_w")],
-    )
-    for col, vals in (("role", role_values), ("tool", tool_values)):
-        if vals is None:
-            main = _join_counts_map(
-                main, df, col, f"{col}_counts", TIER_DURATION[tier], key, ts
-            )
-    sketch_cols: list[str] = []
-    if with_sketches:
-        with_digest = with_sketches == "digest"
-        main = _join_sketches(main, df, tier, key=key, ts=ts, with_digest=with_digest)
-        sketch_cols = SKETCH_COLS + (["lat_digest"] if with_digest else [])
-    return main.select(
-        key,
-        "window_start",
-        "window_end",
-        "turn_count",
-        "role_counts",
-        "tool_counts",
-        *PCT_NAMES,
-        "latency_cnt",
-        "latency_sum_us",
-        "first_ts",
-        "last_ts",
-        *sketch_cols,
-    )
+    return _build_tiers(
+        df, None, (tier,), key=key, ts=ts, role_values=role_values,
+        tool_values=tool_values, with_sketches=with_sketches,
+    ).drop("tier")
 
 
 SKETCH_COLS = ["lat_hist", "tool_hll"]
@@ -231,20 +188,20 @@ def _join_counts_map(
     src: DataFrame,
     cat: str,
     out: str,
-    duration: str,
-    key: str,
+    duration: str | None,
+    keys: Sequence[str],
     ts: str,
     weight: str | None = None,
 ) -> DataFrame:
     """Left-join ``window_counts_map`` of ``src`` onto ``main`` at
-    (key, window_start) grain as column ``out``; null categories are
+    (keys, window_start) grain as column ``out``; null categories are
     skipped, and windows with no category rows get the empty map."""
     counts = window_counts_map(
-        src.filter(F.col(cat).isNotNull()), duration, cat, out, keys=[key],
+        src.filter(F.col(cat).isNotNull()), duration, cat, out, keys=keys,
         ts=ts, weight=weight,
     ).drop("window_end")
     empty_map = F.expr("cast(map() as map<string,bigint>)")
-    return main.join(counts, on=[key, "window_start"], how="left").withColumn(
+    return main.join(counts, on=[*keys, "window_start"], how="left").withColumn(
         out, F.coalesce(F.col(out), empty_map)
     )
 
@@ -278,7 +235,7 @@ def cascade_rollup(
     """Re-aggregate a finer tier to a coarser one for all *mergeable*
     stats (counts, histogram maps, min/max, sums). Percentiles are not
     mergeable and are absent from the result — join in
-    ``exact_percentiles`` (exact-from-raw, see ``_build_tier``) or
+    ``exact_percentiles`` (exact-from-raw, see ``_build_tiers``) or
     accept sketches.
 
     ``role_values``/``tool_values`` (r8): when the category domains are
@@ -320,7 +277,7 @@ def cascade_rollup(
                 key, "window_start", F.explode(col).alias("_cat", "_n")
             )
             out = _join_counts_map(
-                out, exploded, "_cat", col, duration, key, "window_start",
+                out, exploded, "_cat", col, duration, [key], "window_start",
                 weight="_n",
             )
     sketch_cols: list[str] = []
@@ -457,45 +414,11 @@ def exact_percentiles(
     return _ranked_percentiles(g, keys, value, pcts, names, extra_aggs)
 
 
-def _build_tier(
-    raw_g: DataFrame,
-    finer: DataFrame | None,
-    tier: str,
-    key: str,
-    ts: str,
-    role_values: Sequence[str] | None,
-    tool_values: Sequence[str] | None,
-    with_sketches: bool | str,
-) -> DataFrame:
-    """How tier ``tier`` is built — the one place that decides, for
-    every tier path (``rollup_all_tiers``, ``checkpoint.run_pipeline``,
-    ``incremental.refresh_tiers``). ``raw_g`` is the raw frame with its
-    gap columns (``with_gap_seconds``); ``finer`` is the next-finer
-    tier's frame, or None for the finest tier.
-
-    The finest tier, and every tier without sketches, is the fused
-    ``rollup`` of ``raw_g`` (one exchange + sort + aggregate, no joins).
-    A coarser tier with sketches cascades its mergeable stats and
-    sketch columns from ``finer`` and joins exact percentiles from raw
-    at (key, window_start) grain: cascaded digests are not the digests
-    a rebuild from raw would give, and a rebuild per tier would re-scan
-    raw through Arrow."""
-    if finer is None or not with_sketches:
-        return rollup(
-            raw_g, tier, key=key, ts=ts, with_gaps=False,
-            role_values=role_values, tool_values=tool_values,
-            with_sketches=with_sketches,
-        )
-    merged = cascade_rollup(
-        finer, tier, key=key, role_values=role_values, tool_values=tool_values
-    )
-    pct = exact_percentiles(
-        raw_g.withColumn("window_start", F.window(ts, TIER_DURATION[tier]).start),
-        [key, "window_start"],
-        "gap_s",
-    )
-    sketch_cols = [c for c in (*SKETCH_COLS, "lat_digest") if c in merged.columns]
-    return merged.join(pct, on=[key, "window_start"], how="left").select(
+def _tier_columns(df: DataFrame, key: str) -> DataFrame:
+    """A tier frame's columns, in their stored order (sketches if any)."""
+    sketch_cols = [c for c in (*SKETCH_COLS, "lat_digest") if c in df.columns]
+    return df.select(
+        "tier",
         key,
         "window_start",
         "window_end",
@@ -509,6 +432,104 @@ def _build_tier(
         "last_ts",
         *sketch_cols,
     )
+
+
+def _build_tiers(
+    raw_g: DataFrame,
+    finer: DataFrame | None,
+    tiers: Sequence[str],
+    key: str,
+    ts: str,
+    role_values: Sequence[str] | None,
+    tool_values: Sequence[str] | None,
+    with_sketches: bool | str,
+) -> DataFrame:
+    """How tiers are built — the one place that decides, for every tier
+    path (``rollup``, ``rollup_all_tiers``, ``checkpoint.run_pipeline``,
+    ``incremental.refresh_tiers``). Returns the rows of every tier in
+    ``tiers`` as one frame with a leading ``tier`` column. ``raw_g`` is
+    the raw frame with its gap columns (``with_gap_seconds``); ``finer``
+    is the next-finer tier's frame, or None for the finest tier.
+
+    Without a finer frame, or without sketches, the tiers are one fused
+    pass over ``raw_g``: the per-tier windowed projections (``tier``
+    literal, ``_w = window(ts, Δ)``) are unioned and grouped by
+    (key, tier, _w), the tier only when there are several — one exchange + sort + aggregate for every
+    mergeable stat and the exact percentiles of every tier, and one
+    two-level ``window_counts_map`` for each open-domain category map.
+    Null gaps stay in (they count as turns); the kernel's nulls-last
+    rank keeps the percentiles equal to a null-filtered pass
+    (``_ranked_percentiles``).
+
+    A coarser tier with sketches (one tier per call) cascades its
+    mergeable stats and sketch columns from ``finer`` and joins exact
+    percentiles from raw at (key, window_start) grain: cascaded digests
+    are not the digests a rebuild from raw would give, and a rebuild per
+    tier would re-scan raw through Arrow."""
+    if with_sketches:
+        (tier,) = tiers  # sketches are built or cascaded one tier per call
+        if finer is not None:
+            merged = cascade_rollup(
+                finer, tier, key=key, role_values=role_values,
+                tool_values=tool_values,
+            )
+            pct = exact_percentiles(
+                raw_g.withColumn(
+                    "window_start", F.window(ts, TIER_DURATION[tier]).start
+                ),
+                [key, "window_start"],
+                "gap_s",
+            )
+            joined = merged.join(pct, on=[key, "window_start"], how="left")
+            return _tier_columns(joined.withColumn("tier", F.lit(tier)), key)
+    d = reduce(
+        DataFrame.union,
+        [
+            raw_g.withColumns({"tier": F.lit(t), "_w": F.window(ts, TIER_DURATION[t])})
+            for t in tiers
+        ],
+    )
+    aggs = [
+        F.count(F.lit(1)).alias("turn_count"),
+        *(
+            [counts_map(F.col("role"), role_values).alias("role_counts")]
+            if role_values is not None
+            else []
+        ),
+        *(
+            [counts_map(F.col("tool"), tool_values).alias("tool_counts")]
+            if tool_values is not None
+            else []
+        ),
+        F.count("gap_s").alias("latency_cnt"),
+        # exact integer-µs sum: order-independent across partial aggs AND
+        # across tier cascades (long addition is associative; double is not)
+        F.sum("gap_us").alias("latency_sum_us"),
+        F.min(ts).alias("first_ts"),
+        F.max(ts).alias("last_ts"),
+    ]
+    # the tier is a group key only when there are several: a constant
+    # key would hide from Catalyst that one tier's category-map side is
+    # unique per (key, window_start), so its join would survive count()
+    keys = [key, "tier"] if len(tiers) > 1 else [key]
+    groups = [*keys, "_w"]
+    agged = _ranked_percentiles(d, groups, "gap_s", PCTS, PCT_NAMES, aggs)
+    out = agged.select(
+        *keys,
+        F.col("_w.start").alias("window_start"),
+        F.col("_w.end").alias("window_end"),
+        *[c for c in agged.columns if c not in groups],
+    )
+    for col, vals in (("role", role_values), ("tool", tool_values)):
+        if vals is None:
+            out = _join_counts_map(out, d, col, f"{col}_counts", None, keys, "_w")
+    if with_sketches:
+        out = _join_sketches(
+            out, raw_g, tier, key=key, ts=ts, with_digest=with_sketches == "digest"
+        )
+    if len(tiers) == 1:
+        out = out.withColumn("tier", F.lit(tiers[0]))
+    return _tier_columns(out, key)
 
 
 def rollup_all_tiers(
@@ -525,12 +546,12 @@ def rollup_all_tiers(
 ):
     """The retention cascade raw → 1m → 1h → 1d. The gap column is
     computed once; every tier is then built from that gap frame by the
-    one tier builder (``_build_tier``): without sketches a direct fused
-    rollup per tier, with sketches a cascade from the finer tier joined
-    to exact percentiles. ``cache_gaps=True`` persists the gap frame
-    across the tiers that read it — the common-subplan reuse the
-    reference does with ``intermediateResult`` memoization,
-    ``IROperator.scala:11``."""
+    one tier builder (``_build_tiers``, one tier per call): without
+    sketches a direct fused rollup per tier, with sketches a cascade
+    from the finer tier joined to exact percentiles. ``cache_gaps=True``
+    persists the gap frame across the tiers that read it — the
+    common-subplan reuse the reference does with ``intermediateResult``
+    memoization, ``IROperator.scala:11``."""
     raw_g = with_gap_seconds(raw, key=key, ts=ts).select(
         key, ts, "role", "tool", "gap_us", "gap_s"
     )
@@ -539,10 +560,10 @@ def rollup_all_tiers(
     out: dict[str, DataFrame] = {}
     prev = None
     for t in tiers:
-        out[t] = _build_tier(
-            raw_g, prev, t, key=key, ts=ts, role_values=role_values,
+        out[t] = _build_tiers(
+            raw_g, prev, (t,), key=key, ts=ts, role_values=role_values,
             tool_values=tool_values, with_sketches=with_sketches,
-        )
+        ).drop("tier")
         if persist_tiers:
             # tiers are tiny relative to raw; persisting stops the lazy
             # cascade from recomputing the whole finer tier inside every

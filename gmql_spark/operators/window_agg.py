@@ -63,7 +63,7 @@ def window_rollup(
 
 def window_counts_map(
     df: DataFrame,
-    duration: str,
+    duration: str | None,
     cat: str,
     out: str,
     keys: Sequence[str] = (),
@@ -75,6 +75,8 @@ def window_counts_map(
     (cat, n) rows). ``cat`` must not be null, since a map key cannot be:
     callers drop null categories first (GMQL's aggregate null-skip),
     where a cheaper column than the category may carry the null.
+    ``duration=None`` takes ``ts`` as an already computed window struct
+    (``start``/``end``), as a caller grouping several tiers at once has.
 
     Two-level: a codegen hash count per (keys, window, cat) over the
     input rows, then ``map_from_entries(array_sort(collect_list(...)))``
@@ -86,7 +88,7 @@ def window_counts_map(
     Output: keys + window_start + window_end + ``out``."""
     keys = list(keys)
     n = F.count(F.lit(1)) if weight is None else F.sum(weight)
-    win = F.window(ts, duration)
+    win = F.col(ts) if duration is None else F.window(ts, duration)
     counted = df.groupBy(*keys, win.alias("w"), cat).agg(n.alias("_n"))
     return counted.groupBy(*keys, F.col("w.start").alias("window_start")).agg(
         F.max("w.end").alias("window_end"),

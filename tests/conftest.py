@@ -46,3 +46,19 @@ def assert_pdf_equal(
                 assert dict(x or {}) == dict(y or {}), f"{col} row {i}: {x} != {y}"
         else:
             pd.testing.assert_series_equal(av, ev, check_names=False, check_dtype=False)
+
+
+def spark_jobs(spark, fn) -> int:
+    """Number of Spark jobs that ``fn()`` runs, read from the status
+    tracker under a job group of its own."""
+    import uuid
+
+    group = f"counted-{uuid.uuid4().hex}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the store is fed asynchronously
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -361,3 +361,45 @@ def test_refresh_sketch_mode_guard(spark, tmp_path, split_data):
 
     with pytest.raises(ValueError, match="with_sketches"):
         refresh_tiers(spark, fact, out, dates=d2, tiers=("1m",), with_sketches=False)
+
+
+def test_append_and_refresh_job_budget(spark, tmp_path, split_data):
+    """An append runs one aggregate for its bookkeeping values
+    (touched buckets, event-time range, touched dates), and a refresh of
+    three tiers reads its sketch-mode probe from parquet footers and
+    observes its watermark on the finest tier's write: fewer jobs than
+    the separate collects and schema reads took (22 and 21)."""
+    from tests.conftest import spark_jobs
+
+    _, b1, b2 = split_data
+    fact, out = str(tmp_path / "fact"), str(tmp_path / "tiers")
+    refresh_tiers(spark, fact, out, dates=append_transcripts(spark, b1, fact, n_buckets=4))
+    dates = []
+    assert spark_jobs(
+        spark, lambda: dates.extend(append_transcripts(spark, b2, fact, n_buckets=4))
+    ) < 22
+    res = {}
+    assert spark_jobs(
+        spark, lambda: res.update(refresh_tiers(spark, fact, out, dates=dates))
+    ) < 21
+    ts_max = b2.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
+    assert res["watermark_us"] == ts_max
+
+
+def test_append_log_and_dates_with_null_ts_row(spark, tmp_path, split_data):
+    """A null-ts batch row is reported as a None touched date (and
+    "None" in the append-log line) next to the real dates; the logged
+    event-time range spans the non-null rows."""
+    from gmql_spark.incremental import read_append_log
+
+    _, b1, _ = split_data
+    nulls = b1.limit(1).withColumn("ts", F.lit(None).cast("timestamp"))
+    fact = str(tmp_path / "fact")
+    touched = append_transcripts(spark, b1.unionByName(nulls), fact, n_buckets=4)
+    days = sorted(r.d for r in b1.select(F.to_date("ts").alias("d")).distinct().collect())
+    assert None in touched and sorted(d for d in touched if d is not None) == days
+    (line,) = read_append_log(fact)
+    us = F.unix_micros("ts")
+    lo, hi = b1.agg(F.min(us), F.max(us)).collect()[0]
+    assert line["min_us"] == lo and line["max_us"] == hi
+    assert line["dates"] == sorted([*(str(d) for d in days), "None"])

@@ -62,6 +62,28 @@ def test_tier_builder_coarse_tiers_are_join_free(raw):
     assert reps["1m"]["joins"] == 0, reps
 
 
+def test_all_tier_frame_shares_exchanges(raw):
+    """The pipeline's all-tier frame (every tier of a bucket in one
+    plan, open tool domain as ``run_pipeline`` builds it) plans fewer
+    exchanges than its tiers built one at a time, and its only object
+    aggregates assemble the tool maps from counted rows, never from raw
+    rows."""
+    from gmql_spark.operators.rollup import DEFAULT_ROLES, _build_tiers, with_gap_seconds
+
+    raw_g = with_gap_seconds(raw)
+    kw = dict(
+        key="conv_id", ts="ts", role_values=DEFAULT_ROLES, tool_values=None,
+        with_sketches=False,
+    )
+    tiers = ("1m", "1h", "1d")
+    together = _build_tiers(raw_g, None, tiers, **kw)
+    apart = [plan_report(_build_tiers(raw_g, None, (t,), **kw)) for t in tiers]
+    rep = plan_report(together)
+    assert rep["exchanges"] < sum(r["exchanges"] for r in apart), (rep, apart)
+    obj = [ln for ln in physical_plan(together).splitlines() if "ObjectHashAggregate" in ln]
+    assert obj and all("collect_list(struct(tool, tool#" in ln for ln in obj), obj
+
+
 def test_generic_path_object_agg_only_on_counted_rows(raw):
     """Open category domains may use collect_list, but only to assemble
     maps from pre-counted tier-sized rows — never over raw rows."""

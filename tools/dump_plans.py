@@ -1,8 +1,11 @@
 """Dump .explain('formatted') for selected declared queries into
 <out_dir>/<name>_<tag>.txt (the before/after plan artifacts, kept under
-``plans/<round>/``). Also dumps the transcript 1m tier rollup plan under
-the pseudo-name ``transcript_rollup_1m`` (bench-only surface, not a
-declared query).
+``plans/<round>/``). Also dumps two bench-only surfaces that are not
+declared queries, under pseudo-names: the transcript 1m tier rollup
+plan (``transcript_rollup_1m``) and the tier plan of one
+``checkpoint.run_pipeline`` bucket as the pipeline forms it
+(``pipeline_bucket_tiers``: bucket 0 of a table written with ingest-time
+gaps, every tier of the bucket in one frame).
 
 Usage: python tools/dump_plans.py <out_dir> <tag> [sf_dir] [query ...]
   out_dir: e.g. plans/r09 (created if missing; a relative path is taken
@@ -75,6 +78,33 @@ def main() -> int:
     with open(os.path.join(out_dir, f"transcript_rollup_1m_{tag}.txt"), "w") as f:
         f.write(plan)
     print(f"wrote transcript_rollup_1m_{tag}.txt", file=sys.stderr)
+
+    # bench-only surface: one run_pipeline bucket's tier plan
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from gmql_spark.operators.rollup import DEFAULT_ROLES, _build_tiers
+    from gmql_spark.sources.catalog import write_transcripts
+
+    with tempfile.TemporaryDirectory() as tmp:
+        write_transcripts(raw, tmp, n_buckets=4, precompute_gaps=True)
+        part = (
+            spark.read.parquet(tmp)
+            .filter(F.col("conv_bucket") == 0)
+            .drop("conv_bucket", "event_date")
+        )
+        tiers = _build_tiers(
+            with_gap_seconds(part), None, ("1m", "1h", "1d"), key="conv_id",
+            ts="ts", role_values=DEFAULT_ROLES, tool_values=None,
+            with_sketches=False,
+        )
+        plan = tiers._sc._jvm.PythonSQLUtils.explainString(
+            tiers._jdf.queryExecution(), "formatted"
+        )
+    with open(os.path.join(out_dir, f"pipeline_bucket_tiers_{tag}.txt"), "w") as f:
+        f.write(plan)
+    print(f"wrote pipeline_bucket_tiers_{tag}.txt", file=sys.stderr)
     return 0
 
 
