@@ -17,8 +17,8 @@ One plan and one write per bucket: every tier of the bucket is one
 frame from the tier builder (``rollup._build_tiers``), written once,
 partitioned by tier, into ``<out_dir>/_staging``; its Gorilla streams
 are one more write from that staging. Each ``tier=<t>`` leaf is then
-renamed into ``rollup_<t>/bucket=<b>`` (``gorilla_<t>/bucket=<b>``),
-and only after the last rename is the manifest line appended. A crash
+swapped into ``rollup_<t>/bucket=<b>`` (``gorilla_<t>/bucket=<b>``)
+(``retention.swap_leaf``); the manifest line follows the last swap. A crash
 before that line — after the staging write, or between renames — leaves
 the bucket unfinished: the next run clears the stale staging directory
 and redoes the bucket, replacing whatever leaves it had already moved.
@@ -195,6 +195,7 @@ def run_pipeline(
         _build_tiers,
         with_gap_seconds,
     )
+    from gmql_spark.retention import swap_leaf
 
     manifest = Manifest(f"{out_dir}/_manifest.jsonl")
     done = manifest.done_buckets(n_buckets=n_buckets)
@@ -253,10 +254,8 @@ def run_pipeline(
             tables.append("gorilla")
         for name in tables:
             for tier in tiers:
-                dest = f"{out_dir}/{name}_{tier}/bucket={b}"
-                shutil.rmtree(dest, ignore_errors=True)
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                os.rename(f"{stage}/{name}/tier={tier}", dest)
+                leaf = f"{out_dir}/{name}_{tier}/bucket={b}"
+                swap_leaf(f"{stage}/{name}/tier={tier}", leaf)
         shutil.rmtree(stage)
         tier_stats = {}
         for tier in tiers:

@@ -28,15 +28,22 @@ the tiers incrementally and EXACTLY:
    ``window_date = to_date(window_start)``; 1m/1h/1d windows never cross
    a UTC date, and with ``gap_us`` stored in the fact table every tier
    row of date D depends only on raw rows of event_date D — so the
-   refresh reads the pruned raw dates (PartitionFilters) and
-   dynamic-partition-overwrites exactly those tier dates.
+   refresh reads the pruned raw dates (PartitionFilters), writes every
+   tier of those dates once into ``<out_dir>/_refresh_staging``
+   (partitioned by tier and window_date), and swaps each staged
+   ``window_date=D`` leaf into its tier table. Only dates that have
+   rows are replaced; a tier leaf of any other date is left as it is.
 
 Crash safety: state versions are immutable directories
 (``_conv_state/v_000001``, ...) selected by a tiny ``CURRENT`` pointer
 file that is swapped with an atomic ``os.replace``; an ``INTENT`` marker
 brackets the non-atomic fact append + pointer swap, so a crash in the
 middle is detected loudly on the next append (stale state can never be
-used silently) instead of producing wrong cross-batch gaps.
+used silently) instead of producing wrong cross-batch gaps. A tier leaf
+is replaced by two renames (``retention.swap_leaf``), so a reader sees
+the old leaf or the new one, never a half-written one; the refresh
+manifest is written after the last swap, so a refresh that crashed is
+repaired by rerunning it for the same dates.
 
 Exactness contract (tested): append in K batches + refresh after each
 == one-shot rollup of the concatenation, bit-for-bit, per tier.
@@ -53,10 +60,13 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from gmql_spark.retention import swap_leaf
 from gmql_spark.sources.catalog import N_BUCKETS_DEFAULT, write_transcripts
 
 STATE_DIR = "_conv_state"
 APPEND_LOG = "_append_log.jsonl"
+# under the tier output dir; leading "_" => invisible to Spark's reader
+REFRESH_STAGING = "_refresh_staging"
 
 
 def _state_root(fact_path: str) -> str:
@@ -237,7 +247,10 @@ def append_transcripts(
             "state table's conv_bucket. Pass the original n_buckets (or "
             "rebuild the table to re-bucket)."
         )
+    # the state is opened once (one schema inference); the late check and
+    # the gap join read it pruned, the merge below reads all of it
     state = read_conv_state(spark, fact_path)
+    touched_state = state
     if state is None and os.path.exists(fact_path):
         if any(e.startswith("conv_bucket=") for e in os.listdir(fact_path)):
             raise RuntimeError(
@@ -263,7 +276,7 @@ def append_transcripts(
     if state is not None:
         # prune the state read to the buckets this batch touches
         if len(meta.buckets) < n_buckets:
-            state = state.filter(F.col("conv_bucket").isin(meta.buckets))
+            touched_state = state.filter(F.col("conv_bucket").isin(meta.buckets))
         # enforce the ordered-append contract LOUDLY: a batch row at or
         # before a conversation's recorded last_us would get a wrong
         # (negative/garbage) cross-batch gap — the one-shot equivalence
@@ -272,7 +285,7 @@ def append_transcripts(
         late = (
             new_df.groupBy(key)
             .agg(F.min(F.unix_micros(F.col(ts))).alias("_min_us"))
-            .join(state.select(key, "last_us"), on=key, how="inner")
+            .join(touched_state.select(key, "last_us"), on=key, how="inner")
             .filter(F.col("_min_us") <= F.col("last_us"))
         )
         n_late = late.count()
@@ -285,17 +298,16 @@ def append_transcripts(
                 f"{sample}); cross-batch gap_us would be wrong. Rebuild the "
                 "affected conversations (or the table) instead of appending."
             )
-    batch = _with_cross_batch_gaps(new_df, state, key, ts, order)
+    batch = _with_cross_batch_gaps(new_df, touched_state, key, ts, order)
 
     # 2. new immutable state version (conv_id -> max last_us), bucketed
     batch_state = new_df.groupBy(key).agg(F.max(us).alias("last_us"))
     merged = (
-        read_conv_state(spark, fact_path)  # unpruned
-        .select(key, "last_us")
+        state.select(key, "last_us")
         .unionByName(batch_state)
         .groupBy(key)
         .agg(F.max("last_us").alias("last_us"))
-        if cur is not None
+        if state is not None
         else batch_state
     )
     next_v = f"v_{(int(cur[2:]) if cur else 0) + 1:06d}"
@@ -347,8 +359,11 @@ def refresh_tiers(
     ts: str = "ts",
     with_sketches: bool | str | None = None,
 ) -> dict:
-    """Recompute the tier rows of ``dates`` only (partition-pruned raw
-    read + dynamic partition overwrite of the matching tier dates).
+    """Recompute the tier rows of ``dates`` only: a partition-pruned raw
+    read, one staged write of every tier of those dates, and a swap of
+    each staged ``window_date`` leaf into its tier table (module
+    docstring). A date without fact rows stages no leaf, so its tier
+    leaves are neither created nor deleted.
 
     Every window of every tier lies inside one UTC date, and the stored
     ``gap_us`` makes each window's stats independent of other dates —
@@ -358,10 +373,12 @@ def refresh_tiers(
     mergeable AND per-date independent — same argument). The DEFAULT
     (``None``) adopts the existing tier tables' mode — a refresh driven
     by a caller that doesn't know about sketches (GSL, stream_ingest)
-    must not dynamic-partition-overwrite sketch-carrying tables with
-    sketch-less partitions (mixed parquet schemas read back
+    must not replace date leaves of sketch-carrying tables with
+    sketch-less ones (mixed parquet schemas read back
     nondeterministically); an EXPLICIT value that contradicts the
-    existing tables raises instead."""
+    existing tables raises instead. With sketches the tiers are staged
+    one at a time, each coarser tier cascading from the staged finer
+    one."""
     from gmql_spark.checkpoint import _footer_columns, _observed, _parquet_stats
     from gmql_spark.operators.rollup import (
         DEFAULT_ROLES,
@@ -407,41 +424,57 @@ def refresh_tiers(
         .filter(F.col("event_date").isin(dates))  # PartitionFilters prune
         .drop("conv_bucket", "event_date")
     )
-    old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     # raw carries the stored gap_us, so with_gap_seconds only derives
     # gap_s — no raw-scale window shuffle
     raw_g = with_gap_seconds(raw, key=key, ts=ts)
-    stats = {}
-    # the watermark rides the finest tier's write: max(last_ts) over its
-    # rows is max(ts) over the refreshed raw rows
+    kw = dict(
+        key=key, ts=ts, role_values=DEFAULT_ROLES, tool_values=None,
+        with_sketches=with_sketches,
+    )
+    stage = f"{out_dir}/{REFRESH_STAGING}"
+    # staging left behind by a crash belongs to an unfinished refresh
+    shutil.rmtree(stage, ignore_errors=True)
+
+    def write_staged(df: DataFrame) -> None:
+        # append: staging starts empty, and the sketch path stages the
+        # tiers one write at a time
+        df.withColumn("window_date", F.to_date("window_start")).write.mode(
+            "append"
+        ).partitionBy("tier", "window_date").parquet(stage)
+
+    # the watermark rides the write: max(last_ts) over the finest tier's
+    # rows (over every tier's, the same value) is max(ts) over the
+    # refreshed raw rows
     wm = Observation()
-    try:
-        prev_df = None
-        for i, tier in enumerate(tiers):
-            path = f"{out_dir}/rollup_{tier}"
-            df = _build_tiers(
-                raw_g, prev_df, (tier,), key=key, ts=ts,
-                role_values=DEFAULT_ROLES, tool_values=None,
-                with_sketches=with_sketches,
-            ).drop("tier")
-            if i == 0:
-                df = df.observe(wm, F.max(F.unix_micros("last_ts")).alias("wm"))
-            out = df.withColumn("window_date", F.to_date("window_start"))
-            out.write.mode("overwrite").partitionBy("window_date").parquet(path)
-            # rows of the refreshed dates from the parquet footers — no job
-            stats[tier] = sum(
-                _parquet_stats(f"{path}/window_date={d}")[0] for d in dates
+    wm_max = F.max(F.unix_micros("last_ts")).alias("wm")
+    if not with_sketches:
+        write_staged(_build_tiers(raw_g, None, tiers, **kw).observe(wm, wm_max))
+    else:
+        finer = None
+        for tier in tiers:
+            df = _build_tiers(raw_g, finer, (tier,), **kw)
+            write_staged(df.observe(wm, wm_max) if finer is None else df)
+            # the next tier cascades its sketch columns from the staged
+            # rows, read back with their known schema (no inference job);
+            # a tier without rows stages no directory
+            os.makedirs(f"{stage}/tier={tier}", exist_ok=True)
+            finer = (
+                spark.read.schema(df.drop("tier").schema)
+                .parquet(f"{stage}/tier={tier}")
+                .drop("window_date")
             )
-            if with_sketches and i + 1 < len(tiers):
-                # the next tier cascades its sketch columns from this one
-                prev_df = (
-                    spark.read.parquet(path)
-                    .filter(F.col("window_date").isin(dates))
-                    .drop("window_date")
-                )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
+    stats = {}
+    for tier in tiers:
+        table = f"{out_dir}/rollup_{tier}"
+        os.makedirs(table, exist_ok=True)
+        staged = f"{stage}/tier={tier}"
+        for leaf in sorted(os.listdir(staged)) if os.path.isdir(staged) else []:
+            swap_leaf(f"{staged}/{leaf}", f"{table}/{leaf}")
+        # rows of the refreshed dates from the parquet footers — no job
+        stats[tier] = sum(
+            _parquet_stats(f"{table}/window_date={d}")[0] for d in dates
+        )
+    shutil.rmtree(stage)
     # realtime watermark: the refreshed dates now reflect every raw row
     # up to the max refreshed event ts. Appends are only per-conversation
     # ordered, so a LATER append may still land rows below this value —

@@ -12,12 +12,32 @@ no data rewrite.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 import shutil
 from datetime import date, timedelta
 
 DEFAULT_POLICY = {"raw": 30, "1m": 90, "1h": 365, "1d": None}  # days to keep
+
+
+def swap_leaf(staged: str, dest: str, trash: str = "_swap_trash") -> None:
+    """Replace the leaf directory ``dest`` with the fully written
+    ``staged`` one by two renames: readers see the old leaf or the new
+    one, never a half-written one. Between the renames the old leaf
+    waits in the ``trash`` dir beside ``dest``, so a crash there leaves
+    it intact until a later swap into ``dest`` supersedes it."""
+    parent, name = os.path.split(dest)
+    trash_root = os.path.join(parent, trash)
+    aside = os.path.join(trash_root, name)
+    shutil.rmtree(aside, ignore_errors=True)
+    os.makedirs(trash_root, exist_ok=True)
+    if os.path.exists(dest):
+        os.rename(dest, aside)
+    os.rename(staged, dest)
+    shutil.rmtree(aside, ignore_errors=True)
+    with contextlib.suppress(OSError):  # other leaves' crash copies stay
+        os.rmdir(trash_root)
 
 
 def expire_partitions(
@@ -82,58 +102,37 @@ def compact_partitions(
     counts sane at warehouse scale.
 
     Only partitions holding more than ``min_files`` parquet files are
-    rewritten, ONE partition at a time via a staged swap: the compacted
-    file is fully written to an underscore-prefixed staging dir
-    (invisible to Spark's reader), then the old leaf dir is renamed
-    aside and the staged dir renamed into place — so the table is never
-    read-and-overwritten in the same job (self-overwrite at job commit
-    is non-atomic and version/config-sensitive) and a crash can never
-    leave a partition HALF-replaced. Crash windows per partition: before
-    the first rename nothing changed; between the two renames the
-    partition is absent from the table but intact under
-    ``_compact_trash/`` (recover by renaming it back). Single-writer
-    assumption as elsewhere in the parquet fallback layout. Returns
-    {partition_value: files_before} for the rewritten partitions."""
-    import os as _os
-    import shutil as _shutil
-
+    rewritten, ONE partition at a time: the compacted file is fully
+    written to an underscore-prefixed staging dir (invisible to Spark's
+    reader) and swapped into place by :func:`swap_leaf` — so the table
+    is never read-and-overwritten in the same job (self-overwrite at job
+    commit is non-atomic and version/config-sensitive). A crash between
+    the swap's two renames leaves the partition absent from the table
+    but intact under ``_compact_trash/`` (recover by renaming it back).
+    Returns {partition_value: files_before} for the rewritten partitions."""
     frag: dict[str, int] = {}
-    for entry in sorted(_os.listdir(table_path)):
+    for entry in sorted(os.listdir(table_path)):
         if not entry.startswith(f"{partition_col}="):
             continue
         val = entry.split("=", 1)[1]
         if partitions is not None and val not in {str(p) for p in partitions}:
             continue
         nfiles = sum(
-            1 for f in _os.listdir(_os.path.join(table_path, entry))
+            1 for f in os.listdir(os.path.join(table_path, entry))
             if f.endswith(".parquet")
         )
         if nfiles > min_files:
             frag[val] = nfiles
-    stage_root = _os.path.join(table_path, "_compact_tmp")
-    trash_root = _os.path.join(table_path, "_compact_trash")
+    stage_root = os.path.join(table_path, "_compact_tmp")
     for val in frag:
         leaf = f"{partition_col}={val}"
-        src = _os.path.join(table_path, leaf)
-        stage = _os.path.join(stage_root, leaf)
-        trash = _os.path.join(trash_root, leaf)
-        _shutil.rmtree(stage, ignore_errors=True)  # THIS partition's stale staging
+        src = os.path.join(table_path, leaf)
+        stage = os.path.join(stage_root, leaf)
+        shutil.rmtree(stage, ignore_errors=True)  # THIS partition's stale staging
         spark.read.parquet(src).coalesce(1).write.mode("overwrite").parquet(stage)
-        _os.makedirs(trash_root, exist_ok=True)
-        _shutil.rmtree(trash, ignore_errors=True)
-        _os.rename(src, trash)
-        _os.rename(stage, src)
-        _shutil.rmtree(trash)
-    # Cleanup is strictly PER-PARTITION (each iteration removes only its
-    # own trash/stage): a blanket rmtree of the roots here would destroy
-    # the crash-recovery copies of a PREVIOUS interrupted run — the only
-    # remaining copies of a partition mid-swap. Remove the roots only
-    # when empty (rmdir refuses otherwise).
-    for root in (stage_root, trash_root):
-        try:
-            _os.rmdir(root)
-        except OSError:
-            pass
+        swap_leaf(stage, src, trash="_compact_trash")
+    with contextlib.suppress(OSError):  # a crashed run's staging stays
+        os.rmdir(stage_root)
     return frag
 
 
@@ -145,8 +144,8 @@ def compact_tier_tables(
 ) -> dict[str, int]:
     """Compact the tier tables (``rollup_<tier>/window_date=D/*``) the
     same way :func:`compact_fact_table` compacts raw. Every
-    ``refresh_tiers`` pass dynamic-overwrites its touched dates with up
-    to ``spark.sql.shuffle.partitions`` files per date — bounded per
+    ``refresh_tiers`` pass replaces the leaves of its touched dates with
+    up to ``spark.sql.shuffle.partitions`` files per date — bounded per
     refresh, but across many dates the scan task count still grows far
     past one-file-per-partition. The staged-swap contract (stage →
     rename aside → rename in, per leaf) is inherited from

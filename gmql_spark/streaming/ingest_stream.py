@@ -9,12 +9,13 @@ two exactness-carrying pieces the engine already has:
 Each micro-batch lands in the bucketed fact table with cross-batch-exact
 ``gap_us`` (the per-conversation state table carries last_ts between
 batches), then ONLY the tier partitions of the dates the batch touched
-are recomputed (dynamic partition overwrite). After any prefix of
-batches, the tier tables equal a one-shot batch rollup of everything
-ingested so far — the same bit-exact contract ``incremental`` proves for
-manual appends, now driven by Structured Streaming's checkpointed source
-tracking (restart-safe: a re-delivered batch is detected by the
-append's INTENT protocol rather than silently double-ingested).
+are recomputed (one staged write, then a leaf swap per date). After any
+prefix of batches, the tier tables equal a one-shot batch rollup of
+everything ingested so far — the same bit-exact contract
+``incremental`` proves for manual appends, now driven by Structured
+Streaming's checkpointed source tracking (restart-safe: a re-delivered
+batch is detected by the append's INTENT protocol rather than silently
+double-ingested).
 
 Ordering contract (inherited from ``append_transcripts``): batches must
 arrive per-conversation time-ordered — the natural transcript ingest

@@ -300,8 +300,13 @@ def test_maintenance_statements(spark, raw, tmp_path):
     }
     if not any(v > 2 for v in frag_before.values()):
         df = spark.read.parquet(t1m).repartition(6)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        df.write.mode("overwrite").partitionBy("window_date").parquet(t1m)
+        mode_key = "spark.sql.sources.partitionOverwriteMode"
+        old_mode = spark.conf.get(mode_key)
+        spark.conf.set(mode_key, "dynamic")
+        try:
+            df.write.mode("overwrite").partitionBy("window_date").parquet(t1m)
+        finally:
+            spark.conf.set(mode_key, old_mode)
     c = compile_script(
         spark,
         f"C = COMPACT(path: '{t1m}', min_files: 2); MATERIALIZE C;",

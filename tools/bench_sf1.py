@@ -213,7 +213,7 @@ def churn_family(spark, n_appends: int) -> dict:
     assert tiers_identical, (sig_pre, sig_post)
 
     # --- tier-table compaction (the r6 judge item): every refresh
-    # dynamic-overwrites its dates with up to shuffle.partitions files
+    # replaces its dates' leaves with up to shuffle.partitions files
     # per date; compact_tier_tables must bound each window_date leaf to
     # one file with serving signatures bit-identical pre/post and a
     # later partial refresh still working on the compacted layout

@@ -1,11 +1,13 @@
 """Dump .explain('formatted') for selected declared queries into
 <out_dir>/<name>_<tag>.txt (the before/after plan artifacts, kept under
-``plans/<round>/``). Also dumps two bench-only surfaces that are not
+``plans/<round>/``). Also dumps three bench-only surfaces that are not
 declared queries, under pseudo-names: the transcript 1m tier rollup
-plan (``transcript_rollup_1m``) and the tier plan of one
+plan (``transcript_rollup_1m``), the tier plan of one
 ``checkpoint.run_pipeline`` bucket as the pipeline forms it
 (``pipeline_bucket_tiers``: bucket 0 of a table written with ingest-time
-gaps, every tier of the bucket in one frame).
+gaps, every tier of the bucket in one frame) and the plan of the one
+staged write of ``incremental.refresh_tiers`` without sketches
+(``refresh_tiers``: every tier of every date of that table in one frame).
 
 Usage: python tools/dump_plans.py <out_dir> <tag> [sf_dir] [query ...]
   out_dir: e.g. plans/r09 (created if missing; a relative path is taken
@@ -102,9 +104,33 @@ def main() -> int:
         plan = tiers._sc._jvm.PythonSQLUtils.explainString(
             tiers._jdf.queryExecution(), "formatted"
         )
-    with open(os.path.join(out_dir, f"pipeline_bucket_tiers_{tag}.txt"), "w") as f:
+        with open(os.path.join(out_dir, f"pipeline_bucket_tiers_{tag}.txt"), "w") as f:
+            f.write(plan)
+        print(f"wrote pipeline_bucket_tiers_{tag}.txt", file=sys.stderr)
+
+        # bench-only surface: the refresh's staged write, as
+        # refresh_tiers forms it, over every event date of the table
+        dates = sorted(
+            e.split("=", 1)[1]
+            for e in os.listdir(os.path.join(tmp, "conv_bucket=0"))
+            if e.startswith("event_date=")
+        )
+        fact = (
+            spark.read.parquet(tmp)
+            .filter(F.col("event_date").isin(dates))
+            .drop("conv_bucket", "event_date")
+        )
+        refresh = _build_tiers(
+            with_gap_seconds(fact), None, ("1m", "1h", "1d"), key="conv_id",
+            ts="ts", role_values=DEFAULT_ROLES, tool_values=None,
+            with_sketches=False,
+        ).withColumn("window_date", F.to_date("window_start"))
+        plan = refresh._sc._jvm.PythonSQLUtils.explainString(
+            refresh._jdf.queryExecution(), "formatted"
+        )
+    with open(os.path.join(out_dir, f"refresh_tiers_{tag}.txt"), "w") as f:
         f.write(plan)
-    print(f"wrote pipeline_bucket_tiers_{tag}.txt", file=sys.stderr)
+    print(f"wrote refresh_tiers_{tag}.txt", file=sys.stderr)
     return 0
 
 
