@@ -24,9 +24,11 @@ the bucket unfinished: the next run clears the stale staging directory
 and redoes the bucket, replacing whatever leaves it had already moved.
 rows_in and the watermark are observed on the bucket's raw rows during
 the write (``DataFrame.observe``); rows and bytes out come from the
-parquet footers. With ``compress=True`` and a table written with
-ingest-time gaps a bucket runs 7 Spark jobs, plus one raw schema
-inference per run.
+parquet footers. A bucket of a table (``raw_path``) reads only its own
+leaves, with the schema from a footer
+(``sources.catalog.read_fact_leaves``): no schema-inference job. With
+``compress=True`` and a table written with ingest-time gaps a bucket
+runs 4 Spark jobs.
 """
 
 from __future__ import annotations
@@ -76,19 +78,6 @@ def _write_by_tier(df: DataFrame, path: str, tiers: Sequence[str]) -> None:
         if not os.path.exists(leaf):
             empty = df.sparkSession.createDataFrame([], df.drop("tier").schema)
             empty.write.parquet(leaf)
-
-
-def _footer_columns(path: str) -> list[str] | None:
-    """Column names in the first parquet footer under ``path`` — no
-    Spark job — or None when it holds no parquet file."""
-    import pyarrow.parquet as pq
-
-    for root, dirs, files in os.walk(path):
-        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
-        for fn in sorted(files):
-            if fn.endswith(".parquet") and not fn.startswith(("_", ".")):
-                return pq.read_schema(os.path.join(root, fn)).names
-    return None
 
 
 class Manifest:
@@ -196,11 +185,11 @@ def run_pipeline(
         with_gap_seconds,
     )
     from gmql_spark.retention import swap_leaf
+    from gmql_spark.sources.catalog import read_fact_leaves
 
     manifest = Manifest(f"{out_dir}/_manifest.jsonl")
     done = manifest.done_buckets(n_buckets=n_buckets)
     stage = f"{out_dir}/_staging"
-    table = None
     ran = skipped = 0
     for b in range(n_buckets):
         if b in done:
@@ -212,13 +201,9 @@ def run_pipeline(
         # staging left behind by a crash belongs to an unfinished bucket
         shutil.rmtree(stage, ignore_errors=True)
         if raw_path is not None:
-            if table is None:  # the raw schema is inferred once per run
-                table = spark.read.parquet(raw_path)
-            # partition-pruned scan: only the conv_bucket=<b> dirs are
-            # read (PartitionFilters in the plan)
-            part = table.filter(F.col("conv_bucket") == b).drop(
-                "conv_bucket", "event_date"
-            )
+            # only the conv_bucket=<b> leaves are listed and read, with the
+            # table's footer schema: no schema-inference job
+            part = read_fact_leaves(spark, raw_path, bucket=b)
         else:
             part = raw.filter(F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)) == b)
         # rows_in/watermark ride the bucket's write: observed on the raw

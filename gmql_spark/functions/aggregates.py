@@ -33,11 +33,7 @@ def counts_map(col: Column | str, values: Sequence[str] | None = None) -> Column
     """
     c = F.col(col) if isinstance(col, str) else col
     if values is not None:
-        m = F.map_from_arrays(
-            F.array(*[F.lit(v) for v in values]),
-            F.array(*[F.count_if(c == F.lit(v)) for v in values]),
-        )
-        return F.map_filter(m, lambda _, v: v > 0)
+        return known_counts_map(values, [F.count_if(c == F.lit(v)) for v in values])
     lst = F.array_sort(F.collect_list(c))
     empty = F.expr("cast(map() as map<string,bigint>)")
     return F.aggregate(
@@ -48,6 +44,14 @@ def counts_map(col: Column | str, values: Sequence[str] | None = None) -> Column
             F.create_map(x, F.coalesce(F.element_at(m, x), F.lit(0).cast("long")) + F.lit(1)),
         ),
     )
+
+
+def known_counts_map(values: Sequence[str], counts: Sequence[Column]) -> Column:
+    """The histogram map of a KNOWN category domain from one count per
+    category (``counts[i]`` counts ``values[i]``), in ``values`` order;
+    zero-count categories are absent."""
+    m = F.map_from_arrays(F.array(*[F.lit(v) for v in values]), F.array(*counts))
+    return F.map_filter(m, lambda _, v: v > 0)
 
 
 def bag(col: Column | str, sep: str = ",") -> Column:

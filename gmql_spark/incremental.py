@@ -28,7 +28,8 @@ the tiers incrementally and EXACTLY:
    ``window_date = to_date(window_start)``; 1m/1h/1d windows never cross
    a UTC date, and with ``gap_us`` stored in the fact table every tier
    row of date D depends only on raw rows of event_date D — so the
-   refresh reads the pruned raw dates (PartitionFilters), writes every
+   refresh reads only those dates' fact leaves, with the schema from a
+   footer (``sources.catalog.read_fact_leaves``), writes every
    tier of those dates once into ``<out_dir>/_refresh_staging``
    (partitioned by tier and window_date), and swaps each staged
    ``window_date=D`` leaf into its tier table. Only dates that have
@@ -61,7 +62,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from gmql_spark.retention import swap_leaf
-from gmql_spark.sources.catalog import N_BUCKETS_DEFAULT, write_transcripts
+from gmql_spark.sources.catalog import (
+    N_BUCKETS_DEFAULT,
+    footer_schema,
+    read_fact_leaves,
+    write_transcripts,
+)
 
 STATE_DIR = "_conv_state"
 APPEND_LOG = "_append_log.jsonl"
@@ -359,11 +365,11 @@ def refresh_tiers(
     ts: str = "ts",
     with_sketches: bool | str | None = None,
 ) -> dict:
-    """Recompute the tier rows of ``dates`` only: a partition-pruned raw
-    read, one staged write of every tier of those dates, and a swap of
-    each staged ``window_date`` leaf into its tier table (module
-    docstring). A date without fact rows stages no leaf, so its tier
-    leaves are neither created nor deleted.
+    """Recompute the tier rows of ``dates`` only: a read of those
+    dates' fact leaves, one staged write of every tier of those dates,
+    and a swap of each staged ``window_date`` leaf into its tier table
+    (module docstring). A date without fact rows stages no leaf, so its
+    tier leaves are neither created nor deleted.
 
     Every window of every tier lies inside one UTC date, and the stored
     ``gap_us`` makes each window's stats independent of other dates —
@@ -379,7 +385,7 @@ def refresh_tiers(
     existing tables raises instead. With sketches the tiers are staged
     one at a time, each coarser tier cascading from the staged finer
     one."""
-    from gmql_spark.checkpoint import _footer_columns, _observed, _parquet_stats
+    from gmql_spark.checkpoint import _observed, _parquet_stats
     from gmql_spark.operators.rollup import (
         DEFAULT_ROLES,
         _build_tiers,
@@ -390,10 +396,11 @@ def refresh_tiers(
     existing_modes = {}
     for tier in tiers:
         try:
-            cols = _footer_columns(f"{out_dir}/rollup_{tier}")
+            schema = footer_schema(f"{out_dir}/rollup_{tier}")
         except Exception:
-            cols = None  # unreadable footer: treat as absent
-        if cols is not None:
+            schema = None  # unreadable footer: treat as absent
+        if schema is not None:
+            cols = schema.fieldNames()
             existing_modes[tier] = (
                 "digest" if "lat_digest" in cols else "lat_hist" in cols
             )
@@ -419,11 +426,9 @@ def refresh_tiers(
     # min ts clamps the effective watermark — see pending_append_min_us)
     covered = _current_version(_state_root(fact_path))
     dates = sorted({str(d) for d in dates})
-    raw = (
-        spark.read.parquet(fact_path)
-        .filter(F.col("event_date").isin(dates))  # PartitionFilters prune
-        .drop("conv_bucket", "event_date")
-    )
+    # only the refreshed dates' leaves are listed and read, with the
+    # table's footer schema: no schema-inference job
+    raw = read_fact_leaves(spark, fact_path, dates=dates)
     # raw carries the stored gap_us, so with_gap_seconds only derives
     # gap_s — no raw-scale window shuffle
     raw_g = with_gap_seconds(raw, key=key, ts=ts)

@@ -17,12 +17,15 @@ Scale notes:
   frame with a ``tier`` column. Without sketches the tiers are one
   fused pass over the gap frame: per-tier windowed projections are
   unioned and grouped by (key, tier, window) — one exchange + sort +
-  aggregate for all of them, no joins with closed category domains.
-  The exact-percentile contract forces a raw-scale sort anyway, and the
+  aggregate for all of them and no joins, open category domains
+  included (a second aggregate stage on the same partitioning builds
+  their maps from counted rows, MAP's two-level combine). The
+  exact-percentile contract forces a raw-scale sort anyway, and the
   fused pass computes every mergeable stat inside it. ``run_pipeline``
-  builds all tiers of a bucket in one call (one plan, one write);
-  the other callers pass one tier at a time (Catalyst does not prune
-  the other tiers' branches of an all-tier frame filtered to one tier).
+  and ``refresh_tiers`` build all tiers in one call (one plan, one
+  write); ``rollup_all_tiers`` passes one tier at a time (Catalyst does
+  not prune the other tiers' branches of an all-tier frame filtered to
+  one tier).
 - percentiles are exact, from one rank + hash-agg + lerp kernel
   (``_ranked_percentiles``, shared by ``rollup`` and
   ``exact_percentiles``) — NOT the built-in ``percentile`` aggregate,
@@ -33,12 +36,11 @@ Scale notes:
   rows) joined to ``exact_percentiles`` at (key, window_start): sketches
   are mergeable carriers, and rebuilding them from raw per tier would
   re-scan raw through Arrow.
-- the window group-bys of the open-domain category maps, the sketches
-  and ``cascade_rollup`` go through the engine's one window-aggregate
-  core (``operators.window_agg``). Only the builder's fused pass keeps
-  its own window column (``_w``), so the rank window and the aggregate
-  share one (key, tier, window) partitioning; its open-domain maps
-  take that precomputed ``_w`` into ``window_counts_map``.
+- the window group-bys of the sketches and ``cascade_rollup`` go
+  through the engine's one window-aggregate core
+  (``operators.window_agg``). Only the builder's fused pass keeps its
+  own window column (``_w``), so the rank window and both aggregate
+  stages share one (key, tier, window) partitioning.
 - the lag window for ``gap_s`` is one shuffle by key; a table written
   with ingest-time gaps (``catalog.write_transcripts(precompute_gaps=
   True)``) skips it.
@@ -53,7 +55,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from gmql_spark.functions.aggregates import counts_map
+from gmql_spark.functions.aggregates import known_counts_map
 from gmql_spark.operators.window_agg import (
     TIER_DURATION,
     window_counts_map,
@@ -66,7 +68,7 @@ PCT_NAMES = ("latency_p50", "latency_p95", "latency_p99")
 # input_hint defines a closed role domain; known categories keep the
 # histogram aggregate in pure count_if codegen (no collect_list /
 # ObjectHashAggregate on raw-scale data). Tools are an open set by
-# default -> two-level counts (hash count first, tiny object agg after).
+# default -> two-stage counts (hash count first, tiny object agg after).
 DEFAULT_ROLES = ("user", "assistant", "system", "tool")
 
 
@@ -128,13 +130,12 @@ def rollup(
     by the ``percentile_digest_ok`` board query.
 
     Category histograms: known value lists compile to count_if columns
-    (whole-stage codegen); None -> two-level plan (hash count per
-    category, then a map assembly agg over tier-sized rows) so no
-    object aggregate ever runs over raw-scale data.
+    (whole-stage codegen); None -> a second aggregate stage (hash count
+    per (key, window, category), then the map assembly over those
+    counted rows) so no object aggregate ever runs over raw-scale data.
 
     This is the tier builder (``_build_tiers``) for one tier: one
-    exchange + sort + aggregate by (key, window), no joins with closed
-    category domains.
+    exchange + sort + aggregate by (key, window), no joins.
     """
     if with_gaps:
         df = with_gap_seconds(df, key=key, ts=ts)
@@ -188,7 +189,7 @@ def _join_counts_map(
     src: DataFrame,
     cat: str,
     out: str,
-    duration: str | None,
+    duration: str,
     keys: Sequence[str],
     ts: str,
     weight: str | None = None,
@@ -331,6 +332,8 @@ def _ranked_percentiles(
     pcts: Sequence[float],
     names: Sequence[str],
     aggs: Sequence[Column] = (),
+    within: Sequence[str] = (),
+    merge: Sequence[Column] = (),
 ) -> DataFrame:
     """The one exact-percentile kernel: ``aggs`` plus exact percentiles
     of ``value`` per ``keys`` group, in one hash aggregate. Output
@@ -351,7 +354,15 @@ def _ranked_percentiles(
     pandas/DuckDB oracles. Null values rank last and are not counted in
     n: the k non-null values rank 0..k−1 and lo/hi are ≤ k−1, so rows
     with a null ``value`` may ride along (and feed ``aggs``) without
-    changing any percentile."""
+    changing any percentile.
+
+    With ``within`` columns the aggregate runs in two stages, both on
+    the rank's one hash partitioning by ``keys``: ``aggs`` and the rank
+    picks per (``keys``, ``within``) subgroup, then ``merge`` (which
+    reads ``aggs``' columns) and the max of each pick per ``keys``
+    group. Exactly one row of a group holds each rank, so the max over
+    its subgroups is that row's value. The output then carries
+    ``merge``'s columns in place of ``aggs``'."""
     w = Window.partitionBy(*keys)
     d = df.withColumn(
         "_rn", F.row_number().over(w.orderBy(F.col(value).asc_nulls_last())) - 1
@@ -368,7 +379,11 @@ def _ranked_percentiles(
             F.max(F.when(F.col("_rn") == lo, F.col(value))).alias(f"_lov{i}"),
             F.max(F.when(F.col("_rn") == hi, F.col(value))).alias(f"_hiv{i}"),
         ]
-    agged = d.groupBy(*keys).agg(*aggs, *pct_aggs)
+    agged = d.groupBy(*keys, *within).agg(*aggs, *pct_aggs)
+    if within:
+        picks = agged.columns[len(keys) + len(within) + len(aggs) :]
+        agged = agged.groupBy(*keys).agg(*merge, *[F.max(c).alias(c) for c in picks])
+        aggs = merge
     pct_cols = []
     for i, (p, name) in enumerate(zip(pcts, names)):
         pos, lo, hi = bounds(p, F.col("_n"))
@@ -453,13 +468,20 @@ def _build_tiers(
 
     Without a finer frame, or without sketches, the tiers are one fused
     pass over ``raw_g``: the per-tier windowed projections (``tier``
-    literal, ``_w = window(ts, Δ)``) are unioned and grouped by
-    (key, tier, _w), the tier only when there are several — one exchange + sort + aggregate for every
-    mergeable stat and the exact percentiles of every tier, and one
-    two-level ``window_counts_map`` for each open-domain category map.
-    Null gaps stay in (they count as turns); the kernel's nulls-last
-    rank keeps the percentiles equal to a null-filtered pass
-    (``_ranked_percentiles``).
+    literal, ``_w = window(ts, Δ)``) are unioned, ranked by gap within
+    (key, tier, _w) — the tier only when there are several — and
+    aggregated on that one hash partitioning: one exchange, no join,
+    for every stat, map and exact percentile of every tier. With open
+    category domains (``role_values``/``tool_values`` None) the
+    aggregate has two stages, GMQL MAP's in-bin reduce then merge
+    (``_ranked_percentiles(within=...)``): stage A counts per
+    (key, tier, _w, open categories) subgroup, stage B sums, mins and
+    maxes those rows per (key, tier, _w) and assembles each open map
+    from them (``_open_counts_map``), so no object aggregate reads raw
+    rows. Known categories are one ``count_if`` column each, their maps
+    assembled after the aggregate (``known_counts_map``). Null gaps stay
+    in (they count as turns); the kernel's nulls-last rank keeps the
+    percentiles equal to a null-filtered pass.
 
     A coarser tier with sketches (one tier per call) cascades its
     mergeable stats and sketch columns from ``finer`` and joins exact
@@ -489,40 +511,57 @@ def _build_tiers(
             for t in tiers
         ],
     )
-    aggs = [
-        F.count(F.lit(1)).alias("turn_count"),
-        *(
-            [counts_map(F.col("role"), role_values).alias("role_counts")]
-            if role_values is not None
-            else []
-        ),
-        *(
-            [counts_map(F.col("tool"), tool_values).alias("tool_counts")]
-            if tool_values is not None
-            else []
-        ),
-        F.count("gap_s").alias("latency_cnt"),
+    cats = {"role": role_values, "tool": tool_values}
+    split = [c for c, vals in cats.items() if vals is None]  # the open domains
+
+    def total(c: str) -> Column:  # a sum of counts is never null
+        return F.coalesce(F.sum(c), F.lit(0).cast("long"))
+
+    # stat -> (aggregate over the rows, its merge over the open-domain
+    # subgroups); known categories are counted one count_if column each
+    stats = {
+        "turn_count": (F.count(F.lit(1)), total),
+        "latency_cnt": (F.count("gap_s"), total),
         # exact integer-µs sum: order-independent across partial aggs AND
         # across tier cascades (long addition is associative; double is not)
-        F.sum("gap_us").alias("latency_sum_us"),
-        F.min(ts).alias("first_ts"),
-        F.max(ts).alias("last_ts"),
-    ]
+        "latency_sum_us": (F.sum("gap_us"), F.sum),
+        "first_ts": (F.min(ts), F.min),
+        "last_ts": (F.max(ts), F.max),
+    }
+    for c, vals in cats.items():
+        for i, v in enumerate(vals or ()):
+            stats[f"_{c}{i}"] = (F.count_if(F.col(c) == F.lit(v)), total)
     # the tier is a group key only when there are several: a constant
-    # key would hide from Catalyst that one tier's category-map side is
-    # unique per (key, window_start), so its join would survive count()
+    # key would change the hash partitioning of a single tier's rows,
+    # and so the row order a cascade's order-sensitive sketch union
+    # (``tool_hll``) reads them in
     keys = [key, "tier"] if len(tiers) > 1 else [key]
     groups = [*keys, "_w"]
-    agged = _ranked_percentiles(d, groups, "gap_s", PCTS, PCT_NAMES, aggs)
+    agged = _ranked_percentiles(
+        d, groups, "gap_s", PCTS, PCT_NAMES,
+        [agg.alias(name) for name, (agg, _) in stats.items()],
+        within=split,
+        # the maps read the subgroup counts, so they come before the
+        # merged turn_count that shadows them
+        merge=[
+            *[_open_counts_map(c, split).alias(f"{c}_counts") for c in split],
+            *[m(name).alias(name) for name, (_, m) in stats.items()],
+        ],
+    )
+    maps = {
+        f"{c}_counts": F.col(f"{c}_counts")
+        if vals is None
+        else known_counts_map(vals, [F.col(f"_{c}{i}") for i in range(len(vals))])
+        for c, vals in cats.items()
+    }
     out = agged.select(
         *keys,
         F.col("_w.start").alias("window_start"),
         F.col("_w.end").alias("window_end"),
-        *[c for c in agged.columns if c not in groups],
+        *[F.col(c) for c in stats if not c.startswith("_")],
+        *PCT_NAMES,
+        *[m.alias(name) for name, m in maps.items()],
     )
-    for col, vals in (("role", role_values), ("tool", tool_values)):
-        if vals is None:
-            out = _join_counts_map(out, d, col, f"{col}_counts", None, keys, "_w")
     if with_sketches:
         out = _join_sketches(
             out, raw_g, tier, key=key, ts=ts, with_digest=with_sketches == "digest"
@@ -530,6 +569,36 @@ def _build_tiers(
     if len(tiers) == 1:
         out = out.withColumn("tier", F.lit(tiers[0]))
     return _tier_columns(out, key)
+
+
+def _open_counts_map(cat: str, split: Sequence[str]) -> Column:
+    """Merge aggregate of an open-domain ``cat -> count`` map over the
+    counted rows of ``_build_tiers``' first stage, one row per
+    (key, tier, window, open categories) subgroup carrying its count
+    ``turn_count``. Null categories are skipped, so a window without any
+    gets the empty map; entries are sorted by category. Another open
+    domain in ``split`` repeats a category's entries across its values;
+    they are summed per category first (a higher-order fold over the
+    window's entry array). The values are nullable, as in the tier
+    tables on disk: ``nullif(n, 0)`` keeps every count (a counted row
+    counts ≥ 1) but not the non-null type."""
+    n = F.nullif(F.col("turn_count"), F.lit(0)).alias("_n")
+    entries = F.array_sort(
+        F.filter(F.collect_list(F.struct(cat, n)), lambda e: e[cat].isNotNull())
+    )
+    if len(split) > 1:
+        entries = F.transform(
+            F.array_distinct(F.transform(entries, lambda e: e[cat])),
+            lambda k: F.struct(
+                k.alias(cat),
+                F.aggregate(
+                    F.filter(entries, lambda e: e[cat] == k),
+                    F.lit(0).cast("long"),
+                    lambda acc, e: acc + e["_n"],
+                ).alias("_n"),
+            ),
+        )
+    return F.map_from_entries(entries)
 
 
 def rollup_all_tiers(

@@ -2,9 +2,9 @@
 
 The engine's one window-aggregate core: every "(keys, tumbling window
 of a time column) → aggregates" plan — batch tiers, tier→tier cascades
-and the streaming twins — goes through this module, except
-``rollup.rollup``'s fused tier pass, whose rank window and aggregate
-share one window column. GMQL's
+and the streaming twins — goes through this module, except the tier
+builder's fused pass (``rollup._build_tiers``), whose rank window and
+two aggregate stages share one window column. GMQL's
 GenometricMap for tumbling windows needs no join at all
 (``groupBy(keys, window(ts, Δ))`` is the binning —
 ``GenometricMap71.scala:152-182`` replicates to bins by hand), and
@@ -63,7 +63,7 @@ def window_rollup(
 
 def window_counts_map(
     df: DataFrame,
-    duration: str | None,
+    duration: str,
     cat: str,
     out: str,
     keys: Sequence[str] = (),
@@ -72,11 +72,12 @@ def window_counts_map(
 ) -> DataFrame:
     """Per-window histogram map ``cat -> count`` (or ``-> sum(weight)``
     when ``weight`` is given, to merge finer histograms exploded to
-    (cat, n) rows). ``cat`` must not be null, since a map key cannot be:
-    callers drop null categories first (GMQL's aggregate null-skip),
-    where a cheaper column than the category may carry the null.
-    ``duration=None`` takes ``ts`` as an already computed window struct
-    (``start``/``end``), as a caller grouping several tiers at once has.
+    (cat, n) rows), for the sketch histograms and the cascade's
+    open-domain maps; the tier builder assembles its maps in its own
+    aggregate instead (``rollup._open_counts_map``). ``cat`` must not
+    be null, since a map key cannot be: callers drop null categories
+    first (GMQL's aggregate null-skip), where a cheaper column than the
+    category may carry the null.
 
     Two-level: a codegen hash count per (keys, window, cat) over the
     input rows, then ``map_from_entries(array_sort(collect_list(...)))``
@@ -88,8 +89,9 @@ def window_counts_map(
     Output: keys + window_start + window_end + ``out``."""
     keys = list(keys)
     n = F.count(F.lit(1)) if weight is None else F.sum(weight)
-    win = F.col(ts) if duration is None else F.window(ts, duration)
-    counted = df.groupBy(*keys, win.alias("w"), cat).agg(n.alias("_n"))
+    counted = df.groupBy(*keys, F.window(ts, duration).alias("w"), cat).agg(
+        n.alias("_n")
+    )
     return counted.groupBy(*keys, F.col("w.start").alias("window_start")).agg(
         F.max("w.end").alias("window_end"),
         F.map_from_entries(F.array_sort(F.collect_list(F.struct(cat, "_n")))).alias(out),

@@ -256,12 +256,13 @@ def serve_realtime(
     ``window_end <= frozen_until``; the raw tail starts at
     ``floor(frozen_until, Δ)`` — the start of the first window that is
     not fully frozen. The tail filter is a plain ``ts >=`` predicate,
-    so it prunes raw's date partitions and pushes into the scan.
+    so it prunes raw's date partitions and pushes into the scan. The
+    result has the tail's column order.
     """
     boundary = floor_to_tier(frozen_until, tier)
     served = tier_df.filter(F.col("window_end") <= F.lit(frozen_until))
     tail = recompute(raw.filter(F.col(ts) >= F.lit(boundary)))
-    return served.unionByName(tail)
+    return served.select(*tail.columns).unionByName(tail)
 
 
 def stitch_transcripts(
@@ -441,6 +442,4 @@ def realtime_rollup(
     def recompute(tail: DataFrame) -> DataFrame:
         return rollup(tail, tier, key=key, ts=ts, **rollup_kwargs)
 
-    out = serve_realtime(tier_df, raw, frozen_until, tier, recompute, ts=ts)
-    # served/tail column order can differ only by select order; pin it
-    return out.select(*recompute(raw.limit(0)).columns)
+    return serve_realtime(tier_df, raw, frozen_until, tier, recompute, ts=ts)

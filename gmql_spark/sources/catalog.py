@@ -17,10 +17,18 @@ table format.
 
 from __future__ import annotations
 
+import json
+import os
+from collections.abc import Sequence
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, IntegerType, StructField, StructType
 
 N_BUCKETS_DEFAULT = 16
+# the fact table's partition columns, typed as schema inference types them
+FACT_PARTITIONS = {"conv_bucket": IntegerType(), "event_date": DateType()}
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -83,3 +91,91 @@ def read_transcripts(
     if buckets is not None:
         df = df.filter(F.col("conv_bucket").isin(buckets))
     return df.drop("conv_bucket", "event_date")  # gap_us (if present) is kept
+
+
+def footer_schema(path: str) -> StructType | None:
+    """Schema of the table under ``path`` from one parquet footer — no
+    Spark job — or None when it holds no parquet file Spark wrote. The
+    data columns come from the row metadata Spark stores in every footer
+    it writes, nullability included; the fact table's partition columns
+    on that file's path follow, typed."""
+    import pyarrow.parquet as pq
+
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for fn in sorted(files):
+            if not fn.endswith(".parquet") or fn.startswith(("_", ".")):
+                continue
+            meta = pq.read_metadata(os.path.join(root, fn)).metadata or {}
+            row = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+            if row is None:
+                return None
+            fields = StructType.fromJson(json.loads(row)).fields
+            for part in os.path.relpath(root, path).split(os.sep):
+                name = part.split("=", 1)[0]
+                if name in FACT_PARTITIONS:
+                    fields.append(StructField(name, FACT_PARTITIONS[name]))
+            return StructType(fields)
+    return None
+
+
+def _fact_leaves(path: str, bucket: int | None, dates: Sequence[str] | None) -> list[str]:
+    """The existing leaf directories of the fact table at ``path`` that
+    hold ``bucket``'s (every bucket's when None) rows of ``dates``
+    (every date's when None), found by listing only the bucket
+    directories concerned."""
+    buckets = (
+        [f"conv_bucket={bucket}"]
+        if bucket is not None
+        else sorted(e for e in os.listdir(path) if e.startswith("conv_bucket="))
+    )
+    leaves = []
+    for b in buckets:
+        bdir = f"{path}/{b}"
+        if not os.path.isdir(bdir):
+            continue
+        if dates is None:  # every date; a table without days is its buckets
+            days = sorted(e for e in os.listdir(bdir) if e.startswith("event_date="))
+            leaves += [f"{bdir}/{d}" for d in days] if days else [bdir]
+        else:
+            leaves += [
+                f"{bdir}/event_date={d}"
+                for d in dates
+                if os.path.isdir(f"{bdir}/event_date={d}")
+            ]
+    return leaves
+
+
+def read_fact_leaves(
+    spark: SparkSession,
+    path: str,
+    bucket: int | None = None,
+    dates: Sequence[str] | None = None,
+) -> DataFrame:
+    """The fact table's rows of one ``bucket`` and/or of ``dates``
+    (every bucket or date when None), without its partition columns.
+
+    Only those leaves (``conv_bucket=<b>/event_date=<d>``) are listed
+    and read, with the schema of one footer (``footer_schema``) and
+    ``basePath``: no schema-inference job, and a listing that grows
+    with the leaves read, not with the table. Spark lists more root
+    paths than its parallel-discovery threshold in a Spark job, so the
+    leaves are read in chunks under it and unioned. A table without a
+    parquet file Spark wrote is opened whole and filtered, so it fails
+    (or infers) as that read does."""
+    schema = footer_schema(path)
+    if schema is None:
+        df = spark.read.parquet(path)
+        if bucket is not None:
+            df = df.filter(F.col("conv_bucket") == bucket)
+        if dates is not None:
+            df = df.filter(F.col("event_date").isin(list(dates)))
+        return df.drop(*FACT_PARTITIONS)
+    leaves = _fact_leaves(path, bucket, dates)
+    if not leaves:  # typed as a read types it: every column nullable
+        nullable = StructType([StructField(f.name, f.dataType) for f in schema])
+        return spark.createDataFrame([], nullable).drop(*FACT_PARTITIONS)
+    n = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
+    reader = spark.read.schema(schema).option("basePath", path)
+    chunks = [reader.parquet(*leaves[i : i + n]) for i in range(0, len(leaves), n)]
+    return reduce(DataFrame.union, chunks).drop(*FACT_PARTITIONS)

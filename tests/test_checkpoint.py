@@ -233,18 +233,23 @@ def test_resume_after_crash_between_staging_and_renames(spark, tmp_path, monkeyp
         pd.testing.assert_frame_equal(*g)
 
 
-def test_pipeline_infers_raw_schema_once_per_run(spark, tmp_path, monkeypatch):
-    """The bucketed table is opened (and its schema inferred) once per
-    run, not once per bucket."""
+def test_pipeline_reads_bucket_leaves_with_footer_schema(spark, tmp_path, monkeypatch):
+    """The bucketed table is never opened whole: each bucket reads only
+    its own ``conv_bucket=<b>`` leaves, and opening them runs no Spark
+    job (the schema comes from a parquet footer, not inference)."""
     from pyspark.sql.readwriter import DataFrameReader
+
+    from gmql_spark.sources.catalog import read_fact_leaves
+    from tests.conftest import spark_jobs
 
     fact = str(tmp_path / "fact")
     write_transcripts(datagen.transcripts_spark(spark, n_conv=40), fact, n_buckets=4)
+    assert spark_jobs(spark, lambda: read_fact_leaves(spark, fact, bucket=1)) == 0
     reads = []
     real_parquet = DataFrameReader.parquet
 
     def counting_parquet(self, *paths, **kw):
-        reads.extend(paths)
+        reads.append(paths)
         return real_parquet(self, *paths, **kw)
 
     monkeypatch.setattr(DataFrameReader, "parquet", counting_parquet)
@@ -252,14 +257,20 @@ def test_pipeline_infers_raw_schema_once_per_run(spark, tmp_path, monkeypatch):
     assert run_pipeline(spark, None, out, tiers=("1m",), n_buckets=4, raw_path=fact)[
         "ran"
     ] == 4
-    assert reads.count(fact) == 1, reads
+    paths = [p for call in reads for p in call]
+    assert paths and all("/conv_bucket=" in p for p in paths), reads
+    # one read per bucket, of that bucket's leaves alone
+    per_read = [{p.split("/conv_bucket=")[1].split("/")[0] for p in call} for call in reads]
+    assert sorted(b for bs in per_read for b in bs) == ["0", "1", "2", "3"], reads
+    assert all(len(bs) == 1 for bs in per_read), reads
 
 
 def test_pipeline_bucket_job_budget(spark, tmp_path):
     """One bucket of the pipeline (compress=True, a table with ingest-time
-    gaps) runs at most 8 Spark jobs, the run's raw schema inference
-    included: all tiers in one write, Gorilla in one more, rows_in and
-    watermark observed on the write rather than collected."""
+    gaps) runs at most 4 Spark jobs: the bucket's leaves are read with
+    the footer schema (no schema inference), all tiers in one write of
+    a one-exchange plan, Gorilla in one more, rows_in and watermark
+    observed on the write rather than collected."""
     from tests.conftest import spark_jobs
 
     fact = str(tmp_path / "fact")
@@ -280,4 +291,4 @@ def test_pipeline_bucket_job_budget(spark, tmp_path):
         }
 
     for run in (first_bucket, second_bucket):
-        assert spark_jobs(spark, run) <= 8
+        assert spark_jobs(spark, run) <= 4

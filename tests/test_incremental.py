@@ -361,10 +361,11 @@ def test_append_and_refresh_job_budget(spark, tmp_path, split_data):
     """An append runs one aggregate for its bookkeeping values
     (touched buckets, event-time range, touched dates) and opens the
     conv state once; a refresh of three tiers reads its sketch-mode
-    probe from parquet footers and builds every tier in one plan, written
-    once, with the watermark observed on that write. Measured: 15 jobs
-    per append (16 with two state reads) and 6 per refresh (16 with one
-    write per tier)."""
+    probe and the fact schema from parquet footers and builds every
+    tier in one one-exchange plan, written once, with the watermark
+    observed on that write. Measured: 15 jobs per append (16 with two
+    state reads) and 2 per refresh (16 with one write per tier, 6 with
+    a schema inference and a three-exchange tool map)."""
     from tests.conftest import spark_jobs
 
     _, b1, b2 = split_data
@@ -377,9 +378,44 @@ def test_append_and_refresh_job_budget(spark, tmp_path, split_data):
     res = {}
     assert spark_jobs(
         spark, lambda: res.update(refresh_tiers(spark, fact, out, dates=dates))
-    ) <= 8
+    ) <= 2
     ts_max = b2.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
     assert res["watermark_us"] == ts_max
+
+
+def test_refresh_jobs_do_not_grow_with_table_age(spark, tmp_path):
+    """A one-date refresh lists and reads only that date's fact leaves,
+    with the schema from a footer: on a 120-date table it runs as many
+    Spark jobs as on a 2-date table. (Opening the whole table lists
+    every leaf, in Spark jobs once a bucket holds more dates than the
+    parallel-discovery threshold, and infers the schema in one more.)"""
+    import datetime as dt
+
+    from gmql_spark.sources.catalog import write_transcripts
+    from tests.conftest import spark_jobs
+
+    day0 = dt.datetime(2026, 1, 1, 12)
+    jobs = {}
+    for n_days in (2, 120):
+        rows = [
+            (f"c{d}_{k}", i, "user", None, day0 + dt.timedelta(days=d, minutes=3 * k + i))
+            for d in range(n_days)
+            for k in range(3)
+            for i in range(2)
+        ]
+        fact, out = str(tmp_path / f"fact{n_days}"), str(tmp_path / f"tiers{n_days}")
+        write_transcripts(
+            spark.createDataFrame(
+                rows, "conv_id string, turn_idx int, role string, tool string, ts timestamp"
+            ),
+            fact, n_buckets=2, precompute_gaps=True,
+        )
+        res = {}
+        jobs[n_days] = spark_jobs(
+            spark, lambda: res.update(refresh_tiers(spark, fact, out, dates=["2026-01-02"]))
+        )
+        assert res["rows"]["1m"] == 6, res
+    assert jobs[120] == jobs[2], jobs
 
 
 def test_append_log_and_dates_with_null_ts_row(spark, tmp_path, split_data):

@@ -62,26 +62,32 @@ def test_tier_builder_coarse_tiers_are_join_free(raw):
     assert reps["1m"]["joins"] == 0, reps
 
 
-def test_all_tier_frame_shares_exchanges(raw):
-    """The pipeline's all-tier frame (every tier of a bucket in one
-    plan, open tool domain as ``run_pipeline`` builds it) plans fewer
-    exchanges than its tiers built one at a time, and its only object
-    aggregates assemble the tool maps from counted rows, never from raw
-    rows."""
+def test_all_tier_frame_shares_exchanges(spark, raw, tmp_path):
+    """The pipeline's all-tier frame over a table with stored gaps (every
+    tier of a bucket in one plan, open tool domain, as ``run_pipeline``
+    builds it) plans one exchange and no join or broadcast: the rank
+    window and both aggregate stages share one hash partitioning. Its
+    only object aggregates assemble the tool maps from counted rows,
+    never from raw rows."""
     from gmql_spark.operators.rollup import DEFAULT_ROLES, _build_tiers, with_gap_seconds
+    from gmql_spark.sources.catalog import read_fact_leaves, write_transcripts
 
-    raw_g = with_gap_seconds(raw)
-    kw = dict(
-        key="conv_id", ts="ts", role_values=DEFAULT_ROLES, tool_values=None,
-        with_sketches=False,
+    fact = str(tmp_path / "fact")
+    write_transcripts(raw, fact, n_buckets=2, precompute_gaps=True)
+    together = _build_tiers(
+        with_gap_seconds(read_fact_leaves(spark, fact, bucket=0)), None,
+        ("1m", "1h", "1d"), key="conv_id", ts="ts", role_values=DEFAULT_ROLES,
+        tool_values=None, with_sketches=False,
     )
-    tiers = ("1m", "1h", "1d")
-    together = _build_tiers(raw_g, None, tiers, **kw)
-    apart = [plan_report(_build_tiers(raw_g, None, (t,), **kw)) for t in tiers]
     rep = plan_report(together)
-    assert rep["exchanges"] < sum(r["exchanges"] for r in apart), (rep, apart)
-    obj = [ln for ln in physical_plan(together).splitlines() if "ObjectHashAggregate" in ln]
+    assert (rep["exchanges"], rep["joins"], rep["broadcasts"]) == (1, 0, 0), rep
+    plan = physical_plan(together)
+    obj = [ln for ln in plan.splitlines() if "ObjectHashAggregate" in ln]
     assert obj and all("collect_list(struct(tool, tool#" in ln for ln in obj), obj
+    # the map stage reads the counted (key, tier, window, tool) rows
+    counted = [ln for ln in plan.splitlines() if "HashAggregate(keys=[" in ln
+               and "Object" not in ln]
+    assert counted and all("tool#" in ln.split("functions=")[0] for ln in counted), counted
 
 
 def test_generic_path_object_agg_only_on_counted_rows(raw):
@@ -97,10 +103,11 @@ def test_generic_path_object_agg_only_on_counted_rows(raw):
 
 
 def test_rollup_exchange_budget(raw):
-    """1m rollup: bounded shuffles — lag window, main agg, percentile
-    sort, join. More exchanges than that means a planning regression."""
+    """1m rollup: one shuffle — the lag window's partitioning by key
+    also serves the rank window and both aggregate stages. More
+    exchanges than that means a planning regression."""
     rep = plan_report(rollup(raw, "1m"))
-    assert rep["exchanges"] <= 6, rep
+    assert rep["exchanges"] <= 1, rep
 
 
 def test_scan_pushdown(spark, tmp_path):

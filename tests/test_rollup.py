@@ -187,3 +187,128 @@ def test_fused_cascade_maps_equal_generic(spark):
         else:
             eq = generic[c].eq(fused[c]) | (generic[c].isna() & fused[c].isna())
             assert eq.all(), c
+
+
+def test_two_stage_maps_equal_join_formulation(spark):
+    """The tier builder's open-domain maps — built in a second aggregate
+    stage over (key, tier, window, open categories) rows on the rank's
+    partitioning — equal the join formulation (every other column from
+    the closed-domain frame ⨝ ``window_counts_map`` per tier at
+    (key, tier, window_start), empty map when absent) bit for bit,
+    entry order included: open tools, open roles and tools together,
+    null roles and tools, and windows whose only tool is null."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    from gmql_spark.datagen import ROLES, TOOL_NAMES, transcripts_spark
+    from gmql_spark.operators.rollup import _build_tiers, with_gap_seconds
+    from gmql_spark.operators.window_agg import TIER_DURATION, window_counts_map
+
+    raw = transcripts_spark(spark, n_conv=40)
+    h = F.abs(F.xxhash64("conv_id", "turn_idx")) % 7
+    raw_g = with_gap_seconds(
+        raw.withColumn("role", F.when(h == 0, F.lit(None)).otherwise(F.col("role")))
+        .withColumn(
+            "tool",
+            F.when(h == 1, F.lit(None)).when(h == 2, F.lit("bash")).otherwise(F.col("tool")),
+        )
+    ).select("conv_id", "ts", "role", "tool", "gap_us", "gap_s")
+    tiers = ("1m", "1h")
+    kw = dict(key="conv_id", ts="ts", with_sketches=False)
+    closed = _build_tiers(
+        raw_g, None, tiers, role_values=list(ROLES), tool_values=list(TOOL_NAMES), **kw
+    )
+    keys = ["conv_id", "tier", "window_start"]
+    empty = F.expr("cast(map() as map<string,bigint>)")
+    for role_values in (list(ROLES), None):
+        got = _build_tiers(raw_g, None, tiers, role_values=role_values, tool_values=None, **kw)
+        old = closed
+        for cat, vals in (("role", role_values), ("tool", None)):
+            if vals is not None:
+                continue
+            out = f"{cat}_counts"
+            counts = reduce(DataFrame.union, [
+                window_counts_map(
+                    raw_g.filter(F.col(cat).isNotNull()), TIER_DURATION[t], cat, out,
+                    keys=["conv_id"],
+                ).drop("window_end").withColumn("tier", F.lit(t))
+                for t in tiers
+            ])
+            old = old.drop(out).join(counts, on=keys, how="left").withColumn(
+                out, F.coalesce(F.col(out), empty)
+            )
+        assert got.schema == old.select(*got.columns).schema, role_values
+        a = got.toPandas().sort_values(keys).reset_index(drop=True)
+        b = old.select(*got.columns).toPandas().sort_values(keys).reset_index(drop=True)
+        assert len(a) == len(b) > 0
+        assert (a["tool_counts"].map(len).eq(0) & a["turn_count"].gt(0)).any(), (
+            "no window whose only tools are null"
+        )
+        for c in a.columns:
+            if c.endswith("_counts"):
+                assert all(
+                    list(x.items()) == list(y.items()) for x, y in zip(a[c], b[c])
+                ), (role_values, c)
+            else:
+                eq = a[c].eq(b[c]) | (a[c].isna() & b[c].isna())
+                assert eq.all(), (role_values, c)
+        if role_values is None:  # a tool's entries repeat across roles
+            assert (a["role_counts"].map(len).gt(1) & a["tool_counts"].map(len).gt(0)).any()
+
+
+TIER_FOOTER = [
+    ("conv_id", True, "string"),
+    ("window_start", True, "timestamp"),
+    ("window_end", True, "timestamp"),
+    ("turn_count", False, "bigint"),
+    ("role_counts", False, "map<string,bigint,values non-null>"),
+    ("tool_counts", False, "map<string,bigint>"),
+    ("latency_p50", True, "double"),
+    ("latency_p95", True, "double"),
+    ("latency_p99", True, "double"),
+    ("latency_cnt", False, "bigint"),
+    ("latency_sum_us", True, "bigint"),
+    ("first_ts", True, "timestamp"),
+    ("last_ts", True, "timestamp"),
+]
+
+
+def _footer_fields(table: str) -> list[tuple]:
+    from gmql_spark.sources.catalog import footer_schema
+
+    out = []
+    for f in footer_schema(table):
+        t = f.dataType
+        typ = t.simpleString() + (
+            ",values non-null>" if getattr(t, "valueContainsNull", True) is False else ""
+        )
+        out.append((f.name, f.nullable, typ.replace(">,values", ",values")))
+    return out
+
+
+def test_tier_table_footer_schema(spark, tmp_path):
+    """The tier tables ``run_pipeline`` and ``refresh_tiers`` write keep
+    one footer schema, nullability included: counts non-null, the known
+    role map's values non-null and the open tool map's values nullable.
+    A refresh swaps its leaves into tables whose other leaves an older
+    build wrote, so the schema may not drift."""
+    from gmql_spark.checkpoint import run_pipeline
+    from gmql_spark.incremental import append_transcripts, refresh_tiers
+    from gmql_spark.sources.catalog import write_transcripts
+
+    raw = datagen.transcripts_spark(spark, n_conv=20)
+    fact = str(tmp_path / "fact")
+    write_transcripts(raw, fact, n_buckets=2, precompute_gaps=True)
+    run_pipeline(spark, None, str(tmp_path / "pipe"), n_buckets=2, raw_path=fact)
+    inc = str(tmp_path / "inc")
+    refresh_tiers(
+        spark, inc, str(tmp_path / "refreshed"),
+        dates=append_transcripts(spark, raw, inc, n_buckets=2),
+    )
+    for table in ("pipe", "refreshed"):
+        for tier in ("1m", "1h", "1d"):
+            assert _footer_fields(str(tmp_path / table / f"rollup_{tier}")) == TIER_FOOTER, (
+                table, tier,
+            )

@@ -87,15 +87,11 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from gmql_spark.operators.rollup import DEFAULT_ROLES, _build_tiers
-    from gmql_spark.sources.catalog import write_transcripts
+    from gmql_spark.sources.catalog import read_fact_leaves, write_transcripts
 
     with tempfile.TemporaryDirectory() as tmp:
         write_transcripts(raw, tmp, n_buckets=4, precompute_gaps=True)
-        part = (
-            spark.read.parquet(tmp)
-            .filter(F.col("conv_bucket") == 0)
-            .drop("conv_bucket", "event_date")
-        )
+        part = read_fact_leaves(spark, tmp, bucket=0)
         tiers = _build_tiers(
             with_gap_seconds(part), None, ("1m", "1h", "1d"), key="conv_id",
             ts="ts", role_values=DEFAULT_ROLES, tool_values=None,
@@ -115,11 +111,7 @@ def main() -> int:
             for e in os.listdir(os.path.join(tmp, "conv_bucket=0"))
             if e.startswith("event_date=")
         )
-        fact = (
-            spark.read.parquet(tmp)
-            .filter(F.col("event_date").isin(dates))
-            .drop("conv_bucket", "event_date")
-        )
+        fact = read_fact_leaves(spark, tmp, dates=dates)
         refresh = _build_tiers(
             with_gap_seconds(fact), None, ("1m", "1h", "1d"), key="conv_id",
             ts="ts", role_values=DEFAULT_ROLES, tool_values=None,
