@@ -1,10 +1,10 @@
 """Mergeable per-window sketches for the retention tiers.
 
 Percentiles and distinct counts are the two rollup stats that do NOT
-re-aggregate tier→tier (the engine's exact percentiles are recomputed
-from raw per tier, ``operators.rollup.exact_percentiles``). At 100 TB
-that raw re-scan per tier is the single most expensive part of a tier
-build, so the tiers can optionally carry *mergeable sketches* instead:
+re-aggregate tier→tier (the engine's exact percentiles rank raw rows
+per tier, ``operators.rollup._ranked_percentiles``). A consumer that
+wants them at a coarser grain than the tiers it holds would have to
+re-scan raw, so the tiers can optionally carry *mergeable sketches*:
 
 - **log₂ latency histograms** (``hist_rollup``/``hist_cascade``): a
   ``map<int,bigint>`` of power-of-two buckets over ``gap_us``. Merging
@@ -15,9 +15,18 @@ build, so the tiers can optionally carry *mergeable sketches* instead:
 - **HLL distinct sketches** (``hll_rollup``/``hll_cascade``): Apache
   DataSketches HLL via Spark's built-in ``hll_sketch_agg`` /
   ``hll_union_agg`` (JVM-side, no UDF). The union of per-1m sketches
-  over a partition of the rows is the same sketch as one pass over the
-  hour — estimates agree exactly (register-wise max is associative),
-  pytest-verified.
+  over a partition of the rows has the same estimate as one pass over
+  the hour (register-wise max is associative), pytest-verified; its
+  bytes may differ (the list-mode entry order follows row arrival).
+
+The tier builder (``operators.rollup._build_tiers``) does not call the
+window functions here: it builds both tier sketch columns inside its
+fused aggregate at every tier — ``lat_hist`` from counted
+(window, ``log2_bucket``) rows and ``tool_hll`` with ``hll_sketch_agg``
+over counted (window, tool) rows — so a sketch tier costs no extra
+exchange or join. ``hist_rollup``/``hll_rollup`` are the standalone
+per-window forms (gates, GSL ``HIST``, the streaming twins' oracles);
+the cascades merge finer-tier sketches (``cascade_rollup``, GSL).
 
 The bucket index is computed with INTEGER arithmetic
 (``length(conv(x, 10, 2)) - 1`` = bit_length-1), not ``floor(log2(x))``,

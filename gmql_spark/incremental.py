@@ -30,8 +30,9 @@ the tiers incrementally and EXACTLY:
    row of date D depends only on raw rows of event_date D — so the
    refresh reads only those dates' fact leaves, with the schema from a
    footer (``sources.catalog.read_fact_leaves``), writes every
-   tier of those dates once into ``<out_dir>/_refresh_staging``
-   (partitioned by tier and window_date), and swaps each staged
+   tier of those dates once, sketch columns included, into
+   ``<out_dir>/_refresh_staging`` (partitioned by tier and
+   window_date), and swaps each staged
    ``window_date=D`` leaf into its tier table. Only dates that have
    rows are replaced; a tier leaf of any other date is left as it is.
 
@@ -374,17 +375,15 @@ def refresh_tiers(
     Every window of every tier lies inside one UTC date, and the stored
     ``gap_us`` makes each window's stats independent of other dates —
     so per-date recompute is exact. ``with_sketches=True`` maintains the
-    mergeable sketch columns too: the finest tier computes them from
-    raw and the cascade carries them up automatically (they are
-    mergeable AND per-date independent — same argument). The DEFAULT
-    (``None``) adopts the existing tier tables' mode — a refresh driven
-    by a caller that doesn't know about sketches (GSL, stream_ingest)
-    must not replace date leaves of sketch-carrying tables with
-    sketch-less ones (mixed parquet schemas read back
-    nondeterministically); an EXPLICIT value that contradicts the
-    existing tables raises instead. With sketches the tiers are staged
-    one at a time, each coarser tier cascading from the staged finer
-    one."""
+    mergeable sketch columns too: every tier builds them from raw in the
+    same plan, and a coarser tier's digests merge the finer tier's
+    (per-date independent too — same argument); every sketch mode is
+    one staged write. The DEFAULT (``None``) adopts the existing tier
+    tables' mode — a refresh driven by a caller that doesn't know about
+    sketches (GSL, stream_ingest) must not replace date leaves of
+    sketch-carrying tables with sketch-less ones (mixed parquet schemas
+    read back nondeterministically); an EXPLICIT value that contradicts
+    the existing tables raises instead."""
     from gmql_spark.checkpoint import _observed, _parquet_stats
     from gmql_spark.operators.rollup import (
         DEFAULT_ROLES,
@@ -432,42 +431,21 @@ def refresh_tiers(
     # raw carries the stored gap_us, so with_gap_seconds only derives
     # gap_s — no raw-scale window shuffle
     raw_g = with_gap_seconds(raw, key=key, ts=ts)
-    kw = dict(
-        key=key, ts=ts, role_values=DEFAULT_ROLES, tool_values=None,
-        with_sketches=with_sketches,
-    )
     stage = f"{out_dir}/{REFRESH_STAGING}"
     # staging left behind by a crash belongs to an unfinished refresh
     shutil.rmtree(stage, ignore_errors=True)
-
-    def write_staged(df: DataFrame) -> None:
-        # append: staging starts empty, and the sketch path stages the
-        # tiers one write at a time
-        df.withColumn("window_date", F.to_date("window_start")).write.mode(
-            "append"
-        ).partitionBy("tier", "window_date").parquet(stage)
 
     # the watermark rides the write: max(last_ts) over the finest tier's
     # rows (over every tier's, the same value) is max(ts) over the
     # refreshed raw rows
     wm = Observation()
-    wm_max = F.max(F.unix_micros("last_ts")).alias("wm")
-    if not with_sketches:
-        write_staged(_build_tiers(raw_g, None, tiers, **kw).observe(wm, wm_max))
-    else:
-        finer = None
-        for tier in tiers:
-            df = _build_tiers(raw_g, finer, (tier,), **kw)
-            write_staged(df.observe(wm, wm_max) if finer is None else df)
-            # the next tier cascades its sketch columns from the staged
-            # rows, read back with their known schema (no inference job);
-            # a tier without rows stages no directory
-            os.makedirs(f"{stage}/tier={tier}", exist_ok=True)
-            finer = (
-                spark.read.schema(df.drop("tier").schema)
-                .parquet(f"{stage}/tier={tier}")
-                .drop("window_date")
-            )
+    tiers_df = _build_tiers(
+        raw_g, None, tiers, key=key, ts=ts, role_values=DEFAULT_ROLES,
+        tool_values=None, with_sketches=with_sketches,
+    ).observe(wm, F.max(F.unix_micros("last_ts")).alias("wm"))
+    tiers_df.withColumn("window_date", F.to_date("window_start")).write.partitionBy(
+        "tier", "window_date"
+    ).parquet(stage)
     stats = {}
     for tier in tiers:
         table = f"{out_dir}/rollup_{tier}"

@@ -14,30 +14,30 @@ Scale notes:
 - one tier builder (``_build_tiers``) decides how every tier is built,
   for ``rollup``, ``rollup_all_tiers``, ``checkpoint.run_pipeline`` and
   ``incremental.refresh_tiers`` alike, and returns its tiers as one
-  frame with a ``tier`` column. Without sketches the tiers are one
-  fused pass over the gap frame: per-tier windowed projections are
-  unioned and grouped by (key, tier, window) — one exchange + sort +
-  aggregate for all of them and no joins, open category domains
-  included (a second aggregate stage on the same partitioning builds
-  their maps from counted rows, MAP's two-level combine). The
-  exact-percentile contract forces a raw-scale sort anyway, and the
-  fused pass computes every mergeable stat inside it. ``run_pipeline``
-  and ``refresh_tiers`` build all tiers in one call (one plan, one
-  write); ``rollup_all_tiers`` passes one tier at a time (Catalyst does
-  not prune the other tiers' branches of an all-tier frame filtered to
-  one tier).
+  frame with a ``tier`` column. The tiers are one fused pass over the
+  gap frame: per-tier windowed projections are unioned and grouped by
+  (key, tier, window) — one exchange + sort + aggregate for all of them
+  and no joins, open category domains and sketches included (a second
+  aggregate stage on the same partitioning builds their maps,
+  ``lat_hist`` and ``tool_hll`` from counted rows, MAP's two-level
+  combine). The exact-percentile contract forces a raw-scale sort
+  anyway, and the fused pass computes every mergeable stat inside it.
+  ``run_pipeline`` and ``refresh_tiers`` build all tiers in one call
+  (one plan, one write); ``rollup_all_tiers`` passes one tier at a time
+  (Catalyst does not prune the other tiers' branches of an all-tier
+  frame filtered to one tier).
 - percentiles are exact, from one rank + hash-agg + lerp kernel
   (``_ranked_percentiles``, shared by ``rollup`` and
   ``exact_percentiles``) — NOT the built-in ``percentile`` aggregate,
   whose ObjectHashAggregate falls back to sort-based object aggregation
   past 128 groups/partition.
-- with sketches, a coarser tier cascades from the finer tier
-  (``cascade_rollup``: mergeable stats + sketch merges over tier-sized
-  rows) joined to ``exact_percentiles`` at (key, window_start): sketches
-  are mergeable carriers, and rebuilding them from raw per tier would
-  re-scan raw through Arrow.
-- the window group-bys of the sketches and ``cascade_rollup`` go
-  through the engine's one window-aggregate core
+- only the t-digest column (``with_sketches="digest"``) cascades: a
+  coarser tier merges the finer tier's digests, tier-sized rows, since
+  rebuilding them from raw per tier would re-scan raw through Arrow.
+  ``tool_hll`` is built from raw at every tier; its estimate equals
+  the cascaded union's, its bytes need not.
+- ``cascade_rollup`` (GSL ``CASCADE``) and the sketches' own window
+  group-bys go through the engine's one window-aggregate core
   (``operators.window_agg``). Only the builder's fused pass keeps its
   own window column (``_w``), so the rank window and both aggregate
   stages share one (key, tier, window) partitioning.
@@ -135,7 +135,8 @@ def rollup(
     counted rows) so no object aggregate ever runs over raw-scale data.
 
     This is the tier builder (``_build_tiers``) for one tier: one
-    exchange + sort + aggregate by (key, window), no joins.
+    exchange + sort + aggregate by (key, window), no joins — sketches
+    included; ``lat_digest`` adds the t-digest build and one join.
     """
     if with_gaps:
         df = with_gap_seconds(df, key=key, ts=ts)
@@ -146,42 +147,6 @@ def rollup(
 
 
 SKETCH_COLS = ["lat_hist", "tool_hll"]
-
-
-def _join_sketches(
-    main: DataFrame, raw_g: DataFrame, tier: str, key: str, ts: str,
-    with_digest: bool = False,
-) -> DataFrame:
-    """Attach lat_hist + tool_hll (and optionally lat_digest) at
-    (key, window_start) grain; all joins are tier-sized, left, with
-    empty-sketch backfill (a window can have turns but no gaps/tools —
-    lat_digest stays NULL there, like tool_hll)."""
-    from gmql_spark.functions.sketches import hist_rollup, hll_rollup
-
-    empty_hist = F.expr("cast(map() as map<int,bigint>)")
-    hist = hist_rollup(raw_g, tier, keys=[key], value_col="gap_us", ts=ts).drop(
-        "window_end"
-    )
-    hll = hll_rollup(raw_g, tier, col="tool", keys=[key], ts=ts, out="tool_hll").drop(
-        "window_end"
-    )
-    out = (
-        main.join(hist, on=[key, "window_start"], how="left")
-        .join(hll, on=[key, "window_start"], how="left")
-        .withColumn("lat_hist", F.coalesce(F.col("lat_hist"), empty_hist))
-    )
-    if with_digest:
-        from gmql_spark.functions.tdigest import tdigest_rollup
-
-        dig = tdigest_rollup(
-            raw_g, tier, keys=[key], value_col="gap_us", ts=ts
-        ).select(
-            key,
-            "window_start",
-            F.struct("means", "weights", "vmin", "vmax").alias("lat_digest"),
-        )
-        out = out.join(dig, on=[key, "window_start"], how="left")
-    return out
 
 
 def _join_counts_map(
@@ -464,46 +429,40 @@ def _build_tiers(
     ``incremental.refresh_tiers``). Returns the rows of every tier in
     ``tiers`` as one frame with a leading ``tier`` column. ``raw_g`` is
     the raw frame with its gap columns (``with_gap_seconds``); ``finer``
-    is the next-finer tier's frame, or None for the finest tier.
+    is the next-finer tier's frame or None, read only for its
+    ``lat_digest``.
 
-    Without a finer frame, or without sketches, the tiers are one fused
-    pass over ``raw_g``: the per-tier windowed projections (``tier``
-    literal, ``_w = window(ts, Δ)``) are unioned, ranked by gap within
+    Every tier, in every sketch mode, is one fused pass over ``raw_g``:
+    the per-tier windowed projections (``tier`` literal,
+    ``_w = window(ts, Δ)``) are unioned, ranked by gap within
     (key, tier, _w) — the tier only when there are several — and
     aggregated on that one hash partitioning: one exchange, no join,
-    for every stat, map and exact percentile of every tier. With open
-    category domains (``role_values``/``tool_values`` None) the
-    aggregate has two stages, GMQL MAP's in-bin reduce then merge
-    (``_ranked_percentiles(within=...)``): stage A counts per
-    (key, tier, _w, open categories) subgroup, stage B sums, mins and
-    maxes those rows per (key, tier, _w) and assembles each open map
-    from them (``_open_counts_map``), so no object aggregate reads raw
-    rows. Known categories are one ``count_if`` column each, their maps
-    assembled after the aggregate (``known_counts_map``). Null gaps stay
-    in (they count as turns); the kernel's nulls-last rank keeps the
-    percentiles equal to a null-filtered pass.
+    for every stat, map, sketch and exact percentile of every tier.
+    With open category domains (``role_values``/``tool_values`` None)
+    or sketches the aggregate has two stages, GMQL MAP's in-bin reduce
+    then merge (``_ranked_percentiles(within=...)``): stage A counts per
+    (key, tier, _w, open categories) subgroup — sketches add ``tool``
+    and the log₂ gap bucket ``_b`` — and stage B sums, mins and maxes
+    those rows per (key, tier, _w), assembles each open map and
+    ``lat_hist`` from them (``_open_counts_map``) and builds ``tool_hll``
+    over their tools, so no object aggregate reads raw rows. Known
+    categories are one ``count_if`` column each, their maps assembled
+    after the aggregate (``known_counts_map``). Null gaps stay in (they
+    count as turns); the kernel's nulls-last rank keeps the percentiles
+    equal to a null-filtered pass.
 
-    A coarser tier with sketches (one tier per call) cascades its
-    mergeable stats and sketch columns from ``finer`` and joins exact
-    percentiles from raw at (key, window_start) grain: cascaded digests
-    are not the digests a rebuild from raw would give, and a rebuild per
-    tier would re-scan raw through Arrow."""
-    if with_sketches:
-        (tier,) = tiers  # sketches are built or cascaded one tier per call
-        if finer is not None:
-            merged = cascade_rollup(
-                finer, tier, key=key, role_values=role_values,
-                tool_values=tool_values,
-            )
-            pct = exact_percentiles(
-                raw_g.withColumn(
-                    "window_start", F.window(ts, TIER_DURATION[tier]).start
-                ),
-                [key, "window_start"],
-                "gap_s",
-            )
-            joined = merged.join(pct, on=[key, "window_start"], how="left")
-            return _tier_columns(joined.withColumn("tier", F.lit(tier)), key)
+    ``lat_digest`` (``with_sketches="digest"``) is the one column that
+    cascades: the first tier's digests are merged from ``finer``'s, or
+    built from raw without it (``tdigest_rollup``), each later tier
+    merges the one before (``tdigest_cascade``), and the digests of
+    every tier are left-joined once at (key[, tier], window_start).
+    Cascaded digests are not the digests a rebuild from raw would give,
+    and a rebuild per tier would re-scan raw through Arrow."""
+    from gmql_spark.functions.sketches import log2_bucket
+    from gmql_spark.functions.tdigest import tdigest_cascade, tdigest_rollup
+
+    if with_sketches:  # the log₂ gap bucket lat_hist counts
+        raw_g = raw_g.withColumn("_b", log2_bucket(F.col("gap_us")))
     d = reduce(
         DataFrame.union,
         [
@@ -513,6 +472,12 @@ def _build_tiers(
     )
     cats = {"role": role_values, "tool": tool_values}
     split = [c for c, vals in cats.items() if vals is None]  # the open domains
+    within = split + [c for c in ("tool", "_b") if with_sketches and c not in split]
+    sketches = [
+        _open_counts_map("_b", within).alias("lat_hist"),
+        # a window without tools gets no sketch, not an empty one
+        F.when(F.count("tool") > 0, F.hll_sketch_agg("tool", 12)).alias("tool_hll"),
+    ] if with_sketches else []
 
     def total(c: str) -> Column:  # a sum of counts is never null
         return F.coalesce(F.sum(c), F.lit(0).cast("long"))
@@ -533,18 +498,18 @@ def _build_tiers(
             stats[f"_{c}{i}"] = (F.count_if(F.col(c) == F.lit(v)), total)
     # the tier is a group key only when there are several: a constant
     # key would change the hash partitioning of a single tier's rows,
-    # and so the row order a cascade's order-sensitive sketch union
-    # (``tool_hll``) reads them in
+    # and so its plan
     keys = [key, "tier"] if len(tiers) > 1 else [key]
     groups = [*keys, "_w"]
     agged = _ranked_percentiles(
         d, groups, "gap_s", PCTS, PCT_NAMES,
         [agg.alias(name) for name, (agg, _) in stats.items()],
-        within=split,
+        within=within,
         # the maps read the subgroup counts, so they come before the
         # merged turn_count that shadows them
         merge=[
-            *[_open_counts_map(c, split).alias(f"{c}_counts") for c in split],
+            *[_open_counts_map(c, within).alias(f"{c}_counts") for c in split],
+            *sketches,
             *[m(name).alias(name) for name, (_, m) in stats.items()],
         ],
     )
@@ -561,11 +526,29 @@ def _build_tiers(
         *[F.col(c) for c in stats if not c.startswith("_")],
         *PCT_NAMES,
         *[m.alias(name) for name, m in maps.items()],
+        *[c for c in SKETCH_COLS if with_sketches],
     )
-    if with_sketches:
-        out = _join_sketches(
-            out, raw_g, tier, key=key, ts=ts, with_digest=with_sketches == "digest"
+    if with_sketches == "digest":
+        digs = [
+            tdigest_rollup(raw_g, tiers[0], keys=[key], value_col="gap_us", ts=ts)
+            if finer is None
+            else tdigest_cascade(
+                finer.filter(F.col("lat_digest").isNotNull()).select(
+                    key, "window_start", "lat_digest.*"
+                ),
+                tiers[0], keys=[key],
+            )
+        ]
+        for t in tiers[1:]:
+            digs.append(tdigest_cascade(digs[-1], t, keys=[key]))
+        dig = reduce(
+            DataFrame.unionByName,
+            [g.withColumn("tier", F.lit(t)) for t, g in zip(tiers, digs)],
+        ).select(
+            *keys, "window_start",
+            F.struct("means", "weights", "vmin", "vmax").alias("lat_digest"),
         )
+        out = out.join(dig, on=[*keys, "window_start"], how="left")
     if len(tiers) == 1:
         out = out.withColumn("tier", F.lit(tiers[0]))
     return _tier_columns(out, key)
@@ -574,10 +557,10 @@ def _build_tiers(
 def _open_counts_map(cat: str, split: Sequence[str]) -> Column:
     """Merge aggregate of an open-domain ``cat -> count`` map over the
     counted rows of ``_build_tiers``' first stage, one row per
-    (key, tier, window, open categories) subgroup carrying its count
+    (key, tier, window, ``split`` values) subgroup carrying its count
     ``turn_count``. Null categories are skipped, so a window without any
-    gets the empty map; entries are sorted by category. Another open
-    domain in ``split`` repeats a category's entries across its values;
+    gets the empty map; entries are sorted by category. Another column
+    in ``split`` repeats a category's entries across its values;
     they are summed per category first (a higher-order fold over the
     window's entry array). The values are nullable, as in the tier
     tables on disk: ``nullif(n, 0)`` keeps every count (a counted row
@@ -613,14 +596,14 @@ def rollup_all_tiers(
     return_gaps: bool = False,
     with_sketches: bool | str = False,
 ):
-    """The retention cascade raw → 1m → 1h → 1d. The gap column is
+    """The retention tiers raw → 1m → 1h → 1d. The gap column is
     computed once; every tier is then built from that gap frame by the
-    one tier builder (``_build_tiers``, one tier per call): without
-    sketches a direct fused rollup per tier, with sketches a cascade
-    from the finer tier joined to exact percentiles. ``cache_gaps=True``
-    persists the gap frame across the tiers that read it — the
-    common-subplan reuse the reference does with ``intermediateResult``
-    memoization, ``IROperator.scala:11``."""
+    one tier builder (``_build_tiers``, one tier per call): a direct
+    fused rollup per tier, sketches included, with ``lat_digest``
+    (``with_sketches="digest"``) merged from the finer tier's.
+    ``cache_gaps=True`` persists the gap frame across the tiers that
+    read it — the common-subplan reuse the reference does with
+    ``intermediateResult`` memoization, ``IROperator.scala:11``."""
     raw_g = with_gap_seconds(raw, key=key, ts=ts).select(
         key, ts, "role", "tool", "gap_us", "gap_s"
     )
@@ -635,9 +618,9 @@ def rollup_all_tiers(
         ).drop("tier")
         if persist_tiers:
             # tiers are tiny relative to raw; persisting stops the lazy
-            # cascade from recomputing the whole finer tier inside every
-            # coarser tier's job (without this, 1d recomputes 1h which
-            # recomputes 1m — quadratic re-aggregation)
+            # digest cascade from recomputing the whole finer tier inside
+            # every coarser tier's job (without this, 1d recomputes 1h
+            # which recomputes 1m — quadratic re-aggregation)
             out[t] = out[t].persist()
         prev = out[t]
     if return_gaps:

@@ -41,6 +41,7 @@ import datetime as _dt
 import json
 import os
 from collections.abc import Callable, Sequence
+from glob import glob
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -411,12 +412,16 @@ def realtime_rollup(
     then owns the contract that the tier reflects every raw row below
     it. The raw tail is read with the stored ingest-time ``gap_us``
     (the incremental fact layout), so cross-boundary latency gaps are
-    exact without any raw-scale window pass; if the fact table lacks
-    ``gap_us`` the gaps are derived over the full raw first (exact, one
-    extra shuffle) before the tail filter.
+    exact without any raw-scale window pass, and only the fact leaves
+    of event dates from the tail's first window on are listed and read
+    (``sources.catalog.read_fact_leaves``); if the fact table lacks
+    ``gap_us`` the whole table is opened and the gaps are derived over
+    the full raw first (exact, one extra shuffle) before the tail
+    filter.
     """
     from gmql_spark.incremental import pending_append_min_us
     from gmql_spark.operators.rollup import rollup, with_gap_seconds
+    from gmql_spark.sources.catalog import footer_schema, read_fact_leaves
 
     man = read_refresh_manifest(tiers_dir)
     if frozen_until is None:
@@ -431,12 +436,21 @@ def realtime_rollup(
             wm = min(wm, pending)
         frozen_until = _dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=wm)
 
-    tier_df = spark.read.parquet(f"{tiers_dir}/rollup_{tier}")
+    # both tables open with the schema of one footer: no inference job
+    table = f"{tiers_dir}/rollup_{tier}"
+    schema = footer_schema(table)
+    tier_df = (spark.read.schema(schema) if schema else spark.read).parquet(table)
     if "window_date" in tier_df.columns:
         tier_df = tier_df.drop("window_date")
-    raw = spark.read.parquet(fact_path)
-    raw = raw.drop(*[c for c in ("conv_bucket", "event_date") if c in raw.columns])
-    if "gap_us" not in raw.columns:
+    fact_schema = footer_schema(fact_path)
+    if fact_schema and {"gap_us", "event_date"} <= set(fact_schema.fieldNames()):
+        # stored gaps: only the leaves of the tail's event dates are read
+        day = str(floor_to_tier(frozen_until, tier).date())
+        dates = {p.rsplit("=", 1)[1] for p in glob(f"{fact_path}/conv_bucket=*/event_date=*")}
+        raw = read_fact_leaves(spark, fact_path, dates=sorted(d for d in dates if d >= day))
+    else:
+        raw = spark.read.parquet(fact_path)
+        raw = raw.drop(*[c for c in ("conv_bucket", "event_date") if c in raw.columns])
         raw = with_gap_seconds(raw, key=key, ts=ts)
 
     def recompute(tail: DataFrame) -> DataFrame:

@@ -383,6 +383,27 @@ def test_append_and_refresh_job_budget(spark, tmp_path, split_data):
     assert res["watermark_us"] == ts_max
 
 
+@pytest.mark.parametrize("mode,budget", [(True, 2), ("digest", 10)])
+def test_sketch_refresh_job_budget(spark, tmp_path, split_data, mode, budget):
+    """A sketch refresh is one plan and one write too: ``lat_hist`` and
+    ``tool_hll`` come out of the fused aggregate, and only the digests
+    cascade tier to tier inside that plan. Measured: 2 jobs with
+    sketches (31 with a staged write and a cascade ⨝ exact-percentiles
+    plan per tier), 10 with digests (40)."""
+    from tests.conftest import spark_jobs
+
+    _, b1, b2 = split_data
+    fact, out = str(tmp_path / "fact"), str(tmp_path / "tiers")
+    refresh_tiers(
+        spark, fact, out, dates=append_transcripts(spark, b1, fact, n_buckets=4),
+        with_sketches=mode,
+    )
+    dates = append_transcripts(spark, b2, fact, n_buckets=4)
+    assert spark_jobs(
+        spark, lambda: refresh_tiers(spark, fact, out, dates=dates, with_sketches=mode)
+    ) <= budget
+
+
 def test_refresh_jobs_do_not_grow_with_table_age(spark, tmp_path):
     """A one-date refresh lists and reads only that date's fact leaves,
     with the schema from a footer: on a 120-date table it runs as many

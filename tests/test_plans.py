@@ -24,11 +24,12 @@ def test_rollup_plan_is_pure_codegen_agg(raw):
     """With closed category domains the whole rollup is hash-agg codegen
     (the built-in exact percentile would introduce an ObjectHashAggregate
     with its 128-group sort fallback; our rank plan must not). Checked
-    on the tier builder's 1h frame for both tier shapes. The sketch path
-    carries HLL sketches and log₂ histogram maps, whose aggregates are
-    object aggregates by construction over tier-sized rows; every other
-    aggregate of its plan — the cascade and the exact percentiles —
-    must be a hash aggregate."""
+    on the tier builder's 1h frame for both tier shapes. With sketches
+    the builder's second stage builds HLL sketches and log₂ histogram
+    maps from counted rows, object aggregates by construction; every
+    other aggregate of its plan must be a hash aggregate. So must every
+    aggregate of ``exact_percentiles`` over (key, window_start), the
+    percentile plan of the gates and GSL."""
     from gmql_spark.datagen import TOOL_NAMES
     from gmql_spark.operators.rollup import exact_percentiles, with_gap_seconds
     from gmql_spark.operators.window_agg import TIER_DURATION
@@ -40,10 +41,10 @@ def test_rollup_plan_is_pure_codegen_agg(raw):
     assert_no_object_agg(rollup_all_tiers(raw, tool_values=tools)["1h"])
 
     sk = rollup_all_tiers(raw, tool_values=tools, with_sketches=True)["1h"]
-    sketch_aggs = ("hll_sketch_agg(", "hll_union_agg(", "collect_list(struct(_b,")
+    sketch_aggs = ("hll_sketch_agg(", "collect_list(struct(_b,")
     obj = [ln for ln in physical_plan(sk).splitlines() if "ObjectHashAggregate" in ln]
     assert obj and all(any(a in ln for a in sketch_aggs) for ln in obj), obj
-    # the sketch path's percentile side, exactly as the builder forms it
+    # exact percentiles per (key, 1h window), as the gates and GSL form them
     g = with_gap_seconds(raw).withColumn(
         "window_start", F.window("ts", TIER_DURATION["1h"]).start
     )
@@ -51,10 +52,13 @@ def test_rollup_plan_is_pure_codegen_agg(raw):
 
 
 def test_tier_builder_coarse_tiers_are_join_free(raw):
-    """Without sketches the builder's 1h and 1d frames have the 1m
+    """Without digests the builder's 1h and 1d frames have the 1m
     frame's shape: the same exchanges and joins (none at all with closed
-    category domains) — no cascade ⨝ percentiles join per coarser tier."""
-    for kw in ({}, {"tool_values": list(datagen.TOOL_NAMES)}):
+    category domains, or with sketches) — no cascade ⨝ percentiles join
+    per coarser tier."""
+    for kw in (
+        {}, {"tool_values": list(datagen.TOOL_NAMES)}, {"with_sketches": True},
+    ):
         reps = {t: plan_report(df) for t, df in rollup_all_tiers(raw, **kw).items()}
         for t in ("1h", "1d"):
             for k in ("exchanges", "joins"):
@@ -65,29 +69,33 @@ def test_tier_builder_coarse_tiers_are_join_free(raw):
 def test_all_tier_frame_shares_exchanges(spark, raw, tmp_path):
     """The pipeline's all-tier frame over a table with stored gaps (every
     tier of a bucket in one plan, open tool domain, as ``run_pipeline``
-    builds it) plans one exchange and no join or broadcast: the rank
-    window and both aggregate stages share one hash partitioning. Its
-    only object aggregates assemble the tool maps from counted rows,
+    builds it; with sketches too, as a sketch refresh builds it) plans
+    one exchange and no join or broadcast: the rank window and both
+    aggregate stages share one hash partitioning. Its only object
+    aggregates assemble the tool maps (and sketches) from counted rows,
     never from raw rows."""
     from gmql_spark.operators.rollup import DEFAULT_ROLES, _build_tiers, with_gap_seconds
     from gmql_spark.sources.catalog import read_fact_leaves, write_transcripts
 
     fact = str(tmp_path / "fact")
     write_transcripts(raw, fact, n_buckets=2, precompute_gaps=True)
-    together = _build_tiers(
-        with_gap_seconds(read_fact_leaves(spark, fact, bucket=0)), None,
-        ("1m", "1h", "1d"), key="conv_id", ts="ts", role_values=DEFAULT_ROLES,
-        tool_values=None, with_sketches=False,
-    )
-    rep = plan_report(together)
-    assert (rep["exchanges"], rep["joins"], rep["broadcasts"]) == (1, 0, 0), rep
-    plan = physical_plan(together)
-    obj = [ln for ln in plan.splitlines() if "ObjectHashAggregate" in ln]
-    assert obj and all("collect_list(struct(tool, tool#" in ln for ln in obj), obj
-    # the map stage reads the counted (key, tier, window, tool) rows
-    counted = [ln for ln in plan.splitlines() if "HashAggregate(keys=[" in ln
-               and "Object" not in ln]
-    assert counted and all("tool#" in ln.split("functions=")[0] for ln in counted), counted
+    for with_sketches in (False, True):
+        together = _build_tiers(
+            with_gap_seconds(read_fact_leaves(spark, fact, bucket=0)), None,
+            ("1m", "1h", "1d"), key="conv_id", ts="ts", role_values=DEFAULT_ROLES,
+            tool_values=None, with_sketches=with_sketches,
+        )
+        rep = plan_report(together)
+        assert (rep["exchanges"], rep["joins"], rep["broadcasts"]) == (1, 0, 0), rep
+        plan = physical_plan(together)
+        obj = [ln for ln in plan.splitlines() if "ObjectHashAggregate" in ln]
+        assert obj and all("collect_list(struct(tool, tool#" in ln for ln in obj), obj
+        # the map stage reads the counted (key, tier, window, tool) rows
+        counted = [ln for ln in plan.splitlines() if "HashAggregate(keys=[" in ln
+                   and "Object" not in ln]
+        assert counted and all(
+            "tool#" in ln.split("functions=")[0] for ln in counted
+        ), counted
 
 
 def test_generic_path_object_agg_only_on_counted_rows(raw):

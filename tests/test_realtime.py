@@ -94,6 +94,25 @@ def test_realtime_exact_with_stale_tiers(spark, tmp_path, split_data):
         assert n_served < n_total  # tail contributed too
 
 
+def test_realtime_job_budget(spark, tmp_path, split_data):
+    """A realtime query opens the tier table with its footer schema and
+    reads only the fact leaves of the tail's event dates, with the
+    schema from a footer: no schema-inference job on either table.
+    Measured: ``count()`` runs 3 jobs (5 with both tables opened whole,
+    each with a schema-inference job)."""
+    from tests.conftest import spark_jobs
+
+    raw, b1, b2 = split_data
+    fact, out = str(tmp_path / "fact_jobs"), str(tmp_path / "tiers_jobs")
+    refresh_tiers(spark, fact, out, dates=append_transcripts(spark, b1, fact, n_buckets=4))
+    append_transcripts(spark, b2, fact, n_buckets=4)  # no refresh
+    res = {}
+    assert spark_jobs(
+        spark, lambda: res.update(n=realtime_rollup(spark, fact, out, tier="1h").count())
+    ) <= 3
+    assert res["n"] == rollup(raw, "1h").count()
+
+
 def test_realtime_fresh_tiers_grid_aligned_boundary(spark, tmp_path, split_data):
     """Fully refreshed tiers + a frozen boundary exactly on the window
     grid: no window may be double-served or dropped."""

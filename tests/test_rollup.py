@@ -275,6 +275,18 @@ TIER_FOOTER = [
 ]
 
 
+SKETCH_FOOTER = [
+    ("lat_hist", False, "map<int,bigint>"),
+    ("tool_hll", True, "binary"),
+]
+DIGEST_FOOTER = [
+    (
+        "lat_digest", True,
+        "struct<means:array<double>,weights:array<double>,vmin:double,vmax:double>",
+    ),
+]
+
+
 def _footer_fields(table: str) -> list[tuple]:
     from gmql_spark.sources.catalog import footer_schema
 
@@ -293,22 +305,30 @@ def test_tier_table_footer_schema(spark, tmp_path):
     one footer schema, nullability included: counts non-null, the known
     role map's values non-null and the open tool map's values nullable.
     A refresh swaps its leaves into tables whose other leaves an older
-    build wrote, so the schema may not drift."""
+    build wrote, so the schema may not drift. A sketch refresh writes
+    the same columns plus its sketch columns, with one schema for every
+    tier (the digest arrays' element nullability included)."""
     from gmql_spark.checkpoint import run_pipeline
     from gmql_spark.incremental import append_transcripts, refresh_tiers
-    from gmql_spark.sources.catalog import write_transcripts
+    from gmql_spark.sources.catalog import footer_schema, write_transcripts
 
     raw = datagen.transcripts_spark(spark, n_conv=20)
     fact = str(tmp_path / "fact")
     write_transcripts(raw, fact, n_buckets=2, precompute_gaps=True)
     run_pipeline(spark, None, str(tmp_path / "pipe"), n_buckets=2, raw_path=fact)
     inc = str(tmp_path / "inc")
-    refresh_tiers(
-        spark, inc, str(tmp_path / "refreshed"),
-        dates=append_transcripts(spark, raw, inc, n_buckets=2),
-    )
-    for table in ("pipe", "refreshed"):
+    dates = append_transcripts(spark, raw, inc, n_buckets=2)
+    extra = {False: [], True: SKETCH_FOOTER, "digest": SKETCH_FOOTER + DIGEST_FOOTER}
+    for mode in extra:
+        refresh_tiers(
+            spark, inc, str(tmp_path / f"refreshed_{mode}"), dates=dates,
+            with_sketches=mode,
+        )
+    tables = {"pipe": [], **{f"refreshed_{m}": cols for m, cols in extra.items()}}
+    for table, cols in tables.items():
+        schemas = []
         for tier in ("1m", "1h", "1d"):
-            assert _footer_fields(str(tmp_path / table / f"rollup_{tier}")) == TIER_FOOTER, (
-                table, tier,
-            )
+            path = str(tmp_path / table / f"rollup_{tier}")
+            assert _footer_fields(path) == TIER_FOOTER + cols, (table, tier)
+            schemas.append(footer_schema(path))
+        assert schemas[0] == schemas[1] == schemas[2], table

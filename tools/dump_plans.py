@@ -6,8 +6,9 @@ plan (``transcript_rollup_1m``), the tier plan of one
 ``checkpoint.run_pipeline`` bucket as the pipeline forms it
 (``pipeline_bucket_tiers``: bucket 0 of a table written with ingest-time
 gaps, every tier of the bucket in one frame) and the plan of the one
-staged write of ``incremental.refresh_tiers`` without sketches
-(``refresh_tiers``: every tier of every date of that table in one frame).
+staged write of ``incremental.refresh_tiers``, without sketches
+(``refresh_tiers``: every tier of every date of that table in one frame)
+and with ``with_sketches=True`` (``refresh_tiers_sketches``).
 
 Usage: python tools/dump_plans.py <out_dir> <tag> [sf_dir] [query ...]
   out_dir: e.g. plans/r09 (created if missing; a relative path is taken
@@ -104,7 +105,7 @@ def main() -> int:
             f.write(plan)
         print(f"wrote pipeline_bucket_tiers_{tag}.txt", file=sys.stderr)
 
-        # bench-only surface: the refresh's staged write, as
+        # bench-only surfaces: the refresh's staged write, as
         # refresh_tiers forms it, over every event date of the table
         dates = sorted(
             e.split("=", 1)[1]
@@ -112,17 +113,20 @@ def main() -> int:
             if e.startswith("event_date=")
         )
         fact = read_fact_leaves(spark, tmp, dates=dates)
-        refresh = _build_tiers(
-            with_gap_seconds(fact), None, ("1m", "1h", "1d"), key="conv_id",
-            ts="ts", role_values=DEFAULT_ROLES, tool_values=None,
-            with_sketches=False,
-        ).withColumn("window_date", F.to_date("window_start"))
-        plan = refresh._sc._jvm.PythonSQLUtils.explainString(
-            refresh._jdf.queryExecution(), "formatted"
-        )
-    with open(os.path.join(out_dir, f"refresh_tiers_{tag}.txt"), "w") as f:
-        f.write(plan)
-    print(f"wrote refresh_tiers_{tag}.txt", file=sys.stderr)
+        for name, with_sketches in (
+            ("refresh_tiers", False), ("refresh_tiers_sketches", True),
+        ):
+            refresh = _build_tiers(
+                with_gap_seconds(fact), None, ("1m", "1h", "1d"), key="conv_id",
+                ts="ts", role_values=DEFAULT_ROLES, tool_values=None,
+                with_sketches=with_sketches,
+            ).withColumn("window_date", F.to_date("window_start"))
+            plan = refresh._sc._jvm.PythonSQLUtils.explainString(
+                refresh._jdf.queryExecution(), "formatted"
+            )
+            with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
+                f.write(plan)
+            print(f"wrote {name}_{tag}.txt", file=sys.stderr)
     return 0
 
 
