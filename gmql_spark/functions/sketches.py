@@ -26,7 +26,11 @@ fused aggregate at every tier — ``lat_hist`` from counted
 over counted (window, tool) rows — so a sketch tier costs no extra
 exchange or join. ``hist_rollup``/``hll_rollup`` are the standalone
 per-window forms (gates, GSL ``HIST``, the streaming twins' oracles);
-the cascades merge finer-tier sketches (``cascade_rollup``, GSL).
+``hist_cascade``/``hll_cascade`` merge finer-tier sketches (the
+``latency_histogram`` gate, GSL ``HIST``, tests). GSL ``CASCADE``
+(``operators.rollup.cascade_rollup``) merges both sketch columns in
+its own one-pass merge, with the same bucket-count addition and
+``hll_union_agg``.
 
 The bucket index is computed with INTEGER arithmetic
 (``length(conv(x, 10, 2)) - 1`` = bit_length-1), not ``floor(log2(x))``,
@@ -37,9 +41,10 @@ by a ulp at bucket boundaries. ``gap_us = 0`` gets its own bucket −1
 
 Scale shape: both sketches follow the module's two-level rule — a
 codegen hash aggregate over raw-scale rows first (per-bucket counts /
-the HLL partial), then the tiny per-window assembly (the window
-group-bys are ``operators.window_agg``'s ``window_counts_map`` and
-``window_rollup``); no ObjectHashAggregate ever sees raw-scale data
+the HLL partial), then the tiny per-window assembly (the standalone
+forms' window group-bys are ``operators.window_agg``'s
+``window_counts_map`` and ``window_rollup``); no ObjectHashAggregate
+ever sees raw-scale data
 (the HLL partial is an imperative aggregate, but its state is one
 fixed-size sketch per group, merged map-side like any partial agg).
 """

@@ -23,9 +23,16 @@ Scale notes:
   combine). The exact-percentile contract forces a raw-scale sort
   anyway, and the fused pass computes every mergeable stat inside it.
   ``run_pipeline`` and ``refresh_tiers`` build all tiers in one call
-  (one plan, one write); ``rollup_all_tiers`` passes one tier at a time
-  (Catalyst does not prune the other tiers' branches of an all-tier
-  frame filtered to one tier).
+  (one plan, one write); ``rollup_all_tiers`` passes one tier at a
+  time. Catalyst (Spark 4.1) does prune an all-tier frame filtered to
+  one tier: each ``tier == t`` filter plans the scans and exchanges of
+  ``rollup(raw, t)``, with equal rows, with or without sketches and open
+  roles. The per-tier builds stay for two measured reasons (668,525
+  turns, bench.py's persist/unpersist protocol): the ``tier`` group key
+  raised warm executor CPU from 11.3–12.4 s to 12.9–13.8 s, and a
+  persisted all-tier frame re-runs the lag window once per union branch
+  (shuffle 17.6 → 52.9 MB); caching the gap frame instead would leave a
+  cache that ``return_gaps`` cannot release.
 - percentiles are exact, from one rank + hash-agg + lerp kernel
   (``_ranked_percentiles``, shared by ``rollup`` and
   ``exact_percentiles``) — NOT the built-in ``percentile`` aggregate,
@@ -36,8 +43,14 @@ Scale notes:
   rebuilding them from raw per tier would re-scan raw through Arrow.
   ``tool_hll`` is built from raw at every tier; its estimate equals
   the cascaded union's, its bytes need not.
-- ``cascade_rollup`` (GSL ``CASCADE``) and the sketches' own window
-  group-bys go through the engine's one window-aggregate core
+- ``cascade_rollup`` (GSL ``CASCADE``) is one merge pass: one explode
+  of each finer row over the tagged entries of all its maps, one
+  ``window_rollup`` stage per (key, map, category, window), one
+  group-by per (key, window); no join but ``lat_digest``'s. Over a
+  finer frame partitioned by key neither stage shuffles, so an
+  unpersisted GSL chain raw → 1m → 1h → 1d plans one exchange; a
+  persisted or stored finer tier costs two. It and the sketches' own
+  window group-bys go through the engine's one window-aggregate core
   (``operators.window_agg``). Only the builder's fused pass keeps its
   own window column (``_w``), so the rank window and both aggregate
   stages share one (key, tier, window) partitioning.
@@ -56,11 +69,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from gmql_spark.functions.aggregates import known_counts_map
-from gmql_spark.operators.window_agg import (
-    TIER_DURATION,
-    window_counts_map,
-    window_rollup,
-)
+from gmql_spark.operators.window_agg import TIER_DURATION, window_rollup
 
 PCTS = (0.50, 0.95, 0.99)
 PCT_NAMES = ("latency_p50", "latency_p95", "latency_p99")
@@ -107,7 +116,6 @@ def rollup(
     ts: str = "ts",
     role_values: Sequence[str] | None = DEFAULT_ROLES,
     tool_values: Sequence[str] | None = None,
-    with_gaps: bool = True,
     with_sketches: bool | str = False,
 ) -> DataFrame:
     """Direct rollup of raw transcripts to one retention tier.
@@ -115,7 +123,9 @@ def rollup(
     Output grain: (key, window_start). Columns: turn_count,
     role_counts/tool_counts (map<string,bigint>), exact latency
     percentiles p50/p95/p99 over inter-turn gaps, latency_cnt/sum,
-    first_ts/last_ts.
+    first_ts/last_ts. A frame that already carries ``gap_us`` (stored
+    ingest-time gaps, or ``with_gap_seconds`` output) keeps it; its lag
+    window is skipped.
 
     ``with_sketches=True`` additionally stores two *mergeable* sketches
     per tier row (``functions.sketches``): ``lat_hist`` (log₂ gap_us
@@ -138,130 +148,91 @@ def rollup(
     exchange + sort + aggregate by (key, window), no joins — sketches
     included; ``lat_digest`` adds the t-digest build and one join.
     """
-    if with_gaps:
-        df = with_gap_seconds(df, key=key, ts=ts)
     return _build_tiers(
-        df, None, (tier,), key=key, ts=ts, role_values=role_values,
-        tool_values=tool_values, with_sketches=with_sketches,
+        with_gap_seconds(df, key=key, ts=ts), None, (tier,), key=key, ts=ts,
+        role_values=role_values, tool_values=tool_values, with_sketches=with_sketches,
     ).drop("tier")
 
 
 SKETCH_COLS = ["lat_hist", "tool_hll"]
 
 
-def _join_counts_map(
-    main: DataFrame,
-    src: DataFrame,
-    cat: str,
-    out: str,
-    duration: str,
-    keys: Sequence[str],
-    ts: str,
-    weight: str | None = None,
-) -> DataFrame:
-    """Left-join ``window_counts_map`` of ``src`` onto ``main`` at
-    (keys, window_start) grain as column ``out``; null categories are
-    skipped, and windows with no category rows get the empty map."""
-    counts = window_counts_map(
-        src.filter(F.col(cat).isNotNull()), duration, cat, out, keys=keys,
-        ts=ts, weight=weight,
-    ).drop("window_end")
-    empty_map = F.expr("cast(map() as map<string,bigint>)")
-    return main.join(counts, on=[*keys, "window_start"], how="left").withColumn(
-        out, F.coalesce(F.col(out), empty_map)
-    )
-
-
-def _merged_counts_col(col: str, values: Sequence[str]) -> Column:
-    """Aggregate merging ``map<string,bigint>`` histograms over a KNOWN
-    category domain entirely inside one hash aggregate: per category,
-    ``sum(element_at(map, cat))`` (null when absent everywhere — entry
-    filtered out, matching the explode path's no-rows case), assembled
-    sorted by category — the same entry order the generic explode +
-    map_from_entries(array_sort(...)) path produces."""
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(v).alias("_cat"),
-                F.sum(F.element_at(F.col(col), F.lit(v))).alias("_n"),
-            )
-            for v in sorted(values)
-        ]
-    )
-    return F.map_from_entries(F.filter(entries, lambda e: e["_n"].isNotNull()))
-
-
-def cascade_rollup(
-    finer: DataFrame,
-    tier: str,
-    key: str = "conv_id",
-    role_values: Sequence[str] | None = None,
-    tool_values: Sequence[str] | None = None,
-) -> DataFrame:
+def cascade_rollup(finer: DataFrame, tier: str, key: str = "conv_id") -> DataFrame:
     """Re-aggregate a finer tier to a coarser one for all *mergeable*
-    stats (counts, histogram maps, min/max, sums). Percentiles are not
-    mergeable and are absent from the result — join in
-    ``exact_percentiles`` (exact-from-raw, see ``_build_tiers``) or
-    accept sketches.
+    stats (counts, histogram maps, min/max, sums, ``lat_hist``,
+    ``tool_hll``). Percentiles are not mergeable and are absent from the
+    result — join in ``exact_percentiles`` (exact-from-raw, see
+    ``_build_tiers``) or accept sketches.
 
-    ``role_values``/``tool_values`` (r8): when the category domains are
-    known (the same closed-domain contract as ``rollup``), the map
-    merges ride the scalars aggregate via ``_merged_counts_col`` — one
-    aggregate, no explode passes, no joins. Identical output to the
-    generic path (differential-tested).
+    One merge pass, GMQL MAP's two-level combine: each finer row is
+    exploded once over the entries of all its maps (``role_counts``,
+    ``tool_counts``, ``lat_hist``), each entry tagged with its map's
+    name and its category cast to string; stage A (``window_rollup``
+    over (key, map, category, window)) sums the entry counts and carries
+    the row's scalars and ``tool_hll`` on one row per finer row; stage B
+    groups per (key, window), merges the scalars and assembles each map
+    from its tagged rows, sorted by category. A null map contributes no
+    entries, a map without entries is ``{}``, a window without tool
+    sketches keeps a null ``tool_hll``. Both stages group by ``key``
+    among their keys, so over a finer frame already partitioned by key
+    (a ``rollup`` or a cascade in the same plan) they add no exchange;
+    over a persisted or stored one, one exchange each. ``lat_digest``
+    is merged by ``tdigest_cascade`` and left-joined.
 
     Composition laws verified by tests: sum∘count = count, map-merge of
     value-counts = value-counts of union, min∘min, max∘max.
     """
-    duration = TIER_DURATION[tier]
-    fused = [
-        _merged_counts_col(col, vals).alias(col)
-        for col, vals in (("role_counts", role_values), ("tool_counts", tool_values))
-        if vals is not None
-    ]
-    out = window_rollup(
-        finer,
-        duration,
-        [
-            F.sum("turn_count").alias("turn_count"),
-            F.sum("latency_cnt").alias("latency_cnt"),
-            F.sum("latency_sum_us").alias("latency_sum_us"),
-            F.min("first_ts").alias("first_ts"),
-            F.max("last_ts").alias("last_ts"),
-            *fused,
-        ],
-        keys=[key],
+    def hll_union(c: str) -> Column:  # a window without tools gets no sketch
+        return F.when(F.count(c) > 0, F.hll_union_agg(c))
+
+    maps = ["role_counts", "tool_counts"]
+    merges = {
+        "turn_count": F.sum,
+        "latency_cnt": F.sum,
+        "latency_sum_us": F.sum,
+        "first_ts": F.min,
+        "last_ts": F.max,
+    }
+    sketches = "lat_hist" in finer.columns
+    if sketches:
+        maps.append("lat_hist")
+        merges["tool_hll"] = hll_union
+
+    def tagged(m: str) -> Column:  # a null map contributes no entries
+        entries = F.transform(
+            F.map_entries(m),
+            lambda e: F.struct(
+                F.lit(m).alias("_m"), e["key"].cast("string").alias("_c"),
+                e["value"].alias("_n"),
+            ),
+        )
+        return F.coalesce(entries, F.array())
+
+    def assembled(m: str) -> Column:
+        cat = F.col("_c").cast("int") if m == "lat_hist" else F.col("_c")
+        entry = F.when(F.col("_m") == m, F.struct(cat.alias("_c"), "_n"))
+        return F.map_from_entries(F.array_sort(F.collect_list(entry))).alias(m)
+
+    exploded = finer.select(
+        key, "window_start", *merges,
+        F.posexplode_outer(F.concat(*[tagged(m) for m in maps])).alias("_pos", "_e"),
+    )
+    first = F.coalesce(F.col("_pos") == 0, F.lit(True))  # one row per finer row
+    entries = window_rollup(
+        exploded.select(
+            key, "window_start", "_e.*",
+            *[F.when(first, F.col(c)).alias(c) for c in merges],
+        ),
+        TIER_DURATION[tier],
+        [F.sum("_n").alias("_n"), *[agg(c).alias(c) for c, agg in merges.items()]],
+        keys=[key, "_m", "_c"],
         ts="window_start",
     )
-    # histogram-map merge via explode -> codegen hash sum -> map assembly
-    # over the (small) per-category rows. A direct HOF fold over
-    # collect_list(map) would be an ObjectHashAggregate on the whole
-    # finer tier — the 128-group sort fallback again.
-    for col, vals in (("role_counts", role_values), ("tool_counts", tool_values)):
-        if vals is None:
-            exploded = finer.select(
-                key, "window_start", F.explode(col).alias("_cat", "_n")
-            )
-            out = _join_counts_map(
-                out, exploded, "_cat", col, duration, [key], "window_start",
-                weight="_n",
-            )
-    sketch_cols: list[str] = []
-    if "lat_hist" in finer.columns:
-        from gmql_spark.functions.sketches import hist_cascade, hll_cascade
-
-        empty_hist = F.expr("cast(map() as map<int,bigint>)")
-        hist = hist_cascade(finer, tier, keys=[key]).drop("window_end")
-        hll = hll_cascade(
-            finer.filter(F.col("tool_hll").isNotNull()), tier, keys=[key],
-            col="tool_hll",
-        ).drop("window_end")
-        out = (
-            out.join(hist, on=[key, "window_start"], how="left")
-            .join(hll, on=[key, "window_start"], how="left")
-            .withColumn("lat_hist", F.coalesce(F.col("lat_hist"), empty_hist))
-        )
-        sketch_cols = list(SKETCH_COLS)
+    out = entries.groupBy(key, "window_start", "window_end").agg(
+        *[agg(c).alias(c) for c, agg in merges.items()],
+        *[assembled(m) for m in maps],
+    )
+    sketch_cols = list(SKETCH_COLS) if sketches else []
     if "lat_digest" in finer.columns:
         from gmql_spark.functions.tdigest import tdigest_cascade
 

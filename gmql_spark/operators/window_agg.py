@@ -72,9 +72,10 @@ def window_counts_map(
 ) -> DataFrame:
     """Per-window histogram map ``cat -> count`` (or ``-> sum(weight)``
     when ``weight`` is given, to merge finer histograms exploded to
-    (cat, n) rows), for the sketch histograms and the cascade's
-    open-domain maps; the tier builder assembles its maps in its own
-    aggregate instead (``rollup._open_counts_map``). ``cat`` must not
+    (cat, n) rows), for the standalone sketch histograms
+    (``sketches.hist_rollup``/``hist_cascade``); the tier builder and
+    ``rollup.cascade_rollup`` assemble their maps in their own
+    aggregates instead. ``cat`` must not
     be null, since a map key cannot be: callers drop null categories
     first (GMQL's aggregate null-skip), where a cheaper column than the
     category may carry the null.

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gmql_spark import datagen
-from gmql_spark.operators.rollup import rollup, rollup_all_tiers
+from gmql_spark.operators.rollup import cascade_rollup, rollup, rollup_all_tiers
 from gmql_spark.plans.inspect import assert_no_object_agg, physical_plan, plan_report
 
 
@@ -64,6 +64,18 @@ def test_tier_builder_coarse_tiers_are_join_free(raw):
             for k in ("exchanges", "joins"):
                 assert reps[t][k] == reps["1m"][k], (kw, t, reps)
     assert reps["1m"]["joins"] == 0, reps
+
+
+def test_cascade_chain_plan_budget(raw):
+    """A GSL chain ``ROLLUP 1m → CASCADE 1h → CASCADE 1d``, unpersisted
+    as a script plans it, keeps the rollup's one exchange and plans no
+    join, open roles and sketches included: each cascade is one
+    explode and two aggregate stages whose keys start with the key the
+    rollup is partitioned by."""
+    for kw in ({}, {"role_values": None}, {"with_sketches": True}):
+        chain = cascade_rollup(cascade_rollup(rollup(raw, "1m", **kw), "1h"), "1d")
+        rep = plan_report(chain)
+        assert rep["exchanges"] <= 1 and rep["joins"] == 0, (kw, rep)
 
 
 def test_all_tier_frame_shares_exchanges(spark, raw, tmp_path):

@@ -6,7 +6,13 @@ from __future__ import annotations
 import pytest
 
 from gmql_spark import datagen
-from gmql_spark.operators.rollup import PCT_NAMES, rollup, rollup_all_tiers
+from gmql_spark.operators.rollup import (
+    DEFAULT_ROLES,
+    PCT_NAMES,
+    cascade_rollup,
+    rollup,
+    rollup_all_tiers,
+)
 from gmql_spark.oracle.rollup import oracle_rollup
 from tests.conftest import assert_pdf_equal
 
@@ -37,6 +43,84 @@ def test_tier_cascade_matches_direct_and_oracle(data):
         got = tiers[tier].toPandas()
         exp = oracle_rollup(pdf, tier)
         assert_pdf_equal(got, exp, ["conv_id", "window_start"], float_cols=FLOATS)
+
+
+MERGEABLE = [
+    "conv_id", "window_start", "window_end", "turn_count", "role_counts",
+    "tool_counts", "latency_cnt", "latency_sum_us", "first_ts", "last_ts",
+]
+
+
+@pytest.mark.parametrize("role_values", [DEFAULT_ROLES, None], ids=["closed", "open"])
+def test_cascade_rollup_matches_oracle(data, role_values):
+    """GSL ``CASCADE``: ``cascade_rollup`` of the 1m tier to 1h, and of
+    that 1h frame to 1d, equals the oracle on every mergeable column,
+    with map entries sorted by category."""
+    pdf, sdf = data
+    h1 = cascade_rollup(rollup(sdf, "1m", role_values=role_values), "1h")
+    for tier, df in (("1h", h1), ("1d", cascade_rollup(h1, "1d"))):
+        got = df.toPandas()
+        assert list(got.columns) == MERGEABLE
+        exp = oracle_rollup(pdf, tier)[MERGEABLE]
+        assert_pdf_equal(got, exp, ["conv_id", "window_start"], float_cols=("latency_sum_us",))
+        for c in ("role_counts", "tool_counts"):
+            assert all(list(m) == sorted(m) for m in got[c]), (tier, c)
+
+
+def test_cascade_rollup_sketches_match_direct(data):
+    """With sketches the cascaded ``lat_hist`` equals ``hist_rollup``
+    over raw, bit for bit, and ``tool_hll`` has ``hll_rollup``'s
+    estimate in every window and is null in windows without tools."""
+    from pyspark.sql import functions as F
+
+    from gmql_spark.functions.sketches import hist_rollup, hll_rollup
+    from gmql_spark.operators.rollup import with_gap_seconds
+
+    _, sdf = data
+    key = ["conv_id", "window_start"]
+    h1 = cascade_rollup(rollup(sdf, "1m", with_sketches=True), "1h")
+    for tier, df in (("1h", h1), ("1d", cascade_rollup(h1, "1d"))):
+        got = df.select(
+            *key, "lat_hist", F.hll_sketch_estimate("tool_hll").alias("est")
+        ).toPandas()
+        hist = hist_rollup(with_gap_seconds(sdf), tier).select(*key, "lat_hist")
+        hll = hll_rollup(sdf, tier, "tool").select(
+            *key, F.hll_sketch_estimate("hll").alias("est")
+        )
+        exp = (
+            rollup(sdf, tier).select(*key).join(hist, key, "left").join(hll, key, "left")
+            .toPandas()
+        )
+        exp["lat_hist"] = exp["lat_hist"].map(lambda m: m or {})
+        assert got["est"].isna().any() and got["est"].notna().any(), tier
+        assert_pdf_equal(got, exp, key)
+        assert all(list(m) == sorted(m) for m in got["lat_hist"]), tier
+
+
+def test_cascade_rollup_null_map_keeps_other_maps(data):
+    """A null map in a finer row contributes no entries and drops none
+    of the row's other maps or stats: with ``role_counts`` nulled on
+    some 1m rows, the cascade's ``role_counts`` are the sum of the
+    remaining rows' maps and every other column equals the oracle."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    pdf, sdf = data
+    m1 = rollup(sdf, "1m")
+    nulled = F.abs(F.xxhash64("conv_id", "window_start")) % 3 == 0
+    m1 = m1.withColumn("role_counts", F.when(~nulled, F.col("role_counts")))
+    fine = m1.select("conv_id", "window_start", "role_counts").toPandas()
+    assert fine["role_counts"].isna().any() and fine["role_counts"].notna().any()
+    fine["window_start"] = fine["window_start"].dt.floor("1h")
+    merged = fine.groupby(["conv_id", "window_start"])["role_counts"].agg(
+        lambda ms: dict(sum((Counter(dict(m)) for m in ms if m is not None), Counter()))
+    )
+    got = cascade_rollup(m1, "1h").toPandas()
+    exp = oracle_rollup(pdf, "1h")[MERGEABLE].drop(columns="role_counts")
+    exp = exp.merge(merged.reset_index(), on=["conv_id", "window_start"])
+    assert (exp["role_counts"].map(len) == 0).any()
+    assert_pdf_equal(got, exp, ["conv_id", "window_start"], float_cols=("latency_sum_us",))
 
 
 def test_exact_percentiles_matches_oracle_formula(data):
@@ -104,7 +188,7 @@ def test_fused_rollup_equals_join_formulation(spark):
     raw_g = with_gap_seconds(raw).select(
         "conv_id", "ts", "role", "tool", "gap_us", "gap_s"
     )
-    fused = rollup(raw_g, "1h", with_gaps=False, role_values=list(ROLES)).toPandas()
+    fused = rollup(raw_g, "1h", role_values=list(ROLES)).toPandas()
 
     win = F.window("ts", "1 hour")
     agged = raw_g.groupBy("conv_id", win.alias("w")).agg(
@@ -148,44 +232,6 @@ def test_fused_rollup_equals_join_formulation(spark):
             assert all(dict(x) == dict(y) for x, y in zip(fused[c], old[c])), c
         else:
             eq = fused[c].eq(old[c]) | (fused[c].isna() & old[c].isna())
-            assert eq.all(), c
-
-
-def test_fused_cascade_maps_equal_generic(spark):
-    from pyspark.sql import functions as F  # noqa: F401
-
-    """r8: cascade_rollup with known category domains (fused in-agg map
-    merge) must equal the generic explode-path cascade, entry order
-    included."""
-    from gmql_spark.datagen import ROLES, TOOL_NAMES, transcripts_spark
-    from gmql_spark.operators.rollup import cascade_rollup, rollup, with_gap_seconds
-
-    raw = transcripts_spark(spark, n_conv=40)
-    raw_g = with_gap_seconds(raw).select(
-        "conv_id", "ts", "role", "tool", "gap_us", "gap_s"
-    )
-    m1 = rollup(
-        raw_g, "1m", with_gaps=False,
-        role_values=list(ROLES), tool_values=list(TOOL_NAMES),
-    ).persist()
-    generic = cascade_rollup(m1, "1h").toPandas()
-    fused = cascade_rollup(
-        m1, "1h", role_values=list(ROLES), tool_values=list(TOOL_NAMES)
-    ).toPandas()
-    m1.unpersist()
-    key = ["conv_id", "window_start"]
-    generic = generic.sort_values(key).reset_index(drop=True)
-    fused = fused.sort_values(key).reset_index(drop=True)
-    assert len(generic) == len(fused) > 0
-    for c in generic.columns:
-        if c in ("role_counts", "tool_counts"):
-            # entry ORDER must match too (both sorted by category)
-            assert all(
-                list(x.items()) == list(y.items())
-                for x, y in zip(generic[c], fused[c])
-            ), c
-        else:
-            eq = generic[c].eq(fused[c]) | (generic[c].isna() & fused[c].isna())
             assert eq.all(), c
 
 

@@ -1,8 +1,10 @@
 """Dump .explain('formatted') for selected declared queries into
 <out_dir>/<name>_<tag>.txt (the before/after plan artifacts, kept under
-``plans/<round>/``). Also dumps three bench-only surfaces that are not
-declared queries, under pseudo-names: the transcript 1m tier rollup
-plan (``transcript_rollup_1m``), the tier plan of one
+``plans/<round>/``). Also dumps surfaces that are not declared
+queries, under pseudo-names: the transcript 1m tier rollup plan
+(``transcript_rollup_1m``), a GSL ``ROLLUP 1m → CASCADE 1h → CASCADE
+1d`` chain with sketches, unpersisted as a script plans it
+(``gsl_cascade_chain``), the tier plan of one
 ``checkpoint.run_pipeline`` bucket as the pipeline forms it
 (``pipeline_bucket_tiers``: bucket 0 of a table written with ingest-time
 gaps, every tier of the bucket in one frame) and the plan of the one
@@ -54,9 +56,8 @@ def main() -> int:
 
     spark = get_spark(8, app_name=f"dump-plans-{tag}", shuffle_partitions=16)
     os.makedirs(out_dir, exist_ok=True)
-    qs = entrymod.queries()
-    for name in names:
-        df = qs[name](spark, sf_dir)
+
+    def dump(name, df):
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
@@ -65,22 +66,30 @@ def main() -> int:
         print(f"wrote {name}_{tag}.txt ({plan.count('Exchange')} Exchange)",
               file=sys.stderr)
 
+    qs = entrymod.queries()
+    for name in names:
+        dump(name, qs[name](spark, sf_dir))
+
     # bench-only surface: the 1m transcript tier
     from gmql_spark.datagen import ROLES, TOOL_NAMES, transcripts_spark
-    from gmql_spark.operators.rollup import rollup, with_gap_seconds
+    from gmql_spark.operators.rollup import cascade_rollup, rollup, with_gap_seconds
 
     raw = transcripts_spark(spark, n_conv=50)
     raw_g = with_gap_seconds(raw).select(
         "conv_id", "ts", "role", "tool", "gap_us", "gap_s"
     )
-    m1 = rollup(raw_g, "1m", with_gaps=False, role_values=list(ROLES),
-                tool_values=list(TOOL_NAMES))
-    plan = m1._sc._jvm.PythonSQLUtils.explainString(
-        m1._jdf.queryExecution(), "formatted"
+    dump(
+        "transcript_rollup_1m",
+        rollup(raw_g, "1m", role_values=list(ROLES), tool_values=list(TOOL_NAMES)),
     )
-    with open(os.path.join(out_dir, f"transcript_rollup_1m_{tag}.txt"), "w") as f:
-        f.write(plan)
-    print(f"wrote transcript_rollup_1m_{tag}.txt", file=sys.stderr)
+
+    # GSL surface: ROLLUP 1m -> CASCADE 1h -> CASCADE 1d with sketches
+    dump(
+        "gsl_cascade_chain",
+        cascade_rollup(
+            cascade_rollup(rollup(raw, "1m", with_sketches=True), "1h"), "1d"
+        ),
+    )
 
     # bench-only surface: one run_pipeline bucket's tier plan
     import tempfile
@@ -93,17 +102,11 @@ def main() -> int:
     with tempfile.TemporaryDirectory() as tmp:
         write_transcripts(raw, tmp, n_buckets=4, precompute_gaps=True)
         part = read_fact_leaves(spark, tmp, bucket=0)
-        tiers = _build_tiers(
+        dump("pipeline_bucket_tiers", _build_tiers(
             with_gap_seconds(part), None, ("1m", "1h", "1d"), key="conv_id",
             ts="ts", role_values=DEFAULT_ROLES, tool_values=None,
             with_sketches=False,
-        )
-        plan = tiers._sc._jvm.PythonSQLUtils.explainString(
-            tiers._jdf.queryExecution(), "formatted"
-        )
-        with open(os.path.join(out_dir, f"pipeline_bucket_tiers_{tag}.txt"), "w") as f:
-            f.write(plan)
-        print(f"wrote pipeline_bucket_tiers_{tag}.txt", file=sys.stderr)
+        ))
 
         # bench-only surfaces: the refresh's staged write, as
         # refresh_tiers forms it, over every event date of the table
@@ -116,17 +119,11 @@ def main() -> int:
         for name, with_sketches in (
             ("refresh_tiers", False), ("refresh_tiers_sketches", True),
         ):
-            refresh = _build_tiers(
+            dump(name, _build_tiers(
                 with_gap_seconds(fact), None, ("1m", "1h", "1d"), key="conv_id",
                 ts="ts", role_values=DEFAULT_ROLES, tool_values=None,
                 with_sketches=with_sketches,
-            ).withColumn("window_date", F.to_date("window_start"))
-            plan = refresh._sc._jvm.PythonSQLUtils.explainString(
-                refresh._jdf.queryExecution(), "formatted"
-            )
-            with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
-                f.write(plan)
-            print(f"wrote {name}_{tag}.txt", file=sys.stderr)
+            ).withColumn("window_date", F.to_date("window_start")))
     return 0
 
 
