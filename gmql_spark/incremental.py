@@ -17,6 +17,16 @@ the tiers incrementally and EXACTLY:
    per-conversation time-ordered appends (the natural transcript ingest
    order); out-of-order appends must go through a batch rebuild.
 
+   The batch is evaluated once: its gapped rows are written, through
+   ``catalog.write_transcripts``, into ``<fact>/_append_staging``
+   (hidden from readers by the leading ``_``), with the count of rows
+   that break the ordering contract observed on that write. The new
+   state version is merged from the staged rows, and the staged files
+   are then moved into their ``conv_bucket=/event_date=`` leaves. One
+   bookkeeping aggregate before the write (touched buckets, event-time
+   range, touched dates) is the only other pass over the batch; a batch
+   without rows stops there and commits nothing.
+
    Scale notes: the state table is O(total conversations ever seen) —
    at warehouse scale far too big to broadcast, so the state join is a
    plain equi-join (AQE picks broadcast only while the state actually
@@ -39,9 +49,12 @@ the tiers incrementally and EXACTLY:
 Crash safety: state versions are immutable directories
 (``_conv_state/v_000001``, ...) selected by a tiny ``CURRENT`` pointer
 file that is swapped with an atomic ``os.replace``; an ``INTENT`` marker
-brackets the non-atomic fact append + pointer swap, so a crash in the
-middle is detected loudly on the next append (stale state can never be
-used silently) instead of producing wrong cross-batch gaps. A tier leaf
+brackets the non-atomic move of the staged files into the fact table +
+pointer swap, so a crash in the middle is detected loudly on the next
+append (stale state can never be used silently) instead of producing
+wrong cross-batch gaps. A crash before the marker leaves at most a
+stale staging directory and an unreferenced state version, both
+replaced by the next append, with the fact table untouched. A tier leaf
 is replaced by two renames (``retention.swap_leaf``), so a reader sees
 the old leaf or the new one, never a half-written one; the refresh
 manifest is written after the last swap, so a refresh that crashed is
@@ -62,6 +75,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from gmql_spark.checkpoint import _observed
 from gmql_spark.retention import swap_leaf
 from gmql_spark.sources.catalog import (
     N_BUCKETS_DEFAULT,
@@ -72,7 +86,9 @@ from gmql_spark.sources.catalog import (
 
 STATE_DIR = "_conv_state"
 APPEND_LOG = "_append_log.jsonl"
-# under the tier output dir; leading "_" => invisible to Spark's reader
+# leading "_" => invisible to Spark's reader: under the fact table
+APPEND_STAGING = "_append_staging"
+# ... and under the tier output dir
 REFRESH_STAGING = "_refresh_staging"
 
 
@@ -174,12 +190,15 @@ def pending_append_min_us(fact_path: str, manifest: dict | None) -> int | None:
 
 def read_conv_state(spark: SparkSession, fact_path: str) -> DataFrame | None:
     """Current per-conversation state (conv_id, last_us, conv_bucket),
-    or None before the first append."""
+    or None before the first append. Opened with the schema of one
+    footer (``footer_schema``): no schema-inference job."""
     root = _state_root(fact_path)
     v = _current_version(root)
     if v is None:
         return None
-    return spark.read.parquet(f"{root}/{v}")
+    path = f"{root}/{v}"
+    schema = footer_schema(path)
+    return (spark.read.schema(schema) if schema else spark.read).parquet(path)
 
 
 def _with_cross_batch_gaps(
@@ -190,7 +209,9 @@ def _with_cross_batch_gaps(
     order: Sequence[str],
 ) -> DataFrame:
     """gap_us = intra-batch lag, falling back to the state table's
-    last_us for each conversation's first batch row.
+    last_us for each conversation's first batch row; ``_late`` flags a
+    row at or before its conversation's recorded last_us (the
+    ordered-append contract's violation; null where either is null).
 
     No broadcast hint on the state side: at warehouse scale the state
     table (one row per conversation ever ingested) does not fit in
@@ -204,10 +225,26 @@ def _with_cross_batch_gaps(
         batch = batch.join(prev, on=key, how="left")
     else:
         batch = batch.withColumn("_prev_us", F.lit(None).cast("long"))
-    return batch.withColumn(
-        "gap_us",
-        F.coalesce(F.col("_gap_intra"), us - F.col("_prev_us")),
+    return batch.withColumns(
+        {
+            "gap_us": F.coalesce(F.col("_gap_intra"), us - F.col("_prev_us")),
+            "_late": us <= F.col("_prev_us"),
+        }
     ).drop("_gap_intra", "_prev_us")
+
+
+def _move_staged_files(stage: str, table: str) -> None:
+    """Move every parquet file under ``stage`` into the same relative
+    leaf directory of ``table``. Spark names each file it writes after
+    its write job, so none collides with a file already there."""
+    for root, _dirs, files in os.walk(stage):
+        parquet = [f for f in files if f.endswith(".parquet")]
+        if not parquet:
+            continue
+        leaf = os.path.join(table, os.path.relpath(root, stage))
+        os.makedirs(leaf, exist_ok=True)
+        for f in parquet:
+            os.rename(os.path.join(root, f), os.path.join(leaf, f))
 
 
 def append_transcripts(
@@ -221,22 +258,31 @@ def append_transcripts(
 ) -> list:
     """Append a batch with cross-batch-exact ``gap_us``; returns the
     sorted list of event dates the batch touched (the refresh targets),
-    with a trailing None when a batch row has a null ``ts``.
+    with a trailing None when a batch row has a null ``ts``. A batch
+    without rows commits nothing and returns ``[]``.
 
     The intra-batch gap is the usual per-conv lag; each conv's FIRST
     batch row takes its gap from the state table's last_us (null if the
-    conv is new). State update = merge of old state with the batch's
-    per-conv max — one small-table write, no raw scan.
+    conv is new). The batch is evaluated once, by one staged write; the
+    state update merges the old state with the staged rows' per-conv
+    max ts — one small-table write, no raw scan.
 
     Write protocol (crash-detectable, see module docstring):
       1. refuse if a previous append left an INTENT marker;
-      2. write the merged state as a NEW immutable version dir (orphan
+      2. write the gapped batch into ``<fact>/_append_staging`` (hidden
+         from readers by its leading ``_``), counting its late rows on
+         the way; if any, delete the staging and refuse the batch. A
+         crash here leaves a stale staging that the next append
+         overwrites;
+      3. write the merged state as a NEW immutable version dir (orphan
          on failure — harmless, CURRENT still points at the old one);
-      3. write INTENT; 4. append the fact rows; 5. atomically swap
-         CURRENT to the new version (os.replace); 6. clear INTENT.
+      4. write INTENT; 5. move the staged files into their
+         ``conv_bucket=/event_date=`` leaves; 6. append the log line;
+         7. atomically swap CURRENT to the new version (os.replace);
+         8. clear INTENT. A crash between 4 and 8 leaves the marker,
+         and the next append refuses to run.
     """
     root = _state_root(fact_path)
-    os.makedirs(root, exist_ok=True)
     if os.path.exists(_intent_file(root)):
         raise RuntimeError(
             f"previous append to {fact_path} did not complete (INTENT marker "
@@ -254,8 +300,8 @@ def append_transcripts(
             "state table's conv_bucket. Pass the original n_buckets (or "
             "rebuild the table to re-bucket)."
         )
-    # the state is opened once (one schema inference); the late check and
-    # the gap join read it pruned, the merge below reads all of it
+    # the state is opened once; the gap join reads it pruned, the merge
+    # below reads all of it
     state = read_conv_state(spark, fact_path)
     touched_state = state
     if state is None and os.path.exists(fact_path):
@@ -268,66 +314,67 @@ def append_transcripts(
 
     bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
     us = F.unix_micros(F.col(ts))
-    # the batch's bookkeeping values in one aggregate: touched
-    # buckets (state pruning; O(n_buckets) values, same class as
-    # checkpoint), event-time range and touched dates (append-log line).
-    # collect_set drops nulls, so a null ts is flagged on its own.
+    # the batch's bookkeeping values in one aggregate: row count (an
+    # empty batch stops here), touched buckets (state pruning;
+    # O(n_buckets) values, same class as checkpoint), event-time range
+    # and touched dates (append-log line). collect_set drops nulls, so a
+    # null ts is flagged on its own.
     meta = new_df.agg(
+        F.count(F.lit(1)).alias("rows"),
         F.collect_set(bucket).alias("buckets"),
         F.min(us).alias("lo"),
         F.max(us).alias("hi"),
         F.collect_set(F.to_date(ts)).alias("dates"),
         F.bool_or(F.col(ts).isNull()).alias("null_ts"),
     ).collect()[0]
+    if not meta.rows:
+        return []
     touched_dates = sorted(meta.dates) + ([None] if meta.null_ts else [])
-    if state is not None:
+    if state is not None and len(meta.buckets) < n_buckets:
         # prune the state read to the buckets this batch touches
-        if len(meta.buckets) < n_buckets:
-            touched_state = state.filter(F.col("conv_bucket").isin(meta.buckets))
-        # enforce the ordered-append contract LOUDLY: a batch row at or
-        # before a conversation's recorded last_us would get a wrong
-        # (negative/garbage) cross-batch gap — the one-shot equivalence
-        # silently breaks. Late data must go through a rebuild instead.
-        # Cost: one tiny agg over the batch joined to pruned state.
-        late = (
-            new_df.groupBy(key)
-            .agg(F.min(F.unix_micros(F.col(ts))).alias("_min_us"))
-            .join(touched_state.select(key, "last_us"), on=key, how="inner")
-            .filter(F.col("_min_us") <= F.col("last_us"))
-        )
-        n_late = late.count()
-        if n_late:
-            sample = [r[key] for r in late.select(key).limit(5).collect()]
-            raise RuntimeError(
-                f"append to {fact_path} violates the per-conversation "
-                f"time-ordered contract: {n_late} conversation(s) have batch "
-                f"rows at/before their recorded last timestamp (e.g. "
-                f"{sample}); cross-batch gap_us would be wrong. Rebuild the "
-                "affected conversations (or the table) instead of appending."
-            )
+        touched_state = state.filter(F.col("conv_bucket").isin(meta.buckets))
+
+    # 2. the one evaluation of the batch: a staged write of its gapped
+    # rows. The ordered-append contract is enforced LOUDLY on the way: a
+    # row at or before its conversation's recorded last_us would get a
+    # wrong (negative/garbage) cross-batch gap and silently break the
+    # one-shot equivalence, so its count rides the write; late data must
+    # go through a rebuild instead.
+    stage = f"{fact_path}/{APPEND_STAGING}"
     batch = _with_cross_batch_gaps(new_df, touched_state, key, ts, order)
-
-    # 2. new immutable state version (conv_id -> max last_us), bucketed
-    batch_state = new_df.groupBy(key).agg(F.max(us).alias("last_us"))
-    merged = (
-        state.select(key, "last_us")
-        .unionByName(batch_state)
-        .groupBy(key)
-        .agg(F.max("last_us").alias("last_us"))
-        if state is not None
-        else batch_state
+    late = Observation()
+    write_transcripts(
+        batch.observe(late, F.count_if("_late").alias("n")).drop("_late"),
+        stage, n_buckets=n_buckets, key=key, ts=ts,
     )
-    next_v = f"v_{(int(cur[2:]) if cur else 0) + 1:06d}"
-    merged.withColumn("conv_bucket", bucket).write.mode("overwrite").partitionBy(
-        "conv_bucket"
-    ).parquet(f"{root}/{next_v}")
+    if _observed(late).get("n"):
+        shutil.rmtree(stage)
+        late_convs = batch.filter("_late").select(key).distinct()
+        n_late = late_convs.count()
+        sample = [r[key] for r in late_convs.limit(5).collect()]
+        raise RuntimeError(
+            f"append to {fact_path} violates the per-conversation "
+            f"time-ordered contract: {n_late} conversation(s) have batch "
+            f"rows at/before their recorded last timestamp (e.g. "
+            f"{sample}); cross-batch gap_us would be wrong. Rebuild the "
+            "affected conversations (or the table) instead of appending."
+        )
 
-    # 3-6. INTENT-bracketed fact append + atomic pointer swap
+    # 3. new immutable state version (conv_id -> max last_us), bucketed:
+    # the old state and the staged rows in one group-by
+    last = read_fact_leaves(spark, stage).select(key, us.alias("last_us"))
+    if state is not None:
+        last = state.select(key, "last_us").unionByName(last)
+    next_v = f"v_{(int(cur[2:]) if cur else 0) + 1:06d}"
+    last.groupBy(key).agg(F.max("last_us").alias("last_us")).withColumn(
+        "conv_bucket", bucket
+    ).write.mode("overwrite").partitionBy("conv_bucket").parquet(f"{root}/{next_v}")
+
+    # 4-8. INTENT-bracketed move of the staged files + atomic pointer swap
     with open(_intent_file(root), "w") as f:
         json.dump({"version": next_v, "prev": cur}, f)
-    write_transcripts(
-        batch, fact_path, n_buckets=n_buckets, key=key, ts=ts, mode="append"
-    )
+    _move_staged_files(stage, fact_path)
+    shutil.rmtree(stage)
     # per-append manifest line BEFORE the pointer swap: a crash between
     # them leaves an entry for an uncommitted version (harmless — the
     # realtime clamp can only over-clamp, and INTENT flags the crash);
@@ -384,7 +431,7 @@ def refresh_tiers(
     sketch-carrying tables with sketch-less ones (mixed parquet schemas
     read back nondeterministically); an EXPLICIT value that contradicts
     the existing tables raises instead."""
-    from gmql_spark.checkpoint import _observed, _parquet_stats
+    from gmql_spark.checkpoint import _parquet_stats
     from gmql_spark.operators.rollup import (
         DEFAULT_ROLES,
         _build_tiers,

@@ -18,6 +18,8 @@ import re
 import shutil
 from datetime import date, timedelta
 
+from gmql_spark.sources.catalog import footer_schema
+
 DEFAULT_POLICY = {"raw": 30, "1m": 90, "1h": 365, "1d": None}  # days to keep
 
 
@@ -106,9 +108,11 @@ def compact_partitions(
     written to an underscore-prefixed staging dir (invisible to Spark's
     reader) and swapped into place by :func:`swap_leaf` — so the table
     is never read-and-overwritten in the same job (self-overwrite at job
-    commit is non-atomic and version/config-sensitive). A crash between
-    the swap's two renames leaves the partition absent from the table
-    but intact under ``_compact_trash/`` (recover by renaming it back).
+    commit is non-atomic and version/config-sensitive). Each leaf is
+    read with the schema of one of its footers, so a rewrite is one
+    Spark job. A crash between the swap's two renames leaves the
+    partition absent from the table but intact under
+    ``_compact_trash/`` (recover by renaming it back).
     Returns {partition_value: files_before} for the rewritten partitions."""
     frag: dict[str, int] = {}
     for entry in sorted(os.listdir(table_path)):
@@ -129,7 +133,11 @@ def compact_partitions(
         src = os.path.join(table_path, leaf)
         stage = os.path.join(stage_root, leaf)
         shutil.rmtree(stage, ignore_errors=True)  # THIS partition's stale staging
-        spark.read.parquet(src).coalesce(1).write.mode("overwrite").parquet(stage)
+        # the leaf's schema from a footer: no inference job unless the
+        # leaf holds no parquet file Spark wrote
+        schema = footer_schema(src)
+        reader = spark.read.schema(schema) if schema else spark.read
+        reader.parquet(src).coalesce(1).write.mode("overwrite").parquet(stage)
         swap_leaf(stage, src, trash="_compact_trash")
     with contextlib.suppress(OSError):  # a crashed run's staging stays
         os.rmdir(stage_root)

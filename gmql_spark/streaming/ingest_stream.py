@@ -53,14 +53,14 @@ def stream_ingest(
     ``{"processingTime": "1 minute"}`` for a resident ingester."""
 
     def _ingest(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+        # an empty micro-batch touches no date: the append commits nothing
         dates = append_transcripts(
             batch.sparkSession, batch, fact_path, n_buckets=n_buckets, key=key, ts=ts
         )
-        refresh_tiers(
-            batch.sparkSession, fact_path, out_dir, dates, tiers=tiers, key=key, ts=ts
-        )
+        if dates:
+            refresh_tiers(
+                batch.sparkSession, fact_path, out_dir, dates, tiers=tiers, key=key, ts=ts
+            )
 
     writer = stream.writeStream.foreachBatch(_ingest).option(
         "checkpointLocation", checkpoint_dir

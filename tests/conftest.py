@@ -62,3 +62,13 @@ def spark_jobs(spark, fn) -> int:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # the store is fed asynchronously
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def codegen_compiles(spark, fn) -> int:
+    """Number of classes Janino compiles while ``fn()`` runs: the delta
+    of the JVM's ``CodegenMetrics`` compile counter, read without a
+    Spark job. A class served from the codegen cache is not counted."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    fn()
+    return metrics.METRIC_COMPILATION_TIME().getCount() - before

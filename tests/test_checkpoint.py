@@ -292,3 +292,21 @@ def test_pipeline_bucket_job_budget(spark, tmp_path):
 
     for run in (first_bucket, second_bucket):
         assert spark_jobs(spark, run) <= 4
+
+
+def test_second_pipeline_run_compiles_nothing(spark, tmp_path):
+    """A second ``run_pipeline`` of the same one-bucket table into a
+    fresh ``out_dir`` finds every generated class of its plans in the
+    codegen cache: it compiles none."""
+    from tests.conftest import codegen_compiles
+
+    fact = str(tmp_path / "fact")
+    write_transcripts(
+        datagen.transcripts_spark(spark, n_conv=30), fact, n_buckets=1,
+        precompute_gaps=True,
+    )
+    kw = dict(n_buckets=1, raw_path=fact, compress=True)
+    run_pipeline(spark, None, str(tmp_path / "first"), **kw)
+    assert codegen_compiles(
+        spark, lambda: run_pipeline(spark, None, str(tmp_path / "second"), **kw)
+    ) == 0

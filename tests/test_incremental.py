@@ -258,14 +258,21 @@ def test_out_of_order_append_is_refused(spark, tmp_path, split_data):
     wrong gap_us would break one-shot equivalence). Appending the
     batches in the wrong order trips it; the fact table and state stay
     untouched."""
+    import glob
+    import os
+
     _, b1, b2 = split_data
     fact = str(tmp_path / "fact_ooo")
     append_transcripts(spark, b2, fact, n_buckets=4)  # later half first
     state_before = read_conv_state(spark, fact).count()
+    files_before = sorted(glob.glob(f"{fact}/conv_bucket=*/event_date=*/*.parquet"))
     with pytest.raises(RuntimeError, match="time-ordered contract"):
         append_transcripts(spark, b1, fact, n_buckets=4)
-    # refused append left no INTENT marker and didn't touch state
+    # refused append left no INTENT marker, no staged rows, and didn't
+    # touch the state or the fact table
     assert read_conv_state(spark, fact).count() == state_before
+    assert sorted(glob.glob(f"{fact}/conv_bucket=*/event_date=*/*.parquet")) == files_before
+    assert not os.path.exists(f"{fact}/_append_staging")
     append_transcripts(
         spark,
         b1.withColumn(
@@ -359,13 +366,17 @@ def test_refresh_sketch_mode_guard(spark, tmp_path, split_data):
 
 def test_append_and_refresh_job_budget(spark, tmp_path, split_data):
     """An append runs one aggregate for its bookkeeping values
-    (touched buckets, event-time range, touched dates) and opens the
-    conv state once; a refresh of three tiers reads its sketch-mode
-    probe and the fact schema from parquet footers and builds every
-    tier in one one-exchange plan, written once, with the watermark
-    observed on that write. Measured: 15 jobs per append (16 with two
-    state reads) and 2 per refresh (16 with one write per tier, 6 with
-    a schema inference and a three-exchange tool map)."""
+    (touched buckets, event-time range, touched dates), opens the conv
+    state with its footer schema, evaluates the batch once in a staged
+    write that observes the late-row count, and merges the new state
+    version from the staged rows in one group-by; a refresh of three
+    tiers reads its sketch-mode probe and the fact schema from parquet
+    footers and builds every tier in one one-exchange plan, written
+    once, with the watermark observed on that write. Measured: 9 jobs
+    per append (15 with a state schema inference, a separate late count
+    and a fact write that re-read the batch) and 2 per refresh (16 with
+    one write per tier, 6 with a schema inference and a three-exchange
+    tool map)."""
     from tests.conftest import spark_jobs
 
     _, b1, b2 = split_data
@@ -374,13 +385,81 @@ def test_append_and_refresh_job_budget(spark, tmp_path, split_data):
     dates = []
     assert spark_jobs(
         spark, lambda: dates.extend(append_transcripts(spark, b2, fact, n_buckets=4))
-    ) <= 15
+    ) <= 9
     res = {}
     assert spark_jobs(
         spark, lambda: res.update(refresh_tiers(spark, fact, out, dates=dates))
     ) <= 2
     ts_max = b2.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
     assert res["watermark_us"] == ts_max
+
+
+def test_empty_append_commits_nothing(spark, tmp_path, split_data):
+    """A batch without rows returns no dates and commits nothing: the
+    CURRENT pointer, the state directory and the append log stay as
+    they were, and no staging is left behind."""
+    import os
+
+    from tests.conftest import spark_jobs
+
+    _, b1, _ = split_data
+    fact = str(tmp_path / "fact")
+    append_transcripts(spark, b1, fact, n_buckets=4)
+    root = f"{fact}/_conv_state"
+
+    def snapshot():
+        with open(f"{root}/CURRENT") as f, open(f"{root}/_append_log.jsonl") as g:
+            return f.read(), sorted(os.listdir(root)), g.read()
+
+    before = snapshot()
+    empty = b1.filter(F.col("turn_idx") < 0)
+    dates = []
+    # as many jobs as one global aggregate of the batch: the bookkeeping
+    # aggregate alone runs, and nothing is written
+    assert spark_jobs(
+        spark, lambda: dates.extend(append_transcripts(spark, empty, fact, n_buckets=4))
+    ) == spark_jobs(spark, lambda: empty.groupBy().count().collect())
+    assert dates == []
+    assert snapshot() == before
+    assert not os.path.exists(f"{fact}/_append_staging")
+    # an empty first append creates no table at all
+    fresh = str(tmp_path / "fresh")
+    assert append_transcripts(spark, empty, fresh, n_buckets=4) == []
+    assert not os.path.exists(fresh)
+
+
+def test_warm_ingest_cycle_compiles_nothing(spark, tmp_path, split_data):
+    """An append → refresh → realtime query → compaction cycle that
+    repeats on a copy of the same tables finds every generated class in
+    the codegen cache: it compiles none. (At Spark's default cache of
+    100 entries the cycle's working set does not fit, and every repeat
+    recompiles all of it.)"""
+    import shutil
+
+    from gmql_spark.realtime import realtime_rollup
+    from gmql_spark.retention import compact_fact_table, compact_tier_tables
+    from tests.conftest import codegen_compiles
+
+    _, b1, b2 = split_data
+    base = tmp_path / "base"
+    refresh_tiers(
+        spark, f"{base}/fact", f"{base}/tiers",
+        dates=append_transcripts(spark, b1, f"{base}/fact", n_buckets=4),
+    )
+    for copy in ("first", "second"):
+        shutil.copytree(base, tmp_path / copy)
+
+    def cycle(copy):
+        fact, out = f"{tmp_path / copy}/fact", f"{tmp_path / copy}/tiers"
+        refresh_tiers(
+            spark, fact, out, dates=append_transcripts(spark, b2, fact, n_buckets=4)
+        )
+        realtime_rollup(spark, fact, out, tier="1h").count()
+        compact_fact_table(spark, fact, min_files=1)
+        compact_tier_tables(spark, out, min_files=1)
+
+    cycle("first")
+    assert codegen_compiles(spark, lambda: cycle("second")) == 0
 
 
 @pytest.mark.parametrize("mode,budget", [(True, 2), ("digest", 10)])

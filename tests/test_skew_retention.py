@@ -594,3 +594,59 @@ def test_compact_tier_tables_end_to_end(spark, tmp_path):
     refresh_tiers(spark, fact, tiers_dir, dates=sorted(dates)[:1])
     for t in ("1m", "1h", "1d"):
         pd.testing.assert_frame_equal(serving(t), pre[t])
+
+
+def test_compaction_reads_leaves_with_footer_schema(spark, tmp_path, monkeypatch):
+    """Each compacted leaf is opened with the schema of one of its
+    footers: one Spark job fewer per leaf than opening it with schema
+    inference (the path a leaf without a Spark-written footer takes),
+    with the same rows and the same file schema either way."""
+    import glob
+    import os
+    import shutil
+
+    from gmql_spark import datagen, retention
+    from gmql_spark.incremental import append_transcripts
+    from gmql_spark.sources.catalog import footer_schema
+    from tests.conftest import spark_jobs
+
+    from pyspark.sql.window import Window
+
+    raw = datagen.transcripts_spark(spark, n_conv=24)
+    fact = str(tmp_path / "fact")
+    # cut each conversation at the middle of its time range (tied
+    # timestamps land on one side), so its leaf gets a file per append
+    us, w = F.unix_micros("ts"), Window.partitionBy("conv_id")
+    cut = raw.withColumn("_early", us < (F.min(us).over(w) + F.max(us).over(w)) / 2)
+    for early in (True, False):
+        batch = cut.filter(F.col("_early") == early).drop("_early")
+        append_transcripts(spark, batch, fact, n_buckets=2)
+    inferred = str(tmp_path / "inferred")
+    shutil.copytree(fact, inferred)
+
+    def rows(path):
+        pdf = spark.read.parquet(path).toPandas()
+        return pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+
+    before = rows(fact)
+    jobs, done = {}, {}
+    jobs["footer"] = spark_jobs(
+        spark,
+        lambda: done.update(footer=retention.compact_fact_table(spark, fact, min_files=1)),
+    )
+    monkeypatch.setattr(retention, "footer_schema", lambda path: None)
+    jobs["inferred"] = spark_jobs(
+        spark,
+        lambda: done.update(
+            inferred=retention.compact_fact_table(spark, inferred, min_files=1)
+        ),
+    )
+    monkeypatch.undo()
+    assert done["footer"] == done["inferred"] and done["footer"], done
+    assert jobs["inferred"] - jobs["footer"] == len(done["footer"]), jobs
+    pd.testing.assert_frame_equal(rows(fact), before)
+    pd.testing.assert_frame_equal(rows(inferred), before)
+    for leaf in done["footer"]:
+        (a,) = glob.glob(f"{fact}/{leaf}/*.parquet")
+        (b,) = glob.glob(f"{inferred}/{leaf}/*.parquet")
+        assert footer_schema(os.path.dirname(a)) == footer_schema(os.path.dirname(b))

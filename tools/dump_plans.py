@@ -7,21 +7,29 @@ queries, under pseudo-names: the transcript 1m tier rollup plan
 (``gsl_cascade_chain``), the tier plan of one
 ``checkpoint.run_pipeline`` bucket as the pipeline forms it
 (``pipeline_bucket_tiers``: bucket 0 of a table written with ingest-time
-gaps, every tier of the bucket in one frame) and the plan of the one
+gaps, every tier of the bucket in one frame), the plan of the one
 staged write of ``incremental.refresh_tiers``, without sketches
 (``refresh_tiers``: every tier of every date of that table in one frame)
-and with ``with_sketches=True`` (``refresh_tiers_sketches``).
+and with ``with_sketches=True`` (``refresh_tiers_sketches``), and the
+plan of the write that lands an ``incremental.append_transcripts`` batch
+(``append_transcripts``: the second half of each conversation appended
+onto a table holding the first half), captured from a real append.
 
-Usage: python tools/dump_plans.py <out_dir> <tag> [sf_dir] [query ...]
+Usage: python tools/dump_plans.py <out_dir> <tag> [sf_dir] [name ...]
   out_dir: e.g. plans/r09 (created if missing; a relative path is taken
            from the repository root)
   tag:     e.g. "before" / "after" (suffix of the artifact files)
+  name:    a declared query or a pseudo-name; only the named ones are
+           dumped, and the declared queries run only when one is named
+           (without names: the twelve queries below and every
+           pseudo-name)
 """
 
 from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -42,6 +50,122 @@ DEFAULT_QUERIES = [
 ]
 
 
+def _transcripts(spark):
+    from gmql_spark.datagen import transcripts_spark
+
+    return transcripts_spark(spark, n_conv=50)
+
+
+def transcript_rollup_1m(spark, tmp):
+    """bench-only surface: the 1m transcript tier"""
+    from gmql_spark.datagen import ROLES, TOOL_NAMES
+    from gmql_spark.operators.rollup import rollup, with_gap_seconds
+
+    raw_g = with_gap_seconds(_transcripts(spark)).select(
+        "conv_id", "ts", "role", "tool", "gap_us", "gap_s"
+    )
+    return rollup(raw_g, "1m", role_values=list(ROLES), tool_values=list(TOOL_NAMES))
+
+
+def gsl_cascade_chain(spark, tmp):
+    """GSL surface: ROLLUP 1m -> CASCADE 1h -> CASCADE 1d with sketches"""
+    from gmql_spark.operators.rollup import cascade_rollup, rollup
+
+    return cascade_rollup(
+        cascade_rollup(rollup(_transcripts(spark), "1m", with_sketches=True), "1h"), "1d"
+    )
+
+
+def _gapped_fact(spark, tmp):
+    from gmql_spark.sources.catalog import write_transcripts
+
+    fact = os.path.join(tmp, "gapped_fact")
+    if not os.path.isdir(fact):
+        write_transcripts(_transcripts(spark), fact, n_buckets=4, precompute_gaps=True)
+    return fact
+
+
+def _tiers(frame, with_sketches):
+    from gmql_spark.operators.rollup import DEFAULT_ROLES, _build_tiers, with_gap_seconds
+
+    return _build_tiers(
+        with_gap_seconds(frame), None, ("1m", "1h", "1d"), key="conv_id", ts="ts",
+        role_values=DEFAULT_ROLES, tool_values=None, with_sketches=with_sketches,
+    )
+
+
+def pipeline_bucket_tiers(spark, tmp):
+    """bench-only surface: one run_pipeline bucket's tier plan"""
+    from gmql_spark.sources.catalog import read_fact_leaves
+
+    return _tiers(read_fact_leaves(spark, _gapped_fact(spark, tmp), bucket=0), False)
+
+
+def _refresh(with_sketches):
+    def dump_refresh(spark, tmp):
+        """bench-only surface: the refresh's staged write, as
+        refresh_tiers forms it, over every event date of the table"""
+        from pyspark.sql import functions as F
+
+        from gmql_spark.sources.catalog import read_fact_leaves
+
+        fact = _gapped_fact(spark, tmp)
+        dates = sorted(
+            e.split("=", 1)[1]
+            for e in os.listdir(os.path.join(fact, "conv_bucket=0"))
+            if e.startswith("event_date=")
+        )
+        return _tiers(read_fact_leaves(spark, fact, dates=dates), with_sketches).withColumn(
+            "window_date", F.to_date("window_start")
+        )
+
+    return dump_refresh
+
+
+def append_transcripts(spark, tmp):
+    """the write that lands an append's batch in the fact table (or in
+    its staging directory), captured from a real append"""
+    from pyspark.sql import functions as F
+    from pyspark.sql.readwriter import DataFrameWriter
+    from pyspark.sql.window import Window
+
+    from gmql_spark import incremental
+
+    half = _transcripts(spark).withColumn(
+        "_n", F.max("turn_idx").over(Window.partitionBy("conv_id"))
+    )
+    first = F.col("turn_idx") <= F.col("_n") / 2
+    fact = os.path.join(tmp, "append_fact")
+    incremental.append_transcripts(spark, half.filter(first).drop("_n"), fact, n_buckets=4)
+    written = []
+    real_parquet = DataFrameWriter.parquet
+
+    def recording_parquet(self, path, *args, **kw):
+        if not path.startswith(f"{fact}/_conv_state"):  # fact rows, not state
+            written.append(self._df)
+        return real_parquet(self, path, *args, **kw)
+
+    DataFrameWriter.parquet = recording_parquet
+    try:
+        incremental.append_transcripts(
+            spark, half.filter(~first).drop("_n"), fact, n_buckets=4
+        )
+    finally:
+        DataFrameWriter.parquet = real_parquet
+    (df,) = written
+    return df
+
+
+PSEUDO = {
+    "transcript_rollup_1m": transcript_rollup_1m,
+    "gsl_cascade_chain": gsl_cascade_chain,
+    "pipeline_bucket_tiers": pipeline_bucket_tiers,
+    "refresh_tiers": _refresh(False),
+    "refresh_tiers_sketches": _refresh(True),
+    "append_transcripts": append_transcripts,
+}
+
+
 def main() -> int:
     if len(sys.argv) < 3:
         print(__doc__, file=sys.stderr)
@@ -49,9 +173,8 @@ def main() -> int:
     out_dir = os.path.join(REPO, sys.argv.pop(1))
     tag = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001"
-    names = sys.argv[3:] or DEFAULT_QUERIES
+    names = sys.argv[3:] or [*DEFAULT_QUERIES, *PSEUDO]
 
-    import __spark_entry__ as entrymod
     from gmql_spark.session import get_spark
 
     spark = get_spark(8, app_name=f"dump-plans-{tag}", shuffle_partitions=16)
@@ -66,64 +189,17 @@ def main() -> int:
         print(f"wrote {name}_{tag}.txt ({plan.count('Exchange')} Exchange)",
               file=sys.stderr)
 
-    qs = entrymod.queries()
-    for name in names:
-        dump(name, qs[name](spark, sf_dir))
+    queries = [n for n in names if n not in PSEUDO]
+    if queries:
+        import __spark_entry__ as entrymod
 
-    # bench-only surface: the 1m transcript tier
-    from gmql_spark.datagen import ROLES, TOOL_NAMES, transcripts_spark
-    from gmql_spark.operators.rollup import cascade_rollup, rollup, with_gap_seconds
-
-    raw = transcripts_spark(spark, n_conv=50)
-    raw_g = with_gap_seconds(raw).select(
-        "conv_id", "ts", "role", "tool", "gap_us", "gap_s"
-    )
-    dump(
-        "transcript_rollup_1m",
-        rollup(raw_g, "1m", role_values=list(ROLES), tool_values=list(TOOL_NAMES)),
-    )
-
-    # GSL surface: ROLLUP 1m -> CASCADE 1h -> CASCADE 1d with sketches
-    dump(
-        "gsl_cascade_chain",
-        cascade_rollup(
-            cascade_rollup(rollup(raw, "1m", with_sketches=True), "1h"), "1d"
-        ),
-    )
-
-    # bench-only surface: one run_pipeline bucket's tier plan
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from gmql_spark.operators.rollup import DEFAULT_ROLES, _build_tiers
-    from gmql_spark.sources.catalog import read_fact_leaves, write_transcripts
-
+        qs = entrymod.queries()
+        for name in queries:
+            dump(name, qs[name](spark, sf_dir))
     with tempfile.TemporaryDirectory() as tmp:
-        write_transcripts(raw, tmp, n_buckets=4, precompute_gaps=True)
-        part = read_fact_leaves(spark, tmp, bucket=0)
-        dump("pipeline_bucket_tiers", _build_tiers(
-            with_gap_seconds(part), None, ("1m", "1h", "1d"), key="conv_id",
-            ts="ts", role_values=DEFAULT_ROLES, tool_values=None,
-            with_sketches=False,
-        ))
-
-        # bench-only surfaces: the refresh's staged write, as
-        # refresh_tiers forms it, over every event date of the table
-        dates = sorted(
-            e.split("=", 1)[1]
-            for e in os.listdir(os.path.join(tmp, "conv_bucket=0"))
-            if e.startswith("event_date=")
-        )
-        fact = read_fact_leaves(spark, tmp, dates=dates)
-        for name, with_sketches in (
-            ("refresh_tiers", False), ("refresh_tiers_sketches", True),
-        ):
-            dump(name, _build_tiers(
-                with_gap_seconds(fact), None, ("1m", "1h", "1d"), key="conv_id",
-                ts="ts", role_values=DEFAULT_ROLES, tool_values=None,
-                with_sketches=with_sketches,
-            ).withColumn("window_date", F.to_date("window_start")))
+        for name in names:
+            if name in PSEUDO:
+                dump(name, PSEUDO[name](spark, tmp))
     return 0
 
 
