@@ -9,26 +9,21 @@ bucketing the storage layout uses — so a killed job re-runs only the
 buckets whose manifest entry is missing.
 
 Driver-side work is O(#buckets) JSON bookkeeping; all data work stays in
-Spark jobs. At scale each bucket job prunes to its partition via the
-storage layout (`bucket=` dirs / Iceberg bucket transform) instead of
-scanning the full input.
+Spark jobs, each bucket job reading only its own fact leaves
+(``sources.catalog.read_fact_leaves``).
 
 One plan and one write per bucket: every tier of the bucket is one
 frame from the tier builder (``rollup._build_tiers``), written once,
-partitioned by tier, into ``<out_dir>/_staging``; its Gorilla streams
-are one more write from that staging. Each ``tier=<t>`` leaf is then
-swapped into ``rollup_<t>/bucket=<b>`` (``gorilla_<t>/bucket=<b>``)
-(``retention.swap_leaf``); the manifest line follows the last swap. A crash
-before that line — after the staging write, or between renames — leaves
-the bucket unfinished: the next run clears the stale staging directory
-and redoes the bucket, replacing whatever leaves it had already moved.
-rows_in and the watermark are observed on the bucket's raw rows during
-the write (``DataFrame.observe``); rows and bytes out come from the
-parquet footers. A bucket of a table (``raw_path``) reads only its own
-leaves, with the schema from a footer
-(``sources.catalog.read_fact_leaves``): no schema-inference job. With
-``compress=True`` and a table written with ingest-time gaps a bucket
-runs 4 Spark jobs.
+partitioned by tier, into the pipeline staging dir; its Gorilla streams
+are one more write from that staging. Each staged tier leaf is then
+swapped into the bucket's leaf of its tier (and Gorilla) table
+(``sources.catalog.swap_leaf``); the manifest line follows the last
+swap. A crash before that line leaves the bucket unfinished: the next
+run clears the stale staging directory and redoes the bucket. rows_in
+and the watermark are observed on the bucket's raw rows during the
+write (``DataFrame.observe``); rows and bytes out come from the parquet
+footers. With ``compress=True`` and a table written with ingest-time
+gaps a bucket runs 4 Spark jobs.
 """
 
 from __future__ import annotations
@@ -43,20 +38,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-
-def _parquet_stats(path: str) -> tuple[int, int]:
-    """(rows, bytes) of all parquet files under ``path`` via footers —
-    no Spark job."""
-    import pyarrow.parquet as pq
-
-    rows = size = 0
-    for root, _dirs, files in os.walk(path):
-        for fn in files:
-            if fn.endswith(".parquet"):
-                fp = os.path.join(root, fn)
-                rows += pq.ParquetFile(fp).metadata.num_rows
-                size += os.path.getsize(fp)
-    return rows, size
+from gmql_spark.sources import catalog
 
 
 def _observed(obs: Observation) -> dict:
@@ -74,7 +56,7 @@ def _write_by_tier(df: DataFrame, path: str, tiers: Sequence[str]) -> None:
     frame would: a partitioned write creates no leaf for it."""
     df.write.mode("overwrite").partitionBy("tier").parquet(path)
     for tier in tiers:
-        leaf = f"{path}/tier={tier}"
+        leaf = catalog.leaf(path, tier=tier)
         if not os.path.exists(leaf):
             empty = df.sparkSession.createDataFrame([], df.drop("tier").schema)
             empty.write.parquet(leaf)
@@ -138,8 +120,8 @@ def run_pipeline(
 ) -> dict:
     """Run the tier rollup bucket-by-bucket with checkpoint/resume.
 
-    Buckets are ``pmod(xxhash64(key), n_buckets)`` — deterministic, and
-    aligned with the storage layout's bucket transform. **Pass
+    Buckets are ``catalog.bucket_of(key, n_buckets)``, the storage
+    layout's bucket transform. **Pass
     ``raw_path``** (a table written by ``catalog.write_transcripts`` with
     the same ``n_buckets``) to make each bucket job PARTITION-PRUNE to
     its own ``conv_bucket=<b>`` directory — 1/n of the input scanned per
@@ -149,29 +131,16 @@ def run_pipeline(
     real table). ``fail_after`` kills the run
     after N buckets (test hook for kill/resume equivalence).
     ``compress=True`` additionally writes Gorilla-packed streams of each
-    tier's turn_count series (``gorilla_<tier>/bucket=<b>``: delta-of-
-    delta timestamps + XOR values, north-rule storage codec).
-
-    Each bucket is written once to ``<out_dir>/_staging`` and renamed
-    into place; the manifest line follows the last rename, so a crash
-    anywhere before it redoes the bucket on resume (module docstring).
-    A bucket without rows still gets a schema-only parquet per tier.
+    tier's turn_count series (delta-of-delta timestamps + XOR values,
+    north-rule storage codec). A bucket without rows still gets a
+    schema-only parquet per tier.
     """
     if raw is None and raw_path is None:
         raise ValueError("provide raw (DataFrame) or raw_path (bucketed table)")
     if raw_path is not None:
         # the job's bucket range must cover the table's layout, or high
         # buckets would silently never be processed
-        import re
-
-        try:
-            found = {
-                int(m.group(1))
-                for d in os.listdir(raw_path)
-                if (m := re.match(r"conv_bucket=(\d+)$", d))
-            }
-        except OSError:
-            found = set()
+        found = catalog.fact_buckets(raw_path)
         if found and max(found) >= n_buckets:
             raise ValueError(
                 f"table at {raw_path} has conv_bucket up to {max(found)} but "
@@ -184,12 +153,10 @@ def run_pipeline(
         _build_tiers,
         with_gap_seconds,
     )
-    from gmql_spark.retention import swap_leaf
-    from gmql_spark.sources.catalog import read_fact_leaves
 
     manifest = Manifest(f"{out_dir}/_manifest.jsonl")
     done = manifest.done_buckets(n_buckets=n_buckets)
-    stage = f"{out_dir}/_staging"
+    stage = f"{out_dir}/{catalog.PIPELINE_STAGING}"
     ran = skipped = 0
     for b in range(n_buckets):
         if b in done:
@@ -203,9 +170,9 @@ def run_pipeline(
         if raw_path is not None:
             # only the conv_bucket=<b> leaves are listed and read, with the
             # table's footer schema: no schema-inference job
-            part = read_fact_leaves(spark, raw_path, bucket=b)
+            part = catalog.read_fact_leaves(spark, raw_path, bucket=b)
         else:
-            part = raw.filter(F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)) == b)
+            part = raw.filter(catalog.bucket_of(key, n_buckets) == b)
         # rows_in/watermark ride the bucket's write: observed on the raw
         # rows (null-ts rows included), not a separate job
         meta = Observation()
@@ -225,8 +192,7 @@ def run_pipeline(
 
             # read back with the known schema: no schema-inference job
             series = (
-                spark.read.schema(tiers_df.schema)
-                .parquet(f"{stage}/rollup")
+                catalog.read_table(spark, f"{stage}/rollup", schema=tiers_df.schema)
                 .select(
                     "tier", key, "window_start",
                     F.col("turn_count").cast("double").alias("val"),
@@ -237,18 +203,20 @@ def run_pipeline(
             )
             _write_by_tier(packed, f"{stage}/gorilla", tiers)
             tables.append("gorilla")
-        for name in tables:
-            for tier in tiers:
-                leaf = f"{out_dir}/{name}_{tier}/bucket={b}"
-                swap_leaf(f"{stage}/{name}/tier={tier}", leaf)
+        dest = {
+            (n, t): catalog.leaf(catalog.tier_table(out_dir, t, n), **{catalog.TIER_BUCKET: b})
+            for n in tables for t in tiers
+        }
+        for (name, tier), leaf in dest.items():
+            catalog.swap_leaf(catalog.leaf(f"{stage}/{name}", tier=tier), leaf)
         shutil.rmtree(stage)
         tier_stats = {}
         for tier in tiers:
-            rows, nbytes = _parquet_stats(f"{out_dir}/rollup_{tier}/bucket={b}")
+            rows, nbytes = catalog.footer_stats(dest["rollup", tier])
             tier_stats[tier] = {"rows_out": rows, "bytes": nbytes}
             if compress:
-                tier_stats[tier]["gorilla_bytes"] = _parquet_stats(
-                    f"{out_dir}/gorilla_{tier}/bucket={b}"
+                tier_stats[tier]["gorilla_bytes"] = catalog.footer_stats(
+                    dest["gorilla", tier]
                 )[1]
         observed = _observed(meta)
         entry = {

@@ -11,21 +11,18 @@ the tiers incrementally and EXACTLY:
    table with the ingest-time ``gap_us`` column kept correct across
    batches: each conversation's previous last timestamp is read from a
    compact per-conversation state table (one row per conv — ≪ raw,
-   partitioned by the same ``conv_bucket = pmod(xxhash64(conv_id), n)``
-   as the fact table), so the first turn of a conv in the new batch gets
-   the same gap a full-data window would compute. Requires
+   bucketed like the fact table), so the first turn of a conv in the
+   new batch gets the same gap a full-data window would compute. Requires
    per-conversation time-ordered appends (the natural transcript ingest
    order); out-of-order appends must go through a batch rebuild.
 
-   The batch is evaluated once: its gapped rows are written, through
-   ``catalog.write_transcripts``, into ``<fact>/_append_staging``
-   (hidden from readers by the leading ``_``), with the count of rows
-   that break the ordering contract observed on that write. The new
-   state version is merged from the staged rows, and the staged files
-   are then moved into their ``conv_bucket=/event_date=`` leaves. One
-   bookkeeping aggregate before the write (touched buckets, event-time
-   range, touched dates) is the only other pass over the batch; a batch
-   without rows stops there and commits nothing.
+   The batch is evaluated once: its gapped rows are written into the
+   append staging dir, with the count of rows that break the ordering
+   contract observed on that write. The new state version is merged
+   from the staged rows, and the staged files are then moved into their
+   fact leaves. One bookkeeping aggregate before the write (touched
+   buckets, event-time range, touched dates) is the only other pass
+   over the batch; a batch without rows stops there and commits nothing.
 
    Scale notes: the state table is O(total conversations ever seen) —
    at warehouse scale far too big to broadcast, so the state join is a
@@ -38,13 +35,12 @@ the tiers incrementally and EXACTLY:
    ``window_date = to_date(window_start)``; 1m/1h/1d windows never cross
    a UTC date, and with ``gap_us`` stored in the fact table every tier
    row of date D depends only on raw rows of event_date D — so the
-   refresh reads only those dates' fact leaves, with the schema from a
-   footer (``sources.catalog.read_fact_leaves``), writes every
-   tier of those dates once, sketch columns included, into
-   ``<out_dir>/_refresh_staging`` (partitioned by tier and
-   window_date), and swaps each staged
-   ``window_date=D`` leaf into its tier table. Only dates that have
-   rows are replaced; a tier leaf of any other date is left as it is.
+   refresh reads only those dates' fact leaves, writes every tier of
+   those dates once, sketch columns included, into the refresh staging
+   dir, and swaps each staged date leaf into its tier table. Only dates
+   that have rows are replaced; a tier leaf of any other date is left
+   as it is. Every table is read and replaced through
+   ``sources.catalog``.
 
 Crash safety: state versions are immutable directories
 (``_conv_state/v_000001``, ...) selected by a tiny ``CURRENT`` pointer
@@ -54,11 +50,10 @@ pointer swap, so a crash in the middle is detected loudly on the next
 append (stale state can never be used silently) instead of producing
 wrong cross-batch gaps. A crash before the marker leaves at most a
 stale staging directory and an unreferenced state version, both
-replaced by the next append, with the fact table untouched. A tier leaf
-is replaced by two renames (``retention.swap_leaf``), so a reader sees
-the old leaf or the new one, never a half-written one; the refresh
-manifest is written after the last swap, so a refresh that crashed is
-repaired by rerunning it for the same dates.
+replaced by the next append, with the fact table untouched. A reader
+sees a tier leaf's old or new version, never a half-written one
+(``catalog.swap_leaf``); the refresh manifest is written after the last
+swap, so a refresh that crashed is repaired by rerunning it.
 
 Exactness contract (tested): append in K batches + refresh after each
 == one-shot rollup of the concatenation, bit-for-bit, per tier.
@@ -76,25 +71,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from gmql_spark.checkpoint import _observed
-from gmql_spark.retention import swap_leaf
-from gmql_spark.sources.catalog import (
-    N_BUCKETS_DEFAULT,
-    footer_schema,
-    read_fact_leaves,
-    write_transcripts,
-)
+from gmql_spark.sources import catalog
+from gmql_spark.sources.catalog import N_BUCKETS_DEFAULT
 
-STATE_DIR = "_conv_state"
 APPEND_LOG = "_append_log.jsonl"
-# leading "_" => invisible to Spark's reader: under the fact table
-APPEND_STAGING = "_append_staging"
-# ... and under the tier output dir
-REFRESH_STAGING = "_refresh_staging"
-
-
-def _state_root(fact_path: str) -> str:
-    # leading "_" => invisible to Spark's parquet reader of fact_path
-    return f"{fact_path}/{STATE_DIR}"
 
 
 def _current_file(root: str) -> str:
@@ -135,7 +115,7 @@ def read_append_log(fact_path: str) -> list[dict]:
     uncommitted version, which can only over-clamp (and the INTENT
     marker flags the crash for the next append anyway) — the reverse
     order would leave a committed append invisible to the clamp."""
-    path = f"{_state_root(fact_path)}/{APPEND_LOG}"
+    path = f"{catalog.state_root(fact_path)}/{APPEND_LOG}"
     if not os.path.exists(path):
         return []
     with open(path) as f:
@@ -190,15 +170,13 @@ def pending_append_min_us(fact_path: str, manifest: dict | None) -> int | None:
 
 def read_conv_state(spark: SparkSession, fact_path: str) -> DataFrame | None:
     """Current per-conversation state (conv_id, last_us, conv_bucket),
-    or None before the first append. Opened with the schema of one
-    footer (``footer_schema``): no schema-inference job."""
-    root = _state_root(fact_path)
+    or None before the first append. Opened through
+    ``catalog.read_table``: no schema-inference job."""
+    root = catalog.state_root(fact_path)
     v = _current_version(root)
     if v is None:
         return None
-    path = f"{root}/{v}"
-    schema = footer_schema(path)
-    return (spark.read.schema(schema) if schema else spark.read).parquet(path)
+    return catalog.read_table(spark, f"{root}/{v}")
 
 
 def _with_cross_batch_gaps(
@@ -233,20 +211,6 @@ def _with_cross_batch_gaps(
     ).drop("_gap_intra", "_prev_us")
 
 
-def _move_staged_files(stage: str, table: str) -> None:
-    """Move every parquet file under ``stage`` into the same relative
-    leaf directory of ``table``. Spark names each file it writes after
-    its write job, so none collides with a file already there."""
-    for root, _dirs, files in os.walk(stage):
-        parquet = [f for f in files if f.endswith(".parquet")]
-        if not parquet:
-            continue
-        leaf = os.path.join(table, os.path.relpath(root, stage))
-        os.makedirs(leaf, exist_ok=True)
-        for f in parquet:
-            os.rename(os.path.join(root, f), os.path.join(leaf, f))
-
-
 def append_transcripts(
     spark: SparkSession,
     new_df: DataFrame,
@@ -269,20 +233,20 @@ def append_transcripts(
 
     Write protocol (crash-detectable, see module docstring):
       1. refuse if a previous append left an INTENT marker;
-      2. write the gapped batch into ``<fact>/_append_staging`` (hidden
-         from readers by its leading ``_``), counting its late rows on
+      2. write the gapped batch into the append staging dir (hidden
+         from readers), counting its late rows on
          the way; if any, delete the staging and refuse the batch. A
          crash here leaves a stale staging that the next append
          overwrites;
       3. write the merged state as a NEW immutable version dir (orphan
          on failure — harmless, CURRENT still points at the old one);
       4. write INTENT; 5. move the staged files into their
-         ``conv_bucket=/event_date=`` leaves; 6. append the log line;
+         fact leaves; 6. append the log line;
          7. atomically swap CURRENT to the new version (os.replace);
          8. clear INTENT. A crash between 4 and 8 leaves the marker,
          and the next append refuses to run.
     """
-    root = _state_root(fact_path)
+    root = catalog.state_root(fact_path)
     if os.path.exists(_intent_file(root)):
         raise RuntimeError(
             f"previous append to {fact_path} did not complete (INTENT marker "
@@ -304,15 +268,14 @@ def append_transcripts(
     # below reads all of it
     state = read_conv_state(spark, fact_path)
     touched_state = state
-    if state is None and os.path.exists(fact_path):
-        if any(e.startswith("conv_bucket=") for e in os.listdir(fact_path)):
-            raise RuntimeError(
-                f"fact table at {fact_path} is non-empty but has no conv "
-                "state — it was not built by append_transcripts; appends "
-                "would compute wrong cross-batch gaps"
-            )
+    if state is None and catalog.fact_buckets(fact_path):
+        raise RuntimeError(
+            f"fact table at {fact_path} is non-empty but has no conv "
+            "state — it was not built by append_transcripts; appends "
+            "would compute wrong cross-batch gaps"
+        )
 
-    bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+    bucket = catalog.bucket_of(key, n_buckets)
     us = F.unix_micros(F.col(ts))
     # the batch's bookkeeping values in one aggregate: row count (an
     # empty batch stops here), touched buckets (state pruning;
@@ -340,10 +303,10 @@ def append_transcripts(
     # wrong (negative/garbage) cross-batch gap and silently break the
     # one-shot equivalence, so its count rides the write; late data must
     # go through a rebuild instead.
-    stage = f"{fact_path}/{APPEND_STAGING}"
+    stage = f"{fact_path}/{catalog.APPEND_STAGING}"
     batch = _with_cross_batch_gaps(new_df, touched_state, key, ts, order)
     late = Observation()
-    write_transcripts(
+    catalog.write_transcripts(
         batch.observe(late, F.count_if("_late").alias("n")).drop("_late"),
         stage, n_buckets=n_buckets, key=key, ts=ts,
     )
@@ -362,7 +325,7 @@ def append_transcripts(
 
     # 3. new immutable state version (conv_id -> max last_us), bucketed:
     # the old state and the staged rows in one group-by
-    last = read_fact_leaves(spark, stage).select(key, us.alias("last_us"))
+    last = catalog.read_fact_leaves(spark, stage).select(key, us.alias("last_us"))
     if state is not None:
         last = state.select(key, "last_us").unionByName(last)
     next_v = f"v_{(int(cur[2:]) if cur else 0) + 1:06d}"
@@ -373,7 +336,7 @@ def append_transcripts(
     # 4-8. INTENT-bracketed move of the staged files + atomic pointer swap
     with open(_intent_file(root), "w") as f:
         json.dump({"version": next_v, "prev": cur}, f)
-    _move_staged_files(stage, fact_path)
+    catalog.move_files(stage, fact_path)
     shutil.rmtree(stage)
     # per-append manifest line BEFORE the pointer swap: a crash between
     # them leaves an entry for an uncommitted version (harmless — the
@@ -431,7 +394,6 @@ def refresh_tiers(
     sketch-carrying tables with sketch-less ones (mixed parquet schemas
     read back nondeterministically); an EXPLICIT value that contradicts
     the existing tables raises instead."""
-    from gmql_spark.checkpoint import _parquet_stats
     from gmql_spark.operators.rollup import (
         DEFAULT_ROLES,
         _build_tiers,
@@ -442,11 +404,10 @@ def refresh_tiers(
     existing_modes = {}
     for tier in tiers:
         try:
-            schema = footer_schema(f"{out_dir}/rollup_{tier}")
+            cols = catalog.columns(catalog.tier_table(out_dir, tier))
         except Exception:
-            schema = None  # unreadable footer: treat as absent
-        if schema is not None:
-            cols = schema.fieldNames()
+            cols = None  # unreadable footer: treat as absent
+        if cols is not None:
             existing_modes[tier] = (
                 "digest" if "lat_digest" in cols else "lat_hist" in cols
             )
@@ -470,15 +431,15 @@ def refresh_tiers(
     # the state version this refresh covers: any append committed after
     # this point is "pending" for realtime-serving purposes (its batch
     # min ts clamps the effective watermark — see pending_append_min_us)
-    covered = _current_version(_state_root(fact_path))
+    covered = _current_version(catalog.state_root(fact_path))
     dates = sorted({str(d) for d in dates})
     # only the refreshed dates' leaves are listed and read, with the
     # table's footer schema: no schema-inference job
-    raw = read_fact_leaves(spark, fact_path, dates=dates)
+    raw = catalog.read_fact_leaves(spark, fact_path, dates=dates)
     # raw carries the stored gap_us, so with_gap_seconds only derives
     # gap_s — no raw-scale window shuffle
     raw_g = with_gap_seconds(raw, key=key, ts=ts)
-    stage = f"{out_dir}/{REFRESH_STAGING}"
+    stage = f"{out_dir}/{catalog.REFRESH_STAGING}"
     # staging left behind by a crash belongs to an unfinished refresh
     shutil.rmtree(stage, ignore_errors=True)
 
@@ -490,19 +451,18 @@ def refresh_tiers(
         raw_g, None, tiers, key=key, ts=ts, role_values=DEFAULT_ROLES,
         tool_values=None, with_sketches=with_sketches,
     ).observe(wm, F.max(F.unix_micros("last_ts")).alias("wm"))
-    tiers_df.withColumn("window_date", F.to_date("window_start")).write.partitionBy(
-        "tier", "window_date"
+    date_col = catalog.TIER_DATE
+    tiers_df.withColumn(date_col, F.to_date("window_start")).write.partitionBy(
+        "tier", date_col
     ).parquet(stage)
     stats = {}
     for tier in tiers:
-        table = f"{out_dir}/rollup_{tier}"
-        os.makedirs(table, exist_ok=True)
-        staged = f"{stage}/tier={tier}"
-        for leaf in sorted(os.listdir(staged)) if os.path.isdir(staged) else []:
-            swap_leaf(f"{staged}/{leaf}", f"{table}/{leaf}")
+        table = catalog.tier_table(out_dir, tier)
+        catalog.swap_leaves(catalog.leaf(stage, tier=tier), table)
         # rows of the refreshed dates from the parquet footers — no job
         stats[tier] = sum(
-            _parquet_stats(f"{table}/window_date={d}")[0] for d in dates
+            catalog.footer_stats(catalog.leaf(table, **{date_col: d}))[0]
+            for d in dates
         )
     shutil.rmtree(stage)
     # realtime watermark: the refreshed dates now reflect every raw row

@@ -41,10 +41,11 @@ import datetime as _dt
 import json
 import os
 from collections.abc import Callable, Sequence
-from glob import glob
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gmql_spark.sources import catalog
 
 TIER_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
 
@@ -115,6 +116,18 @@ def decompose_range(
     return segs
 
 
+def _segments(
+    start: _dt.datetime, end: _dt.datetime, frozen_until: _dt.datetime | None
+) -> list[tuple[str, _dt.datetime, _dt.datetime]]:
+    """``decompose_range(start, end)``; with ``frozen_until``, tier
+    segments only up to ``floor(frozen_until, 1m)`` and raw past it."""
+    if frozen_until is None:
+        return decompose_range(start, end)
+    end = end.replace(tzinfo=None)
+    cap = min(max(floor_to_tier(frozen_until, "1m"), start.replace(tzinfo=None)), end)
+    return decompose_range(start, cap) + ([("raw", cap, end)] if cap < end else [])
+
+
 def stitch_range(
     tier_dfs: dict[str, DataFrame],
     raw: DataFrame,
@@ -157,14 +170,7 @@ def stitch_range(
     from functools import reduce
 
     keys = list(keys)
-    if frozen_until is not None:
-        cap = floor_to_tier(frozen_until, "1m")
-        cap = min(max(cap, start.replace(tzinfo=None)), end.replace(tzinfo=None))
-        segs = decompose_range(start, cap)
-        if cap < end.replace(tzinfo=None):
-            segs.append(("raw", cap, end.replace(tzinfo=None)))
-    else:
-        segs = decompose_range(start, end)
+    segs = _segments(start, end, frozen_until)
     # the merge-input shape: keys + raw_aggs' output columns
     merge_cols = raw.limit(0).groupBy(*keys).agg(*raw_aggs).columns
     parts: list[DataFrame] = []
@@ -292,28 +298,17 @@ def stitch_transcripts(
     ``realtime_rollup``) is answered from raw instead of tier rows.
     The default trusts the tiers for the whole range (a refresh after
     every append, e.g. ``streaming.stream_ingest``)."""
-    frozen = None
-    if realtime:
-        from gmql_spark.incremental import pending_append_min_us
-
-        man = read_refresh_manifest(tiers_dir)
-        if man is None:
-            raise ValueError(
-                f"realtime stitch needs a refresh watermark under {tiers_dir} "
-                "— refresh_tiers has never run"
-            )
-        wm = man["watermark_us"]
-        pending = pending_append_min_us(fact_path, man)
-        if pending is not None:
-            wm = min(wm, pending)
-        frozen = _dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=wm)
-    tier_dfs = {}
-    for tier in ("1m", "1h", "1d"):
-        df = spark.read.parquet(f"{tiers_dir}/rollup_{tier}")
-        tier_dfs[tier] = df.drop(
-            *[c for c in ("window_date",) if c in df.columns]
-        )
-    raw = spark.read.parquet(fact_path)
+    frozen = _serving_watermark(fact_path, tiers_dir) if realtime else None
+    tier_dfs = {t: _read_tier(spark, tiers_dir, t) for t in ("1m", "1h", "1d")}
+    # only the fact leaves of the raw segments' dates
+    days = [
+        (str(s.date()), str((e - _dt.timedelta(microseconds=1)).date()))
+        for tier, s, e in _segments(start, end, frozen)
+        if tier == "raw"
+    ]
+    raw = catalog.read_fact_leaves(
+        spark, fact_path, dates=lambda d: any(lo <= d <= hi for lo, hi in days)
+    )
     raw_aggs = [
         F.count(F.lit(1)).alias("turn_count"),
         F.count("gap_us").alias("latency_cnt"),
@@ -389,6 +384,31 @@ def read_refresh_watermark(out_dir: str) -> int | None:
     return man["watermark_us"] if man else None
 
 
+def _serving_watermark(fact_path: str, tiers_dir: str) -> _dt.datetime:
+    """The tiers' refresh watermark, clamped by the min event ts of any
+    append no refresh covers (``incremental.pending_append_min_us``)."""
+    from gmql_spark.incremental import pending_append_min_us
+
+    man = read_refresh_manifest(tiers_dir)
+    if man is None:
+        raise ValueError(
+            f"no refresh watermark recorded under {tiers_dir} — "
+            "refresh_tiers has never run"
+        )
+    wm = man["watermark_us"]
+    pending = pending_append_min_us(fact_path, man)
+    if pending is not None:
+        wm = min(wm, pending)
+    return _dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=wm)
+
+
+def _read_tier(spark: SparkSession, tiers_dir: str, tier: str) -> DataFrame:
+    """Tier ``tier``'s table without its partition columns (no job)."""
+    return catalog.read_table(spark, catalog.tier_table(tiers_dir, tier)).drop(
+        catalog.TIER_DATE, catalog.TIER_BUCKET
+    )
+
+
 def realtime_rollup(
     spark: SparkSession,
     fact_path: str,
@@ -419,39 +439,17 @@ def realtime_rollup(
     the full raw first (exact, one extra shuffle) before the tail
     filter.
     """
-    from gmql_spark.incremental import pending_append_min_us
     from gmql_spark.operators.rollup import rollup, with_gap_seconds
-    from gmql_spark.sources.catalog import footer_schema, read_fact_leaves
 
-    man = read_refresh_manifest(tiers_dir)
     if frozen_until is None:
-        if man is None:
-            raise ValueError(
-                f"no refresh watermark recorded under {tiers_dir} and no "
-                "frozen_until given — refresh_tiers has never run"
-            )
-        wm = man["watermark_us"]
-        pending = pending_append_min_us(fact_path, man)
-        if pending is not None:
-            wm = min(wm, pending)
-        frozen_until = _dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=wm)
-
-    # both tables open with the schema of one footer: no inference job
-    table = f"{tiers_dir}/rollup_{tier}"
-    schema = footer_schema(table)
-    tier_df = (spark.read.schema(schema) if schema else spark.read).parquet(table)
-    if "window_date" in tier_df.columns:
-        tier_df = tier_df.drop("window_date")
-    fact_schema = footer_schema(fact_path)
-    if fact_schema and {"gap_us", "event_date"} <= set(fact_schema.fieldNames()):
+        frozen_until = _serving_watermark(fact_path, tiers_dir)
+    tier_df = _read_tier(spark, tiers_dir, tier)
+    if {"gap_us", "event_date"} <= set(catalog.columns(fact_path) or ()):
         # stored gaps: only the leaves of the tail's event dates are read
         day = str(floor_to_tier(frozen_until, tier).date())
-        dates = {p.rsplit("=", 1)[1] for p in glob(f"{fact_path}/conv_bucket=*/event_date=*")}
-        raw = read_fact_leaves(spark, fact_path, dates=sorted(d for d in dates if d >= day))
+        raw = catalog.read_fact_leaves(spark, fact_path, dates=lambda d: d >= day)
     else:
-        raw = spark.read.parquet(fact_path)
-        raw = raw.drop(*[c for c in ("conv_bucket", "event_date") if c in raw.columns])
-        raw = with_gap_seconds(raw, key=key, ts=ts)
+        raw = with_gap_seconds(catalog.read_fact_leaves(spark, fact_path), key=key, ts=ts)
 
     def recompute(tail: DataFrame) -> DataFrame:
         return rollup(tail, tier, key=key, ts=ts, **rollup_kwargs)

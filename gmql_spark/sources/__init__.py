@@ -1,5 +1,4 @@
 from gmql_spark.sources.catalog import (  # noqa: F401
-    iceberg_available,
     read_transcripts,
     write_transcripts,
 )

@@ -1,96 +1,138 @@
-"""Table storage layer: Iceberg-shaped partitioned tables.
+"""Table storage layer: the one module that knows how the engine's
+tables sit on disk.
 
-Target layout (FIXTURES.md §1 / north rule): fact table partitioned by
-``bucket(16, conv_id), days(ts)``. When an Iceberg runtime jar is on the
-classpath we use the real transforms (``writeTo(...).partitionedBy(
-bucket(16, col), days(col))``); this sandbox has no Iceberg jar, so the
-fallback materializes the SAME layout as hive-style parquet dirs
-(``conv_bucket=<n>/event_date=<d>``) — identical pruning behavior
-(partition filters on conv_bucket/event_date prune directories), and the
-write path is a drop-in swap.
+Every engine table is a directory of hive-style partition directories
+(``<col>=<value>``) over parquet files: the Iceberg layout's fallback
+(FIXTURES.md §1, ``bucket(16, conv_id), days(ts)``) with the same
+pruning. Names starting with ``_`` or ``.`` are hidden from Spark's
+reader and from the leaf walk, so state, staging and trash live beside
+the data. The tables, partition columns outermost first:
 
-The reference's analogue: one file per sample via a custom partitioner +
-``MultipleTextOutputFormat`` (``StoreTABRD.scala:23-95``) and md5-named
-dataset dirs; here partition pruning and schema/metrics come from the
-table format.
+- fact ``<fact>``: ``conv_bucket``, ``event_date`` (no date level with
+  ``partition_days=False``); written by ``write_transcripts``, appended
+  to by ``incremental.append_transcripts`` (``move_files``);
+- conv state ``<fact>/_conv_state/v_<n>``: ``conv_bucket``; one version
+  per append;
+- tier ``<out>/rollup_<t>``: ``window_date`` when
+  ``incremental.refresh_tiers`` writes it, ``bucket`` when
+  ``checkpoint.run_pipeline`` does;
+- Gorilla ``<out>/gorilla_<t>``: ``bucket``; ``run_pipeline(compress=True)``.
+
+Writers stage first (``<fact>/_append_staging``,
+``<out>/_refresh_staging``, ``<out>/_staging``, ``_compact_tmp/`` beside
+a compacted leaf) and replace a leaf by ``swap_leaf`` through a trash
+dir beside it. Reads (``read_table``) list and open only the leaves
+asked for, with the schema of one footer: no inference or listing job,
+however old the table. The reference keeps each dataset's schema in a
+catalog (``GMQL-Repository``) and writes one file per sample
+(``StoreTABRD.scala:23-95``).
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
-from collections.abc import Sequence
+import shutil
+from collections.abc import Callable, Collection
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DateType, IntegerType, StructField, StructType
 
 N_BUCKETS_DEFAULT = 16
 # the fact table's partition columns, typed as schema inference types them
 FACT_PARTITIONS = {"conv_bucket": IntegerType(), "event_date": DateType()}
+TIER_DATE = "window_date"  # refresh_tiers' tier tables
+TIER_BUCKET = "bucket"  # run_pipeline's tier and Gorilla tables
+DATE_COLUMNS = ("event_date", TIER_DATE)  # the levels retention expires
+
+APPEND_STAGING = "_append_staging"  # under the fact table
+REFRESH_STAGING = "_refresh_staging"  # under a tier root
+PIPELINE_STAGING = "_staging"  # under a tier root
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.Schema  # noqa: SLF001
-        return True
-    except Exception:
-        return False
+def bucket_of(key: str, n_buckets: int) -> Column:
+    """``conv_bucket``: Iceberg's bucket transform role, shared by the
+    fact table, the conv state and the pipeline's work partitioning."""
+    return F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
 
 
-def write_transcripts(
-    df: DataFrame,
-    path: str,
-    n_buckets: int = N_BUCKETS_DEFAULT,
-    key: str = "conv_id",
-    ts: str = "ts",
-    mode: str = "overwrite",
-    precompute_gaps: bool = False,
-    partition_days: bool = True,
-) -> None:
-    """Write the fact table with bucket(key) × days(ts) partitioning.
-
-    ``conv_bucket = pmod(xxhash64(key), n)`` mirrors Iceberg's bucket
-    transform role (hash co-location of each conversation) and matches
-    checkpoint.run_pipeline's work partitioning, so resume jobs prune to
-    one directory per bucket.
-
-    ``precompute_gaps=True`` materializes the inter-turn ``gap_us``
-    derived column at ingest (one window pass, here, once) so every
-    downstream rollup/percentile job skips the raw-scale sort shuffle —
-    the single most effective plan change for the tier pipeline.
-    ``partition_days=False`` skips the date dir level (useful for small
-    benchmarks where days() would shatter file sizes).
-    """
-    if precompute_gaps:
-        from gmql_spark.operators.rollup import with_gap_seconds
-
-        df = with_gap_seconds(df, key=key, ts=ts).drop("gap_s")
-    out = df.withColumn(
-        "conv_bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
-    )
-    part_cols = ["conv_bucket"]
-    if partition_days:
-        out = out.withColumn("event_date", F.to_date(F.col(ts)))
-        part_cols.append("event_date")
-    (
-        out.repartition(n_buckets, "conv_bucket")  # one writer wave per bucket
-        .write.mode(mode)
-        .partitionBy(*part_cols)
-        .parquet(path)
-    )
+def tier_table(root: str, tier: str, kind: str = "rollup") -> str:
+    """Tier ``tier``'s ``kind`` ("rollup" or "gorilla") table."""
+    return f"{root}/{kind}_{tier}"
 
 
-def read_transcripts(
-    spark: SparkSession, path: str, buckets: list[int] | None = None
-) -> DataFrame:
-    """Read the fact table; ``buckets`` filter prunes partitions at plan
-    time (visible as PartitionFilters in explain())."""
-    df = spark.read.parquet(path)
-    if buckets is not None:
-        df = df.filter(F.col("conv_bucket").isin(buckets))
-    return df.drop("conv_bucket", "event_date")  # gap_us (if present) is kept
+def state_root(fact_path: str) -> str:
+    """The conv state's directory under the fact table."""
+    return f"{fact_path}/_conv_state"
+
+
+def leaf(table: str, **parts) -> str:
+    """The path of ``table``'s partition directory ``col=value/...``."""
+    return "/".join([table, *(f"{c}={v}" for c, v in parts.items())])
+
+
+def _partition_dirs(path: str) -> list[str]:
+    """The partition directories directly under ``path``, sorted; none
+    when ``path`` does not exist."""
+    with contextlib.suppress(FileNotFoundError), os.scandir(path) as it:
+        return sorted(
+            e.name for e in it
+            if e.is_dir() and "=" in e.name and not e.name.startswith(("_", "."))
+        )
+    return []
+
+
+def fact_buckets(path: str) -> list[int]:
+    """The ``conv_bucket`` values of the fact table at ``path``."""
+    parts = (n.split("=", 1) for n in _partition_dirs(path))
+    return [int(v) for c, v in parts if c == "conv_bucket"]
+
+
+def leaves(
+    path: str, **where: Collection | Callable[[str], bool] | None
+) -> list[str]:
+    """The table's partition directories with none below them, sorted.
+    Each keyword names a partition column a leaf must have on its path,
+    restricted to a collection of values, to the values a predicate
+    accepts, or (None) to any; only dirs that can still qualify are
+    listed."""
+    keeps = {
+        c: v if v is None or callable(v) else {str(x) for x in v}.__contains__
+        for c, v in where.items()
+    }
+    found: list[str] = []
+
+    def walk(d: str, cols: frozenset) -> None:
+        subs = _partition_dirs(d)
+        if not subs and d != path and cols >= keeps.keys():
+            found.append(d)
+        for name in subs:
+            col, val = name.split("=", 1)
+            if keeps.get(col) is None or keeps[col](val):
+                walk(f"{d}/{name}", cols | {col})
+
+    walk(path, frozenset())
+    return found
+
+
+def date_leaves(path: str) -> dict[str, str]:
+    """{leaf: date value} of the table at ``path``, whose leaves are its
+    date partitions (``DATE_COLUMNS``); the null date's value sorts after
+    every ISO date. Raises ValueError for a table whose leaves have no
+    date level: it cannot be expired by date."""
+    out = {}
+    for lf in leaves(path):
+        col, out[lf] = os.path.basename(lf).split("=", 1)
+        if col not in DATE_COLUMNS:
+            raise ValueError(
+                f"table at {path} has no date partition level "
+                f"({' or '.join(DATE_COLUMNS)}): its leaf {lf} cannot be "
+                "expired by date"
+            )
+    return out
 
 
 def footer_schema(path: str) -> StructType | None:
@@ -119,63 +161,188 @@ def footer_schema(path: str) -> StructType | None:
     return None
 
 
-def _fact_leaves(path: str, bucket: int | None, dates: Sequence[str] | None) -> list[str]:
-    """The existing leaf directories of the fact table at ``path`` that
-    hold ``bucket``'s (every bucket's when None) rows of ``dates``
-    (every date's when None), found by listing only the bucket
-    directories concerned."""
-    buckets = (
-        [f"conv_bucket={bucket}"]
-        if bucket is not None
-        else sorted(e for e in os.listdir(path) if e.startswith("conv_bucket="))
-    )
-    leaves = []
-    for b in buckets:
-        bdir = f"{path}/{b}"
-        if not os.path.isdir(bdir):
+def columns(path: str) -> list[str] | None:
+    """The column names ``footer_schema`` reads, or None."""
+    schema = footer_schema(path)
+    return schema.fieldNames() if schema is not None else None
+
+
+def read_table(
+    spark: SparkSession,
+    path: str,
+    schema: StructType | None = None,
+    **where: Collection | Callable[[str], bool] | None,
+) -> DataFrame:
+    """The rows of the table at ``path`` in the leaves ``where`` selects
+    (``leaves``; every leaf when empty), partition columns included.
+    Only those leaves are listed and read, with ``schema`` (a table the
+    caller has just written) or one footer's and ``basePath``, in chunks
+    under Spark's parallel-discovery threshold (past it Spark lists in a
+    job): no job. A table without a footer Spark wrote is read with
+    schema inference; one without partition directories is its own leaf."""
+    schema = schema or footer_schema(path)
+    found = leaves(path, **where)
+    if not found and not where:
+        found = [path]
+    if not found:
+        if schema is None:  # fails, or infers, as a whole-table open does
+            return spark.read.parquet(path).limit(0)
+        # typed as a read types it: every column nullable
+        nullable = StructType([StructField(f.name, f.dataType) for f in schema])
+        return spark.createDataFrame([], nullable)
+    n = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
+    reader = (spark.read.schema(schema) if schema else spark.read).option("basePath", path)
+    chunks = [reader.parquet(*found[i : i + n]) for i in range(0, len(found), n)]
+    return reduce(DataFrame.union, chunks)
+
+
+def footer_stats(path: str) -> tuple[int, int]:
+    """(rows, bytes) of all parquet files under ``path`` via footers —
+    no Spark job."""
+    import pyarrow.parquet as pq
+
+    rows = size = 0
+    for root, _dirs, files in os.walk(path):
+        for fn in files:
+            if fn.endswith(".parquet"):
+                fp = os.path.join(root, fn)
+                rows += pq.ParquetFile(fp).metadata.num_rows
+                size += os.path.getsize(fp)
+    return rows, size
+
+
+def swap_leaf(staged: str, dest: str, trash: str = "_swap_trash") -> None:
+    """Replace the leaf directory ``dest`` with the fully written
+    ``staged`` one by two renames: readers see the old leaf or the new
+    one, never a half-written one. Between the renames the old leaf
+    waits in the ``trash`` dir beside ``dest``, so a crash there leaves
+    it intact until a later swap into ``dest`` supersedes it."""
+    parent, name = os.path.split(dest)
+    trash_root = os.path.join(parent, trash)
+    aside = os.path.join(trash_root, name)
+    shutil.rmtree(aside, ignore_errors=True)
+    os.makedirs(trash_root, exist_ok=True)
+    if os.path.exists(dest):
+        os.rename(dest, aside)
+    os.rename(staged, dest)
+    shutil.rmtree(aside, ignore_errors=True)
+    with contextlib.suppress(OSError):  # other leaves' crash copies stay
+        os.rmdir(trash_root)
+
+
+def swap_leaves(stage: str, table: str) -> None:
+    """Swap every leaf of ``stage`` into the same place of ``table``;
+    the table's other leaves stay as they are."""
+    os.makedirs(table, exist_ok=True)
+    for src in leaves(stage):
+        swap_leaf(src, os.path.join(table, os.path.relpath(src, stage)))
+
+
+def move_files(stage: str, table: str) -> None:
+    """Move every parquet file under ``stage`` into the same leaf of
+    ``table``; Spark's file names are unique per write job."""
+    for root, _dirs, files in os.walk(stage):
+        parquet = [f for f in files if f.endswith(".parquet")]
+        if not parquet:
             continue
-        if dates is None:  # every date; a table without days is its buckets
-            days = sorted(e for e in os.listdir(bdir) if e.startswith("event_date="))
-            leaves += [f"{bdir}/{d}" for d in days] if days else [bdir]
-        else:
-            leaves += [
-                f"{bdir}/event_date={d}"
-                for d in dates
-                if os.path.isdir(f"{bdir}/event_date={d}")
-            ]
-    return leaves
+        dest = os.path.join(table, os.path.relpath(root, stage))
+        os.makedirs(dest, exist_ok=True)
+        for f in parquet:
+            os.rename(os.path.join(root, f), os.path.join(dest, f))
+
+
+def compact(
+    spark: SparkSession,
+    table: str,
+    min_files: int,
+    **where: Collection | Callable[[str], bool] | None,
+) -> dict[str, int]:
+    """Rewrite each leaf of ``table`` that ``where`` selects and that
+    holds more than ``min_files`` parquet files into one file, one leaf
+    per Spark job: written to ``_compact_tmp/`` beside it and swapped in
+    through ``_compact_trash/`` (``swap_leaf``), so no job reads and
+    overwrites the table. After a crash between the swap's renames the
+    leaf waits under ``_compact_trash/`` (recover by renaming it back);
+    later runs keep such copies. Returns {leaf relative to ``table``:
+    files_before}."""
+    done: dict[str, int] = {}
+    for src in leaves(table, **where):
+        n = sum(1 for f in os.listdir(src) if f.endswith(".parquet"))
+        if n <= min_files:
+            continue
+        parent, name = os.path.split(src)
+        stage_root = os.path.join(parent, "_compact_tmp")
+        stage = os.path.join(stage_root, name)
+        shutil.rmtree(stage, ignore_errors=True)  # THIS leaf's stale staging
+        read_table(spark, src).coalesce(1).write.mode("overwrite").parquet(stage)
+        swap_leaf(stage, src, trash="_compact_trash")
+        with contextlib.suppress(OSError):  # a crashed run's staging stays
+            os.rmdir(stage_root)
+        done[os.path.relpath(src, table)] = n
+    return done
+
+
+def write_transcripts(
+    df: DataFrame,
+    path: str,
+    n_buckets: int = N_BUCKETS_DEFAULT,
+    key: str = "conv_id",
+    ts: str = "ts",
+    mode: str = "overwrite",
+    precompute_gaps: bool = False,
+    partition_days: bool = True,
+) -> None:
+    """Write the fact table with bucket(key) × days(ts) partitioning.
+
+    ``conv_bucket`` (``bucket_of``) matches checkpoint.run_pipeline's
+    work partitioning, so resume jobs prune to one directory per bucket.
+
+    ``precompute_gaps=True`` materializes the inter-turn ``gap_us``
+    derived column at ingest (one window pass, here, once) so every
+    downstream rollup/percentile job skips the raw-scale sort shuffle —
+    the single most effective plan change for the tier pipeline.
+    ``partition_days=False`` skips the date dir level (useful for small
+    benchmarks where days() would shatter file sizes).
+    """
+    if precompute_gaps:
+        from gmql_spark.operators.rollup import with_gap_seconds
+
+        df = with_gap_seconds(df, key=key, ts=ts).drop("gap_s")
+    out = df.withColumn("conv_bucket", bucket_of(key, n_buckets))
+    part_cols = ["conv_bucket"]
+    if partition_days:
+        out = out.withColumn("event_date", F.to_date(F.col(ts)))
+        part_cols.append("event_date")
+    (
+        out.repartition(n_buckets, "conv_bucket")  # one writer wave per bucket
+        .write.mode(mode)
+        .partitionBy(*part_cols)
+        .parquet(path)
+    )
 
 
 def read_fact_leaves(
     spark: SparkSession,
     path: str,
     bucket: int | None = None,
-    dates: Sequence[str] | None = None,
+    dates: Collection | Callable[[str], bool] | None = None,
 ) -> DataFrame:
-    """The fact table's rows of one ``bucket`` and/or of ``dates``
-    (every bucket or date when None), without its partition columns.
+    """The fact table's rows of one ``bucket`` and/or of ``dates`` (a
+    collection of ISO dates, or a predicate on them; every bucket or
+    date when None), without its partition columns, read through
+    ``read_table``: only the leaves ``conv_bucket=<b>/event_date=<d>``
+    concerned are listed and read."""
+    where = {"conv_bucket": None if bucket is None else [bucket], "event_date": dates}
+    where = {c: v for c, v in where.items() if v is not None}
+    return read_table(spark, path, **where).drop(*FACT_PARTITIONS)
 
-    Only those leaves (``conv_bucket=<b>/event_date=<d>``) are listed
-    and read, with the schema of one footer (``footer_schema``) and
-    ``basePath``: no schema-inference job, and a listing that grows
-    with the leaves read, not with the table. Spark lists more root
-    paths than its parallel-discovery threshold in a Spark job, so the
-    leaves are read in chunks under it and unioned. A table without a
-    parquet file Spark wrote is opened whole and filtered, so it fails
-    (or infers) as that read does."""
-    schema = footer_schema(path)
-    if schema is None:
-        df = spark.read.parquet(path)
-        if bucket is not None:
-            df = df.filter(F.col("conv_bucket") == bucket)
-        if dates is not None:
-            df = df.filter(F.col("event_date").isin(list(dates)))
-        return df.drop(*FACT_PARTITIONS)
-    leaves = _fact_leaves(path, bucket, dates)
-    if not leaves:  # typed as a read types it: every column nullable
-        nullable = StructType([StructField(f.name, f.dataType) for f in schema])
-        return spark.createDataFrame([], nullable).drop(*FACT_PARTITIONS)
-    n = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
-    reader = spark.read.schema(schema).option("basePath", path)
-    chunks = [reader.parquet(*leaves[i : i + n]) for i in range(0, len(leaves), n)]
-    return reduce(DataFrame.union, chunks).drop(*FACT_PARTITIONS)
+
+def read_transcripts(
+    spark: SparkSession, path: str, buckets: list[int] | None = None
+) -> DataFrame:
+    """Read the fact table (``gap_us``, if present, is kept); only the
+    leaves of ``buckets`` (every bucket when None) are listed and read,
+    with the schema of one footer: building the read runs no Spark
+    job."""
+    where = {} if buckets is None else {"conv_bucket": buckets}
+    return read_table(spark, path, **where).drop(*FACT_PARTITIONS)

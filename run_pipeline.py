@@ -29,15 +29,22 @@ def main(argv=None) -> int:
     ap.add_argument("--compress", action="store_true",
                     help="also write Gorilla-packed streams per tier")
     ap.add_argument("--retention", default=None,
-                    help="apply retention after run, e.g. 'raw=30,1m=90,1h=365'")
+                    help="expire the input's event dates older than N days after "
+                         "the run, e.g. 'raw=30'")
     args = ap.parse_args(argv)
+    policy = dict(kv.split("=") for kv in args.retention.split(",")) if args.retention else {}
+    if set(policy) - {"raw"}:
+        # the pipeline's tier tables are partitioned by bucket alone: no
+        # date level to expire
+        ap.error(f"--retention {args.retention}: only raw=<days> applies; the "
+                 "pipeline's tier tables have no date partition level")
 
     spark = SparkSession.builder.appName("gmql-spark-pipeline").getOrCreate()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     from gmql_spark.checkpoint import run_pipeline
     from gmql_spark.datagen import transcripts_spark
-    from gmql_spark.sources.catalog import read_transcripts, write_transcripts
+    from gmql_spark.sources.catalog import write_transcripts
 
     if args.synth:
         write_transcripts(transcripts_spark(spark, n_conv=args.synth), args.input,
@@ -53,15 +60,12 @@ def main(argv=None) -> int:
         on_bucket_done=lambda e: print(f"bucket {e['bucket']}: rows_in={e['rows_in']} "
                                        f"watermark={e['watermark']} wall={e['wall_s']}s"),
     )
-    if args.retention:
+    if policy:
         from gmql_spark.retention import expire_partitions
 
-        policy = dict(kv.split("=") for kv in args.retention.split(","))
-        expired = {}
-        for tier, days in policy.items():
-            path = args.input if tier == "raw" else f"{args.out}/rollup_{tier}"
-            expired[tier] = len(expire_partitions(path, int(days)))
-        stats["retention_expired"] = expired
+        stats["retention_expired"] = {
+            "raw": len(expire_partitions(args.input, int(policy["raw"])))
+        }
     print(json.dumps(stats))
     return 0
 

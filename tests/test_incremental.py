@@ -148,12 +148,13 @@ def test_intent_marker_blocks_append_after_crash(spark, tmp_path, split_data):
     """A leftover INTENT marker (crash between fact append and pointer
     swap) must fail the next append loudly instead of silently computing
     gaps from stale state."""
-    from gmql_spark.incremental import _intent_file, _state_root
+    from gmql_spark.incremental import _intent_file
+    from gmql_spark.sources.catalog import state_root
 
     _, b1, b2 = split_data
     fact = str(tmp_path / "fact3")
     append_transcripts(spark, b1, fact, n_buckets=2)
-    with open(_intent_file(_state_root(fact)), "w") as f:
+    with open(_intent_file(state_root(fact)), "w") as f:
         f.write("{}")
     with pytest.raises(RuntimeError, match="INTENT"):
         append_transcripts(spark, b2, fact, n_buckets=2)

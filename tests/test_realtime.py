@@ -483,3 +483,48 @@ def test_stitch_realtime_exact_with_stale_tiers(spark, tmp_path, split_data):
     # the trusting default really is wrong on stale tiers (fewer turns)
     got_stale = pdf(stitch_transcripts(spark, fact, out, start, end))
     assert got_stale["turn_count"].sum() < exp["turn_count"].sum()
+
+
+def test_building_queries_runs_no_jobs(spark, tmp_path, split_data, monkeypatch):
+    """Building a query over the engine's tables runs no Spark job: the
+    table layer opens each table's leaves with a footer schema, without
+    an inference or listing job. ``stitch_transcripts`` (trusting and
+    realtime), ``read_transcripts`` and a GSL ``LOAD`` ran 4, 4, 1 and 1
+    jobs with whole-table opens. The trusting stitch reads only the
+    fact leaves of its raw segments' dates, here the range's two ends."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from gmql_spark.plans.dsl import compile_script
+    from gmql_spark.realtime import stitch_transcripts
+    from gmql_spark.sources.catalog import read_transcripts
+    from tests.conftest import spark_jobs
+
+    raw, b1, b2 = split_data
+    fact, out = str(tmp_path / "fact_nj"), str(tmp_path / "tiers_nj")
+    refresh_tiers(spark, fact, out, dates=append_transcripts(spark, b1, fact, n_buckets=4))
+    append_transcripts(spark, b2, fact, n_buckets=4)  # no refresh
+    lo, hi = raw.agg(F.min("ts"), F.max("ts")).collect()[0]
+    start = (lo + dt.timedelta(hours=2)).replace(second=11, microsecond=0)
+    end = (hi - dt.timedelta(minutes=7)).replace(second=43, microsecond=0)
+
+    reads = []
+    real_parquet = DataFrameReader.parquet
+
+    def recording_parquet(self, *paths, **kw):
+        reads.extend(paths)
+        return real_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording_parquet)
+    for realtime in (False, True):
+        assert spark_jobs(
+            spark,
+            lambda: stitch_transcripts(spark, fact, out, start, end, realtime=realtime),
+        ) == 0
+    reads.clear()
+    stitch_transcripts(spark, fact, out, start, end)
+    dates = {p.split("event_date=")[1] for p in reads if p.startswith(fact)}
+    assert dates == {str(start.date()), str(end.date())}, reads
+    assert spark_jobs(spark, lambda: read_transcripts(spark, fact)) == 0
+    assert spark_jobs(
+        spark, lambda: compile_script(spark, f"T = LOAD '{fact}'; MATERIALIZE T;")
+    ) == 0

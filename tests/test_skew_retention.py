@@ -85,6 +85,50 @@ def test_retention_expiry(spark, tmp_path):
     assert spark.read.parquet(str(wh / "transcripts")).count() == before
 
 
+def test_tier_retention_expires_window_dates(spark, tmp_path):
+    """Retention takes each table's date level from the table layer: the
+    tier tables ``refresh_tiers`` writes expire their ``window_date``
+    leaves past the horizon, the dates raw expires; a table without a
+    date level (``run_pipeline``'s ``bucket`` tiers) raises instead of
+    expiring nothing, and ``run_pipeline.py`` refuses a tier
+    ``--retention`` entry before it runs."""
+    import os
+
+    import pytest
+
+    import run_pipeline as run_pipeline_script
+    from gmql_spark.checkpoint import run_pipeline
+    from gmql_spark.incremental import append_transcripts, refresh_tiers
+
+    raw = datagen.transcripts_spark(spark, n_conv=40)
+    wh = str(tmp_path / "wh")
+    fact = f"{wh}/transcripts"
+    refresh_tiers(spark, fact, wh, dates=append_transcripts(spark, raw, fact, n_buckets=2))
+    as_of = date(2026, 1, 25)
+    policy = {"raw": 10, "1m": 10, "1h": 10, "1d": 10}
+    rep = apply_retention(wh, policy, as_of=as_of, dry_run=True)
+    raw_dates = {p.rsplit("=", 1)[1] for p in rep["raw"]}
+    assert raw_dates and max(raw_dates) < "2026-01-15"
+    for tier in ("1m", "1h", "1d"):
+        table = f"{wh}/rollup_{tier}"
+        assert rep[tier] == [f"{table}/window_date={d}" for d in sorted(raw_dates)]
+        assert all(os.path.isdir(p) for p in rep[tier])  # dry run
+    apply_retention(wh, {"1h": 10}, as_of=as_of)
+    left = spark.read.parquet(f"{wh}/rollup_1h")
+    assert left.agg(F.min("window_date")).collect()[0][0] >= date(2026, 1, 15)
+
+    pipe = str(tmp_path / "pipe")
+    run_pipeline(spark, raw, pipe, tiers=("1m",), n_buckets=2)
+    with pytest.raises(ValueError, match="no date partition level"):
+        expire_partitions(f"{pipe}/rollup_1m", keep_days=10, as_of=as_of)
+    assert apply_retention(pipe, {"1m": None}) == {"1m": []}  # kept forever
+    with pytest.raises(SystemExit):
+        run_pipeline_script.main(
+            ["--input", fact, "--out", str(tmp_path / "cli"), "--retention", "raw=5,1m=5"]
+        )
+    assert not os.path.exists(tmp_path / "cli")
+
+
 def test_sessionize_hot_key(spark):
     """Documented hot-key bound of sessionize: one conversation holding
     10^6 turns must complete and stay exact (its history sorts in one
@@ -607,6 +651,7 @@ def test_compaction_reads_leaves_with_footer_schema(spark, tmp_path, monkeypatch
 
     from gmql_spark import datagen, retention
     from gmql_spark.incremental import append_transcripts
+    from gmql_spark.sources import catalog
     from gmql_spark.sources.catalog import footer_schema
     from tests.conftest import spark_jobs
 
@@ -634,7 +679,7 @@ def test_compaction_reads_leaves_with_footer_schema(spark, tmp_path, monkeypatch
         spark,
         lambda: done.update(footer=retention.compact_fact_table(spark, fact, min_files=1)),
     )
-    monkeypatch.setattr(retention, "footer_schema", lambda path: None)
+    monkeypatch.setattr(catalog, "footer_schema", lambda path: None)
     jobs["inferred"] = spark_jobs(
         spark,
         lambda: done.update(

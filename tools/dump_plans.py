@@ -13,7 +13,11 @@ staged write of ``incremental.refresh_tiers``, without sketches
 and with ``with_sketches=True`` (``refresh_tiers_sketches``), and the
 plan of the write that lands an ``incremental.append_transcripts`` batch
 (``append_transcripts``: the second half of each conversation appended
-onto a table holding the first half), captured from a real append.
+onto a table holding the first half), captured from a real append, and
+the plan ``realtime.stitch_transcripts`` builds over materialized tiers
+(``stitch_transcripts``: the first halves appended and refreshed, the
+second halves appended on top, a range from the second hour of the data
+to its last minutes).
 
 Usage: python tools/dump_plans.py <out_dir> <tag> [sf_dir] [name ...]
   out_dir: e.g. plans/r09 (created if missing; a relative path is taken
@@ -122,21 +126,28 @@ def _refresh(with_sketches):
     return dump_refresh
 
 
-def append_transcripts(spark, tmp):
-    """the write that lands an append's batch in the fact table (or in
-    its staging directory), captured from a real append"""
+def _halves(spark):
+    """each conversation's first and second half of turns"""
     from pyspark.sql import functions as F
-    from pyspark.sql.readwriter import DataFrameWriter
     from pyspark.sql.window import Window
-
-    from gmql_spark import incremental
 
     half = _transcripts(spark).withColumn(
         "_n", F.max("turn_idx").over(Window.partitionBy("conv_id"))
     )
     first = F.col("turn_idx") <= F.col("_n") / 2
+    return half.filter(first).drop("_n"), half.filter(~first).drop("_n")
+
+
+def append_transcripts(spark, tmp):
+    """the write that lands an append's batch in the fact table (or in
+    its staging directory), captured from a real append"""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from gmql_spark import incremental
+
+    first, second = _halves(spark)
     fact = os.path.join(tmp, "append_fact")
-    incremental.append_transcripts(spark, half.filter(first).drop("_n"), fact, n_buckets=4)
+    incremental.append_transcripts(spark, first, fact, n_buckets=4)
     written = []
     real_parquet = DataFrameWriter.parquet
 
@@ -147,13 +158,30 @@ def append_transcripts(spark, tmp):
 
     DataFrameWriter.parquet = recording_parquet
     try:
-        incremental.append_transcripts(
-            spark, half.filter(~first).drop("_n"), fact, n_buckets=4
-        )
+        incremental.append_transcripts(spark, second, fact, n_buckets=4)
     finally:
         DataFrameWriter.parquet = real_parquet
     (df,) = written
     return df
+
+
+def stitch_transcripts(spark, tmp):
+    """the stitch over materialized tiers, one append past the refresh"""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from gmql_spark import incremental, realtime
+
+    first, second = _halves(spark)
+    fact, out = os.path.join(tmp, "stitch_fact"), os.path.join(tmp, "stitch_tiers")
+    dates = incremental.append_transcripts(spark, first, fact, n_buckets=4)
+    incremental.refresh_tiers(spark, fact, out, dates=dates)
+    incremental.append_transcripts(spark, second, fact, n_buckets=4)
+    lo, hi = _transcripts(spark).agg(F.min("ts"), F.max("ts")).collect()[0]
+    start = (lo + dt.timedelta(hours=2)).replace(second=11, microsecond=0)
+    end = (hi - dt.timedelta(minutes=7)).replace(second=43, microsecond=0)
+    return realtime.stitch_transcripts(spark, fact, out, start, end)
 
 
 PSEUDO = {
@@ -163,6 +191,7 @@ PSEUDO = {
     "refresh_tiers": _refresh(False),
     "refresh_tiers_sketches": _refresh(True),
     "append_transcripts": append_transcripts,
+    "stitch_transcripts": stitch_transcripts,
 }
 
 
