@@ -3,7 +3,6 @@ from gmql_spark.functions.sketches import (  # noqa: F401
     hist_cascade,
     hist_percentile,
     hist_rollup,
-    hll_cascade,
     hll_estimate,
     hll_rollup,
     log2_bucket,

@@ -12,12 +12,13 @@ re-scan raw, so the tiers can optionally carry *mergeable sketches*:
   (`latency_histogram` in ``__spark_entry__``); ``hist_percentile``
   extracts an approximate quantile with ≤2× relative error (one-bucket
   width), tested against the exact rank+lerp plan.
-- **HLL distinct sketches** (``hll_rollup``/``hll_cascade``): Apache
-  DataSketches HLL via Spark's built-in ``hll_sketch_agg`` /
-  ``hll_union_agg`` (JVM-side, no UDF). The union of per-1m sketches
-  over a partition of the rows has the same estimate as one pass over
-  the hour (register-wise max is associative), pytest-verified; its
-  bytes may differ (the list-mode entry order follows row arrival).
+- **HLL distinct sketches** (``hll_rollup``): Apache DataSketches HLL
+  via Spark's built-in ``hll_sketch_agg`` (JVM-side, no UDF), merged
+  with ``hll_union_agg``. The union of per-1m sketches over a
+  partition of the rows has the same estimate as one pass over the
+  hour (register-wise max is associative), pytest-verified through
+  ``cascade_rollup``; its bytes may differ (the list-mode entry order
+  follows row arrival).
 
 The tier builder (``operators.rollup._build_tiers``) does not call the
 window functions here: it builds both tier sketch columns inside its
@@ -26,7 +27,7 @@ fused aggregate at every tier — ``lat_hist`` from counted
 over counted (window, tool) rows — so a sketch tier costs no extra
 exchange or join. ``hist_rollup``/``hll_rollup`` are the standalone
 per-window forms (gates, GSL ``HIST``, the streaming twins' oracles);
-``hist_cascade``/``hll_cascade`` merge finer-tier sketches (the
+``hist_cascade`` merges finer-tier histograms (the
 ``latency_histogram`` gate, GSL ``HIST``, tests). GSL ``CASCADE``
 (``operators.rollup.cascade_rollup``) merges both sketch columns in
 its own one-pass merge, with the same bucket-count addition and
@@ -160,25 +161,6 @@ def hll_rollup(
         [F.hll_sketch_agg(F.col(col), F.lit(lgk)).alias(out)],
         keys=list(keys),
         ts=ts,
-    )
-
-
-def hll_cascade(
-    finer: DataFrame,
-    tier: str,
-    keys: Sequence[str] = ("conv_id",),
-    col: str = "hll",
-) -> DataFrame:
-    """Union finer-tier HLL sketches to a coarser grain. The union of
-    sketches over a row-partition equals the one-pass sketch (register
-    max is associative/commutative), so estimates match the direct
-    build exactly."""
-    return window_rollup(
-        finer,
-        TIER_DURATION[tier],
-        [F.hll_union_agg(F.col(col)).alias(col)],
-        keys=list(keys),
-        ts="window_start",
     )
 
 

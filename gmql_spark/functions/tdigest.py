@@ -30,15 +30,6 @@ weight) centroids are interchangeable under weighted averaging.
 
 The reference has no sketching layer at all; this is beyond-parity
 surface alongside ``functions.sketches``.
-
-Known next optimization (not yet taken): for fine-tier windows below
-the merge-free threshold (n < 2δ/π — the overwhelming majority at 1m
-grain), the digest is EXACTLY ``sort_array(collect_list(v))`` + unit
-weights, so the build pass could stay JVM-side entirely (a bounded
-collection aggregate, same sanction argument as BAG) and reserve the
-Arrow path for the rare oversized window. Today's day-batched Arrow
-build measures 39.6 s for 1M values at sf1 (BENCH/sf1.json
-``tdigest_family``) — honest but Python-bound.
 """
 
 from __future__ import annotations
@@ -50,6 +41,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.window import Window
 
 from gmql_spark.operators.window_agg import TIER_DURATION
 
@@ -62,11 +54,6 @@ DIGEST_FIELDS = "means array<double>, weights array<double>, vmin double, vmax d
 # is 2%), vs the histogram sketch's 2×-of-bin-width.
 # ~150 centroids × 16 B ≈ 2.4 KB per tier row.
 DEFAULT_DELTA = 300.0
-
-# oversized-window key sets beyond this ride a plain shuffle join
-# instead of F.broadcast (guarding driver memory / the 8 GB broadcast
-# cap when a coarse grain or hot keys blow the set up)
-_BROADCAST_KEY_CAP = 1_000_000
 
 
 # ------------------------------------------------------------ numpy core
@@ -196,8 +183,6 @@ def _window_slices(ws: np.ndarray):
     return uniq_idx, np.append(uniq_idx, ws.size)
 
 
-
-
 def tdigest_rollup(
     df: DataFrame,
     tier: str,
@@ -207,29 +192,29 @@ def tdigest_rollup(
     delta: float = DEFAULT_DELTA,
 ) -> DataFrame:
     """Build per-(keys, window) digests from raw values — the ONE pass
-    that touches raw-scale rows. The shuffle is the same keys-hash
-    partitioning every other rollup uses.
+    that touches raw-scale rows. Building it runs no Spark job.
 
-    Two routed paths (bit-identical outputs):
+    Each (key, window) group is routed inside the plan by its row
+    count ``_n`` (a window count over the group, computed on the
+    keys-hash partitioning the aggregate then reuses); both routes
+    give bit-identical digests:
 
-    - windows below the merge-free threshold (n < 2δ/π — the
-      overwhelming majority at a fine tier, where a (key, minute) holds
-      a handful of values): the digest is EXACTLY the sorted values
-      with unit weights (:func:`_compress`'s proven fast path), i.e.
+    - ``_n < 2δ/π`` (the merge-free threshold — the overwhelming
+      majority at a fine tier, where a (key, minute) holds a handful of
+      values): the digest is EXACTLY the sorted values with unit
+      weights (:func:`_compress`'s proven fast path), i.e.
       ``sort_array(collect_list(v))`` — built entirely JVM-side. The
-      collection aggregate is BOUNDED BY CONSTRUCTION: rows are
-      anti-joined against the (tiny) oversized-window key set first,
-      so no group can exceed the threshold (same sanction class as the
-      engine's map-assembly aggregates).
-    - oversized windows: the vectorized Arrow path (numpy sort + slice
+      collection aggregate is BOUNDED BY CONSTRUCTION: every row it
+      sees carries its own group's count, so no group exceeds the
+      threshold (same sanction class as the engine's map-assembly
+      aggregates).
+    - ``_n ≥ 2δ/π``: the vectorized Arrow path (numpy sort + slice
       inside day-sized batches, ``_window_slices``; one Python call per
-      key-day, not per window), now touching only the rows that
-      genuinely need ``_compress``.
-
-    Before the routing, the Arrow path processed EVERY row: 39.6 s for
-    1M values at sf1, Python-bound (BENCH/sf1.json history)."""
+      key-day, not per window), touching only the rows that genuinely
+      need ``_compress``."""
     keys = list(keys)
     win = F.window(ts, TIER_DURATION[tier])
+    gcols = [*keys, "window_start", "window_end"]
     g = (
         # NaN dropped up front (JVM-side) so every batch row is a real
         # observation; a window whose values are ALL NaN therefore
@@ -245,62 +230,27 @@ def tdigest_rollup(
             win["end"].alias("window_end"),
             F.col(value_col).cast("double").alias("_v"),
         )
+        .withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy(*gcols)))
     )
-    gcols = [*keys, "window_start", "window_end"]
-    threshold = 2.0 * delta / np.pi
+    small_rows = F.col("_n") < F.lit(2.0 * delta / np.pi)
 
-    # ONE materialization of the raw-scale frame for all its consumers
-    # (the oversized-key count below, then the small/big split): without
-    # staging, counts + anti-join + semi-join each re-ran the upstream
-    # scan/filter, and a nondeterministic upstream could even disagree
-    # between the three evaluations, mis-routing windows (r7 ADVICE).
-    # Same lazy localCheckpoint + pre-checkpoint window-ban audit as the
-    # cover sweeps.
-    from gmql_spark.operators.cover import _stage
-
-    g = _stage(g)
-
-    # routing: split rows on the oversized-window key set (n >= threshold).
-    # The set's size is data-dependent, so it is COUNTED before choosing
-    # the join strategy (r7 VERDICT: an unguarded F.broadcast of a
-    # data-dependent frame can exceed broadcast limits / OOM the driver
-    # on coarse grains or hot keys): empty -> skip the split AND the
-    # Arrow stage entirely (the collect_list bound is then verified by
-    # the count itself); small -> broadcast anti/semi joins; past
-    # _BROADCAST_KEY_CAP -> plain shuffle joins. In every case the JVM
-    # path's collect_list is bounded < threshold values per group by
-    # construction, never by hope.
-    counts = g.groupBy(*gcols).agg(F.count(F.lit(1)).alias("_n"))
-    big_keys = counts.filter(F.col("_n") >= F.lit(float(threshold))).select(*gcols)
-    n_big = big_keys.count()
-
-    def small_agg(rows):
-        return (
-            rows.groupBy(*gcols)
-            .agg(
-                F.sort_array(F.collect_list("_v")).alias("means"),
-                F.min("_v").alias("vmin"),
-                F.max("_v").alias("vmax"),
-                F.count(F.lit(1)).alias("_n"),
-            )
-            .select(
-                *gcols,
-                "means",
-                F.expr("array_repeat(1.0D, cast(_n as int))").alias("weights"),
-                "vmin",
-                "vmax",
-            )
+    small = (
+        g.filter(small_rows)
+        .groupBy(*gcols)
+        .agg(
+            F.sort_array(F.collect_list("_v")).alias("means"),
+            F.min("_v").alias("vmin"),
+            F.max("_v").alias("vmax"),
+            F.count(F.lit(1)).alias("_n"),
         )
-
-    if n_big == 0:
-        # no oversized windows anywhere: the digest of EVERY group is
-        # exactly its sorted unit-weight values (merge-free fast path
-        # proof at _compress) — no split joins, no Arrow stage
-        return small_agg(g)
-
-    big_side = F.broadcast(big_keys) if n_big <= _BROADCAST_KEY_CAP else big_keys
-    small = small_agg(g.join(big_side, gcols, "left_anti"))
-    g_big = g.join(big_side, gcols, "left_semi")
+        .select(
+            *gcols,
+            "means",
+            F.expr("array_repeat(1.0D, cast(_n as int))").alias("weights"),
+            "vmin",
+            "vmax",
+        )
+    )
 
     batch = F.floor(F.unix_micros("window_start") / F.lit(_BATCH_S * 1_000_000))
 
@@ -332,7 +282,9 @@ def tdigest_rollup(
         return pd.DataFrame(rows)
 
     big = (
-        g_big.withColumn("_batch", batch)
+        g.filter(~small_rows)
+        .drop("_n")
+        .withColumn("_batch", batch)
         .groupBy(*keys, "_batch")
         .applyInPandas(fn, _digest_out_schema(g, keys))
     )

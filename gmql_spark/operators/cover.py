@@ -67,8 +67,14 @@ def _stage(df: DataFrame) -> DataFrame:
     analysis is ~10× cheaper than the physical planning the audit
     previously forced per staged subtree (checkpoint compilation already
     pays physical planning once; the audit should not pay it twice).
-    Lazy (not eager) so gate construction stays job-free and bench reps
-    that rebuild the query re-pay the materialization honestly."""
+
+    Building a query through here RUNS SPARK JOBS: on Spark 4.1 even
+    ``localCheckpoint(eager=False)`` executes jobs while the checkpoint
+    is constructed (a status-tracker count of the cover gates' builders
+    drops to the input read alone once it is patched to identity). The
+    cover sweeps accept that cost because without the cut lineage the
+    nested sweeps recompute their change-point aggregation
+    combinatorially; no other operator stages through here."""
     from gmql_spark.plans.inspect import unpartitioned_windows
 
     hits = unpartitioned_windows(df._jdf.queryExecution().analyzed().toString())

@@ -463,13 +463,13 @@ def test_warm_ingest_cycle_compiles_nothing(spark, tmp_path, split_data):
     assert codegen_compiles(spark, lambda: cycle("second")) == 0
 
 
-@pytest.mark.parametrize("mode,budget", [(True, 2), ("digest", 10)])
+@pytest.mark.parametrize("mode,budget", [(True, 2), ("digest", 9)])
 def test_sketch_refresh_job_budget(spark, tmp_path, split_data, mode, budget):
     """A sketch refresh is one plan and one write too: ``lat_hist`` and
     ``tool_hll`` come out of the fused aggregate, and only the digests
     cascade tier to tier inside that plan. Measured: 2 jobs with
     sketches (31 with a staged write and a cascade ⨝ exact-percentiles
-    plan per tier), 10 with digests (40)."""
+    plan per tier), 9 with digests (40)."""
     from tests.conftest import spark_jobs
 
     _, b1, b2 = split_data

@@ -15,7 +15,6 @@ from gmql_spark.functions.sketches import (
     hist_cascade,
     hist_percentile,
     hist_rollup,
-    hll_cascade,
     hll_estimate,
     hll_rollup,
     log2_bucket,
@@ -121,21 +120,6 @@ def test_hist_percentile_zero_bucket(spark):
     got = [r.p for r in df.select(hist_percentile(F.col("h"), 0.5).alias("p")).collect()]
     assert got[0] == 0.0
     assert 32.0 <= got[1] < 64.0
-
-
-def test_hll_union_equals_direct(spark, gaps):
-    """Estimate of unioned 1m sketches == estimate of the direct 1h
-    sketch (register-wise max is associative over any row partition)."""
-    m1 = hll_rollup(gaps, "1m", col="tool", keys=["conv_id"])
-    merged = hll_cascade(m1, "1h", keys=["conv_id"]).select(
-        "conv_id", "window_start", hll_estimate(F.col("hll")).alias("est")
-    )
-    direct = hll_rollup(gaps, "1h", col="tool", keys=["conv_id"]).select(
-        "conv_id", "window_start", hll_estimate(F.col("hll")).alias("est")
-    )
-    g = merged.toPandas().sort_values(["conv_id", "window_start"]).reset_index(drop=True)
-    e = direct.toPandas().sort_values(["conv_id", "window_start"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(g, e)
 
 
 def test_hll_estimate_accuracy(spark):

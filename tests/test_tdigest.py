@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from gmql_spark import datagen
 from gmql_spark.functions.tdigest import (
+    DEFAULT_DELTA,
     build_digest,
     digest_quantile,
     merge_digests,
@@ -222,75 +223,59 @@ def test_tier_tables_carry_digest_columns(spark):
                 assert np.array_equal(np.asarray(a), np.asarray(b)), (t, c)
 
 
-def test_routed_build_big_window_path(spark):
-    """The routed build's Arrow path must fire for windows past the
-    merge-free threshold and produce exactly build_digest's output;
-    small windows in the same frame take the JVM collect path and stay
-    bit-identical too."""
+@pytest.mark.parametrize(
+    "sizes",
+    [
+        pytest.param((1000, 5), id="mixed"),
+        pytest.param((250, 250, 250, 250), id="all_oversized"),
+        # one window on each side of 2δ/π ≈ 190.99
+        pytest.param((190, 191), id="threshold_edge"),
+    ],
+)
+def test_routed_build_big_window_path(spark, sizes):
+    """Each (key, window) is routed in-plan by its row count: windows
+    past the merge-free threshold take the Arrow path and are genuinely
+    compressed, smaller ones the JVM collect path, and every window
+    equals build_digest's output bit for bit."""
     import datetime as dt
 
     t0 = dt.datetime(2024, 5, 1)
-    rng = np.random.Generator(np.random.PCG64(5))
-    big_vals = rng.lognormal(3, 1, size=1000)  # one minute, 1000 values
-    rows = [("k1", t0 + dt.timedelta(microseconds=i), float(v))
-            for i, v in enumerate(big_vals)]
-    rows += [("k1", t0 + dt.timedelta(minutes=1, seconds=s), float(s))
-             for s in range(5)]  # small window: 5 values
+    rng = np.random.Generator(np.random.PCG64(sum(sizes)))
+    rows, want = [], {}
+    for wmin, n in enumerate(sizes):  # one 1m window of n values each
+        start = t0 + dt.timedelta(minutes=wmin)
+        want[start] = rng.lognormal(3, 1, size=n)
+        rows += [
+            ("k1", start + dt.timedelta(microseconds=i), float(v))
+            for i, v in enumerate(want[start])
+        ]
     df = spark.createDataFrame(rows, "conv_id string, ts timestamp, v double")
     out = {
         r.window_start: r
         for r in tdigest_rollup(df, "1m", value_col="v").collect()
     }
-    assert len(out) == 2
-    big = out[t0]
-    m, w, lo, hi = build_digest(big_vals)
-    assert len(big.means) == len(m) < 1000  # genuinely compressed
-    assert np.array_equal(np.asarray(big.means), m)
-    assert np.array_equal(np.asarray(big.weights), w)
-    assert (big.vmin, big.vmax) == (lo, hi)
-    small = out[t0 + dt.timedelta(minutes=1)]
-    assert list(small.means) == [0.0, 1.0, 2.0, 3.0, 4.0]
-    assert list(small.weights) == [1.0] * 5
+    assert out.keys() == want.keys()
+    for start, vals in want.items():
+        got = out[start]
+        m, w, lo, hi = build_digest(vals)
+        assert np.array_equal(np.asarray(got.means), m), start
+        assert np.array_equal(np.asarray(got.weights), w), start
+        assert (got.vmin, got.vmax) == (lo, hi), start
+        if len(vals) >= 2 * DEFAULT_DELTA / np.pi:
+            assert len(got.means) < len(vals)  # genuinely compressed
+        else:
+            assert list(got.weights) == [1.0] * len(vals)
 
 
-def test_routed_build_shuffle_fallback_matches_broadcast(spark):
-    """r8 broadcast guard: when the oversized-window key set exceeds
-    _BROADCAST_KEY_CAP, the split must ride plain shuffle joins and the
-    output must stay bit-identical to the broadcast route — asserted on
-    a skewed input where EVERY window is oversized."""
-    import datetime as dt
+def test_building_digest_paths_runs_no_jobs(spark):
+    """The routing is decided inside the plan: building the raw digest
+    build, one digest tier or every digest tier runs no Spark job (no
+    driver count, no staging)."""
+    from gmql_spark.operators.rollup import rollup, rollup_all_tiers
+    from tests.conftest import spark_jobs
 
-    import gmql_spark.functions.tdigest as td
-
-    t0 = dt.datetime(2024, 5, 1)
-    rng = np.random.Generator(np.random.PCG64(17))
-    rows = []
-    for wmin in range(4):  # 4 windows, all past the 2δ/π≈191 threshold
-        vals = rng.lognormal(2, 1, size=250)
-        rows += [
-            ("k1", t0 + dt.timedelta(minutes=wmin, microseconds=i), float(v))
-            for i, v in enumerate(vals)
-        ]
-    df = spark.createDataFrame(rows, "conv_id string, ts timestamp, v double")
-
-    def run():
-        return sorted(
-            tdigest_rollup(df, "1m", value_col="v").collect(),
-            key=lambda r: r.window_start,
-        )
-
-    broadcast_route = run()
-    orig = td._BROADCAST_KEY_CAP
-    td._BROADCAST_KEY_CAP = 0  # force the shuffle fallback
-    try:
-        fallback_route = run()
-    finally:
-        td._BROADCAST_KEY_CAP = orig
-    assert len(broadcast_route) == len(fallback_route) == 4
-    for a, b in zip(broadcast_route, fallback_route):
-        assert a.window_start == b.window_start
-        assert np.array_equal(np.asarray(a.means), np.asarray(b.means))
-        assert np.array_equal(np.asarray(a.weights), np.asarray(b.weights))
-        assert (a.vmin, a.vmax) == (b.vmin, b.vmax)
-        # every window really is oversized -> genuinely compressed
-        assert len(a.means) < 250
+    raw = datagen.transcripts_spark(spark, n_conv=20)
+    g = with_gap_seconds(raw)
+    assert spark_jobs(spark, lambda: tdigest_rollup(g, "1m")) == 0
+    assert spark_jobs(spark, lambda: rollup(raw, "1m", with_sketches="digest")) == 0
+    assert spark_jobs(spark, lambda: rollup_all_tiers(raw, with_sketches="digest")) == 0

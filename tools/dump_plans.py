@@ -9,8 +9,9 @@ queries, under pseudo-names: the transcript 1m tier rollup plan
 (``pipeline_bucket_tiers``: bucket 0 of a table written with ingest-time
 gaps, every tier of the bucket in one frame), the plan of the one
 staged write of ``incremental.refresh_tiers``, without sketches
-(``refresh_tiers``: every tier of every date of that table in one frame)
-and with ``with_sketches=True`` (``refresh_tiers_sketches``), and the
+(``refresh_tiers``: every tier of every date of that table in one frame),
+with ``with_sketches=True`` (``refresh_tiers_sketches``) and with
+``with_sketches="digest"`` (``refresh_tiers_digest``), and the
 plan of the write that lands an ``incremental.append_transcripts`` batch
 (``append_transcripts``: the second half of each conversation appended
 onto a table holding the first half), captured from a real append, and
@@ -190,6 +191,7 @@ PSEUDO = {
     "pipeline_bucket_tiers": pipeline_bucket_tiers,
     "refresh_tiers": _refresh(False),
     "refresh_tiers_sketches": _refresh(True),
+    "refresh_tiers_digest": _refresh("digest"),
     "append_transcripts": append_transcripts,
     "stitch_transcripts": stitch_transcripts,
 }

@@ -41,7 +41,7 @@ SANCTIONED_OBJECT_AGG = {
     "bag_aggregates": "BAG/BAGD = collect_list/collect_set by definition",
     "percentile_digest_ok": "merge-free digest build = sort_array("
     "collect_list) BOUNDED < 2δ/π values per group BY CONSTRUCTION "
-    "(rows anti-joined against the oversized-window key set first) — "
+    "(only rows whose in-plan window count is below it are collected) — "
     "tdigest_rollup's routed JVM path",
 }
 
@@ -59,10 +59,11 @@ EXCHANGE_BUDGET = {
     "cover_jaccard": 18,
     "flat_cover": 18,
     "cover_accumulation": 15,
-    # the digest serving gate: routed build (counts + bounded JVM
-    # collect + rare-window Arrow path) + 1h/1d cascades + exact side +
-    # join — an extra Arrow stage or a lost broadcast fails
-    "percentile_digest_ok": 12,
+    # the digest serving gate: routed build (in-plan window count +
+    # bounded JVM collect + rare-window Arrow path) + 1h/1d cascades +
+    # exact side + join (7 as measured) — an extra Arrow stage or
+    # shuffle fails
+    "percentile_digest_ok": 7,
 }
 
 
