@@ -48,8 +48,10 @@ def counts_map(col: Column | str, values: Sequence[str] | None = None) -> Column
 
 def known_counts_map(values: Sequence[str], counts: Sequence[Column]) -> Column:
     """The histogram map of a KNOWN category domain from one count per
-    category (``counts[i]`` counts ``values[i]``), in ``values`` order;
-    zero-count categories are absent."""
+    category (``counts[i]`` counts ``values[i]``), its entries sorted by
+    category as every other counts map's are; zero-count categories are
+    absent."""
+    values, counts = zip(*sorted(zip(values, counts), key=lambda vc: vc[0]))
     m = F.map_from_arrays(F.array(*[F.lit(v) for v in values]), F.array(*counts))
     return F.map_filter(m, lambda _, v: v > 0)
 

@@ -403,10 +403,8 @@ def refresh_tiers(
 
     existing_modes = {}
     for tier in tiers:
-        try:
-            cols = catalog.columns(catalog.tier_table(out_dir, tier))
-        except Exception:
-            cols = None  # unreadable footer: treat as absent
+        # an unreadable footer raises: a table it hides is not absent
+        cols = catalog.columns(catalog.tier_table(out_dir, tier))
         if cols is not None:
             existing_modes[tier] = (
                 "digest" if "lat_digest" in cols else "lat_hist" in cols

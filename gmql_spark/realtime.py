@@ -297,18 +297,23 @@ def stitch_transcripts(
     ``incremental.pending_append_min_us``, exactly like
     ``realtime_rollup``) is answered from raw instead of tier rows.
     The default trusts the tiers for the whole range (a refresh after
-    every append, e.g. ``streaming.stream_ingest``)."""
+    every append, e.g. ``streaming.stream_ingest``).
+
+    Only the date leaves the segments cover are listed and read, so the
+    listing does not grow with the tables' age (tier tables without a
+    refresh manifest, ``run_pipeline``'s, are read whole)."""
     frozen = _serving_watermark(fact_path, tiers_dir) if realtime else None
-    tier_dfs = {t: _read_tier(spark, tiers_dir, t) for t in ("1m", "1h", "1d")}
-    # only the fact leaves of the raw segments' dates
-    days = [
-        (str(s.date()), str((e - _dt.timedelta(microseconds=1)).date()))
-        for tier, s, e in _segments(start, end, frozen)
-        if tier == "raw"
-    ]
-    raw = catalog.read_fact_leaves(
-        spark, fact_path, dates=lambda d: any(lo <= d <= hi for lo, hi in days)
-    )
+    segs, us = _segments(start, end, frozen), _dt.timedelta(microseconds=1)
+
+    def dates(tier: str) -> Callable[[str], bool]:  # those of its segments
+        days = [(str(s.date()), str((e - us).date())) for t, s, e in segs if t == tier]
+        return lambda d: any(lo <= d <= hi for lo, hi in days)
+
+    dated = read_refresh_manifest(tiers_dir) is not None
+    tier_dfs = {
+        t: _read_tier(spark, tiers_dir, t, dates(t) if dated else None) for t in TIER_SECONDS
+    }
+    raw = catalog.read_fact_leaves(spark, fact_path, dates=dates("raw"))
     raw_aggs = [
         F.count(F.lit(1)).alias("turn_count"),
         F.count("gap_us").alias("latency_cnt"),
@@ -402,9 +407,11 @@ def _serving_watermark(fact_path: str, tiers_dir: str) -> _dt.datetime:
     return _dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=wm)
 
 
-def _read_tier(spark: SparkSession, tiers_dir: str, tier: str) -> DataFrame:
-    """Tier ``tier``'s table without its partition columns (no job)."""
-    return catalog.read_table(spark, catalog.tier_table(tiers_dir, tier)).drop(
+def _read_tier(spark: SparkSession, tiers_dir: str, tier: str, dates=None) -> DataFrame:
+    """Tier ``tier``'s table without its partition columns (no job):
+    the ``window_date`` leaves ``dates`` accepts, every leaf without."""
+    where = {} if dates is None else {catalog.TIER_DATE: dates}
+    return catalog.read_table(spark, catalog.tier_table(tiers_dir, tier), **where).drop(
         catalog.TIER_DATE, catalog.TIER_BUCKET
     )
 
@@ -437,7 +444,7 @@ def realtime_rollup(
     (``sources.catalog.read_fact_leaves``); if the fact table lacks
     ``gap_us`` the whole table is opened and the gaps are derived over
     the full raw first (exact, one extra shuffle) before the tail
-    filter.
+    filter. The tier table is read whole: every closed window is served.
     """
     from gmql_spark.operators.rollup import rollup, with_gap_seconds
 

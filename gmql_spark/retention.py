@@ -75,15 +75,10 @@ def compact_partitions(
 ) -> dict[str, int]:
     """Rewrite fragmented table partitions into one file each — the
     Iceberg ``rewrite_data_files`` (compaction) analogue for the
-    parquet-layout fallback. Incremental tier refreshes overwrite whole
-    date partitions so fragmentation there is bounded, but append-heavy
-    fact tables and frequent small refreshes accrete small files;
-    compaction is the standing maintenance job that keeps scan task
-    counts sane at warehouse scale.
-
-    Rewrites the leaves under a ``partition_col`` dir (of
-    ``partitions``, every value when None) with more than ``min_files``
-    files (``catalog.compact``). Returns {partition_value: files_before}."""
+    parquet-layout fallback: the leaves under a ``partition_col`` dir
+    (of ``partitions``, every value when None) with more than
+    ``min_files`` files, in one staged write (``catalog.compact``).
+    Returns {partition_value: files_before}."""
     done = catalog.compact(spark, table_path, min_files, **{partition_col: partitions})
     return {rel.split("=", 1)[1]: n for rel, n in done.items()}
 
@@ -110,16 +105,10 @@ def compact_tier_tables(
     return out
 
 
-def compact_fact_table(
-    spark,
-    fact_path: str,
-    min_files: int = 2,
-    date_col: str = "event_date",
-) -> dict[str, int]:
+def compact_fact_table(spark, fact_path: str, min_files: int = 2) -> dict[str, int]:
     """Compact an append-heavy fact table: every ``append_transcripts``
-    batch adds a file to each (bucket, date) leaf it touches. Each
+    batch adds a file to each (bucket, date) leaf it touches. Every
     fragmented leaf (a bucket dir in a table without days) is rewritten
-    on its own (``catalog.compact``), so a job can run a few leaves per
-    maintenance tick. ``date_col`` is not read: the leaf walk finds the
-    levels. Returns {"conv_bucket=N/event_date=D": files_before}."""
+    in one staged write (``catalog.compact``). Returns
+    {"conv_bucket=N/event_date=D": files_before}."""
     return catalog.compact(spark, fact_path, min_files, conv_bucket=None)

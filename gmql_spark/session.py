@@ -17,15 +17,10 @@ Design notes (100 TB target, tested on local[N]):
   static conf read once per JVM) holds 1000 classes instead of Spark's
   100. The engine's plans generate more distinct whole-stage classes
   than 100, and the cache is an LRU, so at the default every lookup of
-  a repeated plan misses and Janino compiles the class again. Measured
-  on ``local[4]`` in a fresh JVM with an unbounded cache: an ingest
-  cycle (append, refresh, realtime query, compaction) compiles 148
-  distinct classes the first time, its base load included; one
-  ``run_pipeline`` 64; the 50 queries of ``tools/check_entry.py`` 930
-  together. At 100 entries every repeat of the ingest cycle recompiled
-  130 classes (append 62, refresh 53, query 13, compaction 2); at 1000
-  it compiles none. The working sets come from the plans' shapes, not
-  from the core count.
+  a repeated plan misses and Janino compiles the class again. At 1000
+  a warm ingest cycle (append, refresh, realtime query, compaction)
+  compiles none (``tests/test_incremental.py``); the working sets come
+  from the plans' shapes, not from the core count.
 """
 
 from __future__ import annotations
@@ -35,7 +30,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS_PER_CORE = 2
-# generated classes kept per JVM: the working sets in the module docstring
+# generated classes kept per JVM (module docstring)
 CODEGEN_CACHE_ENTRIES = 1000
 
 

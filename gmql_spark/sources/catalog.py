@@ -19,10 +19,13 @@ the data. The tables, partition columns outermost first:
 - Gorilla ``<out>/gorilla_<t>``: ``bucket``; ``run_pipeline(compress=True)``.
 
 Writers stage first (``<fact>/_append_staging``,
-``<out>/_refresh_staging``, ``<out>/_staging``, ``_compact_tmp/`` beside
-a compacted leaf) and replace a leaf by ``swap_leaf`` through a trash
-dir beside it. Reads (``read_table``) list and open only the leaves
-asked for, with the schema of one footer: no inference or listing job,
+``<out>/_refresh_staging``, ``<out>/_staging``,
+``<table>/_compact_staging``) and replace a leaf by ``swap_leaf``
+through the ``_swap_trash/`` dir beside it. After a crash mid-swap the
+old leaf waits there (recover by renaming it back), and later swaps of
+other leaves keep it; the next compaction clears the staging a crashed
+one left. Reads (``read_table``) list and open only the leaves asked
+for, with the schema of one footer: no inference or listing job,
 however old the table. The reference keeps each dataset's schema in a
 catalog (``GMQL-Repository``) and writes one file per sample
 (``StoreTABRD.scala:23-95``).
@@ -39,7 +42,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DateType, IntegerType, StructField, StructType
+from pyspark.sql.types import DateType, IntegerType, StringType, StructField, StructType
 
 N_BUCKETS_DEFAULT = 16
 # the fact table's partition columns, typed as schema inference types them
@@ -51,6 +54,7 @@ DATE_COLUMNS = ("event_date", TIER_DATE)  # the levels retention expires
 APPEND_STAGING = "_append_staging"  # under the fact table
 REFRESH_STAGING = "_refresh_staging"  # under a tier root
 PIPELINE_STAGING = "_staging"  # under a tier root
+COMPACT_STAGING = "_compact_staging"  # under a compacted table
 
 
 def bucket_of(key: str, n_buckets: int) -> Column:
@@ -190,6 +194,11 @@ def read_table(
         # typed as a read types it: every column nullable
         nullable = StructType([StructField(f.name, f.dataType) for f in schema])
         return spark.createDataFrame([], nullable)
+    return _open(spark, path, found, schema)
+
+
+def _open(spark: SparkSession, path: str, found: list, schema: StructType | None) -> DataFrame:
+    """``read_table``'s open of the leaf dirs ``found`` of ``path``."""
     n = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
     reader = (spark.read.schema(schema) if schema else spark.read).option("basePath", path)
     chunks = [reader.parquet(*found[i : i + n]) for i in range(0, len(found), n)]
@@ -211,14 +220,14 @@ def footer_stats(path: str) -> tuple[int, int]:
     return rows, size
 
 
-def swap_leaf(staged: str, dest: str, trash: str = "_swap_trash") -> None:
+def swap_leaf(staged: str, dest: str) -> None:
     """Replace the leaf directory ``dest`` with the fully written
     ``staged`` one by two renames: readers see the old leaf or the new
     one, never a half-written one. Between the renames the old leaf
-    waits in the ``trash`` dir beside ``dest``, so a crash there leaves
+    waits in ``_swap_trash/`` beside ``dest``, so a crash there leaves
     it intact until a later swap into ``dest`` supersedes it."""
     parent, name = os.path.split(dest)
-    trash_root = os.path.join(parent, trash)
+    trash_root = os.path.join(parent, "_swap_trash")
     aside = os.path.join(trash_root, name)
     shutil.rmtree(aside, ignore_errors=True)
     os.makedirs(trash_root, exist_ok=True)
@@ -252,33 +261,33 @@ def move_files(stage: str, table: str) -> None:
 
 
 def compact(
-    spark: SparkSession,
-    table: str,
-    min_files: int,
+    spark: SparkSession, table: str, min_files: int,
     **where: Collection | Callable[[str], bool] | None,
 ) -> dict[str, int]:
-    """Rewrite each leaf of ``table`` that ``where`` selects and that
-    holds more than ``min_files`` parquet files into one file, one leaf
-    per Spark job: written to ``_compact_tmp/`` beside it and swapped in
-    through ``_compact_trash/`` (``swap_leaf``), so no job reads and
-    overwrites the table. After a crash between the swap's renames the
-    leaf waits under ``_compact_trash/`` (recover by renaming it back);
-    later runs keep such copies. Returns {leaf relative to ``table``:
-    files_before}."""
-    done: dict[str, int] = {}
-    for src in leaves(table, **where):
-        n = sum(1 for f in os.listdir(src) if f.endswith(".parquet"))
-        if n <= min_files:
-            continue
-        parent, name = os.path.split(src)
-        stage_root = os.path.join(parent, "_compact_tmp")
-        stage = os.path.join(stage_root, name)
-        shutil.rmtree(stage, ignore_errors=True)  # THIS leaf's stale staging
-        read_table(spark, src).coalesce(1).write.mode("overwrite").parquet(stage)
-        swap_leaf(stage, src, trash="_compact_trash")
-        with contextlib.suppress(OSError):  # a crashed run's staging stays
-            os.rmdir(stage_root)
-        done[os.path.relpath(src, table)] = n
+    """Rewrite each leaf of ``table`` that ``where`` selects and that holds
+    more than ``min_files`` parquet files into one file, all in one write
+    staged in ``_compact_staging/`` and swapped in by ``swap_leaves``. Rows
+    sort by the partition columns (the strings on the leaf path), then
+    every non-map column in table order; crash contract in the module
+    docstring. Returns {leaf relative to ``table``: files_before}."""
+    done = {
+        os.path.relpath(lf, table): n for lf in leaves(table, **where)
+        if (n := sum(f.endswith(".parquet") for f in os.listdir(lf))) > min_files
+    }
+    if not done:
+        return done
+    parts = [p.split("=", 1)[0] for p in next(iter(done)).split(os.sep)]
+    data = [f for f in footer_schema(table) or () if f.name not in parts]
+    schema = StructType(data + [StructField(c, StringType()) for c in parts]) if data else None
+    rows = _open(spark, table, [os.path.join(table, lf) for lf in done], schema)
+    order = parts + [f.name for f in rows.schema
+                     if f.name not in parts and "map<" not in f.dataType.simpleString()]
+    stage = os.path.join(table, COMPACT_STAGING)
+    shutil.rmtree(stage, ignore_errors=True)
+    rows = rows.repartition(*parts).sortWithinPartitions(*order)
+    rows.write.partitionBy(*parts).parquet(stage)
+    swap_leaves(stage, table)
+    shutil.rmtree(stage)
     return done
 
 

@@ -586,6 +586,38 @@ def test_refresh_crash_between_leaf_swaps_is_repaired_by_rerun(
     _assert_tiers_equal_oneshot(spark, out, raw)
 
 
+def test_refresh_raises_on_unreadable_tier_footer(spark, tmp_path, split_data):
+    """A tier table whose footer cannot be read is not taken as absent:
+    the refresh raises before it writes, and no leaf of any tier table
+    changes (the sketch-mode check cannot see that table's columns)."""
+    import glob
+    import hashlib
+    import os
+    from pathlib import Path
+
+    import pyarrow as pa
+
+    _, b1, b2 = split_data
+    fact, out = str(tmp_path / "fact"), str(tmp_path / "tiers")
+    refresh_tiers(spark, fact, out, dates=append_transcripts(spark, b1, fact, n_buckets=4))
+    d2 = append_transcripts(spark, b2, fact, n_buckets=4)
+    # the file whose footer the 1h table's schema is read from
+    first = sorted(glob.glob(f"{out}/rollup_1h/window_date=*/*.parquet"))[0]
+    with open(first, "r+b") as f:
+        f.truncate(os.path.getsize(first) // 2)
+
+    def snapshot():
+        return {
+            p: hashlib.md5(Path(p).read_bytes()).hexdigest()
+            for p in glob.glob(f"{out}/rollup_*/**/*.parquet", recursive=True)
+        }
+
+    before = snapshot()
+    with pytest.raises(pa.ArrowInvalid):
+        refresh_tiers(spark, fact, out, dates=d2)
+    assert snapshot() == before
+
+
 def test_refresh_leaves_dates_without_fact_rows_alone(spark, tmp_path, split_data):
     """A refreshed date with no fact rows stages no leaf: its existing
     tier leaf is kept as it was (its raw rows were expired), and a date

@@ -528,3 +528,74 @@ def test_building_queries_runs_no_jobs(spark, tmp_path, split_data, monkeypatch)
     assert spark_jobs(
         spark, lambda: compile_script(spark, f"T = LOAD '{fact}'; MATERIALIZE T;")
     ) == 0
+
+
+def test_stitch_reads_only_its_dates_leaves(spark, tmp_path, monkeypatch):
+    """A stitch lists only the tier and fact leaves of the dates its
+    segments cover: over a 2-date and a 120-date table the same 2-date
+    range lists the same leaves and runs the same number of jobs, with
+    rows equal to the one-pass aggregate of the fact rows in range."""
+    import os
+    from functools import reduce
+
+    import pandas as pd
+    from pyspark.sql import DataFrame
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from gmql_spark.realtime import stitch_transcripts
+    from tests.conftest import spark_jobs
+
+    raw = datagen.transcripts_spark(spark, n_conv=40)
+    d1 = raw.groupBy(F.to_date("ts").alias("d")).count().orderBy(F.desc("count")).first()[0]
+    short = raw.filter(F.to_date("ts").between(d1, d1 + dt.timedelta(days=1)))
+    # 59 copies of the 2 dates, two days apart each: 120 dates in all
+    copies = [
+        short.withColumn("conv_id", F.concat("conv_id", F.lit(f"_{k}")))
+        .withColumn("ts", F.col("ts") + F.expr(f"INTERVAL {2 * k} DAYS"))
+        for k in range(1, 60)
+    ]
+    tables = {}
+    for name, df in (("short", short), ("long", reduce(DataFrame.unionByName, copies, short))):
+        fact, out = str(tmp_path / f"fact_{name}"), str(tmp_path / f"tiers_{name}")
+        refresh_tiers(spark, fact, out, dates=append_transcripts(spark, df, fact, n_buckets=2))
+        tables[name] = fact, out
+    assert len(os.listdir(f"{tables['long'][1]}/rollup_1h")) == 120
+    start = dt.datetime.combine(d1, dt.time(3, 0, 17))
+    end = dt.datetime.combine(d1 + dt.timedelta(days=1), dt.time(20, 0, 43))
+
+    reads = []
+    real_parquet = DataFrameReader.parquet
+
+    def recording_parquet(self, *paths, **kw):
+        reads.extend(paths)
+        return real_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording_parquet)
+    listed, jobs, got = {}, {}, {}
+    for name, (fact, out) in tables.items():
+        reads.clear()
+        jobs[name] = spark_jobs(
+            spark,
+            lambda: got.update(
+                {name: _pdf(stitch_transcripts(spark, fact, out, start, end), ["conv_id"])}
+            ),
+        )
+        listed[name] = sorted(os.path.relpath(p, tmp_path).replace(name, "") for p in reads)
+    monkeypatch.undo()
+    assert listed["short"] == listed["long"], listed
+    assert jobs["short"] == jobs["long"], jobs
+    fact_rows = spark.read.parquet(tables["short"][0]).filter(
+        (F.col("ts") >= F.lit(start)) & (F.col("ts") < F.lit(end))
+    )
+    exp = _pdf(
+        fact_rows.groupBy("conv_id").agg(
+            F.count(F.lit(1)).alias("turn_count"),
+            F.count("gap_us").alias("latency_cnt"),
+            F.sum("gap_us").alias("latency_sum_us"),
+            F.min("ts").alias("first_ts"),
+            F.max("ts").alias("last_ts"),
+        ),
+        ["conv_id"],
+    )
+    pd.testing.assert_frame_equal(got["short"], exp[got["short"].columns])
+    pd.testing.assert_frame_equal(got["long"], got["short"])

@@ -67,6 +67,25 @@ def test_cascade_rollup_matches_oracle(data, role_values):
             assert all(list(m) == sorted(m) for m in got[c]), (tier, c)
 
 
+def test_role_counts_entries_in_one_order(data):
+    """The tier builder (closed role domain) and GSL ``CASCADE`` write
+    ``role_counts`` entries in one order, sorted by role: the entry
+    lists are equal, not only the maps."""
+    from pyspark.sql import functions as F
+
+    _, sdf = data
+    key = ["conv_id", "window_start"]
+
+    def entries(df):
+        out = df.select(*key, F.to_json("role_counts").alias("entries")).toPandas()
+        return out.sort_values(key).reset_index(drop=True)
+
+    direct = entries(rollup(sdf, "1h"))
+    assert direct["entries"].str.contains('"assistant".*"user"').any()
+    cascaded = entries(cascade_rollup(rollup(sdf, "1m"), "1h"))
+    assert_pdf_equal(direct, cascaded, key)
+
+
 def test_cascade_rollup_sketches_match_direct(data):
     """With sketches the cascaded ``lat_hist`` equals ``hist_rollup``
     over raw, bit for bit, and ``tool_hll`` has ``hll_rollup``'s

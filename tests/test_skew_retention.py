@@ -641,10 +641,10 @@ def test_compact_tier_tables_end_to_end(spark, tmp_path):
 
 
 def test_compaction_reads_leaves_with_footer_schema(spark, tmp_path, monkeypatch):
-    """Each compacted leaf is opened with the schema of one of its
-    footers: one Spark job fewer per leaf than opening it with schema
-    inference (the path a leaf without a Spark-written footer takes),
-    with the same rows and the same file schema either way."""
+    """The compacted leaves are opened with the schema of one footer:
+    one Spark job fewer than opening them with schema inference (the
+    path a table without a Spark-written footer takes), with the same
+    rows and the same file schema either way."""
     import glob
     import os
     import shutil
@@ -688,10 +688,89 @@ def test_compaction_reads_leaves_with_footer_schema(spark, tmp_path, monkeypatch
     )
     monkeypatch.undo()
     assert done["footer"] == done["inferred"] and done["footer"], done
-    assert jobs["inferred"] - jobs["footer"] == len(done["footer"]), jobs
+    assert jobs["inferred"] - jobs["footer"] == 1, jobs
     pd.testing.assert_frame_equal(rows(fact), before)
     pd.testing.assert_frame_equal(rows(inferred), before)
     for leaf in done["footer"]:
         (a,) = glob.glob(f"{fact}/{leaf}/*.parquet")
         (b,) = glob.glob(f"{inferred}/{leaf}/*.parquet")
         assert footer_schema(os.path.dirname(a)) == footer_schema(os.path.dirname(b))
+
+
+def test_compaction_is_one_staged_write(spark, tmp_path):
+    """Compaction rewrites every fragmented leaf of a table in one staged
+    write: at most 2 Spark jobs for 20+ fragmented leaves and none when
+    no leaf is fragmented. Each rewritten leaf keeps its rows (as a
+    multiset) in one file, in the same row order on every run; leaves
+    below the threshold keep their files byte for byte."""
+    import glob
+    import hashlib
+    import os
+    import shutil
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    from gmql_spark import datagen, retention
+    from gmql_spark.incremental import append_transcripts
+    from gmql_spark.sources import catalog
+    from tests.conftest import spark_jobs
+
+    from pyspark.sql.window import Window
+
+    raw = datagen.transcripts_spark(spark, n_conv=40)
+    fact = str(tmp_path / "fact")
+    # each conversation's two halves go in two appends: a file per half
+    us, w = F.unix_micros("ts"), Window.partitionBy("conv_id")
+    cut = raw.withColumn("_early", us < (F.min(us).over(w) + F.max(us).over(w)) / 2)
+    for early in (True, False):
+        batch = cut.filter(F.col("_early") == early).drop("_early")
+        append_transcripts(spark, batch, fact, n_buckets=2)
+    # one conversation moved 400 days on lands in leaves of one file
+    one = raw.filter(F.col("conv_id") == raw.select("conv_id").first()[0])
+    append_transcripts(
+        spark, one.withColumn("ts", F.col("ts") + F.expr("INTERVAL 400 DAYS")), fact,
+        n_buckets=2,
+    )
+    copy = str(tmp_path / "copy")
+    shutil.copytree(fact, copy)
+
+    def files(leaf):
+        return sorted(glob.glob(f"{leaf}/*.parquet"))
+
+    def rows(leaf):
+        pdf = pq.read_table(files(leaf)).to_pandas()
+        return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+
+    def digest(leaf):
+        return {os.path.basename(f): hashlib.md5(Path(f).read_bytes()).hexdigest()
+                for f in files(leaf)}
+
+    leaves = {os.path.relpath(lf, fact): lf for lf in catalog.leaves(fact)}
+    frag = {rel for rel, lf in leaves.items() if len(files(lf)) > 1}
+    assert len(frag) >= 20 and len(leaves) > len(frag), leaves
+    before = {rel: rows(lf) for rel, lf in leaves.items()}
+    kept = {rel: digest(lf) for rel, lf in leaves.items() if rel not in frag}
+
+    done = {}
+    assert spark_jobs(
+        spark, lambda: done.update(retention.compact_fact_table(spark, fact, min_files=1))
+    ) <= 2
+    assert set(done) == frag and set(done.values()) == {2}, done
+    assert sorted(catalog.leaves(fact)) == sorted(leaves.values())
+    for rel, lf in leaves.items():
+        pd.testing.assert_frame_equal(rows(lf), before[rel])
+        if rel in frag:
+            assert len(files(lf)) == 1, rel
+        else:
+            assert digest(lf) == kept[rel], rel
+    assert spark_jobs(
+        spark, lambda: done.update(again=retention.compact_fact_table(spark, fact, min_files=1))
+    ) == 0
+    assert done["again"] == {}
+
+    # a second compaction of a copy writes each leaf's rows in the same order
+    assert retention.compact_fact_table(spark, copy, min_files=1).keys() == frag
+    for rel in frag:
+        (a,), (b,) = files(leaves[rel]), files(f"{copy}/{rel}")
+        assert pq.read_table(a).equals(pq.read_table(b)), rel

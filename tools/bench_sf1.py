@@ -188,17 +188,18 @@ def churn_family(spark, n_appends: int) -> dict:
     refresh_tiers(spark, fact, pre, dates=sorted(dates))
     sig_pre = {t: tuple(tier_sig(pre, t)) for t in ("1m", "1h", "1d")}
 
-    # simulated crash of a PREVIOUS compaction mid-swap on one leaf:
-    # the sweep must leave its trash/stage copies alone
+    # simulated crash of a PREVIOUS compaction between one leaf's swap
+    # renames: the old leaf waits under _swap_trash/ beside it, and the
+    # sweep's swaps of the bucket's other leaves must leave it alone
     b0, d0 = sorted(before)[0].split("/")
-    os.makedirs(f"{fact}/{b0}/_compact_trash", exist_ok=True)
-    os.rename(f"{fact}/{b0}/{d0}", f"{fact}/{b0}/_compact_trash/{d0}")
+    os.makedirs(f"{fact}/{b0}/_swap_trash", exist_ok=True)
+    os.rename(f"{fact}/{b0}/{d0}", f"{fact}/{b0}/_swap_trash/{d0}")
 
     t0 = time.perf_counter()
     compact_fact_table(spark, fact, min_files=1)
     compact_s = time.perf_counter() - t0
-    crash_ok = os.path.isdir(f"{fact}/{b0}/_compact_trash/{d0}")
-    os.rename(f"{fact}/{b0}/_compact_trash/{d0}", f"{fact}/{b0}/{d0}")
+    crash_ok = os.path.isdir(f"{fact}/{b0}/_swap_trash/{d0}")
+    os.rename(f"{fact}/{b0}/_swap_trash/{d0}", f"{fact}/{b0}/{d0}")
 
     after = leaf_files()
     frag_left = {
