@@ -14,25 +14,24 @@ Scale notes:
 - one tier builder (``_build_tiers``) decides how every tier is built,
   for ``rollup``, ``rollup_all_tiers``, ``checkpoint.run_pipeline`` and
   ``incremental.refresh_tiers`` alike, and returns its tiers as one
-  frame with a ``tier`` column. The tiers are one fused pass over the
-  gap frame: per-tier windowed projections are unioned and grouped by
-  (key, tier, window) — one exchange + sort + aggregate for all of them
-  and no joins, open category domains and sketches included (a second
+  frame with a ``tier`` column. The tiers are one fused pass over one
+  scan of the gap frame: a generator emits each row once per tier, with
+  its window in that tier, and the rows are grouped by (key, tier,
+  window) — one exchange + sort + aggregate for all of them and no
+  joins, open category domains and sketches included (a second
   aggregate stage on the same partitioning builds their maps,
   ``lat_hist`` and ``tool_hll`` from counted rows, MAP's two-level
   combine). The exact-percentile contract forces a raw-scale sort
   anyway, and the fused pass computes every mergeable stat inside it.
   ``run_pipeline`` and ``refresh_tiers`` build all tiers in one call
   (one plan, one write); ``rollup_all_tiers`` passes one tier at a
-  time. Catalyst (Spark 4.1) does prune an all-tier frame filtered to
-  one tier: each ``tier == t`` filter plans the scans and exchanges of
-  ``rollup(raw, t)``, with equal rows, with or without sketches and open
-  roles. The per-tier builds stay for two measured reasons (668,525
-  turns, bench.py's persist/unpersist protocol): the ``tier`` group key
-  raised warm executor CPU from 11.3–12.4 s to 12.9–13.8 s, and a
-  persisted all-tier frame re-runs the lag window once per union branch
-  (shuffle 17.6 → 52.9 MB); caching the gap frame instead would leave a
-  cache that ``return_gaps`` cannot release.
+  time. Catalyst (Spark 4.1) pushes a ``tier == t`` filter on an
+  all-tier frame down to the generator's output, below the exchange, so
+  only that tier's rows are shuffled, and its rows equal
+  ``rollup(raw, t)``'s, with or without sketches. The per-tier builds
+  stay for a measured reason (668,525 turns, bench.py's
+  persist/unpersist protocol): the ``tier`` group key raised warm
+  executor CPU from 11.3–12.4 s to 12.9–13.8 s.
 - percentiles are exact, from one rank + hash-agg + lerp kernel
   (``_ranked_percentiles``, shared by ``rollup`` and
   ``exact_percentiles``) — NOT the built-in ``percentile`` aggregate,
@@ -62,6 +61,7 @@ Scale notes:
 from __future__ import annotations
 
 from collections.abc import Sequence
+from datetime import timedelta
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
@@ -385,6 +385,22 @@ def _tier_columns(df: DataFrame, key: str) -> DataFrame:
     )
 
 
+def _tier_window(ts: str, tier: str) -> Column:
+    """The window that ``window(ts, TIER_DURATION[tier])`` puts a
+    non-null ``ts`` in, as a ``start``/``end`` struct computed from
+    ``unix_micros(ts)``: ``start = us - pmod(us, Δ)``, which floors
+    pre-1970 times too. Unlike ``window()``, any number of them fit in
+    one projection."""
+    n, unit = TIER_DURATION[tier].split()
+    step = timedelta(**{f"{unit}s": int(n)}) // timedelta(microseconds=1)
+    us = F.unix_micros(F.col(ts))
+    start = us - F.pmod(us, F.lit(step))
+    return F.struct(
+        F.timestamp_micros(start).alias("start"),
+        F.timestamp_micros(start + step).alias("end"),
+    )
+
+
 def _build_tiers(
     raw_g: DataFrame,
     finer: DataFrame | None,
@@ -403,12 +419,14 @@ def _build_tiers(
     is the next-finer tier's frame or None, read only for its
     ``lat_digest``.
 
-    Every tier, in every sketch mode, is one fused pass over ``raw_g``:
-    the per-tier windowed projections (``tier`` literal,
-    ``_w = window(ts, Δ)``) are unioned, ranked by gap within
+    Every tier, in every sketch mode, is one fused pass over one scan of
+    ``raw_g``: one generator emits each row once per tier, as a ``tier``
+    literal and its window ``_w`` in that tier (``_tier_window``; one
+    tier is a plain projection), and the rows are ranked by gap within
     (key, tier, _w) — the tier only when there are several — and
     aggregated on that one hash partitioning: one exchange, no join,
     for every stat, map, sketch and exact percentile of every tier.
+    Rows without a ``ts`` are dropped, as ``window()`` drops them.
     With open category domains (``role_values``/``tool_values`` None)
     or sketches the aggregate has two stages, GMQL MAP's in-bin reduce
     then merge (``_ranked_percentiles(within=...)``): stage A counts per
@@ -432,15 +450,17 @@ def _build_tiers(
     from gmql_spark.functions.sketches import log2_bucket
     from gmql_spark.functions.tdigest import tdigest_cascade, tdigest_rollup
 
+    # window() drops a row without a time; the tier bounds would not
+    raw_g = raw_g.filter(F.col(ts).isNotNull())
     if with_sketches:  # the log₂ gap bucket lat_hist counts
         raw_g = raw_g.withColumn("_b", log2_bucket(F.col("gap_us")))
-    d = reduce(
-        DataFrame.union,
-        [
-            raw_g.withColumns({"tier": F.lit(t), "_w": F.window(ts, TIER_DURATION[t])})
+    if len(tiers) == 1:
+        d = raw_g.withColumn("_w", _tier_window(ts, tiers[0]))
+    else:  # one row per (raw row, tier), all from one scan of raw
+        d = raw_g.select("*", F.inline(F.array(*[
+            F.struct(F.lit(t).alias("tier"), _tier_window(ts, t).alias("_w"))
             for t in tiers
-        ],
-    )
+        ])))
     cats = {"role": role_values, "tool": tool_values}
     split = [c for c, vals in cats.items() if vals is None]  # the open domains
     within = split + [c for c in ("tool", "_b") if with_sketches and c not in split]

@@ -78,9 +78,11 @@ def compact_partitions(
     parquet-layout fallback: the leaves under a ``partition_col`` dir
     (of ``partitions``, every value when None) with more than
     ``min_files`` files, in one staged write (``catalog.compact``).
-    Returns {partition_value: files_before}."""
+    Returns {partition value: files_before} for a table with one
+    partition level, {leaf relative to the table: files_before} for a
+    deeper one (one date may have a leaf in every bucket)."""
     done = catalog.compact(spark, table_path, min_files, **{partition_col: partitions})
-    return {rel.split("=", 1)[1]: n for rel, n in done.items()}
+    return {rel if os.sep in rel else rel.split("=", 1)[1]: n for rel, n in done.items()}
 
 
 def compact_tier_tables(

@@ -21,6 +21,15 @@ Design notes (100 TB target, tested on local[N]):
   a warm ingest cycle (append, refresh, realtime query, compaction)
   compiles none (``tests/test_incremental.py``); the working sets come
   from the plans' shapes, not from the core count.
+- DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``)
+  is off. With it on, PySpark wraps every Column function and operator
+  to send its Python call site to the JVM: an active-session lookup, a
+  conf read, a stack walk and a set/clear of the JVM origin per call,
+  which about doubles the py4j round trips of building a tier plan.
+  The cost of turning it off: Spark errors carry no "DataFrame query
+  context" lines. At the default depth of 1 those lines name a frame
+  inside ``gmql_spark``, not the caller's. PySpark reads the setting
+  once per process, at the first wrapped call with an active session.
 """
 
 from __future__ import annotations
@@ -73,6 +82,7 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.driver.memory", os.environ.get("GMQL_SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

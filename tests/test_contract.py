@@ -53,3 +53,11 @@ def test_cover_param_strings_in_cover(spark):
     assert [(r.cover_start, r.cover_end) for r in out2] == [(m(0), m(40))]
     with pytest.raises(ValueError, match="n_samples"):
         cover(iv, min_acc="ALL")
+
+
+def test_session_captures_no_python_call_sites(spark):
+    """``get_spark`` turns DataFrame debugging off, so a Column call
+    sends no Python call site to the JVM (``session`` docstring)."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert not is_debugging_enabled()

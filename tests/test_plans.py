@@ -83,9 +83,10 @@ def test_all_tier_frame_shares_exchanges(spark, raw, tmp_path):
     tier of a bucket in one plan, open tool domain, as ``run_pipeline``
     builds it; with sketches too, as a sketch refresh builds it) plans
     one exchange and no join or broadcast: the rank window and both
-    aggregate stages share one hash partitioning. Its only object
-    aggregates assemble the tool maps (and sketches) from counted rows,
-    never from raw rows."""
+    aggregate stages share one hash partitioning. It reads the bucket
+    once: one scan feeds every tier. Its only object aggregates assemble
+    the tool maps (and sketches) from counted rows, never from raw
+    rows."""
     from gmql_spark.operators.rollup import DEFAULT_ROLES, _build_tiers, with_gap_seconds
     from gmql_spark.sources.catalog import read_fact_leaves, write_transcripts
 
@@ -100,6 +101,7 @@ def test_all_tier_frame_shares_exchanges(spark, raw, tmp_path):
         rep = plan_report(together)
         assert (rep["exchanges"], rep["joins"], rep["broadcasts"]) == (1, 0, 0), rep
         plan = physical_plan(together)
+        assert plan.count("FileScan parquet") == 1, plan
         obj = [ln for ln in plan.splitlines() if "ObjectHashAggregate" in ln]
         assert obj and all("collect_list(struct(tool, tool#" in ln for ln in obj), obj
         # the map stage reads the counted (key, tier, window, tool) rows

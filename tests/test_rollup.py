@@ -397,3 +397,59 @@ def test_tier_table_footer_schema(spark, tmp_path):
             assert _footer_fields(path) == TIER_FOOTER + cols, (table, tier)
             schemas.append(footer_schema(path))
         assert schemas[0] == schemas[1] == schemas[2], table
+
+
+@pytest.mark.parametrize("with_sketches", [False, True], ids=["plain", "sketches"])
+def test_all_tier_frame_equals_each_tier(spark, with_sketches):
+    """The pipeline's all-tier frame (every tier fanned out from one scan
+    of raw) filtered to a tier equals ``rollup`` of that tier, which
+    builds one tier alone: schema with nullability, every column bit
+    for bit and map entries in order. The input has a row without a
+    time, pre-1970 turns and turns on and just before minute, hour and
+    day edges."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from gmql_spark.operators.rollup import _build_tiers, with_gap_seconds
+
+    def t(s):
+        return None if s is None else dt.datetime.fromisoformat(s)
+
+    edges = [
+        ("edge", 0, "user", None, "1969-12-31 23:59:59.999999"),
+        ("edge", 1, "tool", "search", "1970-01-01 00:00:00"),
+        ("edge", 2, "assistant", None, "1970-01-01 00:59:59.999999"),
+        ("edge", 3, "tool", "calc", "1970-01-01 01:00:00"),
+        ("edge", 4, "tool", "search", None),
+        ("edge", 5, "user", None, "1970-01-01 01:01:00"),
+        ("old", 0, "user", None, "1955-03-01 12:30:00"),
+        ("old", 1, "tool", "calc", "1955-03-01 12:30:59.999999"),
+        ("old", 2, "system", None, "1955-03-02 00:00:00"),
+        ("now", 0, "user", None, "2026-01-04 23:59:59.999999"),
+        ("now", 1, "tool", "search", "2026-01-05 00:00:00"),
+        ("now", 2, "assistant", None, "2026-01-05 01:00:00"),
+        ("now", 3, "tool", "search", "2026-01-05 01:00:59.999999"),
+        ("now", 4, "user", None, "2026-01-05 01:01:00"),
+    ]
+    cols = ["conv_id", "turn_idx", "role", "tool", "ts"]
+    raw = spark.createDataFrame(
+        [(*e[:4], t(e[4])) for e in edges],
+        "conv_id string, turn_idx int, role string, tool string, ts timestamp",
+    ).unionByName(datagen.transcripts_spark(spark, n_conv=30).select(cols))
+    together = _build_tiers(
+        with_gap_seconds(raw), None, ("1m", "1h", "1d"), key="conv_id", ts="ts",
+        role_values=DEFAULT_ROLES, tool_values=None, with_sketches=with_sketches,
+    )
+
+    def rows(df):
+        exact = {"timestampFormat": "yyyy-MM-dd HH:mm:ss.SSSSSS"}
+        js = df.select(F.to_json(F.struct(*df.columns), exact).alias("j"))
+        return sorted(r.j for r in js.collect())
+
+    for tier in ("1m", "1h", "1d"):
+        alone = rollup(raw, tier, with_sketches=with_sketches)
+        got = together.filter(F.col("tier") == tier).drop("tier")
+        assert got.schema == alone.schema, tier
+        assert rows(got) == rows(alone), tier
+        assert alone.filter(F.year("window_start") < 1970).count() > 0

@@ -194,6 +194,21 @@ def test_compact_partitions(spark, tmp_path):
         after_rows.sort_values(key).reset_index(drop=True)[sorted(after_rows.columns)],
     )
 
+    # a fact table (conv_bucket=*/event_date=*) with one date fragmented
+    # in both buckets: one entry per fragmented leaf, keyed by its path
+    from gmql_spark.sources.catalog import leaves, write_transcripts
+
+    fact = str(tmp_path / "fact")
+    for _ in range(2):
+        write_transcripts(raw, fact, n_buckets=2, mode="append")
+    frag = {
+        os.path.relpath(lf, fact): n for lf in leaves(fact)
+        if (n := sum(f.endswith(".parquet") for f in os.listdir(lf))) > 1
+    }
+    dates = [rel.split("event_date=", 1)[1] for rel in frag]
+    assert any(dates.count(d) == 2 for d in dates), frag
+    assert compact_partitions(spark, fact, partition_col="event_date", min_files=1) == frag
+
 
 # ------------------------------- range-salt paths (round 4)
 
