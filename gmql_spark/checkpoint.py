@@ -110,8 +110,6 @@ def run_pipeline(
     out_dir: str,
     tiers: Sequence[str] = ("1m", "1h", "1d"),
     n_buckets: int = 8,
-    key: str = "conv_id",
-    ts: str = "ts",
     lineage: str = "",
     fail_after: int | None = None,
     on_bucket_done: Callable[[dict], None] | None = None,
@@ -120,7 +118,7 @@ def run_pipeline(
 ) -> dict:
     """Run the tier rollup bucket-by-bucket with checkpoint/resume.
 
-    Buckets are ``catalog.bucket_of(key, n_buckets)``, the storage
+    Buckets are ``catalog.bucket_of(n_buckets)``, the storage
     layout's bucket transform. **Pass
     ``raw_path``** (a table written by ``catalog.write_transcripts`` with
     the same ``n_buckets``) to make each bucket job PARTITION-PRUNE to
@@ -154,6 +152,7 @@ def run_pipeline(
         with_gap_seconds,
     )
 
+    key, ts = catalog.FACT_KEY, catalog.FACT_TS
     manifest = Manifest(f"{out_dir}/_manifest.jsonl")
     done = manifest.done_buckets(n_buckets=n_buckets)
     stage = f"{out_dir}/{catalog.PIPELINE_STAGING}"
@@ -172,7 +171,7 @@ def run_pipeline(
             # table's footer schema: no schema-inference job
             part = catalog.read_fact_leaves(spark, raw_path, bucket=b)
         else:
-            part = raw.filter(catalog.bucket_of(key, n_buckets) == b)
+            part = raw.filter(catalog.bucket_of(n_buckets) == b)
         # rows_in/watermark ride the bucket's write: observed on the raw
         # rows (null-ts rows included), not a separate job
         meta = Observation()
@@ -182,8 +181,8 @@ def run_pipeline(
         # every tier of the bucket in one plan and one write; rows and
         # bytes come from the written parquet's footers — no Spark job
         tiers_df = _build_tiers(
-            with_gap_seconds(part, key=key, ts=ts), None, tiers, key=key, ts=ts,
-            role_values=DEFAULT_ROLES, tool_values=None, with_sketches=False,
+            with_gap_seconds(part, key=key, order=catalog.FACT_ORDER, ts=ts), None, tiers,
+            key=key, ts=ts, role_values=DEFAULT_ROLES, tool_values=None, with_sketches=False,
         )
         _write_by_tier(tiers_df, f"{stage}/rollup", tiers)
         tables = ["rollup"]

@@ -72,7 +72,7 @@ from pyspark.sql.window import Window
 
 from gmql_spark.checkpoint import _observed
 from gmql_spark.sources import catalog
-from gmql_spark.sources.catalog import N_BUCKETS_DEFAULT
+from gmql_spark.sources.catalog import FACT_KEY, FACT_ORDER, FACT_TS, N_BUCKETS_DEFAULT
 
 APPEND_LOG = "_append_log.jsonl"
 
@@ -135,9 +135,7 @@ def pending_append_min_us(fact_path: str, manifest: dict | None) -> int | None:
     and the clamp in force; advancing a single global covered version
     there would silently drop the D2 rows from realtime serving.
     Entries predating the per-date record (no "dates" field) are
-    treated as always pending — the global covered_version cannot
-    certify per-date coverage, so the fallback over-clamps rather than
-    trusting it.
+    treated as always pending: the sound, over-clamp-only fallback.
 
     Soundness: append_transcripts only guarantees PER-CONVERSATION
     ordering, so a new or lagging conversation may land rows below the
@@ -152,17 +150,9 @@ def pending_append_min_us(fact_path: str, manifest: dict | None) -> int | None:
         if e.get("min_us") is None:
             continue
         dates = e.get("dates")
-        if dates is None:
-            # legacy entry without touched dates: the global
-            # covered_version cannot certify PER-DATE coverage (a
-            # partial refresh advances it past appends it didn't
-            # cover), so treat the entry as always pending — the sound,
-            # over-clamp-only fallback
-            reflected = False
-        else:
-            reflected = all(
-                d in cov_dates and cov_dates[d] >= e["version"] for d in dates
-            )
+        reflected = dates is not None and all(
+            d in cov_dates and cov_dates[d] >= e["version"] for d in dates
+        )
         if not reflected:
             mins.append(e["min_us"])
     return min(mins) if mins else None
@@ -179,13 +169,7 @@ def read_conv_state(spark: SparkSession, fact_path: str) -> DataFrame | None:
     return catalog.read_table(spark, f"{root}/{v}")
 
 
-def _with_cross_batch_gaps(
-    batch: DataFrame,
-    state: DataFrame | None,
-    key: str,
-    ts: str,
-    order: Sequence[str],
-) -> DataFrame:
+def _with_cross_batch_gaps(batch: DataFrame, state: DataFrame | None) -> DataFrame:
     """gap_us = intra-batch lag, falling back to the state table's
     last_us for each conversation's first batch row; ``_late`` flags a
     row at or before its conversation's recorded last_us (the
@@ -195,12 +179,12 @@ def _with_cross_batch_gaps(
     table (one row per conversation ever ingested) does not fit in
     driver/executor memory; AQE still broadcasts it while it's small.
     """
-    w = Window.partitionBy(key).orderBy(*[F.col(c) for c in order])
-    us = F.unix_micros(F.col(ts))
+    w = Window.partitionBy(FACT_KEY).orderBy(F.col(FACT_ORDER))
+    us = F.unix_micros(F.col(FACT_TS))
     batch = batch.withColumn("_gap_intra", us - F.lag(us).over(w))
     if state is not None:
-        prev = state.select(key, F.col("last_us").alias("_prev_us"))
-        batch = batch.join(prev, on=key, how="left")
+        prev = state.select(FACT_KEY, F.col("last_us").alias("_prev_us"))
+        batch = batch.join(prev, on=FACT_KEY, how="left")
     else:
         batch = batch.withColumn("_prev_us", F.lit(None).cast("long"))
     return batch.withColumns(
@@ -216,9 +200,6 @@ def append_transcripts(
     new_df: DataFrame,
     fact_path: str,
     n_buckets: int = N_BUCKETS_DEFAULT,
-    key: str = "conv_id",
-    ts: str = "ts",
-    order: Sequence[str] = ("turn_idx",),
 ) -> list:
     """Append a batch with cross-batch-exact ``gap_us``; returns the
     sorted list of event dates the batch touched (the refresh targets),
@@ -275,8 +256,8 @@ def append_transcripts(
             "would compute wrong cross-batch gaps"
         )
 
-    bucket = catalog.bucket_of(key, n_buckets)
-    us = F.unix_micros(F.col(ts))
+    bucket = catalog.bucket_of(n_buckets)
+    us = F.unix_micros(F.col(FACT_TS))
     # the batch's bookkeeping values in one aggregate: row count (an
     # empty batch stops here), touched buckets (state pruning;
     # O(n_buckets) values, same class as checkpoint), event-time range
@@ -287,8 +268,8 @@ def append_transcripts(
         F.collect_set(bucket).alias("buckets"),
         F.min(us).alias("lo"),
         F.max(us).alias("hi"),
-        F.collect_set(F.to_date(ts)).alias("dates"),
-        F.bool_or(F.col(ts).isNull()).alias("null_ts"),
+        F.collect_set(F.to_date(FACT_TS)).alias("dates"),
+        F.bool_or(F.col(FACT_TS).isNull()).alias("null_ts"),
     ).collect()[0]
     if not meta.rows:
         return []
@@ -304,17 +285,16 @@ def append_transcripts(
     # one-shot equivalence, so its count rides the write; late data must
     # go through a rebuild instead.
     stage = f"{fact_path}/{catalog.APPEND_STAGING}"
-    batch = _with_cross_batch_gaps(new_df, touched_state, key, ts, order)
+    batch = _with_cross_batch_gaps(new_df, touched_state)
     late = Observation()
     catalog.write_transcripts(
-        batch.observe(late, F.count_if("_late").alias("n")).drop("_late"),
-        stage, n_buckets=n_buckets, key=key, ts=ts,
+        batch.observe(late, F.count_if("_late").alias("n")).drop("_late"), stage, n_buckets
     )
     if _observed(late).get("n"):
         shutil.rmtree(stage)
-        late_convs = batch.filter("_late").select(key).distinct()
+        late_convs = batch.filter("_late").select(FACT_KEY).distinct()
         n_late = late_convs.count()
-        sample = [r[key] for r in late_convs.limit(5).collect()]
+        sample = [r[FACT_KEY] for r in late_convs.limit(5).collect()]
         raise RuntimeError(
             f"append to {fact_path} violates the per-conversation "
             f"time-ordered contract: {n_late} conversation(s) have batch "
@@ -325,11 +305,11 @@ def append_transcripts(
 
     # 3. new immutable state version (conv_id -> max last_us), bucketed:
     # the old state and the staged rows in one group-by
-    last = catalog.read_fact_leaves(spark, stage).select(key, us.alias("last_us"))
+    last = catalog.read_fact_leaves(spark, stage).select(FACT_KEY, us.alias("last_us"))
     if state is not None:
-        last = state.select(key, "last_us").unionByName(last)
+        last = state.select(FACT_KEY, "last_us").unionByName(last)
     next_v = f"v_{(int(cur[2:]) if cur else 0) + 1:06d}"
-    last.groupBy(key).agg(F.max("last_us").alias("last_us")).withColumn(
+    last.groupBy(FACT_KEY).agg(F.max("last_us").alias("last_us")).withColumn(
         "conv_bucket", bucket
     ).write.mode("overwrite").partitionBy("conv_bucket").parquet(f"{root}/{next_v}")
 
@@ -372,8 +352,6 @@ def refresh_tiers(
     out_dir: str,
     dates: Sequence,
     tiers: Sequence[str] = ("1m", "1h", "1d"),
-    key: str = "conv_id",
-    ts: str = "ts",
     with_sketches: bool | str | None = None,
 ) -> dict:
     """Recompute the tier rows of ``dates`` only: a read of those
@@ -393,7 +371,8 @@ def refresh_tiers(
     sketches (GSL, stream_ingest) must not replace date leaves of
     sketch-carrying tables with sketch-less ones (mixed parquet schemas
     read back nondeterministically); an EXPLICIT value that contradicts
-    the existing tables raises instead."""
+    the existing tables raises instead; so does, before any write, a fact
+    table without the stored ``gap_us`` or the ``event_date`` level."""
     from gmql_spark.operators.rollup import (
         DEFAULT_ROLES,
         _build_tiers,
@@ -401,14 +380,17 @@ def refresh_tiers(
     )
     from gmql_spark.realtime import record_refresh_watermark
 
-    existing_modes = {}
-    for tier in tiers:
-        # an unreadable footer raises: a table it hides is not absent
-        cols = catalog.columns(catalog.tier_table(out_dir, tier))
-        if cols is not None:
-            existing_modes[tier] = (
-                "digest" if "lat_digest" in cols else "lat_hist" in cols
-            )
+    fact_cols = catalog.columns(fact_path) or ()
+    missing = [c for c in ("gap_us", "event_date") if c not in fact_cols]
+    if missing:
+        raise ValueError(
+            f"cannot refresh tiers from {fact_path}: no fact table there, or one "
+            f"without {' and '.join(missing)} (append_transcripts writes both)"
+        )
+    existing_modes = {
+        tier: mode for tier in tiers
+        if (mode := catalog.sketch_mode(catalog.tier_table(out_dir, tier))) is not None
+    }
     if len(set(existing_modes.values())) > 1:
         raise ValueError(
             f"tier tables under {out_dir} disagree on sketch columns "
@@ -436,7 +418,7 @@ def refresh_tiers(
     raw = catalog.read_fact_leaves(spark, fact_path, dates=dates)
     # raw carries the stored gap_us, so with_gap_seconds only derives
     # gap_s — no raw-scale window shuffle
-    raw_g = with_gap_seconds(raw, key=key, ts=ts)
+    raw_g = with_gap_seconds(raw)
     stage = f"{out_dir}/{catalog.REFRESH_STAGING}"
     # staging left behind by a crash belongs to an unfinished refresh
     shutil.rmtree(stage, ignore_errors=True)
@@ -446,7 +428,7 @@ def refresh_tiers(
     # refreshed raw rows
     wm = Observation()
     tiers_df = _build_tiers(
-        raw_g, None, tiers, key=key, ts=ts, role_values=DEFAULT_ROLES,
+        raw_g, None, tiers, key=FACT_KEY, ts=FACT_TS, role_values=DEFAULT_ROLES,
         tool_values=None, with_sketches=with_sketches,
     ).observe(wm, F.max(F.unix_micros("last_ts")).alias("wm"))
     date_col = catalog.TIER_DATE
@@ -475,7 +457,6 @@ def refresh_tiers(
         watermark_us = record_refresh_watermark(
             out_dir,
             int(wm_us),
-            covered_version=covered,
             # per-DATE coverage: these dates now reflect every fact row
             # up to state version `covered`; an append is only fully
             # reflected once ALL its touched dates carry a version >=

@@ -39,15 +39,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from gmql_spark.operators.window_agg import TIER_DURATION
-
-TIER_STEP = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
-_TIER_STEP_S = {"1m": 60, "1h": 3600, "1d": 86400}
+from gmql_spark.operators.window_agg import TIER_DURATION, tier_step
 
 
 def window_grid(rollup_df: DataFrame, tier: str = "1m", key: str = "conv_id") -> DataFrame:
     """Dense (key, window_start) grid spanning each key's min..max window."""
-    step = F.expr(f"interval {TIER_STEP[tier]}")
+    step = F.expr(f"interval {TIER_DURATION[tier]}")
     return (
         rollup_df.groupBy(key)
         .agg(F.min("window_start").alias("w0"), F.max("window_start").alias("w1"))
@@ -69,7 +66,7 @@ def gapfill(
     column ``{value_col}_locf`` and (when ``interp_col`` is given) a
     linearly interpolated ``latency_interp`` (nullable at edges / before
     the first and after the last known point)."""
-    step_s = _TIER_STEP_S[tier]
+    step_s = int(tier_step(tier).total_seconds())
     locf_name = f"{value_col}_locf"
     w = Window.partitionBy(key).orderBy("window_start")
     w_prev = w.rowsBetween(Window.unboundedPreceding, 0)

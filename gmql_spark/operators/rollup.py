@@ -69,7 +69,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from gmql_spark.functions.aggregates import known_counts_map
-from gmql_spark.operators.window_agg import TIER_DURATION, window_rollup
+from gmql_spark.operators.window_agg import TIER_DURATION, tier_step, window_rollup
 
 PCTS = (0.50, 0.95, 0.99)
 PCT_NAMES = ("latency_p50", "latency_p95", "latency_p99")
@@ -391,8 +391,7 @@ def _tier_window(ts: str, tier: str) -> Column:
     ``unix_micros(ts)``: ``start = us - pmod(us, Δ)``, which floors
     pre-1970 times too. Unlike ``window()``, any number of them fit in
     one projection."""
-    n, unit = TIER_DURATION[tier].split()
-    step = timedelta(**{f"{unit}s": int(n)}) // timedelta(microseconds=1)
+    step = tier_step(tier) // timedelta(microseconds=1)
     us = F.unix_micros(F.col(ts))
     start = us - F.pmod(us, F.lit(step))
     return F.struct(

@@ -32,11 +32,19 @@ sketch modules can take ``TIER_DURATION`` from here without a cycle.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from datetime import timedelta
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 TIER_DURATION = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
+
+
+def tier_step(tier: str) -> timedelta:
+    """Tier ``tier``'s window length, read from ``TIER_DURATION`` when
+    called: the grid of the tier builder, realtime serving and gap-fill."""
+    n, unit = TIER_DURATION[tier].split()
+    return timedelta(**{unit.rstrip("s") + "s": int(n)})
 
 
 def window_rollup(

@@ -1235,6 +1235,13 @@ OPS: dict[str, tuple] = {
 }
 
 
+def _only_params(st, allowed: Sequence[str]) -> None:
+    """Reject a param the path-bound ``st`` does not take (``key:``, say)."""
+    extra = sorted(set(st.params) - set(allowed))
+    if extra:
+        raise GSLError(f"line {st.pos}: {st.op} takes no {', '.join(extra)} param")
+
+
 @dataclass
 class CompiledScript:
     materialized: dict[str, DataFrame] = field(default_factory=dict)
@@ -1314,6 +1321,7 @@ def compile_script(
 
             from gmql_spark.realtime import realtime_rollup
 
+            _only_params(st, ("fact", "tiers", "tier", "frozen"))
             frozen = st.params.get("frozen")
             symbols[st.target] = realtime_rollup(
                 spark,
@@ -1321,8 +1329,6 @@ def compile_script(
                 st.params["tiers"],
                 tier=st.params.get("tier", "1h"),
                 frozen_until=_dt.datetime.fromisoformat(frozen) if frozen else None,
-                key=st.params.get("key", "conv_id"),
-                ts=st.params.get("ts", "ts"),
             )
             continue
         if st.op == "STITCH" and not st.inputs:
@@ -1334,14 +1340,13 @@ def compile_script(
 
             from gmql_spark.realtime import stitch_transcripts
 
+            _only_params(st, ("fact", "tiers", "start", "end", "realtime"))
             symbols[st.target] = stitch_transcripts(
                 spark,
                 st.params["fact"],
                 st.params["tiers"],
                 _dt.datetime.fromisoformat(st.params["start"]),
                 _dt.datetime.fromisoformat(st.params["end"]),
-                key=st.params.get("key", "conv_id"),
-                ts=st.params.get("ts", "ts"),
                 realtime=bool(st.params.get("realtime", False)),
             )
             continue

@@ -45,9 +45,9 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmql_spark.operators.window_agg import TIER_DURATION, tier_step, window_rollup
 from gmql_spark.sources import catalog
-
-TIER_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
+from gmql_spark.sources.catalog import FACT_KEY, FACT_ORDER, FACT_TS
 
 _WATERMARK_FILE = "_refresh_watermark.json"
 
@@ -55,19 +55,15 @@ _WATERMARK_FILE = "_refresh_watermark.json"
 def floor_to_tier(t: _dt.datetime, tier: str) -> _dt.datetime:
     """Largest Δ-grid point <= t (UTC grid, epoch-anchored — the same
     grid as ``F.window(ts, Δ)`` with no offset)."""
-    step = TIER_SECONDS[tier]
-    naive = t.replace(tzinfo=None)
+    step = tier_step(tier)
     epoch = _dt.datetime(1970, 1, 1)
-    secs = int((naive - epoch).total_seconds())
-    return epoch + _dt.timedelta(seconds=(secs // step) * step)
+    return epoch + (t.replace(tzinfo=None) - epoch) // step * step
 
 
 def ceil_to_tier(t: _dt.datetime, tier: str) -> _dt.datetime:
     """Smallest Δ-grid point >= t."""
     f = floor_to_tier(t, tier)
-    return f if f == t.replace(tzinfo=None) else f + _dt.timedelta(
-        seconds=TIER_SECONDS[tier]
-    )
+    return f if f == t.replace(tzinfo=None) else f + tier_step(tier)
 
 
 def decompose_range(
@@ -227,22 +223,20 @@ def derive_tier_frames(
     pass both straight to ``stitch_range``. The checkpointed blocks are
     freed by Spark's ContextCleaner when the frames go out of scope.
     """
-    from gmql_spark.operators.window_agg import window_rollup
-
     raw_rng = raw.filter(
         (F.col(ts) >= F.lit(start.replace(tzinfo=None)))
         & (F.col(ts) < F.lit(end.replace(tzinfo=None)))
     )
-    m1 = window_rollup(raw_rng, "1 minute", aggs=raw_aggs, keys=keys, ts=ts)
+    m1 = window_rollup(raw_rng, TIER_DURATION["1m"], aggs=raw_aggs, keys=keys, ts=ts)
     # lazy checkpoints (r8): the consumer's single action materializes
     # 1m then 1h exactly once and every segment branch reads the blocks,
     # same sharing as eager — without paying two serial driver jobs at
     # construction time
     m1 = m1.localCheckpoint(eager=False)
     h1 = window_rollup(
-        m1, "1 hour", aggs=merge_aggs, keys=keys, ts="window_start"
+        m1, TIER_DURATION["1h"], aggs=merge_aggs, keys=keys, ts="window_start"
     ).localCheckpoint(eager=False)
-    d1 = window_rollup(h1, "1 day", aggs=merge_aggs, keys=keys, ts="window_start")
+    d1 = window_rollup(h1, TIER_DURATION["1d"], aggs=merge_aggs, keys=keys, ts="window_start")
     return raw_rng, {"1m": m1, "1h": h1, "1d": d1}
 
 
@@ -278,8 +272,6 @@ def stitch_transcripts(
     tiers_dir: str,
     start: _dt.datetime,
     end: _dt.datetime,
-    key: str = "conv_id",
-    ts: str = "ts",
     realtime: bool = False,
 ) -> DataFrame:
     """Transcript-schema stitch over materialized tiers: one row per
@@ -311,15 +303,16 @@ def stitch_transcripts(
 
     dated = read_refresh_manifest(tiers_dir) is not None
     tier_dfs = {
-        t: _read_tier(spark, tiers_dir, t, dates(t) if dated else None) for t in TIER_SECONDS
+        t: _read_tier(spark, tiers_dir, t, dates(t) if dated else None)
+        for t in {t for t, _, _ in segs} - {"raw"}
     }
     raw = catalog.read_fact_leaves(spark, fact_path, dates=dates("raw"))
     raw_aggs = [
         F.count(F.lit(1)).alias("turn_count"),
         F.count("gap_us").alias("latency_cnt"),
         F.sum("gap_us").alias("latency_sum_us"),
-        F.min(ts).alias("first_ts"),
-        F.max(ts).alias("last_ts"),
+        F.min(FACT_TS).alias("first_ts"),
+        F.max(FACT_TS).alias("last_ts"),
     ]
     merge_aggs = [
         F.sum("turn_count").alias("turn_count"),
@@ -329,59 +322,43 @@ def stitch_transcripts(
         F.max("last_ts").alias("last_ts"),
     ]
     return stitch_range(
-        tier_dfs, raw, start, end, keys=[key],
-        raw_aggs=raw_aggs, merge_aggs=merge_aggs, ts=ts, frozen_until=frozen,
+        tier_dfs, raw, start, end, keys=[FACT_KEY],
+        raw_aggs=raw_aggs, merge_aggs=merge_aggs, ts=FACT_TS, frozen_until=frozen,
     )
 
 
 # ------------------------------------------------- materialized path
 
 def record_refresh_watermark(
-    out_dir: str,
-    watermark_us: int,
-    covered_version: str | None = None,
-    covered_dates: dict | None = None,
+    out_dir: str, watermark_us: int, covered_dates: dict | None = None
 ) -> int:
-    """Advance (never regress) the tiers' refresh watermark, the
-    fact-state version it covers, and the per-DATE coverage map
-    (date -> state version at that date's last refresh — what lets
-    ``incremental.pending_append_min_us`` keep partially-refreshed
-    appends pending); returns the recorded watermark. Called by
-    ``incremental.refresh_tiers``."""
+    """Advance (never regress) the tiers' refresh watermark and the
+    per-DATE coverage map (date -> state version at that date's last
+    refresh — what lets ``incremental.pending_append_min_us`` keep
+    partially-refreshed appends pending); returns the recorded
+    watermark. Called by ``incremental.refresh_tiers``."""
     os.makedirs(out_dir, exist_ok=True)
     path = f"{out_dir}/{_WATERMARK_FILE}"
     prev = read_refresh_manifest(out_dir) or {}
     wm = max(watermark_us, prev.get("watermark_us") or watermark_us)
-    versions = [v for v in (prev.get("covered_version"), covered_version) if v]
     dates = dict(prev.get("covered_dates") or {})
     for d, v in (covered_dates or {}).items():
         d = str(d)
         dates[d] = max(dates[d], v) if d in dates else v
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
-        json.dump(
-            {
-                "watermark_us": wm,
-                "covered_version": max(versions) if versions else None,
-                "covered_dates": dates,
-            },
-            f,
-        )
+        json.dump({"watermark_us": wm, "covered_dates": dates}, f)
     os.replace(tmp, path)
     return wm
 
 
 def read_refresh_manifest(out_dir: str) -> dict | None:
-    """{"watermark_us": int, "covered_version": str | None,
-    "covered_dates": {date: version}} or None."""
+    """{"watermark_us": int, "covered_dates": {date: version}} or None."""
     path = f"{out_dir}/{_WATERMARK_FILE}"
     if not os.path.exists(path):
         return None
     with open(path) as f:
-        man = json.load(f)
-    man.setdefault("covered_version", None)
-    man.setdefault("covered_dates", {})
-    return man
+        return json.load(f)
 
 
 def read_refresh_watermark(out_dir: str) -> int | None:
@@ -422,9 +399,6 @@ def realtime_rollup(
     tiers_dir: str,
     tier: str = "1h",
     frozen_until: _dt.datetime | None = None,
-    key: str = "conv_id",
-    ts: str = "ts",
-    **rollup_kwargs,
 ) -> DataFrame:
     """Exact tier-grain rollup over everything ingested so far, even
     when the materialized tiers are stale (appends since the last
@@ -444,21 +418,25 @@ def realtime_rollup(
     (``sources.catalog.read_fact_leaves``); if the fact table lacks
     ``gap_us`` the whole table is opened and the gaps are derived over
     the full raw first (exact, one extra shuffle) before the tail
-    filter. The tier table is read whole: every closed window is served.
+    filter. The tier table is read whole: every closed window is served,
+    with the table's sketch columns, which the tail recomputes alike.
     """
     from gmql_spark.operators.rollup import rollup, with_gap_seconds
 
     if frozen_until is None:
         frozen_until = _serving_watermark(fact_path, tiers_dir)
+    mode = catalog.sketch_mode(catalog.tier_table(tiers_dir, tier)) or False
     tier_df = _read_tier(spark, tiers_dir, tier)
     if {"gap_us", "event_date"} <= set(catalog.columns(fact_path) or ()):
         # stored gaps: only the leaves of the tail's event dates are read
         day = str(floor_to_tier(frozen_until, tier).date())
         raw = catalog.read_fact_leaves(spark, fact_path, dates=lambda d: d >= day)
     else:
-        raw = with_gap_seconds(catalog.read_fact_leaves(spark, fact_path), key=key, ts=ts)
+        raw = with_gap_seconds(
+            catalog.read_fact_leaves(spark, fact_path), key=FACT_KEY, order=FACT_ORDER, ts=FACT_TS
+        )
 
     def recompute(tail: DataFrame) -> DataFrame:
-        return rollup(tail, tier, key=key, ts=ts, **rollup_kwargs)
+        return rollup(tail, tier, key=FACT_KEY, ts=FACT_TS, with_sketches=mode)
 
-    return serve_realtime(tier_df, raw, frozen_until, tier, recompute, ts=ts)
+    return serve_realtime(tier_df, raw, frozen_until, tier, recompute, ts=FACT_TS)

@@ -10,7 +10,9 @@ the data. The tables, partition columns outermost first:
 
 - fact ``<fact>``: ``conv_bucket``, ``event_date`` (no date level with
   ``partition_days=False``); written by ``write_transcripts``, appended
-  to by ``incremental.append_transcripts`` (``move_files``);
+  to by ``incremental.append_transcripts`` (``move_files``); its key,
+  event time and turn order (``FACT_KEY``/``FACT_TS``/``FACT_ORDER``)
+  are this layer's, not options of the functions bound to it;
 - conv state ``<fact>/_conv_state/v_<n>``: ``conv_bucket``; one version
   per append;
 - tier ``<out>/rollup_<t>``: ``window_date`` when
@@ -45,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DateType, IntegerType, StringType, StructField, StructType
 
 N_BUCKETS_DEFAULT = 16
+FACT_KEY, FACT_TS, FACT_ORDER = "conv_id", "ts", "turn_idx"
 # the fact table's partition columns, typed as schema inference types them
 FACT_PARTITIONS = {"conv_bucket": IntegerType(), "event_date": DateType()}
 TIER_DATE = "window_date"  # refresh_tiers' tier tables
@@ -57,10 +60,10 @@ PIPELINE_STAGING = "_staging"  # under a tier root
 COMPACT_STAGING = "_compact_staging"  # under a compacted table
 
 
-def bucket_of(key: str, n_buckets: int) -> Column:
+def bucket_of(n_buckets: int) -> Column:
     """``conv_bucket``: Iceberg's bucket transform role, shared by the
     fact table, the conv state and the pipeline's work partitioning."""
-    return F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+    return F.pmod(F.xxhash64(F.col(FACT_KEY)), F.lit(n_buckets)).cast("int")
 
 
 def tier_table(root: str, tier: str, kind: str = "rollup") -> str:
@@ -169,6 +172,15 @@ def columns(path: str) -> list[str] | None:
     """The column names ``footer_schema`` reads, or None."""
     schema = footer_schema(path)
     return schema.fieldNames() if schema is not None else None
+
+
+def sketch_mode(table: str) -> bool | str | None:
+    """The ``with_sketches`` mode of the tier table at ``table`` from one
+    footer (no job), None without a data file; an unreadable one raises."""
+    cols = columns(table)
+    if cols is None:
+        return None
+    return "digest" if "lat_digest" in cols else "lat_hist" in cols
 
 
 def read_table(
@@ -295,13 +307,11 @@ def write_transcripts(
     df: DataFrame,
     path: str,
     n_buckets: int = N_BUCKETS_DEFAULT,
-    key: str = "conv_id",
-    ts: str = "ts",
     mode: str = "overwrite",
     precompute_gaps: bool = False,
     partition_days: bool = True,
 ) -> None:
-    """Write the fact table with bucket(key) × days(ts) partitioning.
+    """Write the fact table with bucket(conv_id) × days(ts) partitioning.
 
     ``conv_bucket`` (``bucket_of``) matches checkpoint.run_pipeline's
     work partitioning, so resume jobs prune to one directory per bucket.
@@ -316,11 +326,11 @@ def write_transcripts(
     if precompute_gaps:
         from gmql_spark.operators.rollup import with_gap_seconds
 
-        df = with_gap_seconds(df, key=key, ts=ts).drop("gap_s")
-    out = df.withColumn("conv_bucket", bucket_of(key, n_buckets))
+        df = with_gap_seconds(df, key=FACT_KEY, order=FACT_ORDER, ts=FACT_TS).drop("gap_s")
+    out = df.withColumn("conv_bucket", bucket_of(n_buckets))
     part_cols = ["conv_bucket"]
     if partition_days:
-        out = out.withColumn("event_date", F.to_date(F.col(ts)))
+        out = out.withColumn("event_date", F.to_date(F.col(FACT_TS)))
         part_cols.append("event_date")
     (
         out.repartition(n_buckets, "conv_bucket")  # one writer wave per bucket

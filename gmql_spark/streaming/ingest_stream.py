@@ -44,8 +44,6 @@ def stream_ingest(
     checkpoint_dir: str,
     n_buckets: int = N_BUCKETS_DEFAULT,
     tiers=("1m", "1h", "1d"),
-    key: str = "conv_id",
-    ts: str = "ts",
     trigger: dict | None = None,
 ) -> StreamingQuery:
     """Start the ingest query. ``trigger`` defaults to
@@ -54,13 +52,9 @@ def stream_ingest(
 
     def _ingest(batch: DataFrame, batch_id: int) -> None:
         # an empty micro-batch touches no date: the append commits nothing
-        dates = append_transcripts(
-            batch.sparkSession, batch, fact_path, n_buckets=n_buckets, key=key, ts=ts
-        )
+        dates = append_transcripts(batch.sparkSession, batch, fact_path, n_buckets=n_buckets)
         if dates:
-            refresh_tiers(
-                batch.sparkSession, fact_path, out_dir, dates, tiers=tiers, key=key, ts=ts
-            )
+            refresh_tiers(batch.sparkSession, fact_path, out_dir, dates, tiers=tiers)
 
     writer = stream.writeStream.foreachBatch(_ingest).option(
         "checkpointLocation", checkpoint_dir

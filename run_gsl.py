@@ -20,8 +20,6 @@ import argparse
 import json
 import sys
 
-from pyspark.sql import SparkSession
-
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
@@ -32,8 +30,9 @@ def main(argv=None) -> int:
 
     text = args.inline if args.inline else open(args.script).read()
 
-    spark = SparkSession.builder.appName("gmql-spark-gsl").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    from gmql_spark.session import get_spark
+
+    spark = get_spark(app_name="gmql-spark-gsl")
 
     from gmql_spark.plans.dsl import GSLError, run_script
 

@@ -15,8 +15,6 @@ import argparse
 import json
 import sys
 
-from pyspark.sql import SparkSession
-
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
@@ -39,8 +37,9 @@ def main(argv=None) -> int:
         ap.error(f"--retention {args.retention}: only raw=<days> applies; the "
                  "pipeline's tier tables have no date partition level")
 
-    spark = SparkSession.builder.appName("gmql-spark-pipeline").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    from gmql_spark.session import get_spark
+
+    spark = get_spark(app_name="gmql-spark-pipeline")
 
     from gmql_spark.checkpoint import run_pipeline
     from gmql_spark.datagen import transcripts_spark

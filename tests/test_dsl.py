@@ -348,6 +348,43 @@ def test_realtime_statement(spark, raw, tmp_path):
     pd.testing.assert_frame_equal(g, e)
 
 
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        "REALTIME(fact: 'f', tiers: 't', key: 'user_id')",
+        "REALTIME(fact: 'f', tiers: 't', tier: '1h', ts: 'event_ts')",
+        "STITCH(fact: 'f', tiers: 't', start: '2026-01-01T00:00:00', "
+        "end: '2026-01-02T00:00:00', key: 'user_id')",
+    ],
+)
+def test_path_bound_statements_take_no_column_params(spark, stmt):
+    """The fact table's key and event time belong to the table layer: a
+    path-bound REALTIME or STITCH that names them is refused, not
+    silently run over ``conv_id``/``ts``."""
+    with pytest.raises(GSLError, match="takes no (key|ts) param"):
+        compile_script(spark, f"R = {stmt}; MATERIALIZE R;")
+
+
+def test_run_gsl_builds_the_engine_session(spark, raw, tmp_path, monkeypatch):
+    """``run_gsl.py`` gets its session from ``session.get_spark``, so a
+    spark-submit run has the engine's settings (codegen cache size,
+    DataFrame debugging off, Kryo)."""
+    import run_gsl
+    from gmql_spark import session
+
+    calls = []
+
+    def recording_get_spark(*args, **kw):
+        calls.append((args, kw))
+        return spark
+
+    monkeypatch.setattr(session, "get_spark", recording_get_spark)
+    path = str(tmp_path / "t")
+    raw.write.parquet(path)
+    assert run_gsl.main(["--inline", f"T = LOAD '{path}'; MATERIALIZE T;"]) == 0
+    assert calls == [((), {"app_name": "gmql-spark-gsl"})]
+
+
 def test_rollup_sketches_param(spark, raw):
     """ROLLUP(sketches: true) carries the mergeable sketch columns, and
     CASCADE auto-merges them (column-presence driven)."""

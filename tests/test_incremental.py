@@ -135,7 +135,7 @@ def test_state_join_is_not_forced_broadcast(spark, tmp_path, split_data):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        out = _with_cross_batch_gaps(b1, state, "conv_id", "ts", ("turn_idx",))
+        out = _with_cross_batch_gaps(b1, state)
         plan = out._jdf.queryExecution().optimizedPlan().toString()
         assert "ResolvedHint" not in plan
         phys = out._jdf.queryExecution().executedPlan().toString()
@@ -674,3 +674,25 @@ def test_refresh_leaves_partition_overwrite_mode_alone(
     monkeypatch.undo()
     assert key not in keys_set
     assert spark.conf.get(key) == before
+
+
+def test_refresh_rejects_fact_tables_it_cannot_refresh(spark, tmp_path, split_data):
+    """``refresh_tiers`` refuses, before it writes anything, a fact table
+    without the stored ``gap_us`` (each conversation's first turn of a
+    date would lose its gap across the date) and one without the
+    ``event_date`` level (no leaf would match, and nothing would be
+    refreshed)."""
+    from gmql_spark.sources.catalog import write_transcripts
+
+    raw, _, _ = split_data
+    date = str(raw.agg(F.min(F.to_date("ts"))).collect()[0][0])
+    out = tmp_path / "tiers"
+    for name, missing, kw in (
+        ("no_gaps", "gap_us", {}),
+        ("no_days", "event_date", {"precompute_gaps": True, "partition_days": False}),
+    ):
+        fact = str(tmp_path / name)
+        write_transcripts(raw, fact, n_buckets=2, **kw)
+        with pytest.raises(ValueError, match=f"without {missing}"):
+            refresh_tiers(spark, fact, str(out), dates=[date])
+        assert not out.exists()

@@ -49,6 +49,78 @@ def test_floor_to_tier():
     )
 
 
+def test_added_tier_is_on_the_window_grid(spark, monkeypatch):
+    """A tier added to ``TIER_DURATION`` steps on ``F.window``'s grid
+    wherever the engine steps tiers — ``floor_to_tier``/``ceil_to_tier``,
+    the tier builder and ``gapfill`` — pre-1970 and grid-edge times
+    included."""
+    from gmql_spark.operators.gapfill import gapfill
+    from gmql_spark.operators.window_agg import TIER_DURATION, window_rollup
+    from gmql_spark.realtime import ceil_to_tier
+
+    monkeypatch.setitem(TIER_DURATION, "5m", "5 minutes")
+    step = dt.timedelta(minutes=5)
+    times = [
+        dt.datetime(1969, 12, 31, 23, 37, 30, 500000),
+        dt.datetime(1969, 12, 31, 23, 55),
+        dt.datetime(1969, 12, 31, 23, 59, 59, 999999),
+        dt.datetime(1970, 1, 1),
+        dt.datetime(1970, 1, 1, 0, 4, 59, 999999),
+        dt.datetime(1970, 1, 1, 0, 20, 0, 1),
+    ]
+    raw = spark.createDataFrame(
+        [("c", i, t, "user", None) for i, t in enumerate(times)],
+        "conv_id string, turn_idx int, ts timestamp, role string, tool string",
+    )
+    starts = [
+        r.w.start
+        for r in raw.select("turn_idx", F.window("ts", "5 minutes").alias("w"))
+        .orderBy("turn_idx")
+        .collect()
+    ]
+    assert [floor_to_tier(t, "5m") for t in times] == starts
+    assert [ceil_to_tier(t, "5m") for t in times] == [
+        s if s == t else s + step for s, t in zip(starts, times)
+    ]
+
+    counts = window_rollup(
+        raw, "5 minutes", [F.count(F.lit(1)).alias("turn_count")], keys=["conv_id"]
+    )
+    expected = {r.window_start: r.turn_count for r in counts.collect()}
+    built = rollup(raw, "5m").select("window_start", "turn_count").collect()
+    assert {r.window_start: r.turn_count for r in built} == expected
+
+    filled = gapfill(counts, tier="5m", interp_col=None).orderBy("window_start").collect()
+    grid = [starts[0] + k * step for k in range((starts[-1] - starts[0]) // step + 1)]
+    assert [r.window_start for r in filled] == grid
+    assert {r.window_start: r.turn_count for r in filled} == {
+        w: expected.get(w, 0) for w in grid
+    }
+    assert [r.is_gap for r in filled] == [w not in expected for w in grid]
+
+
+def test_realtime_serves_sketch_columns(spark, tmp_path, split_data):
+    """Over tiers refreshed with sketches, ``realtime_rollup`` serves the
+    table's sketch columns, the stale tail's recomputed in the same
+    mode: ``lat_hist`` equal to the one-shot rollup's, ``tool_hll`` by
+    estimate."""
+    raw, b1, b2 = split_data
+    fact, out = str(tmp_path / "fact_sk"), str(tmp_path / "tiers_sk")
+    d1 = append_transcripts(spark, b1, fact, n_buckets=4)
+    refresh_tiers(spark, fact, out, dates=d1, with_sketches=True)
+    append_transcripts(spark, b2, fact, n_buckets=4)  # no refresh
+
+    def sketches(df):
+        return _pdf(df.select(
+            "conv_id", "window_start", "lat_hist",
+            F.hll_sketch_estimate("tool_hll").alias("tools"),
+        ))
+
+    got = sketches(realtime_rollup(spark, fact, out, tier="1h"))
+    exp = sketches(rollup(raw, "1h", with_sketches=True))
+    assert_pdf_equal(got, exp, ["conv_id", "window_start"])
+
+
 def test_refresh_records_watermark(spark, tmp_path, split_data):
     _, b1, b2 = split_data
     fact, out = str(tmp_path / "fact"), str(tmp_path / "tiers")

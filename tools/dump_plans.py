@@ -18,7 +18,8 @@ onto a table holding the first half), captured from a real append, and
 the plan ``realtime.stitch_transcripts`` builds over materialized tiers
 (``stitch_transcripts``: the first halves appended and refreshed, the
 second halves appended on top, a range from the second hour of the data
-to its last minutes).
+to its last minutes) and the ``realtime.realtime_rollup(tier="1h")``
+query over the same stale tiers (``realtime_rollup_1h``).
 
 Usage: python tools/dump_plans.py <out_dir> <tag> [sf_dir] [name ...]
   out_dir: e.g. plans/r09 (created if missing; a relative path is taken
@@ -166,23 +167,41 @@ def append_transcripts(spark, tmp):
     return df
 
 
+def _stale_tiers(spark, tmp, name):
+    """(fact, tiers dir): the first halves appended and refreshed, the
+    second halves appended on top"""
+    from gmql_spark import incremental
+
+    first, second = _halves(spark)
+    fact, out = os.path.join(tmp, f"{name}_fact"), os.path.join(tmp, f"{name}_tiers")
+    dates = incremental.append_transcripts(spark, first, fact, n_buckets=4)
+    incremental.refresh_tiers(spark, fact, out, dates=dates)
+    incremental.append_transcripts(spark, second, fact, n_buckets=4)
+    return fact, out
+
+
 def stitch_transcripts(spark, tmp):
     """the stitch over materialized tiers, one append past the refresh"""
     import datetime as dt
 
     from pyspark.sql import functions as F
 
-    from gmql_spark import incremental, realtime
+    from gmql_spark import realtime
 
-    first, second = _halves(spark)
-    fact, out = os.path.join(tmp, "stitch_fact"), os.path.join(tmp, "stitch_tiers")
-    dates = incremental.append_transcripts(spark, first, fact, n_buckets=4)
-    incremental.refresh_tiers(spark, fact, out, dates=dates)
-    incremental.append_transcripts(spark, second, fact, n_buckets=4)
+    fact, out = _stale_tiers(spark, tmp, "stitch")
     lo, hi = _transcripts(spark).agg(F.min("ts"), F.max("ts")).collect()[0]
     start = (lo + dt.timedelta(hours=2)).replace(second=11, microsecond=0)
     end = (hi - dt.timedelta(minutes=7)).replace(second=43, microsecond=0)
     return realtime.stitch_transcripts(spark, fact, out, start, end)
+
+
+def realtime_rollup_1h(spark, tmp):
+    """the 1h realtime query over materialized tiers, one append past
+    the refresh"""
+    from gmql_spark import realtime
+
+    fact, out = _stale_tiers(spark, tmp, "realtime")
+    return realtime.realtime_rollup(spark, fact, out, tier="1h")
 
 
 PSEUDO = {
@@ -194,6 +213,7 @@ PSEUDO = {
     "refresh_tiers_digest": _refresh("digest"),
     "append_transcripts": append_transcripts,
     "stitch_transcripts": stitch_transcripts,
+    "realtime_rollup_1h": realtime_rollup_1h,
 }
 
 
